@@ -190,10 +190,10 @@ final class DebeziumJsonChangeLogProvider(root: String,
     // (the overwhelming majority) don't. False positives (a user column
     // named schema) just pay one parse and filter out below.
     JsonlIndex.cachedAppendOnly(s"$dir/events.jsonl", "schemas") {
-      (prev: Option[Vector[JsonNode]], lines, _, _) =>
+      (prev: Option[Vector[JsonNode]], lines, len, _) =>
         prev.getOrElse(Vector.empty) ++ lines.iterator
           .filter(_._1.contains("\"schema\""))
-          .map(l => mapper.readTree(l._1))
+          .flatMap { case (line, start, blen) => parseLine(line, start, blen, len) }
           .flatMap { node =>
             Option(node.get("schema")).filter(!_.isNull).flatMap { sch =>
               sch.get("fields").elements().asScala.find(f => f.get("field").asText() == "after")
@@ -403,6 +403,19 @@ final class DebeziumJsonChangeLogProvider(root: String,
       val lastBlock: String,   // schema machine: last block seen
       val pending: String)     // schema machine: transition awaiting a data event
 
+  /** Parse one line of a spool scan bounded at `fileLen`. The final line
+    * of a live spool may have no newline yet: a writer's append caught
+    * mid-`write` (the file grows page by page). If such a line does not
+    * parse it is skipped, not fatal — [[JsonlIndex.cachedAppendOnly]] marks
+    * a scan ending without a newline non-resumable, so the next probe
+    * rebuilds and reads the line whole. An unparseable line anywhere else
+    * still fails loudly. */
+  private def parseLine(line: String, start: Long, blen: Int, fileLen: Long): Option[JsonNode] =
+    try Some(mapper.readTree(line))
+    catch {
+      case _: com.fasterxml.jackson.core.JsonProcessingException if start + blen == fileLen => None
+    }
+
   private def spoolIdx(t: TableDir): SpoolIdx =
     JsonlIndex.cachedAppendOnly[SpoolIdx](s"${t.dir}/events.jsonl", "spool") { (prev, lines, len, mtime) =>
       val assigner = new OffsetAssigner(t, prev.map(_.logCount).getOrElse(0L))
@@ -416,8 +429,7 @@ final class DebeziumJsonChangeLogProvider(root: String,
       var lastBlock: String = prev.map(_.lastBlock).orNull
       var pending: String = prev.map(_.pending).orNull
       lines.foreach { case (line, start, blen) =>
-        if (line.trim.nonEmpty) {
-          val node = mapper.readTree(line)
+        if (line.trim.nonEmpty) parseLine(line, start, blen, len).foreach { node =>
           Option(node.get("schema")).filter(!_.isNull).flatMap { sch =>
             sch.get("fields").elements().asScala.find(_.get("field").asText() == "after")
           }.map(_.toString).foreach { b =>

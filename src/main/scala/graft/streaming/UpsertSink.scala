@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -46,8 +46,9 @@ trait WriterLease {
   * REPLAYING a batch after a failure re-derives the identical snapshot —
   * idempotence comes from the merge algebra, not from sink-side dedup
   * bookkeeping. New bucket contents are written to a `_tmp` staging dir
-  * (one Spark job, `partitionBy` on the bucket id) and swapped in with two
-  * renames per touched bucket; a crash mid-swap leaves either the old or
+  * (one write job, `partitionBy` on the bucket id, buckets spread over
+  * parallel tasks, one file per bucket) and swapped in with two renames
+  * per touched bucket; a crash mid-swap leaves either the old or
   * the new bucket (or its `_old/` save-aside), never a torn mix, and
   * [[recover]] restores any bucket caught between its two renames.
   *
@@ -152,24 +153,19 @@ object UpsertSink {
     * offset 5 arriving in batch N+1): without them the delete's victory is
     * forgotten the moment the row leaves the state file. [[readState]]
     * filters them; [[compact]] purges them once the caller knows no
-    * lower-offset stragglers remain. */
+    * lower-offset stragglers remain.
+    *
+    * Jobs per merge: into an EMPTY target, one (the write) — there is no
+    * previous state to read, so no touched-bucket probe runs. Into
+    * existing state, a one-job probe finds the touched buckets, then the
+    * write re-reads only those buckets' files. The write shuffles
+    * `prev ∪ batch` once, by bucket, to one task per group of buckets
+    * (width min(touched, cores, shuffle partitions)), so the buckets are
+    * merged and written in parallel and each merge writes one file per
+    * touched bucket. */
   def mergeBatch(batch0: DataFrame, pkCols: Seq[String], path: String,
       numBuckets: Int = DefaultBuckets): Unit = {
-    // Two actions consume the batch (the touched-bucket probe and the
-    // merge write). Inside foreachBatch each action RE-EXECUTES the whole
-    // micro-batch plan — source decode plus any upstream stateful
-    // aggregate ran twice per batch (measured: q106's addBatch dropped
-    // ~25% with the barrier). But the barrier is CONDITIONAL: for a plain
-    // source-decode upstream the persist's materialization costs more
-    // than the re-execution it saves (r17 driver run: q78 −13%, q141
-    // −12% under an unconditional persist, while q106 — whose upstream
-    // carries a stateful aggregate re-reading the state store — gained
-    // 26%). Persist only when the plan warrants it, for the merge's
-    // duration only.
-    val doPersist = shouldPersistBatch(batch0)
-    val batch = if (doPersist) batch0.persist() else batch0
-    try {
-    val spark = batch.sparkSession
+    val spark = batch0.sparkSession
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     withWriterLease(fs, target) {
@@ -179,57 +175,120 @@ object UpsertSink {
     recover(spark, path)
 
     val buckets = bucketCount(fs, target, numBuckets)
-    val bucketOf = pmod(hash(pkCols.map(col): _*), lit(buckets))
-    // Which buckets does this batch touch? Bounded driver collect: at most
-    // `buckets` small ints, independent of batch or state size.
-    val touched = batch.select(bucketOf.cast("int").as(BucketCol))
-      .distinct().collect().map(_.getInt(0)).toSet
-    if (touched.nonEmpty) {
+    val bucketOf = pmod(hash(pkCols.map(col): _*), lit(buckets)).cast("int")
+    val live = bucketIds(fs, target)
+    // With state present, two actions consume the batch (the probe and the
+    // write). Inside foreachBatch each action RE-EXECUTES the whole
+    // micro-batch plan — source decode plus any upstream stateful
+    // aggregate ran twice per batch (measured: q106's addBatch dropped
+    // ~25% with the barrier). But the barrier is CONDITIONAL: for a plain
+    // source-decode upstream the persist's materialization costs more
+    // than the re-execution it saves (r17 driver run: q78 −13%, q141
+    // −12% under an unconditional persist, while q106 — whose upstream
+    // carries a stateful aggregate re-reading the state store — gained
+    // 26%). Persist only when the plan warrants it, for the merge's
+    // duration only; an empty target runs the write alone, so needs none.
+    val doPersist = live.nonEmpty && shouldPersistBatch(batch0)
+    val batch = if (doPersist) batch0.persist() else batch0
+    try {
+    // Which buckets does this batch touch? Only asked when there is state
+    // to re-read: into an empty target every staged bucket is new.
+    val probed = if (live.isEmpty) None else Some(touchedBuckets(batch, bucketOf, buckets))
+    if (!probed.exists(_.isEmpty)) {
 
-    val existing = touched.toSeq.sorted
-      .map(i => new Path(target, s"$BucketCol=$i")).filter(fs.exists(_))
     // previous state re-enters the merge carrying its winning events'
     // offsets, so replay is idempotent and stragglers lose to what already
     // won. Reading bucket leaf dirs directly skips partition discovery, so
     // no __gb column rides along; only touched buckets are ever opened.
-    val prev =
-      if (existing.nonEmpty) spark.read.parquet(existing.map(_.toString): _*)
-      else batch.limit(0)
+    val reread = probed.getOrElse(Set.empty).filter(live).toSeq.sorted
+    val input =
+      if (reread.isEmpty) batch
+      else spark.read.parquet(reread.map(i => new Path(target, s"$BucketCol=$i").toString): _*)
+        .unionByName(batch)
 
-    // One shuffle job writes every touched bucket's new contents under
-    // _tmp/__gb=<i>; merged rows can only hash into touched buckets (prev
-    // came from them, batch defines them). Last event per key wins —
-    // (op_offset, after-image-beats-before-image), tombstones retained.
+    // One exchange, by bucket, to an explicit width AQE leaves alone (the
+    // same cap as Par.widen): each bucket lands whole in one task, which
+    // merges it and writes its one file under _tmp/__gb=<i>. __gb is a
+    // function of the key, so partitioning the window by (__gb, key) keeps
+    // the key groups, and its sort (__gb first) is the order the
+    // partitioned write needs. Spark's hash deals the bucket ids unevenly
+    // (32 over 4 tasks: 5/10/7/10); an even round-robin deal measured no
+    // end-to-end gain on snapshot_load, so the plain hash stays. Last
+    // event per key wins — (op_offset, after-image-beats-before-image),
+    // tombstones retained.
+    val width = math.min(probed.fold(buckets)(_.size),
+      math.min(spark.sparkContext.defaultParallelism,
+        spark.conf.get("spark.sql.shuffle.partitions", "200").toInt))
     val seq = struct(col("op_offset"),
       when(col("row_kind") === "-U", 0).otherwise(1))
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(pkCols.map(col): _*).orderBy(seq.desc)
-    val merged = prev.unionByName(batch)
+      .partitionBy((col(BucketCol) +: pkCols.map(col)): _*).orderBy(seq.desc)
+    val merged = input
+      .withColumn(BucketCol, bucketOf)
+      .repartition(width, col(BucketCol))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-      .withColumn(BucketCol, bucketOf.cast("int"))
     val tmp = new Path(target, "_tmp")
     merged.write.mode("overwrite").partitionBy(BucketCol).parquet(tmp.toString)
+
+    // Tombstones are kept, so every key the write saw stages a row and the
+    // staged set is exactly the set of buckets the write touched. A staged
+    // bucket outside the probed set means the probe and the write saw
+    // different rows (a nondeterministic plan re-executed without a
+    // barrier): its live rows were never re-read, and swapping it in would
+    // lose them. Fail before the first rename, state untouched.
+    val staged = bucketIds(fs, tmp)
+    probed.foreach { p =>
+      val unread = staged -- p
+      if (unread.nonEmpty) {
+        fs.delete(tmp, true)
+        throw new IllegalStateException(
+          s"UpsertSink merge into $target staged buckets ${unread.toSeq.sorted.mkString(",")} " +
+            "that the touched-bucket probe did not see: the batch re-executed to different " +
+            "rows (nondeterministic plan). Aborted before the swap; state is unchanged. " +
+            "Persist the batch, or leave spark.graft.upsert.persistBatch at auto.")
+      }
+    }
 
     // Hadoop FileSystem#rename reports failure by returning false; treating
     // that as success and proceeding to the deletes would destroy the only
     // complete copy of a bucket.
     val old = new Path(target, "_old")
     fs.mkdirs(old)
-    touched.toSeq.sorted.foreach { i =>
-      val live = new Path(target, s"$BucketCol=$i")
-      val staged = new Path(tmp, s"$BucketCol=$i")
+    staged.toSeq.sorted.foreach { i =>
+      val liveDir = new Path(target, s"$BucketCol=$i")
       val aside = new Path(old, s"$BucketCol=$i")
       if (fs.exists(aside)) fs.delete(aside, true)
-      if (fs.exists(live)) renameOrDie(fs, live, aside)
-      // a bucket emptied by deletes has no staged dir: absent bucket = empty
-      if (fs.exists(staged)) renameOrDie(fs, staged, live)
+      if (live(i)) renameOrDie(fs, liveDir, aside)
+      renameOrDie(fs, new Path(tmp, s"$BucketCol=$i"), liveDir)
       fs.delete(aside, true)
     }
     fs.delete(tmp, true)
     }
-    }
     } finally { if (doPersist) batch0.unpersist(); () }
+    }
+  }
+
+  private val BucketDir = s"$BucketCol=(\\d+)".r
+
+  /** Bucket ids of the `__gb=<i>` directories directly under `dir`. */
+  private def bucketIds(fs: FileSystem, dir: Path): Set[Int] =
+    if (!fs.exists(dir)) Set.empty
+    else fs.listStatus(dir).iterator.filter(_.isDirectory).map(_.getPath.getName)
+      .collect { case BucketDir(i) => i.toInt }.toSet
+
+  /** The buckets `batch` touches, in ONE map-only job: each partition sets
+    * its rows' bucket ids in a bitset, the driver ORs the bitsets. Bounded
+    * driver collect: one `buckets`-bit set per partition. */
+  private def touchedBuckets(batch: DataFrame, bucketOf: Column, buckets: Int): Set[Int] = {
+    import batch.sparkSession.implicits._
+    val seen = new java.util.BitSet(buckets)
+    batch.select(bucketOf).as[Int].mapPartitions { ids =>
+      val bits = new java.util.BitSet(buckets)
+      ids.foreach(i => bits.set(i))
+      Iterator.single(bits.toLongArray)
+    }.collect().foreach(words => seen.or(java.util.BitSet.valueOf(words)))
+    seen.stream().toArray.toSet
   }
 
   /** Whether a micro-batch plan is worth a persist barrier across the
@@ -238,8 +297,10 @@ object UpsertSink {
     * those re-execute a shuffle (and, under foreachBatch, a state-store
     * read) per action, which always costs more than one cache
     * materialization; a narrow source-decode plan re-executes cheaper
-    * than it caches. Overridable per session via
-    * `spark.graft.upsert.persistBatch` = auto | always | never. */
+    * than it caches — or any NONDETERMINISTIC expression, whose second
+    * execution may produce different rows than the probe saw. Overridable
+    * per session via `spark.graft.upsert.persistBatch` = auto | always |
+    * never. */
   private[graft] def shouldPersistBatch(batch: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical._
     batch.sparkSession.conf.get("spark.graft.upsert.persistBatch", "auto") match {
@@ -248,7 +309,7 @@ object UpsertSink {
       case _ => batch.queryExecution.analyzed.exists {
         case _: Aggregate | _: Join | _: Window | _: Deduplicate => true
         case _: FlatMapGroupsWithState                           => true
-        case _                                                   => false
+        case p => p.expressions.exists(!_.deterministic)
       }
     }
   }
@@ -263,9 +324,7 @@ object UpsertSink {
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     withWriterLease(fs, target) {
     recover(spark, path)
-    val bucketDirs = if (fs.exists(target))
-      fs.listStatus(target).map(_.getPath).filter(_.getName.startsWith(s"$BucketCol="))
-    else Array.empty[Path]
+    val bucketDirs = bucketIds(fs, target).toSeq.sorted.map(i => new Path(target, s"$BucketCol=$i"))
     if (bucketDirs.nonEmpty) {
     val tmp = new Path(target, "_tmp")
     // partition discovery supplies __gb; live rows rewrite, tombstones drop
@@ -273,7 +332,7 @@ object UpsertSink {
       .write.mode("overwrite").partitionBy(BucketCol).parquet(tmp.toString)
     val old = new Path(target, "_old")
     fs.mkdirs(old)
-    bucketDirs.sortBy(_.getName).foreach { live =>
+    bucketDirs.foreach { live =>
       val staged = new Path(tmp, live.getName)
       val aside = new Path(old, live.getName)
       if (fs.exists(aside)) fs.delete(aside, true)

@@ -620,6 +620,24 @@ class DebeziumJsonProviderSpec extends SparkSpec {
         s"over a $fileLen-byte spool — the incremental path did not engage")
   }
 
+  test("a cut final line (writer mid-append) is skipped, then read whole once its newline lands") {
+    // a live spool grows page by page within one write, so a probe can
+    // see the last line cut; the index must not fail the query on it
+    val root = Files.createTempDirectory("dbzcut")
+    val dir = writeSpool(root, events = 30)
+    val spool = dir.resolve("events.jsonl")
+    val whole = """{"before":null,"after":{"id":7,"name":"v31"},"op":"c","ts_ms":31}"""
+    val (head, rest) = whole.splitAt(whole.length / 2)
+    Files.writeString(spool, head, java.nio.file.StandardOpenOption.APPEND)
+    val p = new DebeziumJsonChangeLogProvider(root.toString)
+    val id = TableId("shop", "hot")
+    assert(p.currentOffset === 30L, "the cut line is not an event yet")
+    assert(p.schemaChanges(0L, 1000L).isEmpty)
+    Files.writeString(spool, rest + "\n", java.nio.file.StandardOpenOption.APPEND)
+    assert(p.currentOffset === 31L)
+    assert(p.log(id, 30L, 31L).map(r => (r.offset, r.op)).toSeq === Seq((31L, "c")))
+  }
+
   test("schema machine state carries across incremental legs: a block arriving with no data event stamps the NEXT leg's event") {
     val root = Files.createTempDirectory("dbzinctr")
     val dir = writeSpool(root, events = 20)

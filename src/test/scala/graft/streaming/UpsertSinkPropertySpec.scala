@@ -29,7 +29,7 @@ class UpsertSinkPropertySpec extends AnyFunSuite {
     nBatches <- Gen.choose(1, 4)
     assignment <- Gen.listOfN(nEvents, Gen.choose(0, nBatches - 1))
     replayIdx <- Gen.choose(0, nBatches - 1)
-    buckets <- Gen.oneOf(1, 4, 16)
+    buckets <- Gen.oneOf(1, 4, 16, 32)
   } yield (events, nBatches, assignment, replayIdx, buckets)
 
   test("any batch split of any event set merges to the last-wins model; replay is a no-op") {

@@ -235,11 +235,67 @@ class UpsertSinkSpec extends SparkSpec {
     val joined = narrow.join(agg.select(col("k").as("k2")), col("k") === col("k2"))
     assert(UpsertSink.shouldPersistBatch(joined))
 
+    // a nondeterministic expression may re-execute to different rows →
+    // barrier, however narrow the plan
+    assert(UpsertSink.shouldPersistBatch(narrow.withColumn("v", rand())))
+
     // explicit override wins in both directions
     spark.conf.set("spark.graft.upsert.persistBatch", "always")
     try assert(UpsertSink.shouldPersistBatch(narrow))
     finally spark.conf.set("spark.graft.upsert.persistBatch", "never")
     try assert(!UpsertSink.shouldPersistBatch(agg))
     finally spark.conf.unset("spark.graft.upsert.persistBatch")
+  }
+
+  /** `n` changelog rows whose key a NONDETERMINISTIC expression draws. */
+  private def randomKeyed(n: Int, key: org.apache.spark.sql.Column) =
+    spark.range(0, n, 1, 4).select(key.as("k"), lit(1.0).as("v"), lit("c").as("op"),
+      (col("id") + 1000L).as("op_offset"), lit("+I").as("row_kind"))
+
+  /** A key Spark cannot replay: a fresh random long on every execution. */
+  private val freshKey = udf(() => java.util.concurrent.ThreadLocalRandom.current().nextLong())
+    .asNondeterministic()
+
+  /** State of 200 keys over 64 buckets, so a merge has live buckets to re-read. */
+  private def seeded(prefix: String): String = {
+    val out = java.nio.file.Files.createTempDirectory(prefix).resolve("state").toString
+    UpsertSink.mergeBatch((1L to 200L).map(k => row(k, k.toDouble, "c", k, "+I")).toDF(cols: _*),
+      Seq("k"), out, numBuckets = 64)
+    out
+  }
+
+  test("nondeterministic batch keys: a merge into existing state loses no row") {
+    // rand()/uuid() seed at analysis; a nondeterministic UDF does not —
+    // each execution draws new keys, so without the barrier the probe and
+    // the write would see different rows
+    Seq(
+      "rand" -> (rand() * 1e15).cast("long"),
+      "uuid" -> xxhash64(expr("uuid()")),
+      "udf" -> freshKey()
+    ).foreach { case (name, key) =>
+      val out = seeded(s"graft_upsert_nd_${name}_")
+      val batch = randomKeyed(40, key)
+      assert(UpsertSink.shouldPersistBatch(batch), name)
+      UpsertSink.mergeBatch(batch, Seq("k"), out, numBuckets = 64)
+      val state = UpsertSink.readState(spark, out)
+      assert(state.count() === 240L, s"$name: rows lost or duplicated")
+      assert(state.filter(!$"k".between(1L, 200L)).count() === 40L, name)
+    }
+  }
+
+  test("nondeterministic batch with the barrier forced off fails loudly; state is untouched") {
+    val out = seeded("graft_upsert_nd_never_")
+    val before = UpsertSink.readState(spark, out).orderBy("k").collect().toSeq
+    spark.conf.set("spark.graft.upsert.persistBatch", "never")
+    val ex =
+      try intercept[IllegalStateException] {
+        // 5 fresh keys over 64 buckets: the write's buckets fall outside
+        // the probe's with near certainty (all inside: ~(5/64)^5)
+        UpsertSink.mergeBatch(randomKeyed(5, freshKey()), Seq("k"), out, numBuckets = 64)
+      } finally spark.conf.unset("spark.graft.upsert.persistBatch")
+    assert(ex.getMessage.contains("probe did not see"))
+    assert(UpsertSink.readState(spark, out).orderBy("k").collect().toSeq === before)
+    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new Path(out, "_tmp")) && !fs.exists(new Path(out, "_graft_writer.lock")))
   }
 }
