@@ -1,6 +1,6 @@
 package graft.cdc.provider
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 import graft.cdc._
 import org.apache.spark.sql.types._
 
@@ -18,28 +18,28 @@ import scala.jdk.CollectionConverters._
   * <root>/<db>.<table>/log.jsonl       {"offset","op","tsMs","before","after"}
   * }}}
   *
-  * Access is INDEXED: the first touch of a table builds, in one streaming
-  * pass, a byte-offset index per file — snapshot entries sorted by chunk
-  * key, log entries sorted by offset. Every later probe or chunk read
-  * binary-searches the index and seeks straight to its rows, so a plan of
-  * C chunks costs one scan + C range reads instead of C full rescans —
-  * the same asymptotic shape as the reference's indexed range scans
-  * (mysql/source/utils/StatementUtils.java:132-188, which never rescan the
-  * table either). Indexes are per-JVM (@transient lazy): the driver builds
-  * one for planning, each executor at most one for its reads. Index memory
-  * is O(rows) keys+longs — the archived-topic analogue of a database's PK
-  * index; for a table too big for that, use the JDBC provider against a
-  * real store instead.
+  * Access is INDEXED ([[IndexedJsonlProvider]] over [[JsonlIndex]], shared
+  * with the Debezium-envelope provider): the first touch of a table builds,
+  * in one streaming pass per file, byte-offset indexes — snapshot entries
+  * sorted by chunk key, log entries sorted by offset and by (chunk key,
+  * offset). Every later probe or chunk read binary-searches an index and
+  * seeks straight to its rows, so a plan of C chunks costs one scan + C
+  * range reads instead of C full rescans. Indexes are cached per JVM: the
+  * driver builds one for planning, each executor at most one for its reads.
   *
-  * Log files may grow between micro-batches (a live tail appending while
-  * a stream runs): indexes are keyed by file length+mtime and rebuilt from
-  * scratch when the file has grown — append-only is the file contract.
-  * The index machinery itself lives in [[JsonlIndex]] (shared with the
-  * Debezium-envelope provider). */
-final class FileChangeLogProvider(root: String) extends ChangeLogProvider {
-  private val mapper = new ObjectMapper()
+  * Files may grow between micro-batches (a live tail appending while a
+  * stream runs): an append extends the cached indexes by parsing only the
+  * appended bytes; any other change rebuilds them — append-only is the
+  * file contract. A final log line still missing its newline (a writer
+  * caught mid-append) is skipped until its newline lands. */
+final class FileChangeLogProvider(root: String) extends IndexedJsonlProvider(root) {
 
-  private case class TableFiles(meta: TableMeta, baseOffset: Long, dir: String)
+  private[provider] case class TableFiles(meta: TableMeta, baseOffset: Long, dir: String)
+      extends JsonlTable {
+    def snapshotFile: String = s"$dir/snapshot.jsonl"
+    def logFile: String = s"$dir/log.jsonl"
+  }
+  private[provider] type Table = TableFiles
 
   @transient private lazy val tableFiles: Seq[TableFiles] = {
     val dirs = Files.list(Paths.get(root)).iterator().asScala
@@ -55,92 +55,60 @@ final class FileChangeLogProvider(root: String) extends ChangeLogProvider {
     }
   }
 
-  private def files(t: TableId): TableFiles =
-    tableFiles.find(_.meta.id == t).getOrElse(
-      throw new IllegalArgumentException(s"unknown table $t under $root"))
+  private[provider] def jsonlTables: Seq[TableFiles] = tableFiles
 
-  override def tables: Seq[TableMeta] = tableFiles.map(_.meta)
+  private[provider] override def schemaLabel: String = "declared schema"
 
-  /** Planning-time prerequisites (ChangeLogProvider.validate): the root
-    * must be a directory of table dirs with parseable meta.json, every
-    * primary-key column must exist in its declared schema, and each table
-    * needs at least one data file — a typo'd path or a half-written
-    * fixture fails here, loudly, instead of planning an empty source. */
-  override def validate(): Unit = {
-    if (!Files.isDirectory(Paths.get(root)))
-      throw new ValidationException(s"provider root '$root' is not a directory")
-    val ts =
-      try tableFiles
-      catch { case e: Exception =>
-        throw new ValidationException(s"unreadable table metadata under $root: ${e.getMessage}", e) }
-    if (ts.isEmpty)
-      throw new ValidationException(s"no table directories (with meta.json) under $root")
-    ts.foreach { tf =>
-      val missing = tf.meta.primaryKey.filterNot(tf.meta.schema.fieldNames.contains)
-      if (missing.nonEmpty)
-        throw new ValidationException(
-          s"table ${tf.meta.id}: primaryKey columns ${missing.mkString(", ")} " +
-            s"not in declared schema ${tf.meta.schema.fieldNames.mkString(", ")}")
-      if (!Files.exists(Paths.get(tf.dir, "snapshot.jsonl")) &&
-          !Files.exists(Paths.get(tf.dir, "log.jsonl")))
-        throw new ValidationException(
-          s"table ${tf.meta.id}: neither snapshot.jsonl nor log.jsonl exists in ${tf.dir}")
-    }
-  }
+  private[provider] def checkDataFiles(tf: TableFiles): Unit =
+    if (!Files.exists(Paths.get(tf.snapshotFile)) && !Files.exists(Paths.get(tf.logFile)))
+      throw new ValidationException(
+        s"table ${tf.meta.id}: neither snapshot.jsonl nor log.jsonl exists in ${tf.dir}")
 
   // ---- byte-offset indexes (machinery in JsonlIndex) ----------------------
 
-  import JsonlIndex.{FileIndex, cachedIndex, lowerBound, readEntries, scanLines, upperBound}
+  import JsonlIndex.{FileIndex, cachedAppendOnly, mergeIndex, parseLine}
 
-  private def snapIdx(tf: TableFiles): FileIndex[ChunkKey.Key] = {
-    import ChunkKey.ordering
-    cachedIndex[ChunkKey.Key](s"${tf.dir}/snapshot.jsonl", "key",
-      line => Some(keyOf(tf, row(tf.meta.schema, mapper.readTree(line)))))
-  }
-
-  private implicit val keyOffOrd: Ordering[(ChunkKey.Key, Long)] =
-    Ordering.Tuple2(ChunkKey.ordering, implicitly[Ordering[Long]])
+  /** Snapshot rows by chunk key, INCREMENTAL under append like the log. */
+  private[provider] def snapIdx(tf: TableFiles): FileIndex[ChunkKey.Key] =
+    cachedAppendOnly[FileIndex[ChunkKey.Key]](tf.snapshotFile, "key") { (prev, lines, len, mtime) =>
+      val delta = lines.filter(_._1.nonEmpty).flatMap { case (line, start, blen) =>
+        parseLine(mapper, line, start, blen, len)
+          .map(n => (keyOf(tf, row(tf.meta.schema, n)), start, blen))
+      }.toArray
+      mergeIndex(prev.orNull, delta, len, mtime)(ChunkKey.ordering)
+    }
 
   /** Both log indexes — by offset, and by (chunk key, offset) — from ONE
-    * parse pass over log.jsonl (the Jackson parse dominates the build;
-    * the pre-round-17-close code scanned the file once per variant), and
-    * INCREMENTAL under append ([[JsonlIndex.cachedAppendOnly]]): a growing
-    * log extends the sorted runs by an O(n + m) merge of just the appended
-    * suffix instead of re-parsing the file each probe. The (key, offset)
-    * secondary lets a snapshot chunk's catch-up fold read ONLY its own key
-    * range's events instead of scanning the full slice — the difference
-    * between O(chunks × log) and O(log) total fold work when many chunks
-    * share one long slice. */
+    * parse pass over log.jsonl (the Jackson parse dominates the build),
+    * and INCREMENTAL under append: a growing log extends the sorted runs
+    * by an O(n + m) merge of just the appended suffix instead of
+    * re-parsing the file each probe. The (key, offset) secondary lets a
+    * snapshot chunk's catch-up fold read ONLY its own key range's events
+    * instead of scanning the full slice — the difference between
+    * O(chunks × log) and O(log) total fold work when many chunks share one
+    * long slice. */
   private final class LogIdxPair(val off: FileIndex[Long],
       val byKey: FileIndex[(ChunkKey.Key, Long)])
 
   private def logPair(tf: TableFiles): LogIdxPair =
-    JsonlIndex.cachedAppendOnly[LogIdxPair](s"${tf.dir}/log.jsonl", "logpair") { (prev, lines, len, mtime) =>
+    cachedAppendOnly[LogIdxPair](tf.logFile, "logpair") { (prev, lines, len, mtime) =>
       val offB = Array.newBuilder[(Long, Long, Int)]
       val keyB = Array.newBuilder[((ChunkKey.Key, Long), Long, Int)]
       lines.foreach { case (line, start, blen) =>
-        if (line.nonEmpty) {
-          val n = mapper.readTree(line)
+        if (line.nonEmpty) parseLine(mapper, line, start, blen, len).foreach { n =>
           val off = n.get("offset").asLong()
           offB += ((off, start, blen))
           val img = if (n.get("op").asText() == "d") n.get("before") else n.get("after")
           keyB += (((keyOf(tf, row(tf.meta.schema, img)), off), start, blen))
         }
       }
-      import ChunkKey.ordering
-      prev match {
-        case Some(p) => new LogIdxPair(
-          JsonlIndex.mergeIndex(p.off, offB.result(), len, mtime),
-          JsonlIndex.mergeIndex(p.byKey, keyB.result(), len, mtime))
-        case None => new LogIdxPair(
-          JsonlIndex.packIndex(len, mtime, offB.result()),
-          JsonlIndex.packIndex(len, mtime, keyB.result()))
-      }
+      new LogIdxPair(mergeIndex(prev.map(_.off).orNull, offB.result(), len, mtime),
+        mergeIndex(prev.map(_.byKey).orNull, keyB.result(), len, mtime))
     }
 
-  private def logIdx(tf: TableFiles): FileIndex[Long] = logPair(tf).off
+  private[provider] def logIdx(tf: TableFiles): FileIndex[Long] = logPair(tf).off
 
-  private def logKeyIdx(tf: TableFiles): FileIndex[(ChunkKey.Key, Long)] =
+  private[provider] def logKeyIdx(tf: TableFiles): FileIndex[(ChunkKey.Key, Long)] =
     logPair(tf).byKey
 
   // ---- JSON decode --------------------------------------------------------
@@ -175,41 +143,15 @@ final class FileChangeLogProvider(root: String) extends ChangeLogProvider {
     if (node == null || node.isNull) null
     else schema.fields.map(f => decode(node.get(f.name), f.dataType))
 
-  private def keyIdxs(tf: TableFiles): Seq[Int] = tf.meta.primaryKey.map(tf.meta.schema.fieldIndex)
-  private def keyOf(tf: TableFiles, r: Array[Any]): ChunkKey.Key =
-    ChunkKey.of(keyIdxs(tf).map(r): _*)
+  private[provider] def snapshotRow(tf: TableFiles, line: String): Array[Any] =
+    row(tf.meta.schema, mapper.readTree(line))
 
-  // ---- provider SPI (all index-backed) ------------------------------------
-
-  override def currentOffset: Long =
-    tableFiles.map { tf =>
-      val idx = logIdx(tf)
-      if (idx.size == 0) tf.baseOffset
-      else math.max(tf.baseOffset, idx.keys(idx.size - 1).asInstanceOf[Long])
-    }.foldLeft(0L)(math.max)
-
-  override def keyBounds(table: TableId): (ChunkKey.Key, ChunkKey.Key, Long) = {
-    val idx = snapIdx(files(table))
-    if (idx.size == 0) (ChunkKey.of(0L), ChunkKey.of(-1L), 0L)
-    else (idx.keys(0).asInstanceOf[ChunkKey.Key],
-      idx.keys(idx.size - 1).asInstanceOf[ChunkKey.Key], idx.size.toLong)
-  }
-
-  override def nextChunkEnd(table: TableId, from: ChunkKey.Key, chunkSize: Int): Option[ChunkKey.Key] = {
-    val idx = snapIdx(files(table))
-    val lo = lowerBound[ChunkKey.Key](idx, from, ChunkKey.compare)
-    if (idx.size - lo < chunkSize) None
-    else Some(idx.keys(lo + chunkSize - 1).asInstanceOf[ChunkKey.Key])
-  }
-
-  override def snapshotBase(table: TableId, range: SnapshotSplit): (Long, Iterator[Array[Any]]) = {
-    val tf = files(table)
-    val idx = snapIdx(tf)
-    val lo = range.start.map(lowerBound[ChunkKey.Key](idx, _, ChunkKey.compare)).getOrElse(0)
-    val hi = range.end.map(lowerBound[ChunkKey.Key](idx, _, ChunkKey.compare)).getOrElse(idx.size)
-    (tf.baseOffset,
-      readEntries(s"${tf.dir}/snapshot.jsonl", (lo until hi).toArray, idx)(
-        (line, _) => row(tf.meta.schema, mapper.readTree(line))))
+  /** Log lines carry their own offset, so the index key is not needed. */
+  private[provider] def logRecord(tf: TableFiles, line: String, offset: Long): LogRecord = {
+    val n = mapper.readTree(line)
+    LogRecord(n.get("offset").asLong(), n.get("op").asText(), tf.meta.id,
+      row(tf.meta.schema, n.get("before")), row(tf.meta.schema, n.get("after")),
+      if (n.has("tsMs")) n.get("tsMs").asLong() else 0L)
   }
 
   /** Optional `<table dir>/schema_log.jsonl`:
@@ -217,67 +159,9 @@ final class FileChangeLogProvider(root: String) extends ChangeLogProvider {
     * streamed directly (no index). */
   override def schemaChanges(fromExclusive: Long, toInclusive: Long): Iterator[(Long, TableId, String)] =
     tableFiles.iterator.flatMap { tf =>
-      scanLines(s"${tf.dir}/schema_log.jsonl").map { case (line, _, _) =>
+      JsonlIndex.lines(s"${tf.dir}/schema_log.jsonl").map { case (line, _, _) =>
         val n = mapper.readTree(line)
         (n.get("offset").asLong(), tf.meta.id, n.get("ddl").asText())
       }.filter(e => e._1 > fromExclusive && e._1 <= toInclusive)
     }
-
-  override def log(table: TableId, fromExclusive: Long, toInclusive: Long): Iterator[LogRecord] = {
-    val tf = files(table)
-    val idx = logIdx(tf)
-    // (from, to] via strict upper bounds — no +1 that could wrap at
-    // Long.MaxValue (ADVICE_r16 #3)
-    val lo = upperBound[Long](idx, fromExclusive, java.lang.Long.compare(_, _))
-    val hi = upperBound[Long](idx, toInclusive, java.lang.Long.compare(_, _))
-    readEntries(s"${tf.dir}/log.jsonl", (lo until hi).toArray, idx)((line, _) => decodeLog(tf)(line))
-  }
-
-  /** Key-indexed slice read: binary-search the (key, offset) index to the
-    * chunk's key range, then keep offsets in (from, to]. Cost is the
-    * range's own events + O(log n) seeks — a chunk fold never rescans the
-    * slice its 124 sibling chunks also need. */
-  override def keyIndexedLog(table: TableId): Boolean = true
-
-  /** Exact from the offset index: two binary searches, no IO. */
-  override def logEventsApprox(table: TableId, fromExclusive: Long,
-      toInclusive: Long): Long = {
-    val idx = logIdx(files(table))
-    val lo = upperBound[Long](idx, fromExclusive, java.lang.Long.compare(_, _))
-    val hi = upperBound[Long](idx, toInclusive, java.lang.Long.compare(_, _))
-    (hi - lo).toLong
-  }
-
-  /** Event-count-weighted shard boundaries from the (key, offset) index —
-    * two in-memory passes, no IO (see JsonlIndex.shardBoundaries). Closes
-    * the hot-RANGE skew case snapshot-equalized boundaries degrade on: the
-    * planner splits the window by where the LOG's events actually are. */
-  override def logShardBoundaries(table: TableId, fromExclusive: Long,
-      toInclusive: Long, n: Int): Seq[ChunkKey.Key] =
-    JsonlIndex.shardBoundaries(logKeyIdx(files(table)), fromExclusive, toInclusive, n)
-
-  override def logForRange(table: TableId, fromExclusive: Long, toInclusive: Long,
-      range: SnapshotSplit): Iterator[LogRecord] = {
-    val tf = files(table)
-    val idx = logKeyIdx(tf)
-    val cmp = (a: (ChunkKey.Key, Long), b: (ChunkKey.Key, Long)) => keyOffOrd.compare(a, b)
-    // coarse bounds (range is [start, end)): entries below start excluded,
-    // entries at/after end excluded; exact contains-check follows
-    val lo = range.start.map(k =>
-      lowerBound[(ChunkKey.Key, Long)](idx, (k, Long.MinValue), cmp)).getOrElse(0)
-    val hi = range.end.map(k =>
-      lowerBound[(ChunkKey.Key, Long)](idx, (k, Long.MinValue), cmp)).getOrElse(idx.size)
-    val picks = (lo until hi).filter { i =>
-      val (key, off) = idx.keys(i).asInstanceOf[(ChunkKey.Key, Long)]
-      off > fromExclusive && off <= toInclusive && range.contains(key)
-    }.toArray
-    readEntries(s"${tf.dir}/log.jsonl", picks, idx)((line, _) => decodeLog(tf)(line))
-  }
-
-  private def decodeLog(tf: TableFiles)(line: String): LogRecord = {
-    val n = mapper.readTree(line)
-    LogRecord(n.get("offset").asLong(), n.get("op").asText(), tf.meta.id,
-      row(tf.meta.schema, n.get("before")), row(tf.meta.schema, n.get("after")),
-      if (n.has("tsMs")) n.get("tsMs").asLong() else 0L)
-  }
 }

@@ -18,6 +18,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   * retry. Streaming inputs are returned untouched (partitioning is the
   * source's contract, and `.rdd` is not available on them). */
 object Par {
+  private val BytesPerPartition = 8192L
+
   def widen(df: DataFrame, keys: Column*): DataFrame = {
     if (df.isStreaming) return df
     // Respect the session's own partitioning policy: a stream-scoped
@@ -31,18 +33,16 @@ object Par {
     // core-count target over-parallelizes tiny inputs — the 8-core run
     // beat the 32-core run on the maintenance family because 32-way task
     // overhead exceeded the work per task. The per-partition byte budget
-    // is deliberately tiny (8 KiB compressed default): these operators
+    // is deliberately tiny (8 KiB compressed): these operators
     // run hundreds of ns of CPU per input byte (128-perm MinHash,
     // shingling), so 8 KiB is tens of ms of work — enough to amortize a
     // task, small enough that any real corpus still widens to every core.
-    val bytesPerPart = spark.conf.getOption("spark.graft.widen.bytesPerPartition")
-      .map(_.toLong).getOrElse(8192L)
     val plan = df.queryExecution.optimizedPlan
     val size = plan.stats.sizeInBytes
     val target =
       if (!size.isValidLong || size <= 0) cap
       else math.min(cap.toLong,
-        math.max(1L, (size.toLong + bytesPerPart - 1) / bytesPerPart)).toInt
+        math.max(1L, (size.toLong + BytesPerPartition - 1) / BytesPerPartition)).toInt
     // The no-op check needs the input's partition count. df.rdd answers
     // exactly — but resolving the RDD of an AQE plan MATERIALIZES its
     // shuffle/broadcast stages early, running real jobs the actual query

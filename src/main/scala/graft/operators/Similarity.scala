@@ -64,8 +64,8 @@ object Similarity {
     *  - [[PairOccupancy]] (64) for within-cell pair enumeration
     *    ([[cosineNearDupPairs]], [[semanticDedup]]): cost is QUADRATIC in
     *    occupancy (n_c² pairs per cell), so the target is much lower —
-    *    this is exactly the Sf1Extras measurement (ncells 32→320 at 10×
-    *    data cut candidate pairs 10×, restoring linear total cost). */
+    *    SCALE_PROBE_sf1.md (q39) measured the pinned alternative: with
+    *    ncells fixed at 32, candidate pairs grow ~100× at 10× data. */
   def autoCells(corpusRows: Long, targetOccupancy: Long = RetrievalOccupancy,
       minCells: Int = 16, maxCells: Int = 1 << 18): Int =
     math.min(maxCells.toLong,

@@ -479,7 +479,7 @@ object CdcQueries {
     // boundaries): the backlog concentrates ~62% of its events in the top
     // 10% of the keyspace (every hot key carries 19 updates), the exact
     // shape whose snapshot-equalized plan drains one shard serially
-    // (ShardSkewProbe measured that plan WORSE than serial). The planner's
+    // (SCALE_PROBE_sf1.md measured that plan WORSE than serial). The planner's
     // weighted boundaries (logShardBoundaries over the provider's
     // (key, offset) index) split it evenly; the materialized state must
     // hash-match the closed form whatever the shard shapes were —

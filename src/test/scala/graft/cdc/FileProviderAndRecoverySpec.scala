@@ -1,7 +1,7 @@
 package graft.cdc
 
 import graft.SparkSpec
-import graft.cdc.provider.{FileChangeLogProvider, InMemoryChangeLogProvider, ProviderRegistry}
+import graft.cdc.provider.{DebeziumJsonChangeLogProvider, FileChangeLogProvider, InMemoryChangeLogProvider, ProviderRegistry}
 import org.apache.spark.sql.types._
 
 import java.nio.file.{Files, Paths}
@@ -51,14 +51,25 @@ class FileProviderAndRecoverySpec extends SparkSpec {
     Files.writeString(dir.resolve("meta.json"),
       """{"db":"db","table":"t","primaryKey":["id"],"schema":"id BIGINT, v STRING","baseOffset":0}""")
     // interleaved keys so key order != offset order
-    Files.writeString(dir.resolve("log.jsonl"),
-      """{"offset":1,"op":"c","before":null,"after":{"id":5,"v":"a"}}
-        |{"offset":2,"op":"c","before":null,"after":{"id":1,"v":"b"}}
-        |{"offset":3,"op":"u","before":{"id":5,"v":"a"},"after":{"id":5,"v":"c"}}
-        |{"offset":4,"op":"d","before":{"id":1,"v":"b"},"after":null}
-        |{"offset":5,"op":"c","before":null,"after":{"id":9,"v":"d"}}
-        |""".stripMargin)
-    val p = new FileChangeLogProvider(root)
+    val events = Seq(
+      ("c", "null", """{"id":5,"v":"a"}"""),
+      ("c", "null", """{"id":1,"v":"b"}"""),
+      ("u", """{"id":5,"v":"a"}""", """{"id":5,"v":"c"}"""),
+      ("d", """{"id":1,"v":"b"}""", "null"),
+      ("c", "null", """{"id":9,"v":"d"}"""))
+    Files.writeString(dir.resolve("log.jsonl"), events.zipWithIndex.map { case ((op, b, a), i) =>
+      s"""{"offset":${i + 1},"op":"$op","before":$b,"after":$a}"""
+    }.mkString("", "\n", "\n"))
+    // the same events as a Debezium-envelope spool: line-ordinal offsets 1-5
+    val spoolRoot = Files.createTempDirectory("cdckeyidx_dbz").toString
+    val spoolDir = Paths.get(spoolRoot, "db.t")
+    Files.createDirectories(spoolDir)
+    Files.writeString(spoolDir.resolve("meta.json"),
+      """{"db":"db","table":"t","primaryKey":["id"],"schema":"id BIGINT, v STRING"}""")
+    Files.writeString(spoolDir.resolve("events.jsonl"), events.map { case (op, b, a) =>
+      s"""{"before":$b,"after":$a,"op":"$op"}"""
+    }.mkString("", "\n", "\n"))
+    val providers = Seq(new FileChangeLogProvider(root), new DebeziumJsonChangeLogProvider(spoolRoot))
     val tid = TableId("db", "t")
     def rangeOf(s: Option[Long], e: Option[Long]) =
       SnapshotSplit(tid, 0, s.map(ChunkKey.of(_)), e.map(ChunkKey.of(_)))
@@ -70,13 +81,17 @@ class FileProviderAndRecoverySpec extends SparkSpec {
     cases.foreach { case (range, from, to) =>
       def keyOf(r: LogRecord) =
         ChunkKey.of((if (r.op == "d") r.before else r.after)(0))
-      val expected = p.log(tid, from, to).filter(r => range.contains(keyOf(r)))
-        .map(r => (r.offset, r.op)).toSeq
-      val got = p.logForRange(tid, from, to, range)
-        .filter(r => range.contains(keyOf(r))) // reader-side backstop
-        .map(r => (r.offset, r.op)).toSeq
-      assert(got === expected, s"range $range ($from,$to]")
-      assert(got == got.sorted, "events arrive in offset order")
+      val gots = providers.map { p =>
+        val expected = p.log(tid, from, to).filter(r => range.contains(keyOf(r)))
+          .map(r => (r.offset, r.op)).toSeq
+        val got = p.logForRange(tid, from, to, range)
+          .filter(r => range.contains(keyOf(r))) // reader-side backstop
+          .map(r => (r.offset, r.op)).toSeq
+        assert(got === expected, s"${p.getClass.getSimpleName}: range $range ($from,$to]")
+        assert(got == got.sorted, "events arrive in offset order")
+        got
+      }
+      assert(gots(0) === gots(1), s"file layout and spool disagree: range $range ($from,$to]")
     }
   }
 
@@ -89,8 +104,13 @@ class FileProviderAndRecoverySpec extends SparkSpec {
     Files.writeString(dir.resolve("log.jsonl"),
       """{"offset":1,"op":"c","before":null,"after":{"id":1,"name":"aaa"}}
         |""".stripMargin)
+    Files.writeString(dir.resolve("snapshot.jsonl"), """{"id":1,"name":"aaa"}""" + "\n")
     val p = new FileChangeLogProvider(root)
-    assert(p.log(TableId("db", "t"), 0L, 10L).toSeq.head.after(1) === "aaa")
+    val tid = TableId("db", "t")
+    def snapshotRows() = p.snapshotBase(tid, SnapshotSplit(tid, 0, None, None))._2
+      .map(r => (r(0), r(1))).toSeq
+    assert(p.log(tid, 0L, 10L).toSeq.head.after(1) === "aaa")
+    assert(snapshotRows() === Seq((1L, "aaa")))
     // rewrite in place to the SAME byte length, different content + offset
     val orig = Files.readString(dir.resolve("log.jsonl"))
     val replaced = orig.replace(""""offset":1""", """"offset":2""").replace("aaa", "bbb")
@@ -99,9 +119,40 @@ class FileProviderAndRecoverySpec extends SparkSpec {
     // mtime granularity can be coarse on some filesystems — force a tick
     Files.setLastModifiedTime(dir.resolve("log.jsonl"),
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 1000))
-    val rec = p.log(TableId("db", "t"), 0L, 10L).toSeq.head
+    val rec = p.log(tid, 0L, 10L).toSeq.head
     assert(rec.offset === 2L && rec.after(1) === "bbb",
       "stale index served after a same-length in-place rewrite")
+    // the snapshot index lives in the same append-only cache
+    Files.writeString(dir.resolve("snapshot.jsonl"), """{"id":2,"name":"bbb"}""" + "\n")
+    Files.setLastModifiedTime(dir.resolve("snapshot.jsonl"),
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 1000))
+    assert(snapshotRows() === Seq((2L, "bbb")),
+      "stale snapshot index served after a same-length in-place rewrite")
+  }
+
+  test("a cut final log line (writer mid-append) is skipped, then read whole once its newline lands") {
+    // a live log grows page by page within one write, so a probe can see
+    // the last line cut; the index must not fail the query on it
+    val root = Files.createTempDirectory("cdccut").toString
+    val dir = Paths.get(root, "db.t")
+    Files.createDirectories(dir)
+    Files.writeString(dir.resolve("meta.json"),
+      """{"db":"db","table":"t","primaryKey":["id"],"schema":"id BIGINT, name STRING","baseOffset":0}""")
+    def line(o: Long) =
+      s"""{"offset":$o,"op":"c","tsMs":$o,"before":null,"after":{"id":$o,"name":"v$o"}}"""
+    val log = dir.resolve("log.jsonl")
+    Files.writeString(log, (1L to 30L).map(line).mkString("", "\n", "\n"))
+    val (head, rest) = line(31L).splitAt(line(31L).length / 2)
+    Files.writeString(log, head, java.nio.file.StandardOpenOption.APPEND)
+    val p = new FileChangeLogProvider(root)
+    val tid = TableId("db", "t")
+    assert(p.currentOffset === 30L, "the cut line is not an event yet")
+    Files.writeString(log, rest + "\n", java.nio.file.StandardOpenOption.APPEND)
+    assert(p.currentOffset === 31L)
+    assert(p.log(tid, 30L, 31L).map(r => (r.offset, r.op)).toSeq === Seq((31L, "c")))
+    // an unparseable line that is not the cut tail still fails loudly
+    Files.writeString(log, head + "\n" + line(32L) + "\n", java.nio.file.StandardOpenOption.APPEND)
+    intercept[com.fasterxml.jackson.core.JsonProcessingException](p.currentOffset)
   }
 
   test("validate(): bad file-provider config fails loudly at planning") {
