@@ -103,14 +103,14 @@ object TrainingPipeline {
 
     // 6. ANN neighbours over the embeddings table (IVF)
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val ann = Similarity.ivfTopK(emb, emb.limit(10), "vec_id", "embedding",
+    val ann = Similarity.ivfTopKPortable(emb, emb.limit(10), "vec_id", "embedding",
       k = 3, ncells = 8, nprobe = 2, iters = 1)
     println("sample ANN neighbours:")
     ann.show(9, false)
 
     // 6b. SemDeDup pass over the embedding space: one representative per
     // semantic near-dup cluster
-    val sem = Similarity.semanticDedup(emb, "vec_id", "embedding",
+    val sem = Similarity.semanticDedupPortable(emb, "vec_id", "embedding",
       minSim = 0.35, ncells = 8)
     println(s"semantic dedup: kept ${sem.filter(col("kept")).count()} " +
       s"of ${sem.count()} vectors")

@@ -8,39 +8,34 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftglue.ColumnGlue
 import org.apache.spark.sql.types._
 
-/** Native Catalyst dot-product expressions for embedding columns.
+/** Native Catalyst integer dot product for quantized embedding columns.
   *
   * The similarity hot paths score O(pairs) candidate rows; expressed as a
   * dim-term `element_at(a,i)*element_at(b,i)` chain, each term pays
   * per-call dispatch and the whole chain bloats the generated method —
-  * measured ~4-8 µs/pair for dim=64 on the bench. These expressions
-  * evaluate the whole dot in ONE tight loop over the underlying ArrayData
+  * measured ~4-8 µs/pair for dim=64 on the bench. This expression
+  * evaluates the whole dot in ONE tight loop over the underlying ArrayData
   * (the same one-virtual-call-per-row pattern as [[WordShingleHashes]] and
   * Spark's own regexp/json expressions), keeping the scoring stage a
   * codegen-fused map.
   *
   * Value semantics on WELL-FORMED input (equal-length arrays, no null
   * elements, |terms| within the documented 2^54 bounds) are EXACTLY the
-  * forms they replace (this matters — the results sit under the DuckDB
-  * hash gate):
-  *  - [[LongArrayDot]]: Σ a(i)·b(i) over long arrays — 64-bit integer
-  *    arithmetic, order-free, == the unrolled integer chain and the
-  *    oracle's list_sum(list_transform(...)).
-  *  - [[DoubleArrayDot]]: left-to-right Σ double(a(i))·double(b(i)) over
-  *    float/double arrays — identical fp-addition ORDER to the unrolled
-  *    `.cast("double")` chain (float→double widening is exact), so every
-  *    double it produces is bit-identical to the old expression's.
+  * form it replaces (this matters — the results sit under the DuckDB
+  * hash gate): Σ a(i)·b(i) over long arrays — 64-bit integer arithmetic,
+  * order-free, == the unrolled integer chain and the oracle's
+  * list_sum(list_transform(...)).
   *
   * On MALFORMED input the old element_at chains failed quietly (null
   * propagation / silent Long wrap under non-ANSI) — which downstream of a
-  * hash gate surfaces as an inscrutable oracle mismatch. These expressions
-  * fail LOUDLY instead: length mismatch and null elements throw
-  * IllegalArgumentException, and [[LongArrayDot]] uses
-  * Math.addExact/multiplyExact so a violation of the 2^54 contract is an
-  * ArithmeticException at the offending row, not a wrong hash. (We do not
-  * statically reject ArrayType(containsNull=true): Spark marks containsNull
-  * conservatively on most constructed arrays, so the nullability check must
-  * be per-element at runtime.) */
+  * hash gate surfaces as an inscrutable oracle mismatch. This expression
+  * fails LOUDLY instead: length mismatch and null elements throw
+  * IllegalArgumentException, and Math.addExact/multiplyExact make a
+  * violation of the 2^54 contract an ArithmeticException at the offending
+  * row, not a wrong hash. (We do not statically reject
+  * ArrayType(containsNull=true): Spark marks containsNull conservatively
+  * on most constructed arrays, so the nullability check must be
+  * per-element at runtime.) */
 final case class LongArrayDot(left: Expression, right: Expression)
   extends BinaryExpression {
 
@@ -75,58 +70,6 @@ final case class LongArrayDot(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): LongArrayDot = copy(left = newLeft, right = newRight)
-}
-
-final case class DoubleArrayDot(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  private def okElem(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType | DoubleType, _) => true
-    case _                                    => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (okElem(left.dataType) && okElem(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float|double> columns, got " +
-        s"${left.dataType} / ${right.dataType}")
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "double_array_dot"
-
-  private def isFloat(e: Expression): Boolean =
-    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
-  private lazy val leftFloat = isFloat(left)
-  private lazy val rightFloat = isFloat(right)
-
-  def compute(a: ArrayData, b: ArrayData): Double = {
-    val n = VectorExpressions.checkedLength(prettyName, a, b)
-    // hoist the lazy-val reads: a Scala lazy val costs a bitmap check per
-    // access, which is measurable at one-per-element in the O(pairs) loop
-    val lf = leftFloat
-    val rf = rightFloat
-    var s = 0.0
-    var i = 0
-    // float→double widening is exact; accumulation is left-to-right, so
-    // the result is bit-identical to the unrolled cast("double") chain
-    while (i < n) {
-      val x: Double = if (lf) a.getFloat(i).toDouble else a.getDouble(i)
-      val y: Double = if (rf) b.getFloat(i).toDouble else b.getDouble(i)
-      s += x * y
-      i += 1
-    }
-    s
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("dot", this, classOf[DoubleArrayDot].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): DoubleArrayDot = copy(left = newLeft, right = newRight)
 }
 
 /** Quantize-then-sign-project in ONE native pass: out(j) = Σᵢ sign(j,i) ·
@@ -252,10 +195,6 @@ object VectorExpressions {
   /** Exact integer dot of two array<bigint> columns (order-free). */
   def longDot(a: Column, b: Column): Column =
     ColumnGlue.column(LongArrayDot(ColumnGlue.expression(a), ColumnGlue.expression(b)))
-
-  /** Left-to-right double dot of two array<float|double> columns. */
-  def doubleDot(a: Column, b: Column): Column =
-    ColumnGlue.column(DoubleArrayDot(ColumnGlue.expression(a), ColumnGlue.expression(b)))
 
   /** floor-quantize + ±1-project an array<float|double> column to
     * array<bigint> in one native pass (see [[SignProjectQuantized]]). */

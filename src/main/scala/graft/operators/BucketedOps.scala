@@ -911,11 +911,10 @@ object BucketedOps {
   def compactChangelog(s: org.apache.spark.sql.SparkSession, changelogTable: String,
       key: String, payloadCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._
-    val seq = struct(col("op_offset"),
-      when(col("row_kind") === "-U", 0).otherwise(1))
     s.table(changelogTable)
       .groupBy(col(key))
-      .agg(max_by(struct((payloadCols :+ "op").map(col): _*), seq).as("__last"))
+      .agg(max_by(struct((payloadCols :+ "op").map(col): _*), ChangelogOps.EventOrder)
+        .as("__last"))
       .filter(col("__last.op") =!= "d")
       .select(col(key) +: payloadCols.map(c => col(s"__last.$c").as(c)): _*)
   }
@@ -945,12 +944,10 @@ object BucketedOps {
       key: String, payloadCols: Seq[String], horizonOffset: Long): DataFrame = {
     import org.apache.spark.sql.functions._
     val cl = s.table(changelogTable)
-    val seq = struct(col("op_offset"),
-      when(col("row_kind") === "-U", 0).otherwise(1))
     val snap = cl.filter(col("op_offset") < horizonOffset)
       .groupBy(col(key))
-      .agg(max_by(struct((payloadCols ++ Seq("op", "op_offset")).map(col): _*), seq)
-        .as("__last"))
+      .agg(max_by(struct((payloadCols ++ Seq("op", "op_offset")).map(col): _*),
+        ChangelogOps.EventOrder).as("__last"))
       .filter(col("__last.op") =!= "d")
       .select(col(key) +: (payloadCols.map(c => col(s"__last.$c").as(c)) ++ Seq(
         lit("r").as("op"), col("__last.op_offset").as("op_offset"),

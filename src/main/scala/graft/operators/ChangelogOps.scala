@@ -18,6 +18,13 @@ import org.apache.spark.sql.functions._
   */
 object ChangelogOps {
 
+  /** The total event order of a cdc-log changelog read with
+    * `metadata.columns = "op_offset,row_kind"`: (op_offset,
+    * after-image-wins) — an update's '+U' row supersedes its '-U' row at
+    * the same offset. Every last-writer-wins fold orders by this. */
+  private[graft] val EventOrder: Column =
+    struct(col("op_offset"), when(col("row_kind") === "-U", 0).otherwise(1))
+
   /** Current-state materialization: last event per key wins (ordered by
     * `seq`), delete removes the row, and for updates the after-image row is
     * the later of the two 'u' rows (callers pass a `seq` that orders
@@ -35,14 +42,11 @@ object ChangelogOps {
   }
 
   /** Exact materialization of a cdc-log changelog read with
-    * `metadata.columns = "op_offset,row_kind"`: the total order is
-    * (op_offset, after-image-wins) — an update's '+U' row supersedes its
-    * '-U' row at the same offset. Output drops the op/metadata columns. */
-  def materializeExact(changelog: DataFrame, pkCols: Seq[String]): DataFrame = {
-    val seq = struct(col("op_offset"), when(col("row_kind") === "-U", 0).otherwise(1))
-    materialize(changelog, pkCols, seq)
+    * `metadata.columns = "op_offset,row_kind"`, ordered by [[EventOrder]].
+    * Output drops the op/metadata columns. */
+  def materializeExact(changelog: DataFrame, pkCols: Seq[String]): DataFrame =
+    materialize(changelog, pkCols, EventOrder)
       .drop("op", "op_offset", "row_kind")
-  }
 
   /** Streaming variant of [[materializeExact]]: a continuously-updated
     * current-state view over an unbounded cdc-log stream (read with
@@ -67,9 +71,8 @@ object ChangelogOps {
     */
   def materializeStreaming(changelog: DataFrame, pkCols: Seq[String]): DataFrame = {
     val payload = changelog.columns.filterNot(pkCols.contains).map(col)
-    val seq = struct(col("op_offset"), when(col("row_kind") === "-U", 0).otherwise(1))
     changelog.groupBy(pkCols.map(col): _*)
-      .agg(max_by(struct(payload: _*), seq).as("__m"))
+      .agg(max_by(struct(payload: _*), EventOrder).as("__m"))
       .select(pkCols.map(col) ++
         changelog.columns.filterNot(pkCols.contains).map(c => col(s"__m.$c").as(c)): _*)
   }
@@ -82,9 +85,6 @@ object ChangelogOps {
         .as("net_delta"),
       count(lit(1)).as("n_events"))
 
-  /** Split an update-pair changelog into before/after images: updates emit
-    * two identical-op rows; `emitIdx` disambiguates (0 = before, 1 = after).
-    * Deletes' single row is a before-image; creates/reads are after-images. */
   /** SCD2 history materialization: every state a key ever held, with its
     * validity interval. State-bearing events (insert, update after-image)
     * open an interval at their offset; the NEXT event on the same key —
@@ -104,10 +104,4 @@ object ChangelogOps {
       .withColumn("valid_from", col(offsetCol))
       .withColumn("is_current", col("valid_to").isNull)
   }
-
-  def afterImages(changelog: DataFrame, emitIdx: Column): DataFrame =
-    changelog.filter(col("op") =!= "d" && (col("op") =!= "u" || emitIdx === 1))
-
-  def beforeImages(changelog: DataFrame, emitIdx: Column): DataFrame =
-    changelog.filter(col("op") === "d" || (col("op") === "u" && emitIdx === 0))
 }

@@ -141,72 +141,76 @@ object Curation {
       langId(col(textCol)).as("lang_pred"),
       tokenCount(col(textCol)).as("n_tokens"),
       contentHash(col(textCol)).as("h")).persist()
+    // Both barriers (and the ledger's cache) are released when the call
+    // throws — from the Bloom probe, the components loop or the final
+    // count — so a failing daily job leaves no cached corpus behind either.
+    try {
+      // stages 1+2: stateless filters fused into the scan stage
+      val s2 = base.filter(col("quality") >= minQuality &&
+          col("lang_pred") === keepLang)
+        .select("doc_id", "text", "n_tokens", "h")
 
-    // stages 1+2: stateless filters fused into the scan stage
-    val s2 = base.filter(col("quality") >= minQuality &&
-        col("lang_pred") === keepLang)
-      .select("doc_id", "text", "n_tokens", "h")
+      // optional prior-corpus stage: Bloom lane split + exact verify on the
+      // kept-hash manifest (the q95 construction, shared via Dedup)
+      val (priorDrops, s2b) = prior match {
+        case None => (None, s2)
+        case Some((hashes, fpp, budget)) =>
+          val (members, nonMembers) =
+            Dedup.bloomLaneSplit(s2, "h", hashes, fpp, budget)
+          (Some(members.select(col("doc_id"), lit(true).as("is_prior_dup"))),
+            nonMembers)
+      }
 
-    // optional prior-corpus stage: Bloom lane split + exact verify on the
-    // kept-hash manifest (the q95 construction, shared via Dedup)
-    val (priorDrops, s2b) = prior match {
-      case None => (None, s2)
-      case Some((hashes, fpp, budget)) =>
-        val (members, nonMembers) =
-          Dedup.bloomLaneSplit(s2, "h", hashes, fpp, budget)
-        (Some(members.select(col("doc_id"), lit(true).as("is_prior_dup"))),
-          nonMembers)
-    }
+      // exact dedup — one shuffle keyed on the barrier's content hash
+      val ex = s2b.withColumn("keeper",
+        min("doc_id").over(Window.partitionBy(col("h"))))
+      val exDrops = ex.filter(col("doc_id") =!= col("keeper"))
+        .select(col("doc_id"), lit(true).as("is_exact_dup"))
+      // second fan-out barrier: s3 seeds pair-gen, the components loop, the
+      // kept set, and packing — four consumers of one window shuffle
+      val s3 = ex.filter(col("doc_id") === col("keeper"))
+        .select("doc_id", "text", "n_tokens").persist()
+      try {
+        // near-dup clusters over the (smaller) survivor set only
+        val pairs = Dedup.ngramJaccardPairs(s3, "doc_id", "text",
+          n = shingleN, minJaccard = minJaccard)
+        val comp = ConnectedComponents.components(pairs, "id_a", "id_b")
+        val ndDrops = comp.filter(col("node") =!= col("component"))
+          .select(col("node").as("doc_id"), lit(true).as("is_near_dup"))
 
-    // exact dedup — one shuffle keyed on the barrier's content hash
-    val ex = s2b.withColumn("keeper",
-      min("doc_id").over(Window.partitionBy(col("h"))))
-    val exDrops = ex.filter(col("doc_id") =!= col("keeper"))
-      .select(col("doc_id"), lit(true).as("is_exact_dup"))
-    // second fan-out barrier: s3 seeds pair-gen, the components loop, the
-    // kept set, and packing — four consumers of one window shuffle
-    val s3 = ex.filter(col("doc_id") === col("keeper"))
-      .select("doc_id", "text", "n_tokens").persist()
+        // pack the survivors on a token budget, continuing at packIdStart
+        val kept = s3.join(ndDrops.select("doc_id"), Seq("doc_id"), "left_anti")
+        val packs = Packing.sequentialPacks(kept, "doc_id", "text", packBudget)
+          .select(col("doc_id"), (col("pack_id") + lit(packIdStart)).as("pack_id"))
 
-    // near-dup clusters over the (smaller) survivor set only
-    val pairs = Dedup.ngramJaccardPairs(s3, "doc_id", "text",
-      n = shingleN, minJaccard = minJaccard)
-    val comp = ConnectedComponents.components(pairs, "id_a", "id_b")
-    val ndDrops = comp.filter(col("node") =!= col("component"))
-      .select(col("node").as("doc_id"), lit(true).as("is_near_dup"))
-
-    // pack the survivors on a token budget, continuing at packIdStart
-    val kept = s3.join(ndDrops.select("doc_id"), Seq("doc_id"), "left_anti")
-    val packs = Packing.sequentialPacks(kept, "doc_id", "text", packBudget)
-      .select(col("doc_id"), (col("pack_id") + lit(packIdStart)).as("pack_id"))
-
-    val withPrior = priorDrops.fold(
-      base.withColumn("is_prior_dup", lit(null).cast("boolean")))(pd =>
-      base.join(pd, Seq("doc_id"), "left"))
-    val out = withPrior
-      .join(exDrops, Seq("doc_id"), "left")
-      .join(ndDrops, Seq("doc_id"), "left")
-      .join(packs, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("quality") < minQuality, lit("drop_quality"))
-          .when(col("lang_pred") =!= keepLang, lit("drop_lang"))
-          .when(col("is_prior_dup"), lit("drop_prior_dup"))
-          .when(col("is_exact_dup"), lit("drop_exact_dup"))
-          .when(col("is_near_dup"), lit("drop_near_dup"))
-          .otherwise(lit("kept")).as("verdict"),
-        col("n_tokens"), col("pack_id"))
-    // The funnel is forced HERE so both fan-out barriers can be released
-    // before returning — a daily job calling this repeatedly must not
-    // accumulate cached corpora for the life of the application. The
-    // LEDGER itself (one narrow row per input doc, the smallest frame in
-    // the funnel) is handed back persisted: the caller owns that one
-    // handle (`ledger.unpersist()` when done); if its blocks are ever
-    // evicted, recomputation replays the whole funnel unbarriered —
-    // correct, just slower, the safe failure direction.
-    val ledger = out.persist()
-    ledger.count()
-    base.unpersist()
-    s3.unpersist()
-    ledger
+        val withPrior = priorDrops.fold(
+          base.withColumn("is_prior_dup", lit(null).cast("boolean")))(pd =>
+          base.join(pd, Seq("doc_id"), "left"))
+        val out = withPrior
+          .join(exDrops, Seq("doc_id"), "left")
+          .join(ndDrops, Seq("doc_id"), "left")
+          .join(packs, Seq("doc_id"), "left")
+          .select(col("doc_id"),
+            when(col("quality") < minQuality, lit("drop_quality"))
+              .when(col("lang_pred") =!= keepLang, lit("drop_lang"))
+              .when(col("is_prior_dup"), lit("drop_prior_dup"))
+              .when(col("is_exact_dup"), lit("drop_exact_dup"))
+              .when(col("is_near_dup"), lit("drop_near_dup"))
+              .otherwise(lit("kept")).as("verdict"),
+            col("n_tokens"), col("pack_id"))
+        // The funnel is forced HERE so both fan-out barriers can be released
+        // before returning — a daily job calling this repeatedly must not
+        // accumulate cached corpora for the life of the application. The
+        // LEDGER itself (one narrow row per input doc, the smallest frame in
+        // the funnel) is handed back persisted: the caller owns that one
+        // handle (`ledger.unpersist()` when done); if its blocks are ever
+        // evicted, recomputation replays the whole funnel unbarriered —
+        // correct, just slower, the safe failure direction.
+        val ledger = out.persist()
+        try ledger.count()
+        catch { case e: Throwable => ledger.unpersist(); throw e }
+        ledger
+      } finally s3.unpersist()
+    } finally base.unpersist()
   }
 }

@@ -4,37 +4,24 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.functions.VectorExpressions.{doubleDot, longDot}
+import graft.functions.VectorExpressions.longDot
 
 /** Similarity search over embedding columns (array<float>).
   *
-  * Two tiers, mirroring how ANN is actually deployed at 100 TB:
-  *  - exact brute-force top-k (the baseline + the per-bucket verifier),
-  *    expressed with higher-order functions so the dot product stays in
-  *    whole-stage codegen;
-  *  - IVF (inverted-file) index: centroids learned with distributed
-  *    k-means iterations, vectors partitioned by nearest centroid, queries
+  * One arithmetic for every operator: vectors are quantized to exact
+  * integers (floor(x·2^k) per component), dot products are 64-bit integer
+  * sums (the native [[graft.functions.LongArrayDot]], order-free), and the
+  * only double ops are IEEE-correctly-rounded ones (int→double, sqrt, ÷).
+  * A DuckDB SQL mirror therefore replays every cell, probe and score
+  * bit-for-bit. Two shapes, mirroring how ANN is deployed at 100 TB:
+  *  - exact brute-force top-k (the baseline + the per-bucket verifier);
+  *  - IVF (inverted-file) index: centroids trained on a bounded
+  *    deterministic sample, vectors partitioned by nearest centroid, queries
   *    probe only `nprobe` cells — the candidate set shrinks by
   *    ncells/nprobe, and the centroid table is broadcast (never shuffled).
+  *    IVF-PQ, cosine near-dup pairs and SemDeDup build on the same cells.
   */
 object Similarity {
-
-  /** Plain double dot product of two array<float> columns — generic
-    * higher-order-function form, for when the dimension is not statically
-    * known. NOTE: Spark evaluates HOF lambdas interpreted (outside
-    * whole-stage codegen) and `zip_with` allocates an intermediate array
-    * per row — on per-pair hot paths use [[dotUnrolled]] instead. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, t) => acc + t)
-
-  /** Per-candidate double dot product — the native [[graft.functions
-    * .DoubleArrayDot]] expression: ONE tight loop over the ArrayData per
-    * row (no per-term dispatch, no array allocation, no lambda). Addition
-    * is left-to-right like the HOF fold, so results are bit-identical to
-    * [[dot]] and to the previous element_at chain (the DuckDB gate relies
-    * on this). `dim` is kept in the signature for call-site symmetry. */
-  def dotUnrolled(a: Column, b: Column, dim: Int): Column = doubleDot(a, b)
 
   /** One planning-time scalar probe for the embedding dimension — a
     * bounded driver action at plan-construction time (the same pattern as
@@ -58,12 +45,12 @@ object Similarity {
     * as data scales, which is the invariant a 100 TB deployment needs.
     *
     * Two operating points, chosen by what the operator does inside a cell:
-    *  - [[RetrievalOccupancy]] (1024) for top-k probing ([[ivfTopK]],
-    *    [[ivfPqTopK]]): per-query cost is LINEAR in occupancy, and
+    *  - [[RetrievalOccupancy]] (1024) for top-k probing ([[ivfTopKPortable]],
+    *    [[ivfPqTopKPortable]]): per-query cost is LINEAR in occupancy, and
     *    1-4k points per cell is the classic IVF recipe (FAISS guidance).
     *  - [[PairOccupancy]] (64) for within-cell pair enumeration
-    *    ([[cosineNearDupPairs]], [[semanticDedup]]): cost is QUADRATIC in
-    *    occupancy (n_c² pairs per cell), so the target is much lower —
+    *    ([[cosineNearDupPairsPortable]], [[semanticDedupPortable]]): cost is
+    *    QUADRATIC in occupancy (n_c² pairs per cell), so the target is much lower —
     *    SCALE_PROBE_sf1.md (q39) measured the pinned alternative: with
     *    ncells fixed at 32, candidate pairs grow ~100× at 10× data. */
   def autoCells(corpusRows: Long, targetOccupancy: Long = RetrievalOccupancy,
@@ -83,25 +70,6 @@ object Similarity {
       targetOccupancy: Long = RetrievalOccupancy): Int =
     if (ncells > 0) ncells else autoCells(emb.count(), targetOccupancy)
 
-  def norm2(a: Column): Column = dot(a, a)
-
-  def cosine(a: Column, b: Column, n2a: Column, n2b: Column): Column =
-    dot(a, b) / (sqrt(n2a) * sqrt(n2b))
-
-  /** Exact quantized dot product: each component is quantized to
-    * floor(x · 2^24) — floor of an exact power-of-two-scaled double is
-    * bit-deterministic in every engine (unlike double↔decimal conversions,
-    * which differ at the last ulp between shortest-repr and exact-binary
-    * implementations) — then summed as 64-bit integers (order-free, exact).
-    * |xi| ≤ 2^24 → products ≤ 2^48, 64-term sums ≤ 2^54: ANSI-safe. */
-  def dotQuantized(a: Column, b: Column): Column = {
-    val S = lit(16777216.0) // 2^24
-    aggregate(
-      zip_with(a, b, (x, y) =>
-        floor(x.cast("double") * S) * floor(y.cast("double") * S)),
-      lit(0L), (acc, t) => acc + t)
-  }
-
   /** Brute-force dot-product top-k (embeddings are unit-normalized, so dot
     * IS cosine — the standard retrieval formulation). `score_q` is the
     * exact integer quantized dot (hash-identical across engines); ranking
@@ -111,9 +79,12 @@ object Similarity {
     * (floor(x·2²⁴) per component — |corpus|+|queries| rows), so the
     * O(|Q|·|N|) scoring step is a flat unrolled integer dot in whole-stage
     * codegen with no per-pair floor/cast work and no array allocation.
-    * Identical values to [[dotQuantized]] (integer sums are order-free).
-    * This stays the exactness baseline/verifier; [[ivfTopK]] is the scale
-    * path — at 100 TB cap |Q| or route through IVF with exact rescoring.
+    * floor of an exact power-of-two-scaled double is bit-deterministic in
+    * every engine (unlike double↔decimal conversions, which differ at the
+    * last ulp between shortest-repr and exact-binary implementations), and
+    * |xi| ≤ 2^24 → products ≤ 2^48, 64-term sums ≤ 2^54: ANSI-safe.
+    * This stays the exactness baseline/verifier; [[ivfTopKPortable]] is the
+    * scale path — at 100 TB cap |Q| or route through IVF with exact rescoring.
     *
     * The corpus side is broadcast only while it provably fits: a bounded
     * `limit(maxBroadcastRows+1).count()` probe (stops scanning at the
@@ -148,261 +119,7 @@ object Similarity {
   }
 
   // -------------------------------------------------------------------------
-  // IVF
-  // -------------------------------------------------------------------------
-
-  /** Learn `ncells` centroids by k-means over a bounded, deterministic
-    * training sample — the standard IVF coarse-quantizer recipe (train on
-    * a sample, assign the full corpus distributed). The sample is the
-    * `maxTrainSample` lowest-hash vectors: a distributed TakeOrdered
-    * top-k (no full sort), O(sample) driver memory regardless of corpus
-    * size; Lloyd iterations then run on the driver in microseconds. At
-    * 100 TB this replaces (iters+1) full-corpus shuffles with ONE bounded
-    * top-k pass — the corpus is only ever touched again by the one
-    * distributed assignment in [[assignCells]].
-    * Returns (cell: long = 0..k-1, centroid array<double>); cells that
-    * end up empty are dropped (same as the distributed formulation).
-    * Assignment score is dot(v,c)/‖c‖ — the per-vector norm is constant
-    * within an argmax, so this IS cosine assignment. */
-  def ivfCentroids(emb: DataFrame, idCol: String, vecCol: String,
-      ncells: Int, iters: Int = 2, maxTrainSample: Int = 10000): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val sample: Array[Array[Double]] = emb
-      .select(col(idCol).cast("string").as("sid"),
-        transform(col(vecCol), _.cast("double")).as("v"))
-      .orderBy(xxhash64(col("sid")), col("sid")).limit(maxTrainSample)
-      .as[(String, Seq[Double])].collect().map(_._2.toArray)
-    require(sample.nonEmpty, "cannot train IVF centroids on an empty corpus")
-    val k0 = math.min(ncells, sample.length)
-    var cents: Array[Array[Double]] = sample.take(k0).map(_.clone())
-    for (_ <- 0 until iters) {
-      val dim = cents(0).length
-      val norms = cents.map(c => math.sqrt(c.map(x => x * x).sum).max(1e-300))
-      val sums = Array.fill(cents.length, dim)(0.0)
-      val counts = new Array[Long](cents.length)
-      sample.foreach { v =>
-        var best = 0
-        var bestScore = Double.NegativeInfinity
-        var c = 0
-        while (c < cents.length) {
-          var d = 0.0; var i = 0
-          while (i < dim) { d += v(i) * cents(c)(i); i += 1 }
-          val s = d / norms(c)
-          if (s > bestScore) { bestScore = s; best = c } // tie → lowest cell
-          c += 1
-        }
-        var i = 0
-        while (i < dim) { sums(best)(i) += v(i); i += 1 }
-        counts(best) += 1
-      }
-      cents = cents.indices.collect {
-        case c if counts(c) > 0 => sums(c).map(_ / counts(c))
-      }.toArray
-    }
-    cents.zipWithIndex.map { case (c, i) => (i.toLong, c.toSeq) }.toSeq
-      .toDF("cell", "centroid")
-  }
-
-  /** Assign every vector to its max-cosine cell (ties → lowest cell id).
-    * Centroid table is tiny → broadcast cross join; the argmax is a hash
-    * aggregation over max(struct(sim, −cell, payload)) — no sort, map-side
-    * partial, one shuffle on the vector id. Returns (idCol, vecCol, cell). */
-  def assignCells(emb: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame): DataFrame =
-    assignCellsDim(emb, idCol, vecCol, centroids, probeDim(emb, vecCol))
-
-  private def assignCellsDim(emb: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, dim: Int): DataFrame = {
-    // centroid norms computed once on the tiny broadcast side, not per pair
-    val cents = broadcast(centroids.withColumn("__cnorm",
-      sqrt(dotUnrolled(col("centroid"), col("centroid"), dim))))
-    // pre-partition by id: the argmax window clusters on id anyway, so the
-    // exchange happens BEFORE the ×ncells crossJoin blowup (N rows shuffle,
-    // not N×ncells) and the scoring stage parallelizes across all cores
-    // regardless of how few input splits the corpus file had
-    val scored = emb.select(col(idCol), col(vecCol))
-      .repartition(shufflePartitions(emb), col(idCol))
-      .crossJoin(cents)
-      .withColumn("__sim", dotUnrolled(col(vecCol), col("centroid"), dim) / col("__cnorm"))
-    // argmax as a row_number window, NOT max(struct(...)): a struct-typed
-    // max cannot hash-aggregate (SortAggregate = two sorts + an exchange),
-    // while the window is one exchange + one sort over N×ncells rows —
-    // and identical window subplans on both sides of a downstream
-    // self-join collapse into ONE computation via ReuseExchange.
-    val w = Window.partitionBy(idCol).orderBy(col("__sim").desc, col("cell"))
-    scored.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-      .select(col(idCol), col(vecCol), col("cell"))
-  }
-
-  /** IVF ANN: probe the `nprobe` nearest cells per query, exact cosine only
-    * inside those cells. corpus-side assignment is computed once (in a real
-    * pipeline: persisted/bucketed by cell). `ncells <= 0` (the default)
-    * sizes the cell count from the corpus via [[autoCells]] — flat per-cell
-    * occupancy as data grows. */
-  def ivfTopK(emb: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, ncells: Int = -1, nprobe: Int = 8, iters: Int = 2): DataFrame = {
-    val dim = probeDim(emb, vecCol)
-    val centroids = ivfCentroids(emb, idCol, vecCol, resolveCells(emb, ncells), iters)
-    val corpusCells = assignCellsDim(emb, idCol, vecCol, centroids, dim)
-      .select(col(idCol).as("cid"), col(vecCol).as("cv"), col("cell"))
-      .withColumn("cn2", dotUnrolled(col("cv"), col("cv"), dim))
-    // query → nprobe candidate cells
-    val cents = broadcast(centroids.withColumn("__cnorm",
-      sqrt(dotUnrolled(col("centroid"), col("centroid"), dim))))
-    val qScored = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
-      .repartition(shufflePartitions(queries), col("qid")) // probe window clusters on qid
-      .crossJoin(cents)
-      .withColumn("__sim", dotUnrolled(col("qv"), col("centroid"), dim) / col("__cnorm"))
-    val wq = Window.partitionBy("qid").orderBy(col("__sim").desc, col("cell"))
-    val qCells = qScored.withColumn("__rn", row_number().over(wq))
-      .filter(col("__rn") <= nprobe).select(col("qid"), col("qv"), col("cell"))
-      .withColumn("qn2", dotUnrolled(col("qv"), col("qv"), dim))
-    val scored = qCells.join(corpusCells, "cell").filter(col("qid") =!= col("cid"))
-      .withColumn("score",
-        dotUnrolled(col("qv"), col("cv"), dim) / (sqrt(col("qn2")) * sqrt(col("cn2"))))
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("cid"))
-    scored.withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("cid"), col("rank"), col("score"))
-  }
-
-  // -------------------------------------------------------------------------
-  // Product quantization (IVF-PQ)
-  // -------------------------------------------------------------------------
-
-  /** L2 k-means on a driver-side sample — the PQ codebook trainer. Seeds =
-    * first k sample points (the sample is hash-ordered → deterministic);
-    * empty clusters are dropped. */
-  private def kmeansL2(xs: Array[Array[Double]], k: Int, iters: Int): Array[Array[Double]] = {
-    val k0 = math.min(k, xs.length)
-    var cents = xs.take(k0).map(_.clone())
-    for (_ <- 0 until iters) {
-      val ds = cents(0).length
-      val sums = Array.fill(cents.length, ds)(0.0)
-      val counts = new Array[Long](cents.length)
-      xs.foreach { v =>
-        var best = 0; var bd = Double.MaxValue; var c = 0
-        while (c < cents.length) {
-          var d = 0.0; var i = 0
-          while (i < ds) { val t = v(i) - cents(c)(i); d += t * t; i += 1 }
-          if (d < bd) { bd = d; best = c }
-          c += 1
-        }
-        var i = 0; while (i < ds) { sums(best)(i) += v(i); i += 1 }
-        counts(best) += 1
-      }
-      cents = cents.indices.collect { case c if counts(c) > 0 => sums(c).map(_ / counts(c)) }.toArray
-    }
-    cents
-  }
-
-  /** Product-quantization codebooks: the vector space is split into `m`
-    * subspaces of dim/m components; each gets a `k`-codeword L2 codebook
-    * trained on a bounded deterministic sample (same TakeOrdered recipe as
-    * [[ivfCentroids]] — one distributed top-k pass, driver Lloyd in
-    * microseconds, the corpus itself is never shuffled for training).
-    * Returns [m][k][dim/m] — small enough to broadcast as literals
-    * (m·k·dim/m doubles = dim·k ≪ 1 MB for any sane setting). */
-  def pqTrain(emb: DataFrame, idCol: String, vecCol: String,
-      m: Int = 8, k: Int = 16, iters: Int = 5,
-      maxTrainSample: Int = 10000): Array[Array[Array[Double]]] = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val sample: Array[Array[Double]] = emb
-      .select(col(idCol).cast("string").as("sid"),
-        transform(col(vecCol), _.cast("double")).as("v"))
-      .orderBy(xxhash64(col("sid")), col("sid")).limit(maxTrainSample)
-      .as[(String, Seq[Double])].collect().map(_._2.toArray)
-    require(sample.nonEmpty, "cannot train PQ codebooks on an empty corpus")
-    val dim = sample(0).length
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val ds = dim / m
-    (0 until m).map { mi =>
-      kmeansL2(sample.map(v => java.util.Arrays.copyOfRange(v, mi * ds, (mi + 1) * ds)), k, iters)
-    }.toArray
-  }
-
-  /** Append a `pq_code` array<int> column: per subspace, the index of the
-    * L2-nearest codeword. One shuffle-free projection over the corpus —
-    * codebooks ride as broadcast literals; at 100 TB the 8-byte-ish code
-    * replaces the full vector in the candidate-scoring shuffle (a
-    * dim·4/m-fold shrink of the dominant exchange). Ties → lowest index
-    * (array_position finds the first minimum). */
-  def pqEncode(emb: DataFrame, vecCol: String,
-      books: Array[Array[Array[Double]]]): DataFrame = {
-    val ds = books(0)(0).length
-    val codeCols = books.zipWithIndex.map { case (book, mi) =>
-      val cb = typedLit(book.map(_.toSeq).toSeq)
-      val sub = transform(slice(col(vecCol), mi * ds + 1, ds), _.cast("double"))
-      val dists = transform(cb, c =>
-        aggregate(zip_with(sub, c, (x, y) => (x - y) * (x - y)), lit(0.0), (a, t) => a + t))
-      (array_position(dists, array_min(dists)) - 1).cast("int")
-    }
-    emb.withColumn("pq_code", array(scala.collection.immutable.ArraySeq.unsafeWrapArray(codeCols): _*))
-  }
-
-  /** Per-query ADC lookup tables: [m][k] of dot(query_sub, codeword) —
-    * computed once per QUERY row (cheap), so scoring a candidate is m
-    * array lookups + adds instead of a dim-length dot product. */
-  private def adcLuts(qv: Column, books: Array[Array[Array[Double]]]): Column = {
-    val ds = books(0)(0).length
-    array(scala.collection.immutable.ArraySeq.unsafeWrapArray(
-      books.zipWithIndex.map { case (book, mi) =>
-        val cb = typedLit(book.map(_.toSeq).toSeq)
-        val sub = transform(slice(qv, mi * ds + 1, ds), _.cast("double"))
-        transform(cb, c => aggregate(zip_with(sub, c, (x, y) => x * y), lit(0.0), (a, t) => a + t))
-      }): _*)
-  }
-
-  /** IVF-PQ ANN — the 100 TB retrieval shape: IVF cells prune the corpus
-    * to nprobe/ncells, PQ-ADC scores the candidates with m lookups each
-    * (the exchange carries codes, not vectors), the top `rescoreFactor`·k
-    * per query are exactly rescored with the true cosine, and the final
-    * top-k ranks by the exact score. Columns match [[ivfTopK]]
-    * (qid, cid, rank, score) so recall is directly comparable. */
-  def ivfPqTopK(emb: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, ncells: Int = -1, nprobe: Int = 8, m: Int = 8, pqK: Int = 16,
-      rescoreFactor: Int = 4, iters: Int = 2): DataFrame = {
-    val dim = probeDim(emb, vecCol)
-    val books = pqTrain(emb, idCol, vecCol, m, pqK)
-    val centroids = ivfCentroids(emb, idCol, vecCol, resolveCells(emb, ncells), iters)
-    val corpusCells = pqEncode(
-      assignCellsDim(emb, idCol, vecCol, centroids, dim)
-        .select(col(idCol).as("cid"), col(vecCol).as("cv"), col("cell")), "cv", books)
-      .withColumn("cn2", dotUnrolled(col("cv"), col("cv"), dim))
-    val cents = broadcast(centroids.withColumn("__cnorm",
-      sqrt(dotUnrolled(col("centroid"), col("centroid"), dim))))
-    val qScored = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
-      .repartition(shufflePartitions(queries), col("qid")) // probe window clusters on qid
-      .crossJoin(cents)
-      .withColumn("__sim", dotUnrolled(col("qv"), col("centroid"), dim) / col("__cnorm"))
-    val wq = Window.partitionBy("qid").orderBy(col("__sim").desc, col("cell"))
-    val qCells = qScored.withColumn("__rn", row_number().over(wq))
-      .filter(col("__rn") <= nprobe).select(col("qid"), col("qv"), col("cell"))
-      .withColumn("qn2", dotUnrolled(col("qv"), col("qv"), dim))
-      .withColumn("__lut", adcLuts(col("qv"), books))
-    // ADC approximate score: m LUT lookups per candidate
-    val adc = (0 until m).map(mi =>
-      element_at(element_at(col("__lut"), mi + 1), element_at(col("pq_code"), mi + 1) + 1))
-      .reduce(_ + _)
-    val cand = qCells.join(corpusCells, "cell").filter(col("qid") =!= col("cid"))
-      .withColumn("__adc", adc)
-    val wAdc = Window.partitionBy("qid").orderBy(col("__adc").desc, col("cid"))
-    val shortlist = cand.withColumn("__arn", row_number().over(wAdc))
-      .filter(col("__arn") <= k * rescoreFactor)
-    // exact rescore of the shortlist only
-    val rescored = shortlist.withColumn("score",
-      dotUnrolled(col("qv"), col("cv"), dim) / (sqrt(col("qn2")) * sqrt(col("cn2"))))
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("cid"))
-    rescored.withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("cid"), col("rank"), col("score"))
-  }
-
-  // -------------------------------------------------------------------------
-  // Portable IVF — the cross-engine-deterministic variant (what q42's md5
-  // MinHash family is to q33's xxhash64 fast path). Every step is exact
+  // IVF, IVF-PQ, cosine near-dup pairs and SemDeDup. Every step is exact
   // integer arithmetic or an IEEE-correctly-rounded double op (int→double,
   // sqrt, ÷), so a DuckDB SQL mirror reproduces cell assignment, probing,
   // and scores bit-for-bit.
@@ -415,7 +132,7 @@ object Similarity {
     * centroid sums over a 10k sample ≤ 10^4·2^12 = 2^25.3 per component,
     * 64-dim dots against them ≤ 2^54, squared norms ≤ 2^57. */
   private val IvfScale = 4096.0
-  private val ScoreScale = 16777216.0 // 2^24 — same grid as dotQuantized
+  private val ScoreScale = 16777216.0 // 2^24 — same grid as bruteForceTopK
 
   /** floor(x·scale) per component as exact longs. */
   def quantize(v: Column, scale: Double): Column =
@@ -431,8 +148,9 @@ object Similarity {
     * against s/n equals one against s — the count cancels — so no lossy
     * division ever happens). Assignment score = dot(v_q, s_c) / ‖s_c‖ with
     * the dot and norm² exact integers, compared as correctly-rounded
-    * doubles; ties → lowest cell. Same bounded-TakeOrdered + driver-Lloyd
-    * shape as [[ivfCentroids]] (ONE corpus pass, no per-iteration shuffle).
+    * doubles; ties → lowest cell. The sample is a bounded TakeOrdered
+    * top-k (no full sort, O(sample) driver memory) and Lloyd runs on the
+    * driver: ONE corpus pass, no per-iteration shuffle.
     * Empty cells are dropped and survivors densely reindexed in old-cell
     * order, exactly mirroring the SQL oracle's row_number reindex. */
   def ivfCentroidsPortable(emb: DataFrame, idCol: String, vecCol: String,
@@ -478,16 +196,21 @@ object Similarity {
   }
 
   /** Distributed max-cosine assignment against portable (integer-sum)
-    * centroids — same broadcast + window-argmax plan as [[assignCells]],
-    * but every score is dot(v_q, s_c)/‖s_c‖ from exact integers, so DuckDB
-    * reproduces the cell of every row. Returns (idCol, vecCol, cell). */
+    * centroids (ties → lowest cell id). The centroid table is tiny →
+    * broadcast cross join, argmax by a row_number window. Every score is
+    * dot(v_q, s_c)/‖s_c‖ from exact integers, so DuckDB reproduces the
+    * cell of every row. Returns (idCol, vecCol, cell). */
   def assignCellsPortable(emb: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame): DataFrame = {
     val dim = probeDim(emb, vecCol)
     val cents = broadcast(centroids.withColumn("__cn",
       sqrt(dotLong(col("csum"), col("csum"), dim).cast("double"))))
-    // pre-partition by id — same exchange-before-blowup reasoning as
-    // assignCellsDim (the argmax window re-uses this partitioning)
+    // pre-partition by id: the argmax window clusters on id anyway, so the
+    // exchange happens BEFORE the ×ncells crossJoin blowup (N rows shuffle,
+    // not N×ncells) and the scoring stage parallelizes across all cores
+    // regardless of how few input splits the corpus file had. The argmax is
+    // a row_number window, NOT max(struct(...)): a struct-typed max cannot
+    // hash-aggregate (SortAggregate = two sorts + an exchange).
     val scored = emb.select(col(idCol), col(vecCol))
       .repartition(shufflePartitions(emb), col(idCol))
       .withColumn("__vq", quantize(col(vecCol), IvfScale))
@@ -706,12 +429,19 @@ object Similarity {
         coalesce(col("nn_sim") >= minSim, lit(false)).as("sem_dup"))
   }
 
-  /** Portable cosine near-dup pairs: portable cells, and the pair
-    * similarity is computed from 2^24-quantized integer dot/norms —
-    * identical doubles in both engines, so the ≥ threshold cut and the
-    * emitted sim hash-match DuckDB. Same cell-blocked join (+ optional
-    * `blocks` hot-cell decomposition — block ids are engine-local but only
-    * split work, never change the pair set) as [[cosineNearDupPairs]]. */
+  /** Embedding-cosine near-duplicate pairs above a similarity threshold,
+    * IVF-blocked (pairs only compared within a cell — the standard
+    * embedding-dedup recipe; same-cell misses are the recall tradeoff).
+    * The pair similarity is computed from 2^24-quantized integer
+    * dot/norms — identical doubles in both engines, so the ≥ threshold cut
+    * and the emitted sim hash-match DuckDB.
+    *
+    * `blocks` > 1 decomposes each cell's pair space into block-pairs
+    * (side A replicated to every target block ≥ its own), making the join
+    * key (cell, block) instead of the bare cell — the cure for hot cells
+    * at scale: a cell's n² pairs spread across blocks·(blocks+1)/2
+    * parallel tasks instead of ONE. Block ids are engine-local but only
+    * split work: the pair set is identical to blocks=1 (spec-verified). */
   def cosineNearDupPairsPortable(emb: DataFrame, idCol: String, vecCol: String,
       minSim: Double, ncells: Int = -1, blocks: Int = 1): DataFrame = {
     val dim = probeDim(emb, vecCol)
@@ -727,6 +457,8 @@ object Similarity {
       else {
         val withB = cells.withColumn("blk", pmod(xxhash64(col("id")), lit(blocks)))
         val a = withB.withColumn("tb", explode(sequence(col("blk"), lit(blocks - 1))))
+        // cross-block pairs (a.blk < b.blk) arrive exactly once via
+        // tb = b.blk; same-block pairs dedupe by id ordering
         a.as("a").join(withB.as("b"),
           col("a.cell") === col("b.cell") && col("a.tb") === col("b.blk") &&
             (col("a.blk") < col("b.blk") || col("a.id") < col("b.id")))
@@ -736,6 +468,7 @@ object Similarity {
         dotLong(col("a.v"), col("b.v"), dim).cast("double")
           / (sqrt(col("a.n2")) * sqrt(col("b.n2"))))
       .filter(col("sim") >= minSim)
+      // cross-block pairs arrive block-ordered, not id-ordered — canonicalize
       .select(least(col("a.id"), col("b.id")).as("id_a"),
         greatest(col("a.id"), col("b.id")).as("id_b"), col("sim"))
   }
@@ -878,8 +611,11 @@ object Similarity {
   }
 
   /** Portable SemDeDup: [[cosineNearDupPairsPortable]] pairs →
-    * star-contraction components → min-id representative. Same composition
-    * as [[semanticDedup]], every stage under the DuckDB oracle. */
+    * star-contraction components → min-id representative (SemDeDup, cf.
+    * Abbas et al. 2023, "SemDeDup: Data-efficient learning at web-scale
+    * through semantic deduplication"); singletons keep themselves. Output
+    * one row per input id: (id, cluster_id, kept). Every stage is under
+    * the DuckDB oracle. */
   def semanticDedupPortable(emb: DataFrame, idCol: String, vecCol: String,
       minSim: Double, ncells: Int = -1, blocks: Int = 1): DataFrame = {
     val pairs = cosineNearDupPairsPortable(emb, idCol, vecCol, minSim, ncells, blocks)
@@ -892,72 +628,10 @@ object Similarity {
         (coalesce(col("component"), col("id")) === col("id")).as("kept"))
   }
 
-  /** Embedding-cosine near-duplicate pairs above a similarity threshold,
-    * IVF-blocked (pairs only compared within a cell — the standard
-    * embedding-dedup recipe; same-cell misses are the recall tradeoff).
-    *
-    * `blocks` > 1 decomposes each cell's pair space into block-pairs
-    * (side A replicated to every target block ≥ its own), making the join
-    * key (cell, block) instead of the bare cell — the cure for hot cells
-    * at scale: a cell's n² pairs spread across blocks·(blocks+1)/2
-    * parallel tasks instead of ONE (an equi-join key can't be split
-    * below the key level otherwise). Pair set is identical to blocks=1
-    * (spec-verified); replication factor ≈ blocks/2 on side A only. */
-  def cosineNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
-      minSim: Double, ncells: Int = -1, blocks: Int = 1): DataFrame = {
-    val dim = probeDim(emb, vecCol)
-    val centroids = ivfCentroids(emb, idCol, vecCol,
-      resolveCells(emb, ncells, PairOccupancy))
-    val cells = assignCellsDim(emb, idCol, vecCol, centroids, dim)
-      .select(col(idCol).as("id"), col(vecCol).as("v"), col("cell"))
-      .withColumn("n2", dotUnrolled(col("v"), col("v"), dim))
-    val joined =
-      if (blocks <= 1)
-        cells.as("a").join(cells.as("b"),
-          col("a.cell") === col("b.cell") && col("a.id") < col("b.id"))
-      else {
-        val withB = cells.withColumn("blk", pmod(xxhash64(col("id")), lit(blocks)))
-        val a = withB.withColumn("tb", explode(sequence(col("blk"), lit(blocks - 1))))
-        // cross-block pairs (a.blk < b.blk) arrive exactly once via
-        // tb = b.blk; same-block pairs dedupe by id ordering
-        a.as("a").join(withB.as("b"),
-          col("a.cell") === col("b.cell") && col("a.tb") === col("b.blk") &&
-            (col("a.blk") < col("b.blk") || col("a.id") < col("b.id")))
-      }
-    joined
-      .withColumn("sim",
-        dotUnrolled(col("a.v"), col("b.v"), dim) / (sqrt(col("a.n2")) * sqrt(col("b.n2"))))
-      .filter(col("sim") >= minSim)
-      // cross-block pairs arrive block-ordered, not id-ordered — canonicalize
-      .select(least(col("a.id"), col("b.id")).as("id_a"),
-        greatest(col("a.id"), col("b.id")).as("id_b"), col("sim"))
-  }
-
-  /** SemDeDup-style semantic deduplication (cf. Abbas et al. 2023,
-    * "SemDeDup: Data-efficient learning at web-scale through semantic
-    * deduplication"): IVF-cell-blocked cosine pairs above `minSim` →
-    * star-contraction connected components → ONE representative (min id)
-    * kept per component; singletons keep themselves. Output one row per
-    * input id: (id, cluster_id, kept). Every stage is an already-audited
-    * bucketed shape — broadcast centroids, cell-local pair joins (never
-    * all-pairs), O(log n)-round clustering — so the composition inherits
-    * the 100 TB story of its parts. */
-  def semanticDedup(emb: DataFrame, idCol: String, vecCol: String,
-      minSim: Double, ncells: Int = -1, blocks: Int = 1): DataFrame = {
-    val pairs = cosineNearDupPairs(emb, idCol, vecCol, minSim, ncells, blocks)
-    val comp = ConnectedComponents.components(pairs, "id_a", "id_b")
-      .withColumnRenamed("node", "id")
-    emb.select(col(idCol).cast("bigint").as("id"))
-      .join(comp, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("component"), col("id")).as("cluster_id"),
-        (coalesce(col("component"), col("id")) === col("id")).as("kept"))
-  }
-
   /** Per-label centroid of an embedding column, one flat row per
     * (label, dimension) — the nearest-class-mean building block.
     * Components are quantized to integers first (same 2²⁴ grid as
-    * [[dotQuantized]]) so the sums are order-free and cross-engine exact;
+    * [[bruteForceTopK]]) so the sums are order-free and cross-engine exact;
     * the mean divides two integers in double. One posexplode + one
     * map-side-combining shuffle keyed on (label, idx) — no vectors are
     * ever collected to a single row. */

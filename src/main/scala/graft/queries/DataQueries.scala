@@ -162,9 +162,7 @@ object DataQueries {
     // PORTABLE IVF (md5-ordered sample, integer-sum centroids, 2^24 integer
     // candidate scoring) — the whole index pipeline under the DuckDB hash
     // gate: the oracle re-derives the k-means, the cell assignment, the
-    // probe set, and every score. The xxhash64/double fast path stays as
-    // Similarity.ivfTopK (recall-asserted in DedupSimilaritySpec, used by
-    // q50's PQ pipeline).
+    // probe set, and every score.
     "q35_embedding_ivf_topk" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       Similarity.ivfTopKPortable(e, e.filter(col("vec_id") < 50), "vec_id", "embedding",
@@ -274,8 +272,7 @@ object DataQueries {
     // rescore — the 100 TB retrieval shape (codes, not vectors, ride the
     // candidate exchange). PORTABLE variant: integer L2 k-means codebooks
     // as (sum, count) pairs + exact-quotient ADC → DuckDB replays the
-    // complete index (cells, codes, shortlist, rescore). The xxhash64/
-    // double fast path stays as ivfPqTopK (recall spec).
+    // complete index (cells, codes, shortlist, rescore).
     "q50_pq_topk" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       Similarity.ivfPqTopKPortable(e, e.filter(col("vec_id") < 50), "vec_id", "embedding",
@@ -2790,14 +2787,8 @@ object DataQueries {
         s.table(tbl0), s"q138_df|$dir", "term", buckets = 8)
       val tomb = t(s, dir, "documents").select(col("doc_id"), col("text"))
         .filter(col("doc_id") % 3 =!= 2 && col("doc_id") % 4 === 1)
-      graft.operators.BucketedOps.idempotentAppend(
-        graft.operators.TfIdf.dfManifest(tomb, "doc_id", "text")
-          .select(col("term"), (-col("df")).as("df")),
-        tbl, "term", buckets = 8, jobId = "takedown1")
-      graft.operators.BucketedOps.compactManifest(s, tbl, "term", buckets = 8,
-        jobId = "takedown1.c",
-        resolve = _.groupBy("term").agg(sum("df").as("df"))
-          .filter(col("df") =!= 0L))
+      purgeAdditive(s, tbl, "term", "df",
+        graft.operators.TfIdf.dfManifest(tomb, "doc_id", "text"))
       (tbl, n1 - tomb.count())
     }
 
@@ -2808,7 +2799,7 @@ object DataQueries {
     * the tombstoned docs' own (s, n) counts append NEGATED (readers'
     * sum-resolve is correct from that moment), then compaction nets the
     * negatives out and drops zeroed spans — the identical q138 algebra
-    * on a different family. */
+    * ([[purgeAdditive]]) on a different family. */
   private[graft] def ensurePurgedSpanManifest(s: SparkSession, dir: String): String =
     Fixtures.oncePerSession(s, s"q142_spans|$dir") {
       val tbl0 = ensureSpanManifest(s, dir)
@@ -2816,23 +2807,17 @@ object DataQueries {
         s.table(tbl0), s"q142_spans|$dir", "s", buckets = 8)
       val tomb = t(s, dir, "documents").select(col("doc_id"), col("text"))
         .filter(col("doc_id") % 4 === 1)
-      graft.operators.BucketedOps.idempotentAppend(
-        graft.operators.TextStats.spanManifest(tomb, "doc_id", "text")
-          .select(col("s"), (-col("n")).as("n")),
-        tbl, "s", buckets = 8, jobId = "takedown1")
-      graft.operators.BucketedOps.compactManifest(s, tbl, "s", buckets = 8,
-        jobId = "takedown1.c",
-        resolve = _.groupBy("s").agg(sum("n").as("n"))
-          .filter(col("n") =!= 0L))
+      purgeAdditive(s, tbl, "s", "n",
+        graft.operators.TextStats.spanManifest(tomb, "doc_id", "text"))
       tbl
     }
 
   /** q143's stored state — [[ensureBigramManifest]]'s (bg, n) table COPIED
     * and ADDITIVE-TOMBSTONE-PURGED: the bigram family is the third (and
     * last) additive manifest (round-15 verdict, what's-missing #3). Same
-    * negative-count append + net-out compaction as q138/q142; after the
-    * purge the tombstoned docs' bigrams contribute no reference mass to
-    * any fluency decision. */
+    * negative-count append + net-out compaction as q138/q142
+    * ([[purgeAdditive]]); after the purge the tombstoned docs' bigrams
+    * contribute no reference mass to any fluency decision. */
   private[graft] def ensurePurgedBigramManifest(s: SparkSession, dir: String): String =
     Fixtures.oncePerSession(s, s"q143_bg|$dir") {
       val tbl0 = ensureBigramManifest(s, dir)
@@ -2840,16 +2825,26 @@ object DataQueries {
         s.table(tbl0), s"q143_bg|$dir", "bg", buckets = 8)
       val tomb = t(s, dir, "documents").select(col("doc_id"), col("text"))
         .filter(col("doc_id") % 4 === 1)
-      graft.operators.BucketedOps.idempotentAppend(
-        graft.operators.TextStats.bigramManifest(tomb, "doc_id", "text")
-          .select(col("bg"), (-col("n")).as("n")),
-        tbl, "bg", buckets = 8, jobId = "takedown1")
-      graft.operators.BucketedOps.compactManifest(s, tbl, "bg", buckets = 8,
-        jobId = "takedown1.c",
-        resolve = _.groupBy("bg").agg(sum("n").as("n"))
-          .filter(col("n") =!= 0L))
+      purgeAdditive(s, tbl, "bg", "n",
+        graft.operators.TextStats.bigramManifest(tomb, "doc_id", "text"))
       tbl
     }
+
+  /** The additive-tombstone purge shared by q138/q142/q143: the tombstoned
+    * docs' own (key, value) counts `tombCounts` append NEGATED under jobId
+    * `takedown1` (readers' sum-resolve is correct from that moment), then
+    * compaction under `takedown1.c` nets the negatives out and drops keys
+    * whose sum reached zero (absent row ≡ sum 0 for every reader). */
+  private def purgeAdditive(s: SparkSession, tbl: String, key: String,
+      value: String, tombCounts: DataFrame): Unit = {
+    graft.operators.BucketedOps.idempotentAppend(
+      tombCounts.select(col(key), (-col(value)).as(value)),
+      tbl, key, buckets = 8, jobId = "takedown1")
+    graft.operators.BucketedOps.compactManifest(s, tbl, key, buckets = 8,
+      jobId = "takedown1.c",
+      resolve = _.groupBy(key).agg(sum(value).as(value))
+        .filter(col(value) =!= 0L))
+  }
 
   /** q140's stored state — [[ensureAnnIndex]]'s cell-assignment table
     * COPIED and TOMBSTONE-PURGED (the last doc-attributed family:

@@ -219,10 +219,9 @@ object UpsertSink {
     val width = math.min(probed.fold(buckets)(_.size),
       math.min(spark.sparkContext.defaultParallelism,
         spark.conf.get("spark.sql.shuffle.partitions", "200").toInt))
-    val seq = struct(col("op_offset"),
-      when(col("row_kind") === "-U", 0).otherwise(1))
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy((col(BucketCol) +: pkCols.map(col)): _*).orderBy(seq.desc)
+      .partitionBy((col(BucketCol) +: pkCols.map(col)): _*)
+      .orderBy(graft.operators.ChangelogOps.EventOrder.desc)
     val merged = input
       .withColumn(BucketCol, bucketOf)
       .repartition(width, col(BucketCol))
@@ -246,7 +245,7 @@ object UpsertSink {
           s"UpsertSink merge into $target staged buckets ${unread.toSeq.sorted.mkString(",")} " +
             "that the touched-bucket probe did not see: the batch re-executed to different " +
             "rows (nondeterministic plan). Aborted before the swap; state is unchanged. " +
-            "Persist the batch, or leave spark.graft.upsert.persistBatch at auto.")
+            "Mark the UDF asNondeterministic(), or persist the batch.")
       }
     }
 
@@ -292,25 +291,19 @@ object UpsertSink {
   }
 
   /** Whether a micro-batch plan is worth a persist barrier across the
-    * sink's two actions. Auto rule: barrier iff the upstream contains an
+    * sink's two actions: barrier iff the upstream contains an
     * aggregation / join / window / dedup / arbitrary-state operator —
     * those re-execute a shuffle (and, under foreachBatch, a state-store
     * read) per action, which always costs more than one cache
     * materialization; a narrow source-decode plan re-executes cheaper
     * than it caches — or any NONDETERMINISTIC expression, whose second
-    * execution may produce different rows than the probe saw. Overridable
-    * per session via `spark.graft.upsert.persistBatch` = auto | always |
-    * never. */
+    * execution may produce different rows than the probe saw. */
   private[graft] def shouldPersistBatch(batch: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical._
-    batch.sparkSession.conf.get("spark.graft.upsert.persistBatch", "auto") match {
-      case "always" => true
-      case "never"  => false
-      case _ => batch.queryExecution.analyzed.exists {
-        case _: Aggregate | _: Join | _: Window | _: Deduplicate => true
-        case _: FlatMapGroupsWithState                           => true
-        case p => p.expressions.exists(!_.deterministic)
-      }
+    batch.queryExecution.analyzed.exists {
+      case _: Aggregate | _: Join | _: Window | _: Deduplicate => true
+      case _: FlatMapGroupsWithState                           => true
+      case p => p.expressions.exists(!_.deterministic)
     }
   }
 

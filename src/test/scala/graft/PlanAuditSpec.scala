@@ -40,8 +40,8 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("similarity hot paths score through the native dot expressions") {
     // regression guard for the element_at-chain slowdown (DRIFT_NOTE_r06):
-    // the scoring stages must plan long_array_dot/double_array_dot, not
-    // dim-term element_at chains
+    // the scoring stages must plan long_array_dot, not dim-term element_at
+    // chains
     assert(plan("q32_embedding_topk").contains("long_array_dot"))
     assert(plan("q35_embedding_ivf_topk").contains("long_array_dot"))
     assert(plan("q39_cosine_near_dup").contains("long_array_dot"))

@@ -133,4 +133,25 @@ class CurationSpec extends SparkSpec {
     assert(freshB.exceptAll(tblB).isEmpty && tblB.exceptAll(freshB).isEmpty)
     l0.unpersist(); l1.unpersist()
   }
+
+  test("a funnel that fails at its first action releases every cache it created") {
+    // the text column throws when evaluated. A range, not a local Seq: the
+    // optimizer folds a projection over local rows at planning time, which
+    // would throw before the call persists anything
+    val text = en1 // a local, so the closure does not capture the spec
+    val boom = udf((id: Long) =>
+      if (id == 3L) throw new IllegalStateException("unreadable doc") else text)
+    val docs = spark.range(1L, 5L).select(col("id").as("doc_id"))
+      .withColumn("text", boom(col("doc_id")))
+    // CacheManager.numCachedEntries is private[sql] in Scala but public in
+    // bytecode
+    val cache = spark.sharedState.cacheManager
+    def entries = cache.getClass.getMethod("numCachedEntries").invoke(cache)
+    val before = entries
+    val e = intercept[Exception](Curation.curationLedger(docs, "doc_id", "text"))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("unreadable doc")),
+      "the call must fail on the throwing input, not elsewhere")
+    assert(entries === before, "a failed call left cached frames behind")
+  }
 }

@@ -238,13 +238,6 @@ class UpsertSinkSpec extends SparkSpec {
     // a nondeterministic expression may re-execute to different rows →
     // barrier, however narrow the plan
     assert(UpsertSink.shouldPersistBatch(narrow.withColumn("v", rand())))
-
-    // explicit override wins in both directions
-    spark.conf.set("spark.graft.upsert.persistBatch", "always")
-    try assert(UpsertSink.shouldPersistBatch(narrow))
-    finally spark.conf.set("spark.graft.upsert.persistBatch", "never")
-    try assert(!UpsertSink.shouldPersistBatch(agg))
-    finally spark.conf.unset("spark.graft.upsert.persistBatch")
   }
 
   /** `n` changelog rows whose key a NONDETERMINISTIC expression draws. */
@@ -286,13 +279,16 @@ class UpsertSinkSpec extends SparkSpec {
   test("nondeterministic batch with the barrier forced off fails loudly; state is untouched") {
     val out = seeded("graft_upsert_nd_never_")
     val before = UpsertSink.readState(spark, out).orderBy("k").collect().toSeq
-    spark.conf.set("spark.graft.upsert.persistBatch", "never")
-    val ex =
-      try intercept[IllegalStateException] {
-        // 5 fresh keys over 64 buckets: the write's buckets fall outside
-        // the probe's with near certainty (all inside: ~(5/64)^5)
-        UpsertSink.mergeBatch(randomKeyed(5, freshKey()), Seq("k"), out, numBuckets = 64)
-      } finally spark.conf.unset("spark.graft.upsert.persistBatch")
+    // the same random key, NOT declared asNondeterministic(): Spark takes
+    // the UDF for deterministic, so shouldPersistBatch places no barrier
+    val undeclaredKey = udf(() => java.util.concurrent.ThreadLocalRandom.current().nextLong())
+    val batch = randomKeyed(5, undeclaredKey())
+    assert(!UpsertSink.shouldPersistBatch(batch))
+    val ex = intercept[IllegalStateException] {
+      // 5 fresh keys over 64 buckets: the write's buckets fall outside
+      // the probe's with near certainty (all inside: ~(5/64)^5)
+      UpsertSink.mergeBatch(batch, Seq("k"), out, numBuckets = 64)
+    }
     assert(ex.getMessage.contains("probe did not see"))
     assert(UpsertSink.readState(spark, out).orderBy("k").collect().toSeq === before)
     val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
