@@ -94,7 +94,6 @@ object Similarity {
     * paths, so the gate can't perturb the oracle. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, maxBroadcastRows: Long = 200000L): DataFrame = {
-    val dim = probeDim(corpus, vecCol)
     val S = lit(16777216.0) // 2^24
     val quant = (v: Column) => transform(v, x => floor(x.cast("double") * S).cast("long"))
     // pre-partition the query side by qid: the top-k window clusters on qid
@@ -137,9 +136,6 @@ object Similarity {
   /** floor(x·scale) per component as exact longs. */
   def quantize(v: Column, scale: Double): Column =
     transform(v, x => floor(x.cast("double") * lit(scale)).cast("long"))
-
-  /** Exact integer dot product (order-free) — native expression. */
-  private def dotLong(a: Column, b: Column, dim: Int): Column = longDot(a, b)
 
   /** Portable IVF centroids: the training sample is the `maxTrainSample`
     * lowest-(md5(id), id) vectors — a total order both engines share — and
@@ -202,9 +198,8 @@ object Similarity {
     * cell of every row. Returns (idCol, vecCol, cell). */
   def assignCellsPortable(emb: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame): DataFrame = {
-    val dim = probeDim(emb, vecCol)
     val cents = broadcast(centroids.withColumn("__cn",
-      sqrt(dotLong(col("csum"), col("csum"), dim).cast("double"))))
+      sqrt(longDot(col("csum"), col("csum")).cast("double"))))
     // pre-partition by id: the argmax window clusters on id anyway, so the
     // exchange happens BEFORE the ×ncells crossJoin blowup (N rows shuffle,
     // not N×ncells) and the scoring stage parallelizes across all cores
@@ -216,7 +211,7 @@ object Similarity {
       .withColumn("__vq", quantize(col(vecCol), IvfScale))
       .crossJoin(cents)
       .withColumn("__sim",
-        dotLong(col("__vq"), col("csum"), dim).cast("double") / col("__cn"))
+        longDot(col("__vq"), col("csum")).cast("double") / col("__cn"))
     val w = Window.partitionBy(idCol).orderBy(col("__sim").desc, col("cell"))
     scored.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
       .select(col(idCol), col(vecCol), col("cell"))
@@ -229,11 +224,10 @@ object Similarity {
   def ivfTopKPortable(emb: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, ncells: Int = -1, nprobe: Int = 8,
       iters: Int = 2): DataFrame = {
-    val dim = probeDim(emb, vecCol)
     val centroids =
       ivfCentroidsPortable(emb, idCol, vecCol, resolveCells(emb, ncells), iters)
     val corpusCells = assignCellsPortable(emb, idCol, vecCol, centroids)
-    ivfSearchPortable(centroids, corpusCells, queries, idCol, vecCol, dim, k, nprobe)
+    ivfSearchPortable(centroids, corpusCells, queries, idCol, vecCol, k, nprobe)
   }
 
   /** INCREMENTAL IVF — the daily-append shape of [[ivfTopKPortable]]:
@@ -296,20 +290,18 @@ object Similarity {
   def ivfTopKPortableStored(centroids: DataFrame, index: DataFrame,
       queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nprobe: Int = 8): DataFrame = {
-    val dim = probeDim(queries, vecCol)
     ivfSearchPortable(centroids,
       index.select(col(idCol), col(vecCol), col("cell")),
-      queries, idCol, vecCol, dim, k, nprobe)
+      queries, idCol, vecCol, k, nprobe)
   }
 
   def ivfAppendTopKPortableStored(centroids: DataFrame, priorIndex: DataFrame,
       today: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nprobe: Int = 8): DataFrame = {
-    val dim = probeDim(today, vecCol)
     val newCells = assignCellsPortable(today, idCol, vecCol, centroids)
     ivfSearchPortable(centroids,
       priorIndex.select(col(idCol), col(vecCol), col("cell")).unionAll(newCells),
-      queries, idCol, vecCol, dim, k, nprobe)
+      queries, idCol, vecCol, k, nprobe)
   }
 
   /** The shared probe/score tail of the portable IVF family: per query the
@@ -318,13 +310,13 @@ object Similarity {
     * `corpusCells` in [[assignCellsPortable]]'s (idCol, vecCol, cell)
     * shape. */
   private def ivfSearchPortable(centroids: DataFrame, corpusCells: DataFrame,
-      queries: DataFrame, idCol: String, vecCol: String, dim: Int,
+      queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nprobe: Int): DataFrame = {
     val corpus = corpusCells
       .select(col(idCol).as("cid"), quantize(col(vecCol), ScoreScale).as("ca"), col("cell"))
-    val qCells = probeCellsPortable(centroids, queries, idCol, vecCol, dim, nprobe)
+    val qCells = probeCellsPortable(centroids, queries, idCol, vecCol, nprobe)
     val scored = qCells.join(corpus, "cell").filter(col("qid") =!= col("cid"))
-      .withColumn("score_q", dotLong(col("qa"), col("ca"), dim))
+      .withColumn("score_q", longDot(col("qa"), col("ca")))
     val w = Window.partitionBy("qid").orderBy(col("score_q").desc, col("cid"))
     scored.withColumn("rank", row_number().over(w).cast("bigint"))
       .filter(col("rank") <= k)
@@ -340,15 +332,15 @@ object Similarity {
     * ncells-way blowup (the same exchange-before-blowup reasoning as
     * [[assignCellsPortable]]). */
   private def probeCellsPortable(centroids: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, dim: Int, nprobe: Int): DataFrame = {
+      idCol: String, vecCol: String, nprobe: Int): DataFrame = {
     val cents = broadcast(centroids.withColumn("__cn",
-      sqrt(dotLong(col("csum"), col("csum"), dim).cast("double"))))
+      sqrt(longDot(col("csum"), col("csum")).cast("double"))))
     val qScored = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
       .repartition(shufflePartitions(queries), col("qid")) // probe window clusters on qid
       .withColumn("__vq", quantize(col("qv"), IvfScale))
       .crossJoin(cents)
       .withColumn("__sim",
-        dotLong(col("__vq"), col("csum"), dim).cast("double") / col("__cn"))
+        longDot(col("__vq"), col("csum")).cast("double") / col("__cn"))
     val wq = Window.partitionBy("qid").orderBy(col("__sim").desc, col("cell"))
     qScored.withColumn("__rn", row_number().over(wq))
       .filter(col("__rn") <= nprobe)
@@ -397,10 +389,9 @@ object Similarity {
     * [[semanticScreenVsPriorPrepared]]. */
   def prepareScreenIndex(priorIndex: DataFrame, idCol: String,
       vecCol: String): DataFrame = {
-    val dim = probeDim(priorIndex, vecCol)
     priorIndex
       .select(col(idCol).as("cid"), quantize(col(vecCol), ScoreScale).as("ca"), col("cell"))
-      .withColumn("__cn2", dotLong(col("ca"), col("ca"), dim).cast("double"))
+      .withColumn("__cn2", longDot(col("ca"), col("ca")).cast("double"))
   }
 
   /** [[semanticScreenVsPriorStored]] with the corpus side already in
@@ -408,12 +399,11 @@ object Similarity {
   def semanticScreenVsPriorPrepared(centroids: DataFrame, corpus: DataFrame,
       today: DataFrame, idCol: String, vecCol: String, minSim: Double,
       nprobe: Int = 8): DataFrame = {
-    val dim = probeDim(today, vecCol)
-    val qCells = probeCellsPortable(centroids, today, idCol, vecCol, dim, nprobe)
-      .withColumn("__qn2", dotLong(col("qa"), col("qa"), dim).cast("double"))
+    val qCells = probeCellsPortable(centroids, today, idCol, vecCol, nprobe)
+      .withColumn("__qn2", longDot(col("qa"), col("qa")).cast("double"))
     val scored = qCells.join(corpus, "cell")
       .withColumn("sim",
-        dotLong(col("qa"), col("ca"), dim).cast("double")
+        longDot(col("qa"), col("ca")).cast("double")
           / (sqrt(col("__qn2")) * sqrt(col("__cn2"))))
     val wn = Window.partitionBy("qid")
     val wb = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid"))
@@ -444,12 +434,11 @@ object Similarity {
     * split work: the pair set is identical to blocks=1 (spec-verified). */
   def cosineNearDupPairsPortable(emb: DataFrame, idCol: String, vecCol: String,
       minSim: Double, ncells: Int = -1, blocks: Int = 1): DataFrame = {
-    val dim = probeDim(emb, vecCol)
     val centroids = ivfCentroidsPortable(emb, idCol, vecCol,
       resolveCells(emb, ncells, PairOccupancy))
     val cells = assignCellsPortable(emb, idCol, vecCol, centroids)
       .select(col(idCol).as("id"), quantize(col(vecCol), ScoreScale).as("v"), col("cell"))
-      .withColumn("n2", dotLong(col("v"), col("v"), dim).cast("double"))
+      .withColumn("n2", longDot(col("v"), col("v")).cast("double"))
     val joined =
       if (blocks <= 1)
         cells.as("a").join(cells.as("b"),
@@ -465,7 +454,7 @@ object Similarity {
       }
     joined
       .withColumn("sim",
-        dotLong(col("a.v"), col("b.v"), dim).cast("double")
+        longDot(col("a.v"), col("b.v")).cast("double")
           / (sqrt(col("a.n2")) * sqrt(col("b.n2"))))
       .filter(col("sim") >= minSim)
       // cross-block pairs arrive block-ordered, not id-ordered — canonicalize
@@ -575,13 +564,13 @@ object Similarity {
           quantize(col(vecCol), IvfScale).as("cq"), col("cell")),
       "cq", books).drop("cq")
     val cents = broadcast(centroids.withColumn("__cn",
-      sqrt(dotLong(col("csum"), col("csum"), dim).cast("double"))))
+      sqrt(longDot(col("csum"), col("csum")).cast("double"))))
     val qScored = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
       .repartition(shufflePartitions(queries), col("qid"))
       .withColumn("__vq", quantize(col("qv"), IvfScale))
       .crossJoin(cents)
       .withColumn("__sim",
-        dotLong(col("__vq"), col("csum"), dim).cast("double") / col("__cn"))
+        longDot(col("__vq"), col("csum")).cast("double") / col("__cn"))
     val wq = Window.partitionBy("qid").orderBy(col("__sim").desc, col("cell"))
     // per-query ADC lookup tables from the 2^12 query subvectors:
     // lut[mi][c] = dot(q_sub, s_c)/n_c — deterministic double quotients
@@ -603,7 +592,7 @@ object Similarity {
     val wAdc = Window.partitionBy("qid").orderBy(col("__adc").desc, col("cid"))
     val shortlist = cand.withColumn("__arn", row_number().over(wAdc))
       .filter(col("__arn") <= k * rescoreFactor)
-    val rescored = shortlist.withColumn("score_q", dotLong(col("qa"), col("ca"), dim))
+    val rescored = shortlist.withColumn("score_q", longDot(col("qa"), col("ca")))
     val w = Window.partitionBy("qid").orderBy(col("score_q").desc, col("cid"))
     rescored.withColumn("rank", row_number().over(w).cast("bigint"))
       .filter(col("rank") <= k)

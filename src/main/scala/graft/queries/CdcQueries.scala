@@ -156,15 +156,16 @@ object CdcQueries {
     // before that key's next change, so each asks for a DIFFERENT version
     // than the one arriving just after it — the answer pins version
     // boundaries, not just final state. Two sentinel no-op updates at
-    // far-future offsets push the dimension watermark through the join and
-    // the argmax flush (the q89 wave pattern, on the SOURCE side via the
-    // log itself). Oracle: closed-form argmax over the same version set. ---
+    // far-future offsets push the watermark past every probe, and the batch
+    // after the first one emits them (the q89 wave pattern, on the SOURCE
+    // side via the log itself). Oracle: closed-form argmax over the same
+    // version set. ---
     "q92_cdc_temporal_enrich" -> ((s, dir) => {
       val root = writeTemporalProviderTable(s, dir)
       val st = StreamFixtures.arm(q92Stage(s, dir))
       val ss = StreamFixtures.streamSession(s)
       // probe side uncapped: the whole staged probe set (waves included)
-      // lands in batch 1 — probes just wait in join state until the
+      // lands in batch 1 — probes just wait in the operator state until the
       // source-side versions arrive, and the GLOBAL watermark stays
       // governed by the dimension log's sentinel schedule (min over
       // sources), so the flush choreography is unchanged while the
@@ -590,13 +591,11 @@ object CdcQueries {
     * 500 µs after their version) — q89 covers long-horizon semantics; what
     * q92 gates is the source-fed enrichment loop. `q92WaveSpan` — the
     * offset gap between the two watermark-sentinel log records AND the
-    * `scan.log.max-offsets-per-batch` span — must exceed lateness +
-    * horizon + the agg window: a stream-stream interval join holds its
-    * OUTPUT watermark back by the horizon (late matches may still emit),
-    * so each sentinel wave must clear horizon + lateness for the
-    * downstream argmax to see its windows close (the q89 waveGap rule).
-    * Sentinels exactly one span apart can never share a span-capped
-    * micro-batch, so each wave is its own watermark advance. */
+    * `scan.log.max-offsets-per-batch` span — exceeds lateness + horizon
+    * with a 2 min margin, so the first wave's watermark advance passes
+    * every probe (the q89 waveGap rule). Sentinels exactly one span apart
+    * can never share a span-capped micro-batch, so each wave is its own
+    * watermark advance. */
   /** Event-time base shift: offset 0 (key 0's insert) must not sit AT the
     * epoch — Spark's initial watermark is 0, and a version at exactly the
     * watermark is dropped as late before the join ever sees it. */
@@ -816,9 +815,10 @@ object CdcQueries {
         timestamp_micros((col("p_key") * 3 + 3 + lit(q92BaseMs)) * 1000 - 500).as("pts")))
   }
 
-  /** Staged probe file stream (the q89 layout: ts-ordered part files,
-    * mtime arrival order, pad-to-odd so the two sentinel waves land in
-    * separate maxFilesPerTrigger=2 micro-batches). Probe sentinels carry
+  /** Staged probe file stream (the q89 layout: ts-ordered part files in
+    * mtime arrival order, then the two sentinel waves). The probe stream
+    * is read uncapped, so the whole stage lands in batch 1; the dimension
+    * log's span cap paces the watermark. Probe sentinels carry
     * p_key = -1 (filtered from output) at the SAME instants as the
     * dimension-side sentinel offsets — the global watermark is the min
     * over sources, so both sides must advance. */

@@ -1135,33 +1135,24 @@ object RelQueries {
   //     Flink's `FOR SYSTEM_TIME AS OF`: clicks and purchases re-read as
   //     two watermarked file streams (q54's mtime trick), each click
   //     enriched with the LATEST purchase at-or-before it within a 2h
-  //     staleness horizon. Spark-first: interval join → windowed max_by
-  //     agg, two chained stateful operators, both watermark-bounded
-  //     (StreamingOpsSpec pins semantics, exactly-once, and the operator
-  //     pair). A far-future sentinel click+purchase (user -1, filtered
-  //     from output) pushes both watermarks past every real click's
-  //     window so the final no-data batch flushes the agg — the q54
-  //     end-of-stream pattern. Oracle: static argmax-per-click join.
+  //     staleness horizon. Spark-first: StreamingOps.temporalJoin is ONE
+  //     flatMapGroupsWithState over the tagged union of both streams,
+  //     keyed by user (StreamingOpsSpec pins semantics, exactly-once and
+  //     the single state operator). A click is emitted once the global
+  //     watermark (the min over the two streams) passes it: a far-future
+  //     sentinel click+purchase (user -1, filtered from output) pushes the
+  //     watermark past every real click, and the batch after it emits
+  //     them — the q54 end-of-stream pattern. Oracle: static
+  //     argmax-per-click join.
   //
   //     q90 is the OUTER form (Flink's temporal LEFT join): clicks with no
-  //     purchase in the horizon are kept with NULL version columns. The
-  //     outer null rows leave the join only when the dimension watermark
-  //     proves no version can still arrive, one stateful stage later than
-  //     matched rows — so a SECOND, farther-future sentinel pair advances
-  //     the watermark again after the eviction batch, flushing those rows
-  //     through the aggregation. Both sentinels ride in both modes (they
-  //     are filtered from output and only ever push watermarks forward).
-  //
-  //     q89 runs the COMPACTED construction (temporalJoinCompacted, 10 min
-  //     grain / 2 h horizon): the hot-key-safe form whose per-event
-  //     fan-out is O(updates-per-grain + horizon/grain) instead of
-  //     O(updates-per-horizon) — the same answer under the same oracle, so
-  //     the gate proves compaction changes the plan, never the result.
-  //     q90 keeps the plain two-operator form: both shapes stay gated. ---
-  private def q89(s: SparkSession, dir: String): DataFrame =
-    temporalQ(s, dir, outer = false, compacted = true)
-  private def q90(s: SparkSession, dir: String): DataFrame =
-    temporalQ(s, dir, outer = true, compacted = false)
+  //     purchase in the horizon are kept with NULL version columns, emitted
+  //     by the same watermark pass. Both run the one operator and share one
+  //     staged layout; its second sentinel wave (filtered from output, it
+  //     only pushes the watermark forward) is the batch that runs after
+  //     the first wave's advance. ---
+  private def q89(s: SparkSession, dir: String): DataFrame = temporalQ(s, dir, outer = false)
+  private def q90(s: SparkSession, dir: String): DataFrame = temporalQ(s, dir, outer = true)
 
   private val temporalHorizonMs = 7200000L // 2h staleness horizon
   private val temporalLatenessSec = 3600L
@@ -1186,49 +1177,39 @@ object RelQueries {
           .unionAll(s.range(1).select(lit(-1L).as("user_id"), col("id").as("event_id"),
             timestamp_micros(lit(us)).as("ets"), lit("purchase").as("event_type"),
             lit(0.0).as("value")))
-      // wave separation (pad-to-odd under maxFilesPerTrigger=2, one file
-      // per wave) is the shared stageWithWaves layout: the outer rows
-      // evicted by wave 1 need wave 2 to flush them through the agg
+      // the shared stageWithWaves layout, one file per wave: wave 1's
+      // watermark advance passes every real click, and wave 2 (the last
+      // file, alone in its batch) runs the batch that emits them
       StreamFixtures.stageWithWaves(in, sentinelAt, padUs = maxUs,
         waveUs = Seq(sentUs, sentUs2))
     }
 
-  private def temporalQ(s: SparkSession, dir: String, outer: Boolean,
-      compacted: Boolean): DataFrame = {
-    val horizonMs = temporalHorizonMs
-    val latenessSec = temporalLatenessSec
+  private def temporalQ(s: SparkSession, dir: String, outer: Boolean): DataFrame = {
     val st = StreamFixtures.arm(temporalStage(s, dir))
     val ss = StreamFixtures.streamSession(s)
     // TWO micro-batches instead of ~18: all real data + the pad + wave 1
     // in batch 1, wave 2 alone in the last batch. The final answer only
     // needs (a) every real row processed no later than wave 1 and (b) a
-    // batch AFTER each wave so its watermark advance takes effect — batch
+    // batch AFTER wave 1 so its watermark advance takes effect — batch
     // boundaries between real files bought nothing but per-batch planning
-    // + state-store checkpoints (the r17 profile's 0.5 s/batch on this
-    // two-stateful-operator plan). maxFilesPerTrigger = (total − 1) admits
-    // everything except wave 2 into batch 1; wave 2's own batch flushes
-    // the aggregation exactly as before (same mechanism, bigger stride).
+    // + state-store checkpoints (the r17 profile's 0.5 s/batch).
+    // maxFilesPerTrigger = (total − 1) admits everything except wave 2
+    // into batch 1, which holds only while wave 2 is the one last file.
     val totalFiles = st.groups.map(_._1.size).sum
+    assert(totalFiles >= 2 && st.groups.last._1.size == 1,
+      s"temporal stage layout: $totalFiles files, last group ${st.groups.last._1.size}")
     def side(tpe: String, pre: String) = ss.readStream.schema(temporalEvents(s, dir).schema)
       .option("maxFilesPerTrigger", (totalFiles - 1).toString).parquet(st.in)
       .filter(col("event_type") === tpe)
       .select(col("user_id").as(s"${pre}_user"), col("event_id").as(s"${pre}_id"),
         col("ets").as(s"${pre}ts"), col("value").as(s"${pre}_value"))
-    val jt = if (outer) "leftOuter" else "inner"
-    val joined = if (compacted)
-      graft.streaming.StreamingOps.temporalJoinCompacted(
-        side("click", "c").drop("c_value"), "cts",
-        side("purchase", "p"), "pts",
-        "c_user", "p_user", horizonMs = horizonMs, grainMs = 600000L,
-        lateness = s"$latenessSec seconds",
-        eCols = Seq("c_user", "c_id"), payload = Seq("p_value"), tieCols = Seq("p_id"),
-        joinType = jt)
-    else graft.streaming.StreamingOps.temporalJoin(
+    val joined = graft.streaming.StreamingOps.temporalJoin(
       side("click", "c").drop("c_value"), "cts",
       side("purchase", "p"), "pts",
-      "c_user", "p_user", horizonMs = horizonMs, lateness = s"$latenessSec seconds",
+      "c_user", "p_user", horizonMs = temporalHorizonMs,
+      lateness = s"$temporalLatenessSec seconds",
       eCols = Seq("c_user", "c_id"), payload = Seq("p_value"), tieCols = Seq("p_id"),
-      joinType = jt)
+      joinType = if (outer) "leftOuter" else "inner")
     StreamFixtures.drainAppend(joined, "q89_tj")
       .where(col("c_user") >= 0) // drop the sentinel pair
       .select(col("c_user").as("user_id"), col("c_id").as("click_id"),

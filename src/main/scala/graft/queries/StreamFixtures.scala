@@ -91,13 +91,15 @@ private[graft] object StreamFixtures {
       .sortBy(_.getName).toSeq
 
   /** The shared sentinel-wave stage layout (q89/q90/q92): main part files
-    * arrive one per second; a pad file keeps the pre-wave file count odd
-    * (under maxFilesPerTrigger=2 the waves must each open their OWN
-    * micro-batch — wave N's watermark advance is what flushes wave N−1's
-    * emissions through the next stateful stage); then each wave lands as
-    * its own file, 1800 s of mtime apart. `sentinel(us)` builds the
-    * watermark-pushing rows for instant `us` (filtered from query output
-    * by the caller's sentinel-key convention). */
+    * arrive one per second; a pad file keeps the pre-wave file count odd;
+    * then each wave lands as its own single file, 1800 s of mtime apart.
+    * Callers pace the waves by their trigger caps: q89/q90 admit all but
+    * one file per trigger (totalFiles − 1), so the last wave alone opens
+    * the batch that runs after the first wave's watermark advance; q92's
+    * probes are uncapped and its dimension log's span cap paces the
+    * watermark. `sentinel(us)` builds the watermark-pushing rows for
+    * instant `us` (filtered from query output by the caller's
+    * sentinel-key convention). */
   def stageWithWaves(in: String, sentinel: Long => org.apache.spark.sql.DataFrame,
       padUs: Long, waveUs: Seq[Long]): Seq[(Seq[java.io.File], Long)] = {
     val mainParts = parts(in)

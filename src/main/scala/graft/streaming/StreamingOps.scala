@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{ArrayType, StructType}
 
 final case class Event(user_id: Long, ts: java.sql.Timestamp, event_type: String, value: Double)
 /** Session totals accumulate as exact decimals (each event value quantized
@@ -133,166 +134,71 @@ object StreamingOps {
   /** Streaming event-time temporal join — Flink SQL's
     * `FOR SYSTEM_TIME AS OF probe.ts` (the canonical CDC enrichment: join
     * each probe-side event to the version of a changelog-fed dimension
-    * that was current at the event's own timestamp), re-expressed with
-    * Spark's built-in stateful operators instead of custom state:
+    * that was current at the event's own timestamp; SURVEY.md §2.4 — the
+    * reference delegates this to Flink SQL). Each event pairs with the
+    * version of greatest `(vTs, tieCols...)` inside `[eTs - horizonMs, eTs]`
+    * (the bounded-staleness window; ties at one version timestamp resolve
+    * by `tieCols`, so the pick is deterministic).
     *
-    *   1. a watermarked stream-stream interval join pairs each event with
-    *      every dimension version in `[eTs - horizonMs, eTs]` (the
-    *      bounded-staleness window — a version older than the horizon is
-    *      treated as expired, which is what bounds the state), then
-    *   2. a windowed streaming aggregation picks, per event, the version
-    *      with the greatest `(vTs, tieCols...)` — i.e. the version in
-    *      force at eTs — via `max_by` over a struct (lexicographic, so
-    *      ties at the same version timestamp resolve deterministically).
-    *
-    * Spark plans this as StreamingSymmetricHashJoinExec feeding a
-    * stateful aggregation (multiple chained stateful operators, supported
-    * in append mode since watermark propagation landed); both states are
-    * watermark-bounded: join state is O(rate × horizon) per side, agg
-    * state holds only events whose window the watermark hasn't passed.
-    * Nothing here is O(stream) — two firehoses enrich in bounded memory.
+    * One arbitrary stateful operator does it: events and versions become a
+    * tagged union `(__k, __t, event | null, null | version)`, each side
+    * watermarked on `__t` (the global watermark is the minimum of the two,
+    * Spark's default policy), grouped by key and run through
+    * `flatMapGroupsWithState` with an event-time timeout. Per key the
+    * state holds the events above the watermark, the versions above it,
+    * and the single greatest version at or below it while it can still be
+    * in force for a later event — O(1) versions below the watermark, the
+    * shape of Flink's latest-version temporal state, so a key updated
+    * thousands of times inside the horizon keeps one old version instead
+    * of pairing every event with every version. An event is emitted once
+    * the watermark passes its timestamp (any version still to arrive for
+    * it would be late input); the timeout fires at the earlier of the
+    * earliest pending event and the kept version leaving the horizon, and
+    * a key whose state empties is removed. The per-key step is
+    * [[TemporalStep]]; timestamps are compared in microseconds.
     *
     * `joinType = "inner"` (default) drops events with no version inside
-    * the horizon; `"leftOuter"` keeps them with NULL version columns —
-    * Flink's temporal OUTER join. The outer null rows are emitted by the
-    * join only once the dimension watermark proves no version can still
-    * arrive (state eviction), and the downstream aggregation accepts them
-    * because late-record filtering uses the UPSTREAM operator's watermark
-    * (Spark's multi-stateful-operator watermark propagation); `max_by`
-    * ignores null orderings, so a group holding only the outer null row
-    * aggregates to a NULL version struct — exactly outer semantics.
-    * `payload` columns are carried from the dimension side; `eCols` from
-    * the event side (must include `eKey` and an event id that makes rows
-    * unique — the aggregation groups on them plus the event-time window).
-    * Reference: flink-connector docs' temporal join over cdc changelogs
-    * (SURVEY.md §2.4 — the reference delegates this to Flink SQL).
-    *
-    * ==Hot-key version fan-out — READ BEFORE RUNNING AT SCALE==
-    * Stage 1 materializes every (event, version-in-horizon) PAIR before
-    * stage 2 discards all but one: a dimension key updated U times inside
-    * the horizon emits O(U) intermediate rows PER EVENT on that key. This
-    * is the exact skew CDC dimensions exhibit — one busy row updated
-    * thousands of times an hour — and unlike Flink's O(1)-latest-version
-    * temporal state, the blowup here is `event_rate × update_rate ×
-    * horizon`, unbounded in the horizon. The contract for using THIS
-    * method is therefore: `max per-key updates within horizonMs` must be
-    * small (say ≤ tens). When it isn't, use [[temporalJoinCompacted]],
-    * which bounds the fan-out to O(updates-per-grain + horizon/grain) per
-    * event by pre-compacting older versions to one per (key, grain) — same
-    * answer, proven under the same oracle gate (q89), stress-measured in
-    * TemporalCompactionSpec (1000-version hot key: 1000 pairs/event raw
-    * vs ~70 compacted at horizon/grain = 60). */
+    * the horizon; `"leftOuter"` emits them with NULL version columns —
+    * Flink's temporal OUTER join. Output: `eTs`, `eCols...`, `version_ts`,
+    * `tieCols...`, `payload...`; `eCols` come from the event side (include
+    * `eKey` to keep it), `tieCols` and `payload` from the dimension side.
+    * Rows with a NULL `vKey` are no version of any key. */
   def temporalJoin(events: DataFrame, eTs: String, dims: DataFrame, vTs: String,
       eKey: String, vKey: String, horizonMs: Long, lateness: String,
       eCols: Seq[String], payload: Seq[String], tieCols: Seq[String],
       joinType: String = "inner"): DataFrame = {
-    val joined = events.withWatermark(eTs, lateness)
-      .join(dims.withWatermark(vTs, lateness),
-        expr(s"$eKey = $vKey AND $vTs <= $eTs AND " +
-          s"$vTs >= $eTs - interval ${horizonMs / 1000} seconds"), joinType)
-    pickLatestPerEvent(joined, eTs, vTs, eCols, payload, tieCols)
-  }
-
-  /** Stage 2 of the temporal joins: per (event-window, event) pick the
-    * version with the greatest (vTs, tieCols...) — the version in force.
-    * Only window(eTs) may carry the event-time tag into the aggregation
-    * (Spark rejects two tagged columns); the event's own timestamp rides
-    * along as plain micros and is re-materialized after the agg. */
-  private def pickLatestPerEvent(joined: DataFrame, eTs: String, vTs: String,
-      eCols: Seq[String], payload: Seq[String], tieCols: Seq[String]): DataFrame = {
-    val ord = struct((col(vTs) +: tieCols.map(col)): _*)
-    val picked = struct((col(vTs) +: (tieCols ++ payload).map(col)): _*)
-    joined
-      .groupBy((window(col(eTs), "1 minute") +:
-        unix_micros(col(eTs)).as("__ets_us") +: eCols.map(col)): _*)
-      .agg(max_by(picked, ord).as("v"))
-      .select((timestamp_micros(col("__ets_us")).as(eTs) +: eCols.map(col)) ++
-        (col(s"v.$vTs").as("version_ts") +: (tieCols ++ payload).map(c => col(s"v.$c"))): _*)
-  }
-
-  /** Last version per (key, calendar grain) — the pre-compaction stage of
-    * [[temporalJoinCompacted]]. Streaming: `dims` must already carry a
-    * watermark on `vTs`; the windowed max_by emits each (key, grain) row
-    * once the watermark closes the grain (append mode), so downstream sees
-    * a compacted changelog — the Kafka-compacted-topic shape, as a Spark
-    * stateful operator. Output: vKey, `__grain_t` (the grain's
-    * event-time-tagged window_time, i.e. grain end − 1 µs), and the picked
-    * version's vTs/tieCols/payload. State: O(keys × open grains). */
-  def compactVersions(dims: DataFrame, vTs: String, vKey: String, grain: String,
-      payload: Seq[String], tieCols: Seq[String]): DataFrame = {
-    val ord = struct((col(vTs) +: tieCols.map(col)): _*)
-    val picked = struct((col(vTs) +: (tieCols ++ payload).map(col)): _*)
-    dims.groupBy(window(col(vTs), grain), col(vKey))
-      .agg(max_by(picked, ord).as("__v"))
-      // the picked vTs must shed its event-time tag (it rides through the
-      // struct with watermark metadata attached, and a stream may carry
-      // only ONE tagged column — __grain_t is the one downstream state
-      // reasoning needs); round-tripping through micros re-materializes it
-      // as a plain value column
-      .select((col(vKey) +: window_time(col("window")).as("__grain_t") +:
-        timestamp_micros(unix_micros(col(s"__v.$vTs"))).as(vTs) +:
-        (tieCols ++ payload).map(c => col(s"__v.$c"))): _*)
-  }
-
-  /** [[temporalJoin]] with the hot-key fan-out BOUNDED: identical answer
-    * (same oracle gate — q89 runs this form), different intermediate
-    * volume. Two version channels feed the same stage-2 argmax:
-    *
-    *   - RAW: events ⋈ versions with `vTs ∈ [eTs − grainMs, eTs]` — only
-    *     the last grain's updates pair per event, O(updates-per-grain);
-    *   - COMPACTED: events ⋈ [[compactVersions]] output with
-    *     `__grain_t ∈ [eTs − horizonMs, eTs)` — one row per (key, closed
-    *     grain), O(horizonMs / grainMs) pairs per event, then a residual
-    *     exact filter `vTs ≥ eTs − horizon` trims the conservatively
-    *     admitted oldest grain.
-    *
-    * Correctness (why the union always contains the in-force version): let
-    * v = the latest version with vTs ≤ eTs. If v's calendar grain closed at
-    * or before eTs, v is the LAST version in that grain — any later v' in
-    * the grain would have vTs < grainEnd ≤ eTs, contradicting v's
-    * maximality — so the compacted channel carries it. Otherwise v lives in
-    * eTs's own (still-open) grain, so eTs − vTs < grainMs and the raw
-    * channel carries it. Every candidate either channel offers satisfies
-    * vTs ≤ eTs (compacted: vTs < grainEnd = __grain_t + 1µs ≤ eTs), so the
-    * argmax over the union is exactly v; a version offered by both
-    * channels is a bit-identical duplicate and cannot change an argmax.
-    * Ties on vTs fall in one calendar grain by construction and resolve by
-    * the same (vTs, tieCols) ordering in both the compaction and stage 2.
-    *
-    * Scale: per-event fan-out drops from O(U_horizon) to O(U_grain +
-    * horizon/grain); raw-join version state drops from O(rate × horizon)
-    * to O(rate × grain); the compacted join holds O(keys × horizon/grain).
-    * Pick grainMs ≈ horizon / update-rate-per-grain to balance the two
-    * terms. The cost is one extra micro-batch of result latency (a grain's
-    * versions join only after the watermark closes the grain).
-    *
-    * Chained-stateful note: this plans as windowed-agg → stream-stream
-    * join → union → windowed-agg — the multi-stateful-operator shapes
-    * Spark supports in append mode; TemporalCompactionSpec pins the
-    * operator chain and the streaming/batch equivalence. */
-  def temporalJoinCompacted(events: DataFrame, eTs: String, dims: DataFrame, vTs: String,
-      eKey: String, vKey: String, horizonMs: Long, grainMs: Long, lateness: String,
-      eCols: Seq[String], payload: Seq[String], tieCols: Seq[String],
-      joinType: String = "inner"): DataFrame = {
-    require(grainMs > 0 && grainMs <= horizonMs && grainMs % 1000 == 0,
-      s"grainMs must be a positive whole-second value <= horizonMs, got $grainMs " +
-        "(horizon divisibility is NOT required: grains are epoch-aligned and the " +
-        "residual filter trims the oldest admitted grain)")
-    val e = events.withWatermark(eTs, lateness)
-    val d = dims.withWatermark(vTs, lateness)
-    val shape = (col(eTs) +: eCols.map(col)) ++ ((vTs +: (tieCols ++ payload)).map(col))
-    val raw = e.join(d,
-      expr(s"$eKey = $vKey AND $vTs <= $eTs AND " +
-        s"$vTs >= $eTs - interval ${grainMs / 1000} seconds"), joinType)
-      .select(shape: _*)
-    val comp = compactVersions(d, vTs, vKey, s"${grainMs / 1000} seconds", payload, tieCols)
-    val compJ = e.join(comp,
-      expr(s"$eKey = $vKey AND __grain_t < $eTs AND " +
-        s"__grain_t >= $eTs - interval ${horizonMs / 1000} seconds"), joinType)
-      .select(shape: _*)
-    val unioned = raw.unionByName(compJ)
-      .where(expr(s"$vTs IS NULL OR $vTs >= $eTs - interval ${horizonMs / 1000} seconds"))
-    pickLatestPerEvent(unioned, eTs, vTs, eCols, payload, tieCols)
+    require(joinType == "inner" || joinType == "leftOuter", s"unsupported joinType $joinType")
+    val ev = struct((unix_micros(col(eTs)).as("__ets") +: eCols.map(col)): _*)
+    val ver = struct((unix_micros(col(vTs)).as("__vts") +: (tieCols ++ payload).map(col)): _*)
+    val evType = events.select(ev).schema.head.dataType.asInstanceOf[StructType]
+    val verType = dims.select(ver).schema.head.dataType.asInstanceOf[StructType]
+    val tagged = events.select(col(eKey).as("__k"), col(eTs).as("__t"), ev.as("__e"),
+        lit(null).cast(verType).as("__v")).withWatermark("__t", lateness)
+      .unionByName(dims.where(col(vKey).isNotNull)
+        .select(col(vKey).cast(events.schema(eKey).dataType).as("__k"), col(vTs).as("__t"),
+          lit(null).cast(evType).as("__e"), ver.as("__v"))
+        .withWatermark("__t", lateness))
+    val stateType = new StructType().add("events", ArrayType(evType)).add("versions", ArrayType(verType))
+    val outType = StructType(evType.fields ++ verType.fields.map(_.copy(nullable = true)))
+    val step = TemporalStep(horizonMs * 1000, tieCols.size, verType.size, joinType == "leftOuter")
+    tagged.groupBy(col("__k"))
+      .as[Row, Row](Encoders.row(tagged.select("__k").schema), Encoders.row(tagged.schema))
+      .flatMapGroupsWithState[Row, Row](OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+        (_: Row, rows: Iterator[Row], state: GroupState[Row]) =>
+          val in = rows.toSeq
+          val held = state.getOption.getOrElse(Row(Nil, Nil))
+          val (out, pending, kept) = step(held.getSeq[Row](0) ++ in.flatMap(r => Option(r.getStruct(2))),
+            held.getSeq[Row](1) ++ in.flatMap(r => Option(r.getStruct(3))),
+            state.getCurrentWatermarkMs() * 1000)
+          if (pending.isEmpty && kept.isEmpty) state.remove()
+          else {
+            state.update(Row(pending, kept))
+            state.setTimeoutTimestamp(math.max(step.timeoutMs(pending, kept), 1L))
+          }
+          out.iterator
+      }(Encoders.row(stateType), Encoders.row(outType))
+      .select((timestamp_micros(col("__ets")).as(eTs) +: eCols.map(col)) ++
+        (timestamp_micros(col("__vts")).as("version_ts") +: (tieCols ++ payload).map(col)): _*)
   }
 
   /** Incremental SCD Type-2 maintenance from a changelog stream: emits a
@@ -383,3 +289,45 @@ final case class Scd2Open(price: Double, st: String, offset: Long)
 /** A closed SCD2 interval — append-only, final on emission. */
 final case class Scd2Closed(k: Long, price: Double, st: String,
     valid_from: Long, valid_to: Long)
+
+/** One key's step of [[StreamingOps.temporalJoin]] at watermark `wmUs`.
+  * Event rows are `(eTs µs, eCols...)`, version rows `(vTs µs, tieCols...,
+  * payload...)`. Every event at or below the watermark is emitted joined
+  * to the greatest `(vTs, tieCols...)` version in `[eTs - horizonUs, eTs]`,
+  * or to `vWidth` NULLs when `outer` (inner drops it). Returns (emitted
+  * rows, pending events, kept versions): the events and versions above
+  * the watermark, plus the single greatest version at or below it while
+  * it is inside the horizon — every event still to come lies above the
+  * watermark, so no older version can be in force for it. */
+private[graft] final case class TemporalStep(horizonUs: Long, nTie: Int, vWidth: Int,
+    outer: Boolean) {
+  // (vTs, tieCols...) ascending, NULL tie values first
+  @transient private lazy val order: Ordering[Row] = (a: Row, b: Row) =>
+    (0 to nTie).iterator.map(i => (a.get(i), b.get(i)) match {
+      case (x, y) if x == null || y == null => (x != null).compare(y != null)
+      case (x, y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
+    }).find(_ != 0).getOrElse(0)
+
+  def apply(events: Seq[Row], versions: Seq[Row], wmUs: Long): (Seq[Row], Seq[Row], Seq[Row]) = {
+    val vs = versions.toVector.sorted(order)
+    val (ready, pending) = events.partition(_.getLong(0) <= wmUs)
+    var i = 0
+    var cur: Row = null // greatest version at or before the current event
+    val out = ready.sortBy(_.getLong(0)).flatMap { e =>
+      val t = e.getLong(0)
+      while (i < vs.length && vs(i).getLong(0) <= t) { cur = vs(i); i += 1 }
+      if (cur != null && cur.getLong(0) >= t - horizonUs) Some(Row.fromSeq(e.toSeq ++ cur.toSeq))
+      else if (outer) Some(Row.fromSeq(e.toSeq ++ Seq.fill(vWidth)(null)))
+      else None
+    }
+    val below = vs.lastIndexWhere(_.getLong(0) <= wmUs)
+    (out, pending, vs.drop(below).dropWhile(_.getLong(0) < wmUs - horizonUs))
+  }
+
+  /** Event-time timeout in ms (it fires once the watermark exceeds it):
+    * the earliest moment a pending event turns ready or a kept version
+    * leaves the horizon. */
+  def timeoutMs(pending: Seq[Row], kept: Seq[Row]): Long =
+    (pending.map(e => Math.floorDiv(e.getLong(0) - 1, 1000L)) ++
+      kept.map(v => Math.floorDiv(v.getLong(0) + horizonUs, 1000L))).min
+}

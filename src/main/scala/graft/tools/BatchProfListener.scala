@@ -24,6 +24,8 @@ final class BatchProfListener extends StreamingQueryListener {
         so.allUpdatesTimeMs + so.allRemovalsTimeMs + so.commitTimeMs)
       BatchProfListener.stateRows.addAndGet(so.numRowsTotal)
     }
+    BatchProfListener.stateOps.add(e.progress.stateOperators
+      .map(so => s"${so.operatorName}:${so.numRowsTotal}").mkString("[", ",", "]"))
   }
 }
 
@@ -32,12 +34,14 @@ object BatchProfListener {
   val batches = new AtomicLong
   val stateMs = new AtomicLong
   val stateRows = new AtomicLong
+  /** Per micro-batch: each state operator's name and total state rows. */
+  val stateOps = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   def report(name: String): Unit = {
     import scala.jdk.CollectionConverters._
     val parts = sums.asScala.toSeq.sortBy(-_._2.get)
       .map { case (k, v) => f"$k=${v.get / 1000.0}%.2fs" }.mkString(" ")
     println(f"  STREAM $name batches=${batches.get} $parts " +
       f"stateOpMs=${stateMs.get / 1000.0}%.2fs stateRows=${stateRows.get}")
-    sums.clear(); batches.set(0); stateMs.set(0); stateRows.set(0)
+    sums.clear(); batches.set(0); stateMs.set(0); stateRows.set(0); stateOps.clear()
   }
 }

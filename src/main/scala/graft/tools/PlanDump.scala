@@ -41,6 +41,7 @@ object PlanDump {
       // drain any warm-up stream stats
       BatchProfListener.sums.clear(); BatchProfListener.batches.set(0)
       BatchProfListener.stateMs.set(0); BatchProfListener.stateRows.set(0)
+      BatchProfListener.stateOps.clear()
       val agg = new ProfileJobs.Agg
       spark.sparkContext.addSparkListener(agg)
       val t0 = System.nanoTime()
@@ -66,6 +67,7 @@ object PlanDump {
           pw.println(s"STREAM batches=${BatchProfListener.batches.get} $parts " +
             f"stateOpMs=${BatchProfListener.stateMs.get / 1000.0}%.2fs " +
             s"stateRows=${BatchProfListener.stateRows.get}")
+          pw.println(s"STATE per batch ${BatchProfListener.stateOps.asScala.mkString(" ")}")
         }
         pw.println()
         pw.println(df.queryExecution.explainString(

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Quality assertions for the probabilistic operators (MinHash-LSH,
@@ -425,5 +426,20 @@ class DedupSimilaritySpec extends SparkSpec {
       assert(Dedup.h56OfMd5Hex(r.getString(0)) === r.getLong(1),
         s"JVM/Catalyst 56-bit key drift for md5 ${r.getString(0)}")
     }
+  }
+
+  test("assignCellsPortable builds its plan without running a Spark job") {
+    val sp = spark
+    import sp.implicits._
+    // a distributed input: a local one would answer a probe without a job
+    val vecs = spark.range(1, 3).select(col("id").as("vec_id"), when(col("id") === 1,
+      array(lit(0.5), lit(-0.25))).otherwise(array(lit(-0.5), lit(0.75))).as("embedding"))
+    val cents = Seq((0, Seq(4096L, 0L)), (1, Seq(0L, 4096L))).toDF("cell", "csum")
+    var cells: DataFrame = null
+    val jobs = graft.SparkJobs.jobsOf(spark) {
+      cells = Similarity.assignCellsPortable(vecs, "vec_id", "embedding", cents)
+    }
+    assert(jobs.isEmpty, s"jobs run while building the plan: $jobs")
+    assert(cells.select("vec_id", "cell").as[(Long, Int)].collect().toMap === Map(1L -> 0, 2L -> 1))
   }
 }

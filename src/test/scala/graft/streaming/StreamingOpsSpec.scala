@@ -66,7 +66,7 @@ class StreamingOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("temporal join: each event gets the version in force at its ts, chained stateful ops") {
+  test("temporal join: each event gets the version in force at its ts, one stateful op") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val eIn = MemoryStream[(Long, Long, java.sql.Timestamp)]      // key, event_id, ets
@@ -85,7 +85,7 @@ class StreamingOpsSpec extends SparkSpec {
       // (v20 is 185s stale, beyond the 120s horizon); key3@t30 → no version, dropped
       eIn.addData((1L, 100L, ts(30)), (1L, 101L, ts(50)), (2L, 102L, ts(200)), (3L, 103L, ts(30)))
       q.processAllAvailable()
-      // push both watermarks past the last event's window so the agg flushes
+      // push both watermarks past the last event so every event is emitted
       eIn.addData((9L, 900L, ts(1000)))
       vIn.addData((9L, 90L, ts(1000), 0.0))
       q.processAllAvailable()
@@ -100,10 +100,9 @@ class StreamingOpsSpec extends SparkSpec {
       assert(real === Set((100L, 10L, 7.0), (101L, 11L, 8.0)))
       // exactly once: no duplicate emission across the flush batches
       assert(spark.table("tj_sink").where(col("event_id") < 900).count() === 2)
-      // the plan chains two stateful operators: symmetric hash join → stateful agg
-      val ops = q.lastProgress.stateOperators.map(_.operatorName.toLowerCase)
-      assert(ops.exists(_.contains("symmetrichashjoin")) &&
-        ops.exists(_.contains("statestoresave")), ops.mkString(","))
+      // one stateful operator: flatMapGroupsWithState over events ∪ versions
+      val ops = q.lastProgress.stateOperators.map(_.operatorName)
+      assert(ops.toSeq === Seq("flatMapGroupsWithState"), ops.mkString(","))
     } finally q.stop()
   }
 
@@ -126,8 +125,7 @@ class StreamingOpsSpec extends SparkSpec {
       // 103 has no version at all — outer keeps BOTH with null versions
       eIn.addData((1L, 100L, ts(30)), (2L, 102L, ts(200)), (3L, 103L, ts(30)))
       q.processAllAvailable()
-      // two watermark pushes: first evicts join state (emits outer nulls),
-      // second flushes those rows through the aggregation
+      // watermark pushes: the events are emitted once the watermark passes them
       eIn.addData((9L, 900L, ts(1000))); vIn.addData((9L, 90L, ts(1000), 0.0))
       q.processAllAvailable()
       eIn.addData((9L, 901L, ts(2000))); vIn.addData((9L, 91L, ts(2000), 0.0))
@@ -145,6 +143,8 @@ class StreamingOpsSpec extends SparkSpec {
         (102L, None, None),
         (103L, None, None)))
       assert(spark.table("tjo_sink").where(col("event_id") < 900).count() === 3)
+      val ops = q.lastProgress.stateOperators.map(_.operatorName)
+      assert(ops.toSeq === Seq("flatMapGroupsWithState"), ops.mkString(","))
     } finally q.stop()
   }
 

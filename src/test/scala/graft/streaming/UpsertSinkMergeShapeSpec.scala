@@ -2,11 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler._
 import org.apache.spark.sql.functions._
-
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
-import scala.jdk.CollectionConverters._
 
 /** Pins the Spark-side shape of a [[UpsertSink.mergeBatch]] on the shared
   * `local[4]` session (shuffle partitions 4): buckets are merged and
@@ -17,7 +13,6 @@ class UpsertSinkMergeShapeSpec extends SparkSpec {
 
   private val cols = Seq("k", "v", "op", "op_offset", "row_kind")
   private val Buckets = 16
-  private val JobGroupKey = "spark.jobGroup.id"
 
   private def batchOf(keys: Seq[Long], offset: Long) =
     keys.map(k => (k, k.toDouble, "c", offset + k, "+I")).toDF(cols: _*)
@@ -29,41 +24,7 @@ class UpsertSinkMergeShapeSpec extends SparkSpec {
       .as[(Long, Int)].collect().toSeq.filter(r => bs(r._2))
       .groupBy(_._2).values.flatMap(_.map(_._1).sorted.take(3)).toSeq.sorted
 
-  /** Runs `body` and returns, per Spark job it ran (in order), the job's
-    * call site (its final stage's name) and the task count of that stage. Jobs are matched by
-    * job group, and a marker job flushes the asynchronous listener bus
-    * before reading. */
-  private def jobsOf(body: => Unit): Seq[(String, Int)] = {
-    val sc = spark.sparkContext
-    val group = s"merge-shape-${java.util.UUID.randomUUID}"
-    val finalStage = new ConcurrentHashMap[Int, (String, Int)]()
-    val stageTasks = new ConcurrentHashMap[Int, Int]()
-    val markerJob = new java.util.concurrent.atomic.AtomicInteger(-1)
-    val flushed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).flatMap(p => Option(p.getProperty(JobGroupKey))).foreach {
-          case `group` =>
-            val last = j.stageInfos.maxBy(_.stageId)
-            finalStage.put(j.jobId, (last.name, last.stageId))
-          case g if g == s"$group-marker" => markerJob.set(j.jobId)
-          case _ => ()
-        }
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
-        stageTasks.put(s.stageInfo.stageId, s.stageInfo.numTasks)
-      override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        if (j.jobId == markerJob.get) flushed.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "merge under test")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-marker", "listener flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus never flushed")
-    } finally sc.removeSparkListener(listener)
-    finalStage.asScala.toSeq.sortBy(_._1).map { case (_, (site, stage)) => (site, stageTasks.get(stage)) }
-  }
+  private def jobsOf(body: => Unit): Seq[(String, Int)] = graft.SparkJobs.jobsOf(spark)(body)
 
   private def parquetFiles(out: String): Map[Int, Int] = {
     val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
