@@ -106,6 +106,48 @@ object Bench {
     }
   }
 
+  /** Builds every battery fixture at `sfDir` outside the timed window:
+    * the staged inputs, stored state and lake layouts the queries read are
+    * ingest-time scaffolding, not engine cost. Each builder caches per
+    * (JVM, dir), so a later query reuses it; a failing builder is skipped
+    * and its query builds (or fails) inside its own timed run. */
+  def prepareFixtures(spark: SparkSession, sfDir: String): Unit = {
+    // Pre-materialize the timed SF dir's static CDC fixture (cached per
+    // (JVM, dir), shared by q73/q74/q78): writing it is test scaffolding
+    // IO, not engine cost, but without this it lands inside q73's timed
+    // window — measured 3.4 s in-battery vs 0.2 s isolated at sf0.1.
+    try graft.queries.CdcQueries.writeFileProviderTable(spark, sfDir)
+    catch { case _: Throwable => () }
+    // Same rationale for q87's bucketed tables: the bucketed write is an
+    // ingest-time index build amortized over every later query; the bench
+    // times the steady-state co-located join, not the one-off layout.
+    try graft.queries.RelQueries.ensureBucketedTables(spark, sfDir)
+    catch { case _: Throwable => () }
+    // And for the streaming gates (q52/q54/q61/q88-q90): the staged
+    // sort+write of each query's file-stream input is ingest scaffolding;
+    // per-run the queries only re-arm mtimes. Without this the first timed
+    // run at the bench SF pays the stage build inside its window.
+    try graft.queries.RelQueries.ensureStreamFixtures(spark, sfDir)
+    catch { case _: Throwable => () }
+    // q83's staged doc stream, same rule
+    try graft.queries.DataQueries.ensureStreamFixtures(spark, sfDir)
+    catch { case _: Throwable => () }
+    // Every maintained stored-state fixture (q104's IVF index, q105's
+    // manifests, q115-q121's cluster/df/hist state incl. the day-2
+    // appends): generation builds and PAST days' maintenance jobs are
+    // ingest-time work amortized over every daily run; the bench times
+    // the daily gate queries reading the stored tables.
+    try graft.queries.DataQueries.ensureStoredState(spark, sfDir)
+    catch { case _: Throwable => () }
+    // q107's date-partitioned events lake: the partitioned re-land is the
+    // ingest layout; the bench times the pruned query over it.
+    try graft.queries.RelQueries.ensurePartitionedEventsLake(spark, sfDir)
+    catch { case _: Throwable => () }
+    // q92's event-log provider table + staged probe stream, same rule
+    try graft.queries.CdcQueries.ensureTemporalFixtures(spark, sfDir)
+    catch { case _: Throwable => () }
+  }
+
   def main(args: Array[String]): Unit = {
     val loadInitial = load1()
     // Contention gate: a bench recorded while another JVM is exiting can
@@ -154,40 +196,7 @@ object Bench {
       try fn(spark, warmDir).count()
       catch { case _: Throwable => () }
     }
-    // Pre-materialize the timed SF dir's static CDC fixture (cached per
-    // (JVM, dir), shared by q73/q74/q78): writing it is test scaffolding
-    // IO, not engine cost, but without this it lands inside q73's timed
-    // window — measured 3.4 s in-battery vs 0.2 s isolated at sf0.1.
-    try graft.queries.CdcQueries.writeFileProviderTable(spark, sfDir)
-    catch { case _: Throwable => () }
-    // Same rationale for q87's bucketed tables: the bucketed write is an
-    // ingest-time index build amortized over every later query; the bench
-    // times the steady-state co-located join, not the one-off layout.
-    try graft.queries.RelQueries.ensureBucketedTables(spark, sfDir)
-    catch { case _: Throwable => () }
-    // And for the streaming gates (q52/q54/q61/q88-q90): the staged
-    // sort+write of each query's file-stream input is ingest scaffolding;
-    // per-run the queries only re-arm mtimes. Without this the first timed
-    // run at the bench SF pays the stage build inside its window.
-    try graft.queries.RelQueries.ensureStreamFixtures(spark, sfDir)
-    catch { case _: Throwable => () }
-    // q83's staged doc stream, same rule
-    try graft.queries.DataQueries.ensureStreamFixtures(spark, sfDir)
-    catch { case _: Throwable => () }
-    // Every maintained stored-state fixture (q104's IVF index, q105's
-    // manifests, q115-q121's cluster/df/hist state incl. the day-2
-    // appends): generation builds and PAST days' maintenance jobs are
-    // ingest-time work amortized over every daily run; the bench times
-    // the daily gate queries reading the stored tables.
-    try graft.queries.DataQueries.ensureStoredState(spark, sfDir)
-    catch { case _: Throwable => () }
-    // q107's date-partitioned events lake: the partitioned re-land is the
-    // ingest layout; the bench times the pruned query over it.
-    try graft.queries.RelQueries.ensurePartitionedEventsLake(spark, sfDir)
-    catch { case _: Throwable => () }
-    // q92's event-log provider table + staged probe stream, same rule
-    try graft.queries.CdcQueries.ensureTemporalFixtures(spark, sfDir)
-    catch { case _: Throwable => () }
+    prepareFixtures(spark, sfDir)
 
     // a failed query reports -1 (not its elapsed-time-to-crash) and lands
     // in "errors" — a broken query must never masquerade as a fast one.

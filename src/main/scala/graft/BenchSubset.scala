@@ -3,7 +3,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Isolated-subset bench: runs ONLY the named queries (args), each
   * `SPARK_GRAFT_REPS` times (default 3) in a fresh JVM, with the same
-  * settle gate, warm-up, and inter-query GC hygiene as [[Bench]]. Prints
+  * settle gate, warm-up, fixture pre-materialization and inter-query GC
+  * hygiene as [[Bench]]. Prints
   * one JSON line with per-query raw times + minimum.
   *
   * Purpose: separating engine cost from battery-context cost. A query that
@@ -59,6 +60,9 @@ object BenchSubset {
       try SparkEntry.queries(n)(spark, warmDir).count()
       catch { case _: Throwable => () }
     }
+    // the timed SF dir's fixtures, as Bench builds them — otherwise the
+    // first rep of a staged query times its fixture build
+    Bench.prepareFixtures(spark, sfDir)
 
     val results = args.toSeq.map { name =>
       val fn = SparkEntry.queries(name)

@@ -48,7 +48,12 @@ final case class LogRecord(
     tableId: TableId,
     before: Array[Any],
     after: Array[Any],
-    tsMs: Long)
+    tsMs: Long) {
+  /** The image this event routes on by key (chunk ranges, catch-up shards,
+    * the emit filter, the providers' (key, offset) indexes): a delete's
+    * before-image, every other event's after-image. */
+  def keyImage: Array[Any] = if (op == ChangeOp.Delete) before else after
+}
 
 /** Table metadata a provider exposes (schema + primary key). */
 final case class TableMeta(id: TableId, schema: StructType, primaryKey: Seq[String])

@@ -48,15 +48,16 @@ trait ChangeLogProvider extends Serializable {
     * rely on per-key event order, which offset order implies. */
   def log(table: TableId, fromExclusive: Long, toInclusive: Long): Iterator[LogRecord]
 
-  /** Log records of the slice whose CHUNK KEY falls in `range` — the
-    * per-chunk catch-up fold's read. Default: the full slice (callers
-    * filter by key themselves, which is correct but O(chunks × slice) when
-    * every chunk of a table folds the same long slice). A provider with a
-    * key-capable log index SHOULD override this to O(range's events) —
-    * FileChangeLogProvider keys a secondary byte-offset index by chunk key
-    * for exactly this (the analogue of a store answering the reference's
-    * bounded per-split binlog backfill from its index). May return a
-    * superset of the range (callers re-filter); must never miss an event. */
+  /** Log records of the slice whose CHUNK KEY ([[LogRecord.keyImage]])
+    * falls in `range` — the read of a per-chunk catch-up fold and of a
+    * catch-up shard. Default: the full slice (callers filter by key
+    * themselves, which is correct but O(chunks × slice) when every chunk
+    * of a table folds the same long slice). A provider with a key-capable
+    * log index SHOULD override this to O(range's events) — the JSONL
+    * providers key a secondary byte-offset index by chunk key for exactly
+    * this (the analogue of a store answering the reference's bounded
+    * per-split binlog backfill from its index). May return a superset of
+    * the range (callers re-filter); must never miss an event. */
   def logForRange(table: TableId, fromExclusive: Long, toInclusive: Long,
       range: SnapshotSplit): Iterator[LogRecord] =
     log(table, fromExclusive, toInclusive)
@@ -67,30 +68,24 @@ trait ChangeLogProvider extends Serializable {
     * offset window over-counts one table's backlog in a multi-table
     * stream (every other table's offsets inflate it), and sharding a
     * near-empty table buys only task overhead. -1 = unknown (the planner
-    * falls back to the window). A key-indexed provider should answer from
-    * its offset index in O(log n). */
+    * sizes by the window). A key-indexed provider should answer from its
+    * offset index in O(log n). */
   def logEventsApprox(table: TableId, fromExclusive: Long,
       toInclusive: Long): Long = -1L
 
-  /** True iff [[logForRange]] is backed by a KEY INDEX — i.e. a range read
-    * costs O(the range's own events), not O(the full slice). The source's
-    * catch-up sharding planner consults this before splitting one table's
-    * log window into parallel key-range partitions
-    * (`scan.log.catchup.shards`): with the default full-slice fallback,
-    * N shards would read the slice N times — a correctness-preserving but
-    * bandwidth-multiplying plan the planner must not pick on its own.
-    * Override to `true` together with a real [[logForRange]]. */
-  def keyIndexedLog(table: TableId): Boolean = false
-
   /** Interior boundary keys splitting this table's log window
     * `(fromExclusive, toInclusive]` into up to `n` key ranges of ~equal
-    * EVENT COUNT — the catch-up shard planner's preferred boundary source:
-    * snapshot-equalized boundaries (its fallback) degrade to serial when
-    * the backlog concentrates in one key range, the exact skew case
-    * sharding exists for. Contract: strictly-ascending distinct keys,
-    * at most n-1 of them; a key's events must land entirely in one shard
+    * EVENT COUNT — the catch-up shard planner's one boundary source
+    * (`scan.log.catchup.shards`): a table's window shards if and only if
+    * this returns a boundary. Weighting by events keeps a backlog that
+    * concentrates in one key range split evenly, the exact skew case
+    * sharding exists for. Contract: strictly-ascending distinct keys, at
+    * most n-1 of them; a key's events must land entirely in one shard
     * (ranges are half-open on keys, so any key vector satisfies this);
-    * empty = unknown / can't answer cheaply (planner falls back). A
+    * empty = don't shard (the window drains through one serial reader).
+    * Answer only when [[logForRange]] is backed by a KEY INDEX — i.e. a
+    * range read costs O(the range's own events): over the default
+    * full-slice [[logForRange]], N shards would read the slice N times. A
     * key-indexed provider answers from its (key, offset) index with
     * in-memory passes — no IO. */
   def logShardBoundaries(table: TableId, fromExclusive: Long,
@@ -247,7 +242,6 @@ abstract class ForwardingChangeLogProvider extends ChangeLogProvider {
       range: SnapshotSplit): Iterator[LogRecord] = {
     beforeCall(); delegate.logForRange(t, fromExclusive, toInclusive, range)
   }
-  override def keyIndexedLog(t: TableId): Boolean = { beforeCall(); delegate.keyIndexedLog(t) }
   override def logEventsApprox(t: TableId, fromExclusive: Long, toInclusive: Long): Long = {
     beforeCall(); delegate.logEventsApprox(t, fromExclusive, toInclusive)
   }
@@ -285,7 +279,6 @@ final class CompositeChangeLogProvider(parts: Seq[ChangeLogProvider]) extends Ch
   override def logForRange(t: TableId, from: Long, to: Long,
       range: SnapshotSplit): Iterator[LogRecord] =
     owner(t).logForRange(t, from, to, range)
-  override def keyIndexedLog(t: TableId): Boolean = owner(t).keyIndexedLog(t)
   override def logEventsApprox(t: TableId, from: Long, to: Long): Long =
     owner(t).logEventsApprox(t, from, to)
   override def logShardBoundaries(t: TableId, from: Long, to: Long, n: Int): Seq[ChunkKey.Key] =

@@ -111,8 +111,8 @@ final class DebeziumEmbeddedChangeLogProvider(
   // ForwardingChangeLogProvider, with the engine-failure check before each
   // call (Handover's error-propagation contract) — when the SPI grows, the
   // forwarding base grows with it and this wrapper needs no edit (the
-  // round-17 keyIndexedLog/logShardBoundaries additions each required a
-  // hand edit here under the old hand-written delegation)
+  // round-17 logShardBoundaries addition required a hand edit here under
+  // the old hand-written delegation)
   override protected val delegate: ChangeLogProvider =
     new DebeziumJsonChangeLogProvider(spoolRoot, serverTimeZone)
 

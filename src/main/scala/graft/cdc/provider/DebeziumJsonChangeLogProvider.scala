@@ -52,9 +52,9 @@ import scala.jdk.CollectionConverters._
   * (chunk key, offset) — and every later probe or range read
   * binary-searches and seeks, so a plan
   * of C chunks (or N catch-up shards) costs one scan + C range reads
-  * instead of C full rescans. [[keyIndexedLog]] is therefore TRUE on this
-  * provider — and, via delegation, on the embedded-engine LIVE-database
-  * path — so one hot table's backlog drains through parallel key-range
+  * instead of C full rescans. The (key, offset) index answers
+  * [[logShardBoundaries]] on this provider — and, via delegation, on the
+  * embedded-engine LIVE-database path — so one hot table's backlog drains through parallel key-range
   * catch-up shards (`scan.log.catchup.shards`) where the reference's
   * BinlogSplitReader.java:194-240 is serial by construction. When the
   * spool grows (a live tail appending mid-stream — append-ordered is the
@@ -279,8 +279,6 @@ final class DebeziumJsonChangeLogProvider(root: String,
     if (!Files.exists(Paths.get(t.logFile)))
       throw new ValidationException(s"table ${t.meta.id}: no events.jsonl in ${t.dir}")
 
-  private case class Ev(offset: Long, op: String, before: Array[Any], after: Array[Any], tsMs: Long)
-
   /** Data-event op of a payload line: the Debezium 'op' verbatim, or the
     * mapped mongo operationType; null for tombstones and control events
     * (drop/rename/invalidate) — lines that carry no data event and
@@ -349,18 +347,18 @@ final class DebeziumJsonChangeLogProvider(root: String,
     * log folds over). MUST be called once per line IN FILE ORDER (the
     * line-index numbering is ordinal) — both the index builders and
     * [[schemaChanges]] honor that. */
-  private def evOf(t: TableDir, assigner: OffsetAssigner, node: JsonNode): Option[Ev] = {
+  private def evOf(t: TableDir, assigner: OffsetAssigner, node: JsonNode): Option[LogRecord] = {
     val payload = if (node.has("payload")) node.get("payload") else node
     val op = assigner.opOf(payload)
     if (op == null) None // tombstone or mongo control event
     else {
       val offset = assigner.offsetOf(payload, op)
       if (payload.hasNonNull("op")) // Debezium envelope shape
-        Some(Ev(offset, op,
+        Some(LogRecord(offset, op, t.meta.id,
           decodeRow(t, payload.get("before")), decodeRow(t, payload.get("after")),
           if (op == ChangeOp.Read) 0L else payload.path("ts_ms").asLong(0L)))
       else // raw MongoDB change-stream shape
-        Some(Ev(offset, op,
+        Some(LogRecord(offset, op, t.meta.id,
           if (op == ChangeOp.Delete) keyOnlyRow(t, payload.get("documentKey")) else null,
           if (op == ChangeOp.Delete) null else decodeRow(t, payload.get("fullDocument")),
           payload.path("ts_ms").asLong(0L)))
@@ -369,7 +367,7 @@ final class DebeziumJsonChangeLogProvider(root: String,
 
   // ---- byte-offset indexes (machinery shared with FileChangeLogProvider) --
   //
-  // This is what turns keyIndexedLog on for the LIVE-database path — the
+  // This is what answers logShardBoundaries on the LIVE-database path — the
   // embedded-engine provider delegates here, so a real tail's backlog can
   // catch up in key-range shards instead of one serial reader.
 
@@ -425,8 +423,7 @@ final class DebeziumJsonChangeLogProvider(root: String,
             if (e.op == ChangeOp.Read) snapB += ((keyOf(t, e.after), start, blen))
             else {
               logB += ((e.offset, start, blen))
-              keyB += (((keyOf(t, if (e.op == ChangeOp.Delete) e.before else e.after),
-                e.offset), start, blen))
+              keyB += (((keyOf(t, e.keyImage), e.offset), start, blen))
             }
           }
         }
@@ -444,8 +441,8 @@ final class DebeziumJsonChangeLogProvider(root: String,
   /** Log phase: non-'r' data events sorted by offset. */
   private[provider] def logIdx(t: TableDir): FileIndex[Long] = spoolIdx(t).log
 
-  /** Secondary log index sorted by (chunk key, offset) — deletes keyed on
-    * the before-image (the documentKey for the mongo shape). */
+  /** Secondary log index sorted by (chunk key, offset) — records keyed on
+    * [[LogRecord.keyImage]] (a delete's documentKey for the mongo shape). */
   private[provider] def logKeyIdx(t: TableDir): FileIndex[(ChunkKey.Key, Long)] = spoolIdx(t).byKey
 
   private[provider] def snapshotRow(t: TableDir, line: String): Array[Any] = {
@@ -458,8 +455,8 @@ final class DebeziumJsonChangeLogProvider(root: String,
     * ordinal, so it cannot be recomputed from a single line; the fresh
     * assigner's offset is discarded). */
   private[provider] def logRecord(t: TableDir, line: String, offset: Long): LogRecord = {
-    val e = evOf(t, new OffsetAssigner(t), mapper.readTree(line)).get // only data events are indexed
-    LogRecord(offset, e.op, t.meta.id, e.before, e.after, e.tsMs)
+    evOf(t, new OffsetAssigner(t), mapper.readTree(line)).get // only data events are indexed
+      .copy(offset = offset)
   }
 
   /** Schema-block TRANSITIONS as control events — the archived-topic form

@@ -168,14 +168,13 @@ final class JdbcChangeLogProvider(
   override def log(table: TableId, fromExclusive: Long, toInclusive: Long): Iterator[LogRecord] =
     logTail.log(table, fromExclusive, toInclusive)
 
-  // Route the RANGE-read capability to the tail too — inheriting the
+  // Route the RANGE-read probes to the tail too — inheriting the
   // defaults would silently downgrade a key-indexed tail (file log,
   // Debezium spool) to full-slice serial reads on the hybrid path: chunk
   // catch-up folds would rescan the slice per chunk and the catch-up
-  // shard planner would refuse to shard, exactly the degradation the
+  // shard planner would get no boundaries, exactly the degradation the
   // CompositeChangeLogProvider comment names (the realistic hybrid
   // deployment IS a JDBC snapshot + a spooled change stream).
-  override def keyIndexedLog(table: TableId): Boolean = logTail.keyIndexedLog(table)
   override def logForRange(table: TableId, fromExclusive: Long, toInclusive: Long,
       range: SnapshotSplit): Iterator[LogRecord] =
     logTail.logForRange(table, fromExclusive, toInclusive, range)

@@ -349,9 +349,8 @@ private[cdc] abstract class IndexedJsonlProvider(root: String) extends ChangeLog
   private[provider] def snapIdx(t: Table): FileIndex[ChunkKey.Key]
   /** Log events sorted by offset. */
   private[provider] def logIdx(t: Table): FileIndex[Long]
-  /** Log events sorted by (chunk key, offset): deletes key on the
-    * before-image, everything else on the after-image — the sharded log
-    * reader's routing. */
+  /** Log events sorted by (chunk key, offset), keyed on
+    * [[LogRecord.keyImage]] — the sharded log reader's routing. */
   private[provider] def logKeyIdx(t: Table): FileIndex[(ChunkKey.Key, Long)]
   /** One snapshot line → its row. */
   private[provider] def snapshotRow(t: Table, line: String): Array[Any]
@@ -438,14 +437,6 @@ private[cdc] abstract class IndexedJsonlProvider(root: String) extends ChangeLog
     readEntries(t.logFile, (lo until hi).toArray, idx)((line, off) => logRecord(t, line, off))
   }
 
-  /** Key-indexed slice read: binary-search the (key, offset) index to the
-    * range, keep offsets in (from, to] — a catch-up shard or chunk fold
-    * reads O(its own events), never the full slice its sibling chunks also
-    * need. This is what makes the sharded catch-up planner willing to
-    * shard these layouts (and the embedded live engine, whose spool
-    * delegates here). */
-  override def keyIndexedLog(id: TableId): Boolean = true
-
   /** Exact from the offset index: two binary searches, no IO. */
   override def logEventsApprox(id: TableId, fromExclusive: Long, toInclusive: Long): Long = {
     val idx = logIdx(table(id))
@@ -454,6 +445,10 @@ private[cdc] abstract class IndexedJsonlProvider(root: String) extends ChangeLog
     (hi - lo).toLong
   }
 
+  /** Key-indexed slice read: binary-search the (key, offset) index to the
+    * range, keep offsets in (from, to] — a catch-up shard or chunk fold
+    * reads O(its own events), never the full slice its sibling chunks also
+    * need. */
   override def logForRange(id: TableId, fromExclusive: Long, toInclusive: Long,
       range: SnapshotSplit): Iterator[LogRecord] = {
     val t = table(id)
@@ -473,9 +468,10 @@ private[cdc] abstract class IndexedJsonlProvider(root: String) extends ChangeLog
   }
 
   /** Event-count-weighted shard boundaries from the (key, offset) index —
-    * two in-memory passes, no IO (see JsonlIndex.shardBoundaries). Closes
-    * the hot-RANGE skew case snapshot-equalized boundaries degrade on: the
-    * planner splits the window by where the LOG's events actually are. */
+    * two in-memory passes, no IO (see JsonlIndex.shardBoundaries). The
+    * planner splits the window by where the LOG's events actually are, so
+    * these layouts (and the embedded live engine, whose spool delegates
+    * here) drain a hot backlog in key-range shards. */
   override def logShardBoundaries(id: TableId, fromExclusive: Long,
       toInclusive: Long, n: Int): Seq[ChunkKey.Key] =
     JsonlIndex.shardBoundaries(logKeyIdx(table(id)), fromExclusive, toInclusive, n)

@@ -79,11 +79,11 @@ final class SocketChangeLogProvider(host: String, port: Int, meta: TableMeta,
     scala.collection.mutable.ArrayBuffer.empty[(LogRecord, Long)]
   /** Key-sorted view of the spool — the live-wire analogue of the file
     * providers' (chunk key, offset) secondary index: O(log n) insert on
-    * append, O(range) range reads, so [[keyIndexedLog]] is TRUE and a hot
-    * backlog spooled off the wire can drain through parallel key-range
-    * catch-up shards. Deletes key on the before-image, everything else on
-    * the after-image — the sharded LogReader's routing. Guarded by the same
-    * lock as the spool. */
+    * append, O(range) range reads, so this provider answers
+    * [[logShardBoundaries]] and a hot backlog spooled off the wire can
+    * drain through parallel key-range catch-up shards. Records key on
+    * [[LogRecord.keyImage]] — the sharded LogReader's routing. Guarded by
+    * the same lock as the spool. */
   @transient private val byKey =
     scala.collection.mutable.TreeMap.empty[(ChunkKey.Key, Long), LogRecord](
       Ordering.Tuple2(ChunkKey.ordering, implicitly[Ordering[Long]]))
@@ -170,8 +170,7 @@ final class SocketChangeLogProvider(host: String, port: Int, meta: TableMeta,
                 require(spool.isEmpty || rec.offset > spool.last._1.offset,
                   s"socket log must be append-ordered: got ${rec.offset} after ${spool.last._1.offset}")
                 spool += ((rec, after))
-                byKey.put((keyOf(
-                  if (rec.op == ChangeOp.Delete) rec.before else rec.after), rec.offset), rec)
+                byKey.put((keyOf(rec.keyImage), rec.offset), rec)
               }
             }
           }
@@ -303,11 +302,9 @@ final class SocketChangeLogProvider(host: String, port: Int, meta: TableMeta,
         .toSeq.iterator
     }
 
-  /** TRUE: [[byKey]] serves a range read in O(range + log n) — in local
-    * mode readers share this JVM (ProviderRegistry), so a spooled hot
-    * backlog shards exactly like the file providers'. */
-  override def keyIndexedLog(table: TableId): Boolean = true
-
+  /** [[byKey]] serves a range read in O(range + log n) — in local mode
+    * readers share this JVM (ProviderRegistry), so a spooled hot backlog
+    * shards exactly like the file providers'. */
   override def logForRange(table: TableId, fromExclusive: Long, toInclusive: Long,
       range: SnapshotSplit): Iterator[LogRecord] = synchronized {
     checkFailure()

@@ -96,13 +96,13 @@ final case class CdcOptions(
       * split into per micro-batch (1 = off, the reference-parity single
       * binlog reader). The reference's BinlogSplitReader.java:194-240 is
       * inherently serial: one task drains a hot table's whole backlog.
-      * When the provider's log is KEY-INDEXED
-      * ([[graft.cdc.provider.ChangeLogProvider.keyIndexedLog]]) a bounded
-      * catch-up window instead splits into up to this many key-range
-      * `LogPartition`s — per-KEY order is preserved because shard ranges
-      * partition the keyspace (every key lives in exactly one shard) and
-      * each shard's read is offset-ordered; the F4 emit filter is already
-      * key-range-aware. This is the 100-TB source-parallelism lever the
+      * When the provider answers
+      * [[graft.cdc.provider.ChangeLogProvider.logShardBoundaries]] for the
+      * window, a bounded catch-up window instead splits into up to this
+      * many key-range `LogPartition`s — per-KEY order is preserved because
+      * shard ranges partition the keyspace (every key lives in exactly one
+      * shard) and each shard's read is offset-ordered; the F4 emit filter
+      * is already key-range-aware. This is the 100-TB source-parallelism lever the
       * q92 scale probe names. */
     logCatchupShards: Int = 1,
     /** Floor on the per-shard window: a slice splits into at most
@@ -425,7 +425,7 @@ object CdcOffset {
     * reference's FinishedSnapshotSplitsReportEvent carrying per-split high
     * watermarks, mysql/source/reader/MySqlSourceReader.java:275-305):
     * a chunk task that had to adopt a base newer than its cohort's pinned
-    * HW ships (table, range, observedHw) back through a Spark accumulator. */
+    * HW ships (table, range, observedHw) back through [[ObservedHwStore]]. */
   def encodeObservedHw(tid: String, start: Option[Key], end: Option[Key], hw: Long): String = {
     val m = new ObjectMapper()
     val arr = m.createArrayNode()
@@ -463,16 +463,19 @@ object CdcOffset {
   }
 }
 
-/** Durable mirror of the observed-HW accumulator: each racing chunk task
-  * persists its raise as a tiny sidecar file under the stream's checkpoint
-  * location BEFORE the task completes, so the raise survives a driver crash
-  * in the window after the chunk batch lands in the commit log but before
-  * the next planned offset persists the raised HW. (The in-memory
-  * accumulator alone loses reports in that window: the committed batch is
-  * not replayed, and the log phase would re-emit (pinnedHW, observedHW] —
-  * duplicates.) Files are content-addressed (SHA-1 of the encoded report),
-  * so replayed tasks re-persist idempotently; the driver prunes a file once
-  * the log position passes its HW (its suppression window is empty). */
+/** The executor→driver channel for observed-HW raises, kept in the
+  * checkpoint like the reference keeps finished-split HWs in split state
+  * (MySqlSourceReader.java:275-305): each racing chunk task persists its
+  * raise as a tiny sidecar file under the stream's checkpoint location
+  * BEFORE the task completes, and the driver reads the sidecar on every
+  * `latestOffset`. So a raise survives a driver crash in the window after
+  * the chunk batch lands in the commit log but before the next planned
+  * offset persists the raised HW — the committed batch is not replayed,
+  * and without the raise the log phase would re-emit (pinnedHW,
+  * observedHW] as duplicates. Files are content-addressed (SHA-1 of the
+  * encoded report), so replayed tasks re-persist idempotently; the driver
+  * prunes a file once the log position passes its HW (its suppression
+  * window is empty). */
 private[cdc] object ObservedHwStore {
   import org.apache.hadoop.conf.Configuration
   import org.apache.hadoop.fs.Path
@@ -552,21 +555,16 @@ final case class LogPartition(opts: CdcOptions, table: TableId, physical: Struct
     finished: Seq[FinishedChunk] = Seq.empty,
     shard: Option[SnapshotSplit] = None) extends InputPartition
 
-/** `hwAcc` (streaming only) is the executor→driver report channel for a
-  * chunk whose base turned out NEWER than the pinned HW — see ChunkReader.
-  * It rides on the FACTORY, not the InputPartition: partitions deserialize
-  * with the Task object BEFORE a TaskContext exists, so an accumulator
-  * embedded there never registers and its updates are silently dropped;
-  * the factory deserializes from the task binary inside the running task,
-  * where registration works. */
+/** `hwDir` (streaming only) is the [[ObservedHwStore]] sidecar a chunk
+  * whose base turned out NEWER than the pinned HW reports through — see
+  * ChunkReader; `hwConf` is the driver's hadoop conf it is written with. */
 final case class CdcReaderFactory(produced: StructType,
-    hwAcc: Option[org.apache.spark.util.CollectionAccumulator[String]] = None,
     hwDir: Option[String] = None,
     hwConf: Option[org.apache.spark.util.SerializableConfiguration] = None)
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
-      case p: ChunkPartition => new ChunkReader(p, produced, hwAcc, hwDir, hwConf)
+      case p: ChunkPartition => new ChunkReader(p, produced, hwDir, hwConf)
       case p: LogPartition   => new LogReader(p, produced)
     }
 }
@@ -650,29 +648,43 @@ private[source] final class RowBuilder(physical: StructType, produced: StructTyp
   }
 }
 
-final class ChunkReader(p: ChunkPartition, produced: StructType,
-    hwAcc: Option[org.apache.spark.util.CollectionAccumulator[String]] = None,
-    hwDir: Option[String] = None,
-    hwConf: Option[org.apache.spark.util.SerializableConfiguration] = None)
+/** What both readers set up per partition: the provider, the row builder
+  * over the table's runtime layout, the key of a record, and the release
+  * of provider iterators that hold OS resources (file handles,
+  * connections) on close() — even if Spark drops the reader before
+  * exhaustion (pushed limit, task kill). */
+private[source] abstract class TableReader(opts: CdcOptions, table: TableId,
+    physical: StructType, pk: Seq[String], produced: StructType)
   extends PartitionReader[InternalRow] {
-  private val provider = p.opts.resolveProvider()
+  protected val provider: ChangeLogProvider = opts.resolveProvider()
   // extras mode: rows arrive in the table's CURRENT layout — re-resolve it
   // here (read time), map by name in the builder
   private val runtime: StructType =
-    if (p.opts.schemaEvolutionMode == "extras")
-      provider.tables.find(_.id == p.table).map(_.schema).getOrElse(p.physical)
-    else p.physical
-  private val builder = new RowBuilder(p.physical, produced, p.table, runtime)
-  private val keyIdxs = p.pk.map(runtime.fieldIndex)
-  private def keyOf(r: Array[Any]): Key = ChunkKey.of(keyIdxs.map(r): _*)
-  // provider iterators may hold OS resources (file handles, connections) —
-  // released on close() even if Spark drops the reader before exhaustion
+    if (opts.schemaEvolutionMode == "extras")
+      provider.tables.find(_.id == table).map(_.schema).getOrElse(physical)
+    else physical
+  protected val builder = new RowBuilder(physical, produced, table, runtime)
+  private val keyIdxs = pk.map(runtime.fieldIndex)
+  protected def keyOf(r: Array[Any]): Key = ChunkKey.of(keyIdxs.map(r): _*)
+  protected def keyOf(r: LogRecord): Key = keyOf(r.keyImage)
+
   private var resources: List[AutoCloseable] = Nil
-  private def tracked[T](it: Iterator[T]): Iterator[T] = {
+  protected def tracked[T](it: Iterator[T]): Iterator[T] = {
     it match { case c: AutoCloseable => resources ::= c; case _ => () }
     it
   }
-  private val iter: Iterator[InternalRow] = {
+  protected def rows: Iterator[InternalRow]
+  private var cur: InternalRow = _
+  override def next(): Boolean = { if (rows.hasNext) { cur = rows.next(); true } else false }
+  override def get(): InternalRow = cur
+  override def close(): Unit = resources.foreach(_.close())
+}
+
+final class ChunkReader(p: ChunkPartition, produced: StructType,
+    hwDir: Option[String] = None,
+    hwConf: Option[org.apache.spark.util.SerializableConfiguration] = None)
+  extends TableReader(p.opts, p.table, p.physical, p.pk, produced) {
+  protected val rows: Iterator[InternalRow] = {
     val range = SnapshotSplit(p.table, 0, p.start, p.end)
     val (baseOffset, base0) = provider.snapshotBase(p.table, range)
     val base = tracked(base0)
@@ -682,72 +694,49 @@ final class ChunkReader(p: ChunkPartition, produced: StructType,
     // and the chunk is byte-deterministic on replay. When commits raced the
     // planning→read window and the provider cannot time-travel, the base
     // arrives NEWER than the pin: the chunk is consistent at baseOffset, so
-    // adopt it as this chunk's OBSERVED high watermark and report it to the
-    // driver through the accumulator — the next offset raises this chunk's
-    // finished-HW, and the log-phase emit filter then suppresses
-    // (pinned, observed] for this range instead of duplicating it. The
-    // reference ships the same fact via FinishedSnapshotSplitsReportEvent.
+    // adopt it as this chunk's OBSERVED high watermark. A streaming read
+    // persists the raise to the checkpoint sidecar BEFORE this task can
+    // complete — the next offset raises this chunk's finished-HW, and the
+    // log-phase emit filter then suppresses (pinned, observed] for this
+    // range instead of duplicating it. The reference ships the same fact
+    // via FinishedSnapshotSplitsReportEvent. A bounded batch read (no
+    // hwDir) has no log phase to follow: the chunk simply reflects the
+    // newer store state at read time.
     val hwChunk = math.max(baseOffset, p.upTo)
-    if (baseOffset > p.upTo) hwAcc match {
-      case Some(acc) =>
-        val encoded = CdcOffset.encodeObservedHw(p.table.toString, p.start, p.end, baseOffset)
-        acc.add(encoded)
-        // durable mirror: persisted BEFORE this task can complete, so the
-        // raise survives a driver crash between this batch's commit and the
-        // next offset write (the accumulator alone would lose it there).
-        // The hadoop conf is the DRIVER's, shipped in the factory: a fresh
-        // executor-side Configuration would miss spark.hadoop.* settings
-        // (S3A credentials, custom fs impls) and could resolve a different
-        // FileSystem than the driver reads
-        hwDir.foreach(d => ObservedHwStore.persist(d,
-          hwConf.map(_.value).getOrElse(
-            new org.apache.hadoop.conf.Configuration()), encoded))
-      case None => () // bounded batch read: no log phase follows — the
-      // chunk simply reflects the (newer) store state at read time
+    if (baseOffset > p.upTo) hwDir.foreach { d =>
+      // the hadoop conf is the DRIVER's, shipped in the factory: a fresh
+      // executor-side Configuration would miss spark.hadoop.* settings
+      // (S3A credentials, custom fs impls) and could resolve a different
+      // FileSystem than the driver reads
+      ObservedHwStore.persist(d,
+        hwConf.map(_.value).getOrElse(new org.apache.hadoop.conf.Configuration()),
+        CdcOffset.encodeObservedHw(p.table.toString, p.start, p.end, baseOffset))
     }
     // range-aware slice read: a key-indexed provider serves only this
     // chunk's events (O(chunk) instead of O(slice) — the contains filter
     // stays as the correctness backstop for superset-returning providers)
     val catchUp = tracked(provider.logForRange(p.table, baseOffset, hwChunk, range))
-      .filter(r => range.contains(keyOf(if (r.op == ChangeOp.Delete) r.before else r.after)))
+      .filter(r => range.contains(keyOf(r)))
     // snapshot rows: op='r', ts forced to 0 (reference RecordUtils.java:197-225)
-    Normalizer.normalize(base, catchUp, keyOf)
+    Normalizer.normalize(base, catchUp, keyOf(_: Array[Any]))
       .map(builder.build(_, ChangeOp.Read, 0L, hwChunk, "+I"))
   }
-  private var cur: InternalRow = _
-  override def next(): Boolean = { if (iter.hasNext) { cur = iter.next(); true } else false }
-  override def get(): InternalRow = cur
-  override def close(): Unit = resources.foreach(_.close())
 }
 
 final class LogReader(p: LogPartition, produced: StructType)
-  extends PartitionReader[InternalRow] {
-  private val provider = p.opts.resolveProvider()
-  private val runtime: StructType =
-    if (p.opts.schemaEvolutionMode == "extras")
-      provider.tables.find(_.id == p.table).map(_.schema).getOrElse(p.physical)
-    else p.physical
-  private val builder = new RowBuilder(p.physical, produced, p.table, runtime)
-  private val keyIdxs = p.pk.map(runtime.fieldIndex)
-  private def keyOf(r: Array[Any]): Key = ChunkKey.of(keyIdxs.map(r): _*)
-  // the raw log iterator may hold an OS resource — close() releases it if
-  // Spark drops this reader before exhaustion (pushed limit, task kill)
-  private val rawLog = p.shard match {
-    // sharded catch-up: the key-indexed range read serves only this
-    // shard's events (O(shard) — the planner only shards when the
-    // provider declares keyIndexedLog)
-    case Some(r) => provider.logForRange(p.table, p.fromExclusive, p.toInclusive, r)
-    case None    => provider.log(p.table, p.fromExclusive, p.toInclusive)
-  }
-  private val iter: Iterator[InternalRow] = {
+  extends TableReader(p.opts, p.table, p.physical, p.pk, produced) {
+  protected val rows: Iterator[InternalRow] = {
     // exactly-once across shards: logForRange may return a SUPERSET of the
     // range (its documented contract) — the contains filter is what makes
-    // shard outputs disjoint. Delete events key on the before-image, like
-    // the emit filter below.
+    // shard outputs disjoint. Records key on LogRecord.keyImage, like the
+    // emit filter below.
     val raw = p.shard match {
-      case Some(r) => rawLog.filter(rec =>
-        r.contains(keyOf(if (rec.op == ChangeOp.Delete) rec.before else rec.after)))
-      case None => rawLog
+      // sharded catch-up: the key-indexed range read serves only this
+      // shard's events (O(shard) — the planner only shards when the
+      // provider answers logShardBoundaries)
+      case Some(r) => tracked(provider.logForRange(p.table, p.fromExclusive, p.toInclusive, r))
+        .filter(rec => r.contains(keyOf(rec)))
+      case None => tracked(provider.log(p.table, p.fromExclusive, p.toInclusive))
     }
     // F5 timestamp seek (reference SeekBinlogToTimestampFilter.java:62-79)
     val seeked =
@@ -764,8 +753,7 @@ final class LogReader(p: LogPartition, produced: StructType)
         val emit = new Normalizer.EmitFilter(p.finished.zipWithIndex.map { case (f, i) =>
           FinishedSplitInfo(SnapshotSplit(p.table, i, f.start, f.end), f.hw)
         })
-        seeked.filter(r =>
-          emit.shouldEmit(keyOf(if (r.op == ChangeOp.Delete) r.before else r.after), r.offset))
+        seeked.filter(r => emit.shouldEmit(keyOf(r), r.offset))
       }
     filtered.flatMap { r =>
       r.op match {
@@ -791,13 +779,6 @@ final class LogReader(p: LogPartition, produced: StructType)
         case other => throw new IllegalStateException(s"unexpected op '$other' in log")
       }
     }
-  }
-  private var cur: InternalRow = _
-  override def next(): Boolean = { if (iter.hasNext) { cur = iter.next(); true } else false }
-  override def get(): InternalRow = cur
-  override def close(): Unit = rawLog match {
-    case c: AutoCloseable => c.close()
-    case _                => ()
   }
 }
 
@@ -880,29 +861,13 @@ final class CdcMicroBatchStream(opts: CdcOptions, physical: StructType,
 
   private lazy val provider = opts.resolveProvider()
 
-  /** Sidecar dir for durable observed-HW raises (None only for direct
-    * offset-API harnesses constructed without a checkpoint location). */
+  /** The [[ObservedHwStore]] sidecar: the one executor→driver channel for
+    * chunk tasks whose base raced past their cohort's pinned HW (see
+    * ChunkReader). Every streaming scan has a checkpoint location
+    * (CdcScan.toMicroBatchStream); None only for direct offset-API
+    * harnesses built without one, whose chunk reads then adopt a racing
+    * base like a bounded batch read does. */
   private val hwDir: Option[String] = checkpointLoc.map(ObservedHwStore.dirOf)
-
-  /** Executor→driver return channel for chunk tasks whose base raced past
-    * their cohort's pinned HW (see ChunkReader): a Spark accumulator —
-    * task results carry the reports back, so this works across real
-    * executors, not just local mode. Never reset: applying a max-raise is
-    * idempotent, and the entry count is bounded by the number of racing
-    * chunks. Durability across driver crash comes from the sidecar mirror
-    * (ObservedHwStore): each racing task persists its raise under the
-    * checkpoint location before completing, and applyObservedHws merges
-    * file + accumulator reports — so a crash after the chunk batch commits
-    * but before the next offset persists the raise cannot resurrect
-    * duplicates in (pinnedHW, observedHW]. */
-  private lazy val observedHwAcc: org.apache.spark.util.CollectionAccumulator[String] =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession) match {
-      case Some(s) => s.sparkContext.collectionAccumulator("cdc-log observed chunk HWs")
-      // direct offset-API harnesses (no Spark jobs) read partitions in the
-      // same JVM: an unregistered local accumulator carries the reports
-      case None => new org.apache.spark.util.CollectionAccumulator[String]
-    }
 
   // Option-bound comparisons under range semantics: None = -inf as a
   // range START, +inf as a range END.
@@ -925,21 +890,20 @@ final class CdcMicroBatchStream(opts: CdcOptions, physical: StructType,
     * loss). Idempotent: a split fragment at the observed HW no longer
     * satisfies `hw < observed`. */
   private def applyObservedHws(s: CdcOffset): CdcOffset = {
-    // durable sidecar reports first (survive driver restart), then the
-    // in-memory accumulator; duplicates are fine — max-raise is idempotent
-    val persisted = hwDir.map(d => ObservedHwStore.readAndPrune(d,
+    // several reports may name one chunk (a retried task that saw a later
+    // base): the max raise wins, and re-applying it is idempotent
+    val reports = hwDir.map(d => ObservedHwStore.readAndPrune(d,
       // driver-side: the session's conf when one exists; direct offset-API
       // harnesses (no session on this thread) read the local fs with a
-      // fresh Configuration — same fallback shape as observedHwAcc above
+      // fresh Configuration
       org.apache.spark.sql.SparkSession.getActiveSession
         .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
         .map(_.sparkContext.hadoopConfiguration)
         .getOrElse(new org.apache.hadoop.conf.Configuration()),
       s.logPos)).getOrElse(Seq.empty)
-    val reports = observedHwAcc.value
-    if ((reports.isEmpty && persisted.isEmpty) || s.finished.isEmpty) s
+    if (reports.isEmpty || s.finished.isEmpty) s
     else {
-      val raises = (persisted ++ reports.asScala).map(CdcOffset.parseObservedHw)
+      val raises = reports.map(CdcOffset.parseObservedHw)
         .groupBy(r => (r._1, r._2, r._3))
         .map { case (k, rs) => (k._1, k._2, k._3, rs.map(_._4).max) }
       var fin = s.finished
@@ -1166,45 +1130,33 @@ final class CdcMicroBatchStream(opts: CdcOptions, physical: StructType,
     (chunks ++ logs).toArray
   }
 
-  /** CATCH-UP SHARD PLANNING (round-15 verdict ask #2): split one table's
-    * log window into up to `scan.log.catchup.shards` key-range partitions
-    * so a single hot table's backlog drains in parallel instead of through
-    * the reference's one serial binlog reader
-    * (BinlogSplitReader.java:194-240 — the design being improved on).
-    * Empty = don't shard (option off, window below shards × the per-shard
-    * floor, provider's log not key-indexed, or no key stats).
+  /** CATCH-UP SHARD PLANNING: split one table's log window into up to
+    * `scan.log.catchup.shards` key-range partitions so a single hot
+    * table's backlog drains in parallel instead of through the
+    * reference's one serial binlog reader (BinlogSplitReader.java:194-240
+    * — the design being improved on). Fewer than two ranges = don't
+    * shard: the option is off, the table's backlog is below twice the
+    * per-shard floor, or the provider returns no boundary for the window.
     *
-    * Ranges come from the SAME ChunkSplitter math as snapshot chunks, with
-    * chunkSize ≈ count/n: the first range starts unbounded and the last
-    * ends unbounded, so keys OUTSIDE the probed snapshot bounds (rows
-    * inserted after the stats probe) still land in exactly one shard —
-    * coverage is by construction, not by freshness of the stats. The same
-    * argument makes a RESTART sound: a replayed batch may re-derive
-    * different interior boundaries (stats moved), but any disjoint cover
-    * of the keyspace reads the same union of the slice's events — the
-    * cohort-replay principle applied to the log phase. Planning cost: one
-    * keyBounds probe, plus ~n boundary probes only for unevenly
-    * distributed keys — driver-side index lookups, the same probes chunk
-    * planning already issues.
-    *
-    * Boundary source, in preference order:
-    *  1. EVENT-WEIGHTED ([[graft.cdc.provider.ChangeLogProvider.logShardBoundaries]]):
-    *     the provider splits the window by where the LOG's events actually
-    *     are (its (key, offset) index answers with in-memory passes) — a
-    *     backlog concentrated in one key range still gets ~equal-sized
-    *     shards. This closes the hot-RANGE skew case the snapshot-equalized
-    *     fallback degrades on.
-    *  2. SNAPSHOT-EQUALIZED fallback (the same ChunkSplitter math as
-    *     snapshot chunks, chunkSize ≈ count/n), merged down to the
-    *     configured ceiling: right when the provider can't weight by
-    *     events, and never worse than serial — a log whose events
-    *     concentrate inside one range drains that range serially.
-    * Either way the planned shard count never exceeds
+    * Boundaries come from one source, the provider's EVENT-WEIGHTED
+    * [[graft.cdc.provider.ChangeLogProvider.logShardBoundaries]]: it splits
+    * the window by where the LOG's events actually are (a key-indexed
+    * provider answers from its (key, offset) index in memory), so a
+    * backlog concentrated in one key range still gets ~equal-sized shards.
+    * A window whose events all sit on one key gets no boundary and drains
+    * serially — a key lives in exactly one shard, so no split could help.
+    * The first range starts unbounded and the last ends unbounded, so
+    * keys outside anything the provider has indexed still land in exactly
+    * one shard — coverage is by construction. The same argument makes a
+    * RESTART sound: a replayed batch may re-derive different interior
+    * boundaries, but any disjoint cover of the keyspace reads the same
+    * union of the slice's events — the cohort-replay principle applied to
+    * the log phase. The planned shard count never exceeds
     * `scan.log.catchup.shards` (the option's documented ceiling). */
   private def catchupShards(tm: TableMeta, fromExclusive: Long,
       toInclusive: Long): Seq[SnapshotSplit] = {
     val maxShards = opts.logCatchupShards
-    if (maxShards <= 1 || !provider.keyIndexedLog(tm.id)) return Seq.empty
+    if (maxShards <= 1) return Seq.empty
     // size parallelism by THIS TABLE's backlog when the provider can say
     // (two index probes), not the global offset window: in a multi-table
     // stream the window counts every table's offsets, and sharding a cold
@@ -1216,44 +1168,20 @@ final class CdcMicroBatchStream(opts: CdcOptions, physical: StructType,
     val n = math.min(maxShards.toLong,
       math.max(1L, basis / opts.logCatchupMinOffsetsPerShard)).toInt
     if (n <= 1) return Seq.empty
-    val weighted = provider.logShardBoundaries(tm.id, fromExclusive, toInclusive, n)
-    if (weighted.nonEmpty) {
-      // a malformed boundary sequence would leave keys covered by NO shard
-      // (dropped events) — refuse loudly rather than plan a lossy cover
-      val bs = weighted.take(n - 1)
-      require(bs.sliding(2).forall(p => p.size < 2 || ChunkKey.compare(p(0), p(1)) < 0),
-        s"logShardBoundaries for ${tm.id} must be strictly ascending, got $bs")
-      val starts = None +: bs.map(Option(_))
-      val ends = bs.map(Option(_)) :+ None
-      return starts.zip(ends).zipWithIndex.map {
-        case ((s0, e0), i) => SnapshotSplit(tm.id, i, s0, e0)
-      }
+    // a malformed boundary sequence would leave keys covered by NO shard
+    // (dropped events) — refuse loudly rather than plan a lossy cover
+    val bs = provider.logShardBoundaries(tm.id, fromExclusive, toInclusive, n).take(n - 1)
+    require(bs.sliding(2).forall(p => p.size < 2 || ChunkKey.compare(p(0), p(1)) < 0),
+      s"logShardBoundaries for ${tm.id} must be strictly ascending, got $bs")
+    val starts = None +: bs.map(Option(_))
+    val ends = bs.map(Option(_)) :+ None
+    starts.zip(ends).zipWithIndex.map {
+      case ((s0, e0), i) => SnapshotSplit(tm.id, i, s0, e0)
     }
-    val (mn, mx, cnt) = provider.keyBounds(tm.id)
-    if (cnt <= 0) return Seq.empty // no key stats (pure event log): serial
-    val cfg = ChunkSplitter.Config(
-      chunkSize = math.max(1L, (cnt + n - 1) / n).min(Int.MaxValue).toInt,
-      distributionFactorUpper = opts.distributionFactorUpper,
-      distributionFactorLower = opts.distributionFactorLower)
-    capShards(ChunkSplitter.plan(tm.id, mn, mx, cnt, cfg, boundaryProbe(tm.id)), n)
   }
 
-  /** Merge adjacent planned ranges down to at most `maxShards`:
-    * ChunkSplitter.plan with chunkSize = ceil(cnt/n) can emit MORE ranges
-    * than n (uneven boundary probes round down), and
-    * `scan.log.catchup.shards` documents a strict ceiling (ADVICE_r16 #1).
-    * Planned ranges are contiguous in key order, so group-wise merging
-    * preserves the disjoint cover (first start / last end stay unbounded). */
-  private def capShards(planned: Seq[SnapshotSplit], maxShards: Int): Seq[SnapshotSplit] =
-    if (planned.size <= maxShards) planned
-    else (0 until maxShards).map { g =>
-      val lo = g * planned.size / maxShards
-      val hi = (g + 1) * planned.size / maxShards
-      SnapshotSplit(planned.head.tableId, g, planned(lo).start, planned(hi - 1).end)
-    }
-
   override def createReaderFactory(): PartitionReaderFactory =
-    CdcReaderFactory(produced, Some(observedHwAcc), hwDir,
+    CdcReaderFactory(produced, hwDir,
       // driver conf snapshot, serialized into the task binary — carries
       // spark.hadoop.* (object-store credentials etc.) to the executors;
       // direct offset-API harnesses (no session) fall back to executor-side

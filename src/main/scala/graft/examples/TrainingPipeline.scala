@@ -37,7 +37,7 @@ object TrainingPipeline {
     // 2. near-dup CLUSTERING: LSH candidates, verified by exact Jaccard
     //    ≥ 0.5, grouped into components, keep one canonical doc per cluster
     //    (pair-wise "drop the higher id" under-deletes on chains A~B~C)
-    val candidates = Dedup.minHashLshCandidates(exact, "doc_id", "text", n = 3, k = 64, bands = 32)
+    val candidates = Dedup.md5MinHashLshCandidates(exact, "doc_id", "text", n = 3, k = 64, bands = 32)
     val verified = Dedup.ngramJaccardPairs(exact, "doc_id", "text", n = 3, minJaccard = 0.5)
       .join(candidates, Seq("id_a", "id_b"), "left_semi")
     val losers = ConnectedComponents.dedupClusters(verified, "id_a", "id_b")

@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, X
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftglue.ColumnGlue
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: distinct 64-bit hashes of the word n-gram
@@ -23,21 +22,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * single space is exactly the original span (single-byte separator), and
   * 0x20 never occurs inside a UTF-8 multi-byte sequence, so hashing the
   * span equals hashing the reconstructed shingle string:
-  * XXH64/Murmur3 over the same bytes, same seeds as Spark's built-in
-  * xxhash64()/hash() (verified byte-for-byte in ShingleExpressionSpec).
-  *
-  * `algo`: "xxhash64" (→ values of built-in xxhash64, the Jaccard/SimHash
-  * path) or "murmur3" (→ values of built-in hash() sign-extended to long,
-  * the MinHash base-hash path).
+  * XXH64 over the same bytes, same seed as Spark's built-in xxhash64()
+  * (verified byte-for-byte in ShingleExpressionSpec).
   *
   * At 100 TB this is the difference between the shingle stage being a
   * codegen-fused map and being the pipeline bottleneck. */
-final case class WordShingleHashes(child: Expression, n: Int, algo: String)
+final case class WordShingleHashes(child: Expression, n: Int)
   extends UnaryExpression {
 
   require(n >= 1, s"shingle size must be >= 1, got $n")
-  require(algo == "xxhash64" || algo == "murmur3", s"unknown algo '$algo'")
-  private val useXx = algo == "xxhash64"
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
@@ -71,9 +64,7 @@ final case class WordShingleHashes(child: Expression, n: Int, algo: String)
       val last = math.min(i + n - 1, t - 1)
       val from = wordStart(i)
       val to = wordEnd(last)
-      val h =
-        if (useXx) XXH64.hashUnsafeBytes(base, off + from, to - from, 42L)
-        else Murmur3_x86_32.hashUnsafeBytes(base, off + from, to - from, 42).toLong
+      val h = XXH64.hashUnsafeBytes(base, off + from, to - from, 42L)
       if (seen.add(h)) { out(outLen) = h; outLen += 1 }
       i += 1
     }
@@ -97,10 +88,5 @@ object ShingleExpressions {
   /** array<long>: distinct xxhash64 values of the word n-gram shingles —
     * drop-in for xxhash64 over the HOF shingle pipeline. */
   def wordShingleHashes(text: Column, n: Int): Column =
-    ColumnGlue.column(WordShingleHashes(ColumnGlue.expression(text), n, "xxhash64"))
-
-  /** array<long>: distinct murmur3 (built-in hash(), sign-extended) values
-    * of the word n-gram shingles — the MinHash base-hash path. */
-  def wordShingleMurmur(text: Column, n: Int): Column =
-    ColumnGlue.column(WordShingleHashes(ColumnGlue.expression(text), n, "murmur3"))
+    ColumnGlue.column(WordShingleHashes(ColumnGlue.expression(text), n))
 }

@@ -37,15 +37,19 @@ object ConnectedComponents {
     * graphs spend ~30 jobs/batch in the loop); above it the distributed
     * path runs unchanged, so a 100 TB edge set never lands on the driver.
     * 200k edges ≈ a few MB collected — well under broadcast-sized. */
-  private def localEdgeThreshold(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.cc.localEdgeThreshold")
-      .map(_.toLong).getOrElse(200000L)
+  private val LocalEdgeThreshold = 200000L
 
   /** (node, component) for every node in `edges`, component = min node id
     * reachable. Input: two columns (src, dst), any integral type; self
     * loops and duplicates tolerated. */
   def components(edges: DataFrame, srcCol: String, dstCol: String,
-      maxRounds: Int = 25): DataFrame = {
+      maxRounds: Int = 25): DataFrame =
+    componentsWithThreshold(edges, srcCol, dstCol, maxRounds, LocalEdgeThreshold)
+
+  /** [[components]] with an explicit local-path bound — specs pass 0 to
+    * force the distributed star loop on a small graph. */
+  private[graft] def componentsWithThreshold(edges: DataFrame, srcCol: String,
+      dstCol: String, maxRounds: Int, localEdgeThreshold: Long): DataFrame = {
     val spark = edges.sparkSession
     // canonical undirected edges (u < v), bigint nodes — not yet distinct:
     // the local path tolerates duplicates, so it skips that shuffle too
@@ -62,7 +66,6 @@ object ConnectedComponents {
     // truth) and, on overflow, the distributed loop re-executed the
     // upstream from scratch. A threshold of 0 forces the star loop on
     // any non-empty edge set.
-    val threshold = localEdgeThreshold(spark)
     val cached = canon.persist()
     // big input: seed the star loop from the cache (eager localCheckpoint
     // copies the blocks), then release the cache on every path. The cache
@@ -70,7 +73,7 @@ object ConnectedComponents {
     // checkpoint coexists with the previous round's.
     val smallOrSeed: Either[Array[org.apache.spark.sql.Row], DataFrame] =
       try {
-        if (cached.count() <= threshold) Left(cached.collect())
+        if (cached.count() <= localEdgeThreshold) Left(cached.collect())
         else Right(cached.distinct().localCheckpoint())
       } finally cached.unpersist()
     smallOrSeed.fold(localComponents(spark, _), starLoop(_, maxRounds))

@@ -116,7 +116,8 @@ object Dedup {
   }
 
   // -------------------------------------------------------------------------
-  // MinHash + LSH
+  // MinHash + LSH and SimHash — one hash family, md5-derived, so every
+  // signature is bit-identical in any SQL engine (DuckDB-oracle-checked)
   // -------------------------------------------------------------------------
 
   /** k universal-hash permutations h_i(x) = (a_i·x + b_i) mod p over a base
@@ -129,68 +130,6 @@ object Dedup {
     val rnd = new scala.util.Random(42)
     Seq.fill(k)((rnd.nextInt((P31 - 1).toInt).toLong + 1, rnd.nextInt(P31.toInt).toLong))
   }
-
-  /** MinHash signature column: array<bigint> of length k for the document's
-    * shingle set. One explode + one groupBy(id) with k min() partials —
-    * map-side combined, no shuffle of raw text. */
-  def minHashSignatures(df0: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, k: Int = 64): DataFrame = {
-    val df = Par.widen(df0.select(col(idCol), col(textCol)), col(idCol))
-    // native murmur3 shingle hashes == hash(shingle).cast(long) (parity
-    // spec-verified) — the HOF shingle pipeline never materializes
-    val sh = df.select(col(idCol).as("id"),
-      explode(ShingleExpressions.wordShingleMurmur(col(textCol), n)).as("hm"))
-      .withColumn("h0", pmod(col("hm"), lit(P31)))
-    val mins = hashParams(k).zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(col("h0") * a + b, lit(P31))).as(s"m$i")
-    }
-    sh.groupBy("id").agg(mins.head, mins.tail: _*)
-      .select(col("id"), array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
-  }
-
-  /** LSH banding: split the k-signature into `bands` bands of k/bands rows;
-    * documents sharing any band land in the same bucket → candidate pair.
-    * Buckets are the shuffle key, so the all-pairs step never materializes.
-    * Returns candidate pairs with the estimated Jaccard (fraction of
-    * matching signature components).
-    *
-    * Shuffle-width design: the band join key is `xxhash64(band, band_sig)`
-    * — one 8-byte long instead of a k/bands-long array — and the k-long
-    * signatures do NOT ride through the band self-join at all; they are
-    * re-attached to the surviving candidate pairs by two id-keyed joins
-    * against the (already materialized, exchange-reused) signature table.
-    * At 100 TB the banded exchange is the dominant shuffle, so it carries
-    * (id, long) only. A band-hash collision can only ADD a candidate pair
-    * (odds ~2⁻⁶⁴ per bucket pair), never drop one — acceptable for a
-    * candidate generator whose output is estimation-filtered anyway. */
-  def minHashLshCandidates(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, k: Int = 64, bands: Int = 16): DataFrame = {
-    require(k % bands == 0)
-    val r = k / bands
-    // Barrier the signature fan-out (same rationale as the md5 twin
-    // below): four plan legs consume it, and with the widened signature
-    // pipeline each re-execution pays an exchange — persist wins.
-    val sigs = minHashSignatures(df, idCol, textCol, n, k).persist()
-    val banded = sigs.select(col("id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => slice(col("sig"), b * r + 1, lit(r)))))
-      .select(col("id"), xxhash64(col("pos"), col("col")).as("bh"))
-    val cands = banded.as("x").join(banded.as("y"),
-        col("x.bh") === col("y.bh") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    cands
-      .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
-      .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
-      .withColumn("est_jaccard",
-        size(filter(zip_with(col("sig_a"), col("sig_b"), (a, b) => a === b), x => x))
-          .cast("double") / k.toDouble)
-      .select("id_a", "id_b", "est_jaccard")
-  }
-
-  // -------------------------------------------------------------------------
-  // Portable (md5-keyed) MinHash + LSH — oracle-checkable variant
-  // -------------------------------------------------------------------------
 
   /** Distinct word-n-gram shingles as STRINGS, with the exact "no shingles
     * for docs shorter than n tokens" convention every SQL engine's
@@ -226,8 +165,7 @@ object Dedup {
   private[graft] def portableH31(s: Column): Column = pmod(portableH56(s), lit(P31))
 
   /** Cross-engine-deterministic SimHash: 56-bit signature over the
-    * [[portableH56]] hashes of a document's DISTINCT tokens — the portable
-    * twin of [[simHashSignatures]] (what q42's md5 MinHash is to q33): bit
+    * [[portableH56]] hashes of a document's DISTINCT tokens: bit
     * b of the signature is set iff more distinct tokens have bit b set
     * than clear. All-integer votes → 56 codegen'd hash-aggregates with
     * map-side combine, one shuffle keyed on the doc id; DuckDB replays the
@@ -248,12 +186,11 @@ object Dedup {
 
   /** MinHash signature with a PORTABLE hash family: base hash =
     * [[portableH31]] (md5-derived, bit-identical in every engine), then the
-    * same (a·h + b) mod 2^31−1 universal permutations as
-    * [[minHashSignatures]] (shared fixed-seed constants). All-integer →
-    * the k min()s hash-aggregate with map-side combine (min over STRINGS
-    * would fall back to SortAggregate — measured 40× slower end-to-end),
-    * and unlike the xxhash64 variant this one sits under the DuckDB-oracle
-    * hash gate. */
+    * k (a·h + b) mod 2^31−1 universal permutations of [[hashParams]].
+    * All-integer → the k min()s hash-aggregate with map-side combine (min
+    * over STRINGS would fall back to SortAggregate — measured 40× slower
+    * end-to-end), and the signature sits under the DuckDB-oracle hash
+    * gate. */
   def md5MinHashSignatures(df0: DataFrame, idCol: String, textCol: String,
       n: Int = 3, k: Int = 16): DataFrame = {
     val df = Par.widen(df0.select(col(idCol), col(textCol)), col(idCol))
@@ -326,47 +263,6 @@ object Dedup {
       .join(sig.as("sb"), col("id_b") === col("sb.id"))
       .select(col("id_a"), col("id_b"),
         (matches.cast("double") / k.toDouble).as("est_jaccard"))
-  }
-
-  // -------------------------------------------------------------------------
-  // SimHash
-  // -------------------------------------------------------------------------
-
-  /** 64-bit SimHash per document: for each bit position, sum +1/-1 votes of
-    * each distinct token's xxhash64 bit; bit set iff the vote is positive.
-    * Computed as 64 codegen'd aggregates after one explode — no UDF. */
-  def simHashSignatures(df0: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val df = Par.widen(df0.select(col(idCol), col(textCol)), col(idCol))
-    // n=1 shingles = distinct tokens; hashes == xxhash64(token)
-    val tok = df.select(col(idCol).as("id"),
-      explode(ShingleExpressions.wordShingleHashes(col(textCol), 1)).as("h"))
-    val votes = (0 until 64).map { b =>
-      sum(when(col("h").bitwiseAND(1L << b) =!= 0, 1).otherwise(-1)).as(s"v$b")
-    }
-    tok.groupBy("id").agg(votes.head, votes.tail: _*)
-      .select(col("id"),
-        (0 until 64).map(b => when(col(s"v$b") > 0, lit(1L << b)).otherwise(0L))
-          .reduce((a, b) => a.bitwiseOR(b)).as("simhash"))
-  }
-
-  /** Near-dup candidates: Hamming distance ≤ maxDist via 4×16-bit band
-    * blocking (a pair within distance d ≤ 3 must agree on ≥1 of 4 bands). */
-  def simHashNearDups(df: DataFrame, idCol: String, textCol: String,
-      maxDist: Int = 3): DataFrame = {
-    val sigs = simHashSignatures(df, idCol, textCol)
-    val banded = sigs.select(col("id"), col("simhash"),
-      posexplode(array((0 until 4).map(b =>
-        shiftrightunsigned(col("simhash"), b * 16).bitwiseAND(0xFFFFL)): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_val")
-    val popcnt = (x: Column) => bit_count(x)
-    banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") &&
-        col("x.band_val") === col("y.band_val") &&
-        col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-        popcnt(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
-      .dropDuplicates("id_a", "id_b")
-      .filter(col("hamming") <= maxDist)
   }
 
   /** Benchmark decontamination: for each corpus doc, how many of its

@@ -479,9 +479,9 @@ object CdcQueries {
     // SKEWED catch-up under the hash gate (round-17: event-weighted shard
     // boundaries): the backlog concentrates ~62% of its events in the top
     // 10% of the keyspace (every hot key carries 19 updates), the exact
-    // shape whose snapshot-equalized plan drains one shard serially
-    // (SCALE_PROBE_sf1.md measured that plan WORSE than serial). The planner's
-    // weighted boundaries (logShardBoundaries over the provider's
+    // shape that snapshot-equalized boundaries drain through one shard
+    // (SCALE_PROBE_sf1.md measured that plan WORSE than serial). The
+    // planner's boundaries (logShardBoundaries over the provider's
     // (key, offset) index) split it evenly; the materialized state must
     // hash-match the closed form whatever the shard shapes were —
     // disjoint-cover equivalence under skew, end-to-end through the
@@ -516,7 +516,7 @@ object CdcQueries {
     // (key, offset) index plans event-weighted key-range shards, 8
     // parallel LogPartitions drain the backlog, and the materialized state
     // must hash-match the closed form. The r16 gap this closes: the spool
-    // provider inherited keyIndexedLog=false and stayed serial forever.
+    // provider had no key index and stayed serial forever.
     "q145_spool_catchup_shards" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val root = writeDebeziumSpoolTable(s, dir)

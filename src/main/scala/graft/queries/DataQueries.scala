@@ -86,25 +86,21 @@ object DataQueries {
         .orderBy("qid", "rank")
     }),
 
-    // md5-keyed MinHash+LSH — the cross-engine-deterministic variant, fully
-    // under the DuckDB hash gate (q33 below is the xxhash64 fast path)
+    // md5-keyed MinHash+LSH — cross-engine-deterministic, fully under the
+    // DuckDB hash gate
     "q42_minhash_lsh_md5" -> ((s, dir) =>
       Dedup.md5MinHashLshCandidates(t(s, dir, "documents"), "doc_id", "text",
         n = 3, k = 16, bands = 8).orderBy("id_a", "id_b")),
 
-    // NOTE (round-11, closing the battery's last no_oracle rows): the
-    // xxhash64 fast paths formerly gated rows-only as q33/q34
-    // (Dedup.minHashLshCandidates / Dedup.simHashSignatures) are FOLDED
-    // into their oracle-checked md5 twins — q42/q82 run the identical
-    // band/vote pipelines with a portable base hash, so the twins ARE the
-    // check for everything but the base hash itself (a Spark builtin).
-    // The xxhash64 family stays quality-pinned in DedupSimilaritySpec
+    // MinHash-LSH (q42) and SimHash (q82) have one hash family, the md5
+    // one: the xxhash64/murmur3 fast paths once gated rows-only as q33/q34
+    // ran the identical band/vote pipelines with a different base hash and
+    // are deleted. DedupSimilaritySpec pins the md5 operators' quality
     // (recall >= 0.8 vs exact Jaccard, estimate tracking, Hamming
-    // separation) and in production use in examples/TrainingPipeline.
+    // separation); examples/TrainingPipeline runs the md5 LSH.
 
-    // md5-keyed SimHash — the cross-engine-deterministic twin of the
-    // xxhash64 simHashSignatures (see fold note above),
-    // fully under the DuckDB hash gate (56-bit signatures, integer votes)
+    // md5-keyed SimHash — cross-engine-deterministic, fully under the
+    // DuckDB hash gate (56-bit signatures, integer votes)
     "q82_simhash_md5" -> ((s, dir) =>
       Dedup.md5SimHashSignatures(t(s, dir, "documents"), "doc_id", "text")
         .orderBy("id")),

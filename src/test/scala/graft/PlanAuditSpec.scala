@@ -86,14 +86,16 @@ class PlanAuditSpec extends AnyFunSuite {
     // still no cartesian anywhere
     val p = plan("q57_dedup_clusters")
     assert(!p.contains("CartesianProduct"), p)
-    // the 100 TB shape (distributed star loop) stays pinned: force it via
-    // the dispatch threshold and re-audit
-    spark.conf.set("spark.graft.cc.localEdgeThreshold", "0")
-    try {
-      val pd = plan("q57_dedup_clusters")
-      assert(!pd.contains("CartesianProduct"), pd)
-      assert(pd.contains("HashAggregate"), pd)
-    } finally spark.conf.unset("spark.graft.cc.localEdgeThreshold")
+    // the 100 TB shape (distributed star loop) stays pinned: build q57's
+    // pair frame and audit its components at dispatch threshold 0
+    val pairs = graft.operators.Dedup.ngramJaccardPairs(
+      Tables.t(spark, dir, "documents"), "doc_id", "text",
+      n = 3, minJaccard = 0.3)
+    val pd = graft.operators.ConnectedComponents.componentsWithThreshold(
+      pairs, "id_a", "id_b", maxRounds = 25, localEdgeThreshold = 0L)
+      .queryExecution.executedPlan.toString()
+    assert(!pd.contains("CartesianProduct"), pd)
+    assert(pd.contains("HashAggregate"), pd)
   }
 
   test("q60 packing: no window operator at all (distributed prefix sum)") {

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
   * commits land between offset planning and the chunk read, the provider
   * cannot time-travel (serves the FRESH base), and the source must
   * (a) not fail, (b) not duplicate the raced events in the log phase —
-  * the observed HW travels task → accumulator → next offset → emit
+  * the observed HW travels task → checkpoint sidecar → next offset → emit
   * filter. The streaming analogue of the reference's per-chunk LW/HW
   * bracket (MySqlSnapshotSplitReadTask.java:124-163) + HW report
   * (MySqlSourceReader.java:275-305). */

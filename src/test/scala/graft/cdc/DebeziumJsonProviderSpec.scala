@@ -459,7 +459,7 @@ class DebeziumJsonProviderSpec extends SparkSpec {
       === Set((10L, "x"), (11L, "y")))
   }
 
-  // ---- byte-offset index: keyIndexedLog on the archived/live-tail path ----
+  // ---- byte-offset (key, offset) index on the archived/live-tail path ----
   // (round-16 verdict "What's missing" #1: the same index construction as
   // FileChangeLogProvider, so the sharded catch-up is deliverable where the
   // backlog actually happens — the embedded engine's spool delegates here)
@@ -492,7 +492,8 @@ class DebeziumJsonProviderSpec extends SparkSpec {
     val dir = writeSpool(root, events = 200)
     val p = new DebeziumJsonChangeLogProvider(root.toString)
     val id = TableId("shop", "hot")
-    assert(p.keyIndexedLog(id), "the spool provider must declare its key index")
+    assert(p.logShardBoundaries(id, 0L, 200L, 4).nonEmpty,
+      "the spool provider must answer shard boundaries from its key index")
     assert(p.logEventsApprox(id, 0L, 200L) === 200L)
     assert(p.logEventsApprox(id, 50L, 120L) === 70L)
     // overflow domain: no +1 wrap at Long.MaxValue (ADVICE_r16 #3 class)
@@ -518,7 +519,7 @@ class DebeziumJsonProviderSpec extends SparkSpec {
   }
 
   test("sharded catch-up over the spooled tail: key-range shards read exactly the serial slice") {
-    // the round-16 gap: keyIndexedLog was file-provider-only, so the LIVE
+    // the round-16 gap: the key index was file-provider-only, so the LIVE
     // path (this provider — the embedded engine delegates here) stayed
     // serial forever. Drive the actual micro-batch planner over the spool
     // with scan.log.catchup.shards and pin shard-union == serial.

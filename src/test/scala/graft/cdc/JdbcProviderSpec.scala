@@ -144,8 +144,8 @@ class JdbcProviderSpec extends SparkSpec {
   test("hybrid provider routes the tail's key-index capability (no silent serial downgrade)") {
     // the realistic hybrid deployment: JDBC snapshot + a key-indexed
     // SPOOLED change stream. Inheriting the SPI defaults would downgrade
-    // chunk catch-up folds to full-slice rescans and make the catch-up
-    // shard planner refuse to shard — the hybrid must route all four
+    // chunk catch-up folds to full-slice rescans and leave the catch-up
+    // shard planner without boundaries — the hybrid must route all three
     // range-read methods to its tail.
     val root = java.nio.file.Files.createTempDirectory("graft_jdbctail_")
     root.toFile.deleteOnExit()
@@ -163,7 +163,6 @@ class JdbcProviderSpec extends SparkSpec {
     mkTable("ROUTED", Seq(1L, 2L, 3L))
     val m = meta("ROUTED")
     val hybrid = new JdbcChangeLogProvider(url, props, m, fileTail)
-    assert(hybrid.keyIndexedLog(m.id), "key-indexed tail must route through the hybrid")
     assert(hybrid.logEventsApprox(m.id, 10L, 40L) === 30L)
     val r = SnapshotSplit(m.id, 0, Some(ChunkKey.of(5L)), Some(ChunkKey.of(15L)))
     val got = hybrid.logForRange(m.id, 0L, 60L, r).toSeq
@@ -174,6 +173,7 @@ class JdbcProviderSpec extends SparkSpec {
     assert(bs.nonEmpty && bs.size <= 3, s"weighted boundaries must route, got $bs")
     // an in-memory tail (no key index) keeps the honest default
     val memTail = new InMemoryChangeLogProvider(m, Seq.empty, Seq.empty)
-    assert(!new JdbcChangeLogProvider(url, props, m, memTail).keyIndexedLog(m.id))
+    assert(new JdbcChangeLogProvider(url, props, m, memTail)
+      .logShardBoundaries(m.id, 0L, 60L, 4).isEmpty)
   }
 }

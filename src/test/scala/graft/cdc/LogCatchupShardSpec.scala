@@ -15,8 +15,8 @@ import scala.jdk.CollectionConverters._
   * instead of the reference's single serial binlog reader
   * (BinlogSplitReader.java:194-240). Pins:
   *
-  *   1. PLANNING — `scan.log.catchup.shards=N` over a key-indexed provider
-  *      plans N LogPartitions for ONE table's slice, ranges forming a
+  *   1. PLANNING — `scan.log.catchup.shards=N` over a provider that answers
+  *      `logShardBoundaries` plans N LogPartitions for ONE table's slice, ranges forming a
   *      disjoint cover of the whole keyspace (first start / last end
   *      unbounded).
   *   2. EQUIVALENCE — the union of shard reads is EXACTLY the
@@ -25,14 +25,13 @@ import scala.jdk.CollectionConverters._
   *      each shard preserves per-key offset order.
   *   3. GATES — no sharding when the option is off (default 1), when the
   *      window is below shards × min-offsets-per-shard, or when the
-  *      provider's log is not key-indexed (the default full-slice
-  *      logForRange would multiply read bandwidth by N).
-  *   4. BOUNDARIES (round 17) — the planner prefers the provider's
-  *      EVENT-WEIGHTED boundaries (logShardBoundaries: split by where the
-  *      log's events are), so a hot-RANGE backlog drains in balanced
-  *      shards; the snapshot-equalized fallback is strictly capped at
-  *      `scan.log.catchup.shards` (ADVICE_r16 #1 — ChunkSplitter could
-  *      over-plan by one-ish range on rounding).
+  *      provider returns no boundaries: a provider without a key index
+  *      (the default full-slice logForRange would multiply read bandwidth
+  *      by N), or a window whose events all sit on one key.
+  *   4. BOUNDARIES (round 17) — the provider's EVENT-WEIGHTED boundaries
+  *      (logShardBoundaries: split by where the log's events are) are the
+  *      planner's one boundary source, so a hot-RANGE backlog drains in
+  *      balanced shards.
   *
   * The end-to-end state equivalence (sharded catch-up through the real
   * streaming path + UpsertSink vs the closed-form oracle) is gated as
@@ -166,8 +165,9 @@ class LogCatchupShardSpec extends SparkSpec {
       "scan.log.catchup.min-offsets-per-shard" -> "100"))
     assert(capped.size == 2 && capped.forall(_.shard.isDefined),
       s"a medium window must get window/floor shards, got ${capped.size}")
-    // in-memory provider: logForRange is the full-slice default → must not
-    // shard even when asked (N× read amplification)
+    // in-memory provider: no key index, so no logShardBoundaries (its
+    // logForRange is the full-slice default) → must not shard even when
+    // asked (N× read amplification)
     val p = new InMemoryChangeLogProvider(meta, Seq(Array[Any](1L, "a")),
       (1L to 50L).map(o => LogRecord(o, ChangeOp.Create, meta.id, null,
         Array[Any](o % 10 + 1, s"n$o"), o)))
@@ -186,7 +186,7 @@ class LogCatchupShardSpec extends SparkSpec {
     val memParts = memStream.planInputPartitions(o0, o1).toSeq
       .collect { case lp: LogPartition => lp }
     assert(memParts.size == 1 && memParts.head.shard.isEmpty,
-      "a non-key-indexed provider must keep the serial reader")
+      "a provider without shard boundaries must keep the serial reader")
   }
 
   test("per-table backlog, not the global offset window, sizes each table's shards") {
@@ -249,57 +249,29 @@ class LogCatchupShardSpec extends SparkSpec {
     root.toString
   }
 
-  /** Delegates everything to the file provider but REFUSES the
-    * weighted-boundary probe — forces the planner's snapshot-equalized
-    * fallback so its strict cap is observable in isolation. */
-  private final class NoWeights(under: graft.cdc.provider.ChangeLogProvider)
-    extends graft.cdc.provider.ForwardingChangeLogProvider {
-    override protected val delegate: graft.cdc.provider.ChangeLogProvider = under
-    override def logShardBoundaries(t: TableId, from: Long, to: Long,
-        n: Int): Seq[ChunkKey.Key] = Seq.empty
-  }
-
-  test("strict cap: the snapshot-equalized fallback never plans more than scan.log.catchup.shards (ADVICE_r16 #1)") {
-    // 100 keys spanning 105 (5 gaps): the even arithmetic path rounds its
-    // dynamic chunk size DOWN (factor 1.05 × 25 → 26 over span 105) and
-    // emits 5 ranges for shards=4 — the uncapped over-plan the option doc
-    // forbids. Prove the raw plan over-shoots, then that the planner caps.
-    val snapKeys = (1L to 105L).filterNot(k => k % 20 == 0 && k <= 100)
-    val root = writeFixtureWith(snapKeys, events = 200, keyAt = o => (o * 37) % 105 + 1)
-    val under = new graft.cdc.provider.FileChangeLogProvider(root)
-    val id = TableId("db", "t")
-    val (mn, mx, cnt) = under.keyBounds(id)
-    val raw = ChunkSplitter.plan(id, mn, mx, cnt,
-      ChunkSplitter.Config(chunkSize = ((cnt + 3) / 4).toInt),
-      (from, n) => under.nextChunkEnd(id, from, n))
-    assert(raw.size > 4, s"precondition: the raw plan must over-shoot 4, got ${raw.size}")
-    graft.cdc.provider.ProviderRegistry.register("shard-noweights", new NoWeights(under))
-    val opts = CdcOptions.from(new CaseInsensitiveStringMap(Map(
-      "provider.name" -> "shard-noweights", "scan.startup.mode" -> "earliest",
-      "metadata.columns" -> "op_offset",
+  test("one-key window: a backlog whose events all hit one key plans exactly one serial LogPartition") {
+    // every event lands on key 42: no boundary can split one key, so the
+    // provider's weighted planner answers none and the window drains
+    // through the single reader — even with shards requested and a backlog
+    // (200) far above shards × the per-shard floor (4 × 25)
+    val root = writeFixtureWith((1L to 100L), events = 200, keyAt = _ => 42L)
+    val stream = mkStream(root, Map(
       "scan.log.catchup.shards" -> "4",
-      "scan.log.catchup.min-offsets-per-shard" -> "25").asJava))
-    val stream = new CdcMicroBatchStream(opts, schema,
-      CdcOptions.producedSchema(schema, Seq(CdcOptions.MetaOffset)), Seq(meta))
+      "scan.log.catchup.min-offsets-per-shard" -> "25"))
     val parts = planOneBatch(stream)
     val logs = parts.collect { case p: LogPartition => p }
-    assert(logs.size == 4, s"fallback plan must merge down to the 4-shard ceiling, got ${logs.size}")
-    val ranges = logs.flatMap(_.shard).sortBy(_.splitId)
-    assert(ranges.head.start.isEmpty && ranges.last.end.isEmpty)
-    ranges.sliding(2).foreach { case Seq(a, b) => assert(a.end == b.start) }
-    // merged cover still reads exactly the serial slice
+    assert(logs.size == 1 && logs.head.shard.isEmpty,
+      s"a one-key window must plan one serial LogPartition, got ${logs.map(_.shard)}")
     val serial = readParts(mkStream(root, Map.empty),
       planOneBatch(mkStream(root, Map.empty))).flatten
-    val union = readParts(stream, parts).flatten // earliest: all parts are log shards
-    assert(union.groupBy(identity).view.mapValues(_.size).toMap ==
-      serial.groupBy(identity).view.mapValues(_.size).toMap)
+    assert(readParts(stream, parts).flatten == serial)
   }
 
   test("event-weighted boundaries: a hot-RANGE backlog drains in balanced shards, not one") {
-    // 90% of the log's events land on keys 90..99 — under the
-    // snapshot-equalized fallback (stats: uniform keys 1..100) the last
-    // shard would drain ~180 of 200 events serially; the provider's
-    // (key, offset) index weights the boundaries by LOG density instead
+    // 90% of the log's events land on keys 90..99 — boundaries equalized
+    // over the snapshot (uniform keys 1..100) would leave the last shard
+    // ~180 of 200 events to drain serially; the provider's (key, offset)
+    // index weights the boundaries by LOG density instead
     val root = writeFixtureWith((1L to 100L), events = 200,
       keyAt = o => if (o % 10 == 0) (o * 37) % 80 + 1 else 90 + o % 10)
     val stream = mkStream(root, Map(
@@ -316,33 +288,32 @@ class LogCatchupShardSpec extends SparkSpec {
     assert(counts.sum == serial.size,
       s"shards must cover the whole backlog (${serial.size} rows), got $counts")
     assert(counts.max <= (serial.size * 45) / 100,
-      s"the hot range must be SPLIT across shards (the snapshot-equalized " +
-        s"fallback would give one shard ~90% of ${serial.size}), got $counts")
+      s"the hot range must be SPLIT across shards (snapshot-equalized " +
+        s"boundaries would give one shard ~90% of ${serial.size}), got $counts")
     // equivalence still holds under weighted boundaries
     assert(perShard.flatten.groupBy(identity).view.mapValues(_.size).toMap ==
       serial.groupBy(identity).view.mapValues(_.size).toMap)
   }
 
-  test("composite provider routes keyIndexedLog and logForRange to the owning part") {
+  test("composite provider routes logShardBoundaries and logForRange to the owning part") {
     val root = writeFixture()
     val filePart = new graft.cdc.provider.FileChangeLogProvider(root)
     val memMeta = TableMeta(TableId("db", "m"), schema, Seq("id"))
     val memPart = new InMemoryChangeLogProvider(memMeta, Seq(Array[Any](1L, "a")),
       Seq(LogRecord(1L, ChangeOp.Create, memMeta.id, null, Array[Any](2L, "b"), 1L)))
     val comp = new graft.cdc.provider.CompositeChangeLogProvider(Seq(filePart, memPart))
-    // the capability is PER TABLE: the file-backed table shards, the
-    // in-memory one must not (inheriting the pre-fix default would have
-    // silently downgraded the file table to full-slice reads)
-    assert(comp.keyIndexedLog(meta.id))
-    assert(!comp.keyIndexedLog(memMeta.id))
+    // boundaries are PER TABLE: the file-backed table shards, the
+    // in-memory one must not (inheriting the base-trait default would
+    // silently leave the file table serial)
+    assert(comp.logShardBoundaries(meta.id, 0L, 200L, 4).nonEmpty)
+    assert(comp.logShardBoundaries(memMeta.id, 0L, 1L, 4).isEmpty)
     // the range read must hit the owner's key index, not the base-trait
     // full-slice fallback: a proper-subrange query over the file table
     // returns only that range's events
     val r = SnapshotSplit(meta.id, 0, Some(ChunkKey.of(10L)), Some(ChunkKey.of(20L)))
     val got = comp.logForRange(meta.id, 0L, 200L, r).toSeq
     assert(got.nonEmpty && got.forall { rec =>
-      val k = (if (rec.op == ChangeOp.Delete) rec.before else rec.after)(0)
-        .asInstanceOf[Long]
+      val k = rec.keyImage(0).asInstanceOf[Long]
       k >= 10L && k < 20L
     }, "composite must serve the owner's key-indexed range read")
   }
@@ -372,7 +343,7 @@ class LogCatchupShardSpec extends SparkSpec {
 
   test("the q145 gate shape actually shards: Debezium-envelope spool + the gate's options plan parallel catch-up") {
     // guards the battery gate against silent de-activation: q145 would
-    // still HASH-MATCH through the serial fallback (disjoint-cover
+    // still HASH-MATCH through the serial reader (disjoint-cover
     // equivalence is exactly the point), so only a planner pin can detect
     // the spool path quietly losing its key index (the r16 state). Uses
     // the REAL q145 fixture at sf0.001 and the gate's exact options.
@@ -384,8 +355,9 @@ class LogCatchupShardSpec extends SparkSpec {
       "scan.log.catchup.min-offsets-per-shard" -> "256").asJava))
     val p = opts.resolveProvider()
     val metas = opts.matchedTables(p)
-    assert(metas.size == 1 && p.keyIndexedLog(metas.head.id),
-      "the spool provider must be key-indexed (round-17 live-path port)")
+    assert(metas.size == 1 &&
+      p.logShardBoundaries(metas.head.id, 0L, p.currentOffset, 8).nonEmpty,
+      "the spool provider must answer shard boundaries (round-17 live-path port)")
     val stream = new CdcMicroBatchStream(opts, metas.head.schema,
       CdcOptions.producedSchema(metas.head.schema, Seq.empty), metas)
     val o0 = stream.initialOffset().asInstanceOf[CdcOffset]

@@ -9,12 +9,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import scala.jdk.CollectionConverters._
 
-/** Crash-window durability of executor-observed chunk HWs: the in-memory
-  * accumulator dies with the driver, so a raise reported by a racing chunk
-  * must also live in the checkpoint sidecar (ObservedHwStore) — otherwise a
-  * restart in the window after the chunk batch commits but before the next
-  * offset persists the raise would re-emit (pinnedHW, observedHW] in the
-  * log phase (duplicates on a path advertised as exactly-once). Mirrors the
+/** Crash-window durability of executor-observed chunk HWs: a raise
+  * reported by a racing chunk lives in the checkpoint sidecar
+  * (ObservedHwStore), so a restart in the window after the chunk batch
+  * commits but before the next offset persists the raise still applies it
+  * — otherwise the log phase would re-emit (pinnedHW, observedHW]
+  * (duplicates on a path advertised as exactly-once). Mirrors the
   * reference's FinishedSnapshotSplitsReport landing in a Flink checkpoint
   * (mysql/source/reader/MySqlSourceReader.java:275-305). */
 class ObservedHwDurabilitySpec extends SparkSpec {
@@ -44,14 +44,14 @@ class ObservedHwDurabilitySpec extends SparkSpec {
     val raisedHw = cohort.hw + 5
 
     // a racing chunk task persists its raise (as ChunkReader does) — then
-    // the driver dies: the accumulator's copy of the report is gone
+    // the driver dies
     val encoded = CdcOffset.encodeObservedHw(tid, cohort.start, cohort.end, raisedHw)
     val conf = spark.sessionState.newHadoopConf()
     ObservedHwStore.persist(ObservedHwStore.dirOf(ckpt), conf, encoded)
     ObservedHwStore.persist(ObservedHwStore.dirOf(ckpt), conf, encoded) // task replay: idempotent
 
-    // stream #2 = the restarted driver (fresh, empty accumulator). The next
-    // planned offset must still carry the raised HW, read from the sidecar.
+    // stream #2 = the restarted driver. The next planned offset must still
+    // carry the raised HW, read from the sidecar.
     val s2 = mkStream("hw-durable", ckpt)
     val o2 = s2.latestOffset(o1, ReadLimit.allAvailable()).asInstanceOf[CdcOffset]
     assert(o2.finished(tid).exists(_.hw == raisedHw),

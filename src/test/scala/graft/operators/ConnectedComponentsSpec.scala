@@ -63,21 +63,19 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   test("local union-find path ≡ distributed star loop (size dispatch)") {
-    // the optimization seam: below spark.graft.cc.localEdgeThreshold the
-    // solve runs on the driver; force BOTH paths over the same random
-    // graphs and require identical (node → component) maps
+    // the optimization seam: below the local-edge threshold the solve runs
+    // on the driver; force BOTH paths over the same random graphs and
+    // require identical (node → component) maps
     for (seed <- Seq(2, 13, 99)) {
       val rnd = new scala.util.Random(seed)
       val edges = Seq.fill(150)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
         .filter(p => p._1 != p._2)
       val df = edges.toDF("a", "b")
-      def run(): Map[Long, Long] =
-        ConnectedComponents.components(df, "a", "b")
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      spark.conf.set("spark.graft.cc.localEdgeThreshold", "0") // distributed
-      val dist = try run() finally
-        spark.conf.unset("spark.graft.cc.localEdgeThreshold")
-      val local = run() // default threshold: local path
+      def labels(comps: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+        comps.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val dist = labels(ConnectedComponents.componentsWithThreshold( // distributed
+        df, "a", "b", maxRounds = 25, localEdgeThreshold = 0L))
+      val local = labels(ConnectedComponents.components(df, "a", "b")) // local path
       assert(local == dist, s"seed=$seed")
       assert(local.nonEmpty)
     }
