@@ -49,10 +49,16 @@ final case class LogRecord(
     before: Array[Any],
     after: Array[Any],
     tsMs: Long) {
-  /** The image this event routes on by key (chunk ranges, catch-up shards,
-    * the emit filter, the providers' (key, offset) indexes): a delete's
-    * before-image, every other event's after-image. */
-  def keyImage: Array[Any] = if (op == ChangeOp.Delete) before else after
+  /** The image this event routes on by key: [[LogRecord.keyImageOf]]. */
+  def keyImage: Array[Any] = LogRecord.keyImageOf(op, before, after)
+}
+
+object LogRecord {
+  /** The key-routing rule (chunk ranges, catch-up shards, the emit filter,
+    * the providers' (key, offset) indexes): a delete's before-image, else the
+    * after-image. Generic so an index build can route on undecoded JSON. */
+  def keyImageOf[T](op: String, before: T, after: T): T =
+    if (op == ChangeOp.Delete) before else after
 }
 
 /** Table metadata a provider exposes (schema + primary key). */

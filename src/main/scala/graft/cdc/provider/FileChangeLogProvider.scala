@@ -98,7 +98,7 @@ final class FileChangeLogProvider(root: String) extends IndexedJsonlProvider(roo
         if (line.nonEmpty) parseLine(mapper, line, start, blen, len).foreach { n =>
           val off = n.get("offset").asLong()
           offB += ((off, start, blen))
-          val img = if (n.get("op").asText() == "d") n.get("before") else n.get("after")
+          val img = LogRecord.keyImageOf(n.get("op").asText(), n.get("before"), n.get("after"))
           keyB += (((keyOf(tf, row(tf.meta.schema, img)), off), start, blen))
         }
       }

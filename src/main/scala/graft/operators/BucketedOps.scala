@@ -1,6 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import graft.streaming.UpsertSink
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
+import org.apache.spark.sql.types.StructType
 
 /** Bucketed-storage co-located joins.
   *
@@ -59,7 +64,7 @@ object BucketedOps {
       // method promises never to clobber
       val hconf = session.sparkContext.hadoopConfiguration
       val existing = location.exists { loc =>
-        val p = new org.apache.hadoop.fs.Path(loc)
+        val p = new Path(loc)
         val fs = p.getFileSystem(hconf)
         fs.exists(p) && fs.getFileStatus(p).isDirectory &&
           fs.listStatus(p).exists(st =>
@@ -75,19 +80,13 @@ object BucketedOps {
       val specShape = df.schema.fields.map(f => s"${f.name}:${f.dataType.sql}").mkString(",")
       val manifest = s"""{"key":"$key","buckets":$buckets,"shape":"$specShape"}"""
       if (existing) {
-        val mf = new org.apache.hadoop.fs.Path(location.get, ManifestName)
+        val mf = new Path(location.get, ManifestName)
         val fs = mf.getFileSystem(hconf)
         require(fs.exists(mf) && fs.getFileStatus(mf).isFile,
           s"${location.get} holds parquet files but no $ManifestName — refusing to " +
             "register unknown files as a bucketed layout (their placement is unverifiable); " +
             "point ensureBucketed at a fresh location to ingest")
-        val found = {
-          val in = fs.open(mf)
-          val buf = new java.io.ByteArrayOutputStream()
-          try org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-          finally in.close()
-          new String(buf.toByteArray, "UTF-8")
-        }
+        val found = readMarker(fs, mf)
         require(found == manifest,
           s"bucket-spec mismatch at ${location.get}: layout was ingested as $found, " +
             s"caller declared $manifest — registering would silently mis-join")
@@ -105,7 +104,7 @@ object BucketedOps {
           .bucketBy(buckets, key).sortBy(key)
           .format("parquet").saveAsTable(name)
         if (location.isDefined) {
-          val mf = new org.apache.hadoop.fs.Path(path, ManifestName)
+          val mf = new Path(path, ManifestName)
           val out = mf.getFileSystem(hconf).create(mf, true)
           try out.write(manifest.getBytes("UTF-8")) finally out.close()
         }
@@ -118,36 +117,36 @@ object BucketedOps {
   private[operators] val ManifestName = "_graft_bucket_spec.json"
 
   /** End sentinel of a migrate promote marker's DDL payload — its absence
-    * proves the marker write itself tore (see [[migrateManifest]]). */
+    * proves the marker write itself tore (see [[swapGeneration]]). */
   private val MigrateDdlEnd = "\n#graft-ddl-end"
 
+  /** The generation-swap families ([[swapGeneration]]): `compact` for
+    * [[compactManifest]], `migrate` for [[migrateManifest]]. */
+  private val SwapFamilies = Seq("compact", "migrate")
+
   /** A data file of a maintained table's root: the base ingest plus every
-    * generation family's promote prefix. Shared by both swaps' retire
-    * loops — a family added here and nowhere else would survive every
-    * future compaction as a silent double-count. */
+    * generation family's promote prefix. Read by the swap's retire loop —
+    * a family added here and nowhere else would survive every future
+    * compaction as a silent double-count. */
   private val GenerationFile: String => Boolean = n =>
     n.startsWith("part-") || n.startsWith("graft-append_") ||
       n.startsWith("graft-compact_") || n.startsWith("graft-migrate_")
 
-  /** Shared PHASE-B file machinery of the generation swaps
-    * ([[compactManifest]], [[migrateManifest]]): rename each staged file
-    * into the root under `dstPrefix` — the dst-exists skip absorbs a
-    * prior attempt's progress AND the materialized-but-undeleted half of
-    * a copy+delete rename (SwapUnderFaultyRenameSpec) — then retire every
-    * data file NOT carrying the prefix (the old generations). Fires
-    * onStep("renamed"/"retired") at the window boundaries the kill-sweep
-    * specs inject into. */
-  private def promoteAndRetire(fs: org.apache.hadoop.fs.FileSystem,
-      loc: org.apache.hadoop.fs.Path, stageDir: org.apache.hadoop.fs.Path,
-      dstPrefix: String, onStep: String => Unit,
-      onFilePromoted: Int => Unit, onFileRetired: Int => Unit): Unit = {
+  /** Rename each staged data file into the root as `dstPrefix<name>`,
+    * calling `onFilePromoted` with the 1-based count after each. Spark's
+    * bucket id lives in the file NAME (`..._00003.c000.parquet`), so the
+    * rename preserves placement. The dst-exists skip absorbs a prior
+    * attempt's progress AND the materialized-but-undeleted half of a
+    * copy+delete rename (SwapUnderFaultyRenameSpec); an append's undo glob
+    * has already removed its prefix, so the skip never fires there. */
+  private def promoteStaged(fs: FileSystem, loc: Path, stageDir: Path,
+      dstPrefix: String, onFilePromoted: Int => Unit): Unit = {
     var n = 0
     if (fs.exists(stageDir))
       fs.listStatus(stageDir)
         .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
         .foreach { st =>
-          val dst = new org.apache.hadoop.fs.Path(loc,
-            dstPrefix + st.getPath.getName)
+          val dst = new Path(loc, dstPrefix + st.getPath.getName)
           if (fs.exists(dst)) fs.delete(st.getPath, false)
           else if (!fs.rename(st.getPath, dst))
             throw new java.io.IOException(
@@ -155,6 +154,16 @@ object BucketedOps {
                 "replay with the same jobId recovers")
           n += 1; onFilePromoted(n)
         }
+  }
+
+  /** PHASE-B file machinery of [[swapGeneration]]: [[promoteStaged]], then
+    * retire every data file NOT carrying the prefix (the old generations).
+    * Fires onStep("renamed"/"retired") at the window boundaries the
+    * kill-sweep specs inject into. */
+  private def promoteAndRetire(fs: FileSystem, loc: Path, stageDir: Path,
+      dstPrefix: String, onStep: String => Unit,
+      onFilePromoted: Int => Unit, onFileRetired: Int => Unit): Unit = {
+    promoteStaged(fs, loc, stageDir, dstPrefix, onFilePromoted)
     onStep("renamed")
     var r = 0
     fs.listStatus(loc)
@@ -168,13 +177,59 @@ object BucketedOps {
   }
 
   /** Full UTF-8 payload of a marker file. */
-  private def readMarker(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String = {
+  private def readMarker(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
-    val buf = new java.io.ByteArrayOutputStream()
-    try org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-    finally in.close()
-    new String(buf.toByteArray, "UTF-8")
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  private def tableMeta(s: SparkSession, table: String): CatalogTable =
+    s.sessionState.catalog.getTableMetadata(TableIdentifier(table))
+
+  /** A maintained table's root directory and its Hadoop filesystem. */
+  private def rootOf(s: SparkSession, meta: CatalogTable): (FileSystem, Path) = {
+    val loc = new Path(meta.location)
+    (loc.getFileSystem(s.sparkContext.hadoopConfiguration), loc)
+  }
+
+  /** Preflight of the writers that rename files into a bucketed table
+    * ([[idempotentAppend]], [[swapGeneration]]): checks the jobId charset
+    * and that the caller-declared placement MATCHES the table's catalog
+    * bucket spec, then returns the table's root. A mismatched key or count
+    * would rename misplaced files into the table root, and bucketed reads
+    * trust placement — silent mis-joins with no Exchange and no error, the
+    * exact failure mode ensureBucketed's manifest check exists to prevent,
+    * otherwise bypassed on these paths. `op` names the caller in errors. */
+  private def bucketedRoot(s: SparkSession, table: String, key: String,
+      buckets: Int, jobId: String, op: String): (FileSystem, Path) = {
+    require(jobId.matches("[A-Za-z0-9.-]+"),
+      s"jobId must be [A-Za-z0-9.-]+ (used in file and marker names): $jobId")
+    val meta = tableMeta(s, table)
+    meta.bucketSpec match {
+      case Some(spec) =>
+        require(spec.numBuckets == buckets && spec.bucketColumnNames == Seq(key),
+          s"bucket-spec mismatch on $table: catalog declares " +
+            s"(${spec.bucketColumnNames.mkString(",")}, ${spec.numBuckets} buckets), " +
+            s"caller declared ($key, $buckets) — $op would silently mis-place rows")
+      case None =>
+        throw new IllegalArgumentException(
+          s"$table is not a bucketed table — $op preserves bucket " +
+            "placement by file rename and requires a bucketed target")
+    }
+    rootOf(s, meta)
+  }
+
+  /** Write `df` bucketed and sorted on (`key`, `buckets`) — the target's
+    * placement — as files under `dir`, through a throwaway catalog entry
+    * named after `stageName`. The entry is external: dropping it keeps the
+    * files. */
+  private def writeStage(df: DataFrame, key: String, buckets: Int, dir: Path,
+      stageName: String): Unit = {
+    val stageTbl = stageName.replaceAll("[^A-Za-z0-9_]", "_")
+    df.sparkSession.sql(s"DROP TABLE IF EXISTS $stageTbl")
+    df.write.mode("overwrite").option("path", dir.toString)
+      .bucketBy(buckets, key).sortBy(key)
+      .format("parquet").saveAsTable(stageTbl)
+    df.sparkSession.sql(s"DROP TABLE IF EXISTS $stageTbl") // external: files stay
   }
 
   /** Crash-safe, replay-idempotent APPEND of a delta into an existing
@@ -205,9 +260,7 @@ object BucketedOps {
     *   3. Write the delta as a STAGE bucketed table under
     *      `_graft_append_stage_<jobId>/` inside the location (same key,
     *      same bucket count → identical hash placement; the `_`-prefixed
-    *      dir is invisible to readers). Spark's bucket id lives in the
-    *      file NAME (`..._00003.c000.parquet`), so a rename into the
-    *      table directory preserves placement.
+    *      dir is invisible to readers).
     *   4. Promote: rename each stage file to
     *      `graft-append_<jobId>_<name>` in the table root — per-file
     *      atomic; a crash mid-loop is undone by step 2 on replay.
@@ -233,58 +286,21 @@ object BucketedOps {
   def idempotentAppend(df: DataFrame, table: String, key: String,
       buckets: Int, jobId: String,
       onFilePromoted: Int => Unit = _ => ()): Unit = {
-    require(jobId.matches("[A-Za-z0-9.-]+"),
-      s"jobId must be [A-Za-z0-9.-]+ (used in file and marker names): $jobId")
     val s = df.sparkSession
-    val meta = s.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    // the caller-declared placement must MATCH the table's catalog bucket
-    // spec: a mismatched key or count would rename misplaced files into the
-    // table root, and bucketed reads trust placement — silent mis-joins
-    // with no Exchange and no error, the exact failure mode ensureBucketed's
-    // manifest check exists to prevent, otherwise bypassed on this path
-    meta.bucketSpec match {
-      case Some(spec) =>
-        require(spec.numBuckets == buckets && spec.bucketColumnNames == Seq(key),
-          s"bucket-spec mismatch on $table: catalog declares " +
-            s"(${spec.bucketColumnNames.mkString(",")}, ${spec.numBuckets} buckets), " +
-            s"caller declared ($key, $buckets) — appending would silently mis-place rows")
-      case None =>
-        throw new IllegalArgumentException(
-          s"$table is not a bucketed table — idempotentAppend preserves bucket " +
-            "placement by file rename and requires a bucketed target")
-    }
-    val loc = new org.apache.hadoop.fs.Path(meta.location)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    graft.streaming.UpsertSink.withWriterLease(fs, loc) {
+    val (fs, loc) = bucketedRoot(s, table, key, buckets, jobId, "idempotentAppend")
+    UpsertSink.withWriterLease(fs, loc) {
       // an unfinished compaction swap is fatal here, not just stale: its
       // phase-B replay deletes every data file not carrying ITS prefix —
       // including the files this append would promote (silent loss)
       assertNoOrphanCompaction(fs, loc, table)
-      val marker = new org.apache.hadoop.fs.Path(loc, s"_graft_append_$jobId.commit")
+      val marker = new Path(loc, s"_graft_append_$jobId.commit")
       if (!fs.exists(marker)) {
-        fs.globStatus(new org.apache.hadoop.fs.Path(loc, s"graft-append_${jobId}_*"))
+        fs.globStatus(new Path(loc, s"graft-append_${jobId}_*"))
           .foreach(st => fs.delete(st.getPath, false))
-        val stageDir = new org.apache.hadoop.fs.Path(loc, s"_graft_append_stage_$jobId")
+        val stageDir = new Path(loc, s"_graft_append_stage_$jobId")
         fs.delete(stageDir, true)
-        val stageTbl = (table + "_stage_" + jobId).replaceAll("[^A-Za-z0-9_]", "_")
-        s.sql(s"DROP TABLE IF EXISTS $stageTbl")
-        df.write.mode("overwrite").option("path", stageDir.toString)
-          .bucketBy(buckets, key).sortBy(key)
-          .format("parquet").saveAsTable(stageTbl)
-        s.sql(s"DROP TABLE IF EXISTS $stageTbl") // external: files stay
-        var n = 0
-        fs.listStatus(stageDir)
-          .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-          .foreach { st =>
-            val dst = new org.apache.hadoop.fs.Path(loc,
-              s"graft-append_${jobId}_${st.getPath.getName}")
-            if (!fs.rename(st.getPath, dst))
-              throw new java.io.IOException(
-                s"promote rename ${st.getPath} -> $dst failed; " +
-                  "replay with the same jobId recovers")
-            n += 1; onFilePromoted(n)
-          }
+        writeStage(df, key, buckets, stageDir, table + "_stage_" + jobId)
+        promoteStaged(fs, loc, stageDir, s"graft-append_${jobId}_", onFilePromoted)
         fs.delete(stageDir, true)
         fs.create(marker, true).close()
       }
@@ -331,14 +347,14 @@ object BucketedOps {
     * the next day's stream.
     *
     * Returns true iff a spool existed and was folded+cleared. */
-  def foldSpool(s: org.apache.spark.sql.SparkSession, spoolRoot: String,
+  def foldSpool(s: SparkSession, spoolRoot: String,
       table: String, key: String, buckets: Int, jobId: String,
       resolve: DataFrame => DataFrame = identity,
       onFolded: () => Unit = () => (),
       onFilePromoted: Int => Unit = _ => ()): Boolean = {
     // Hadoop FileSystem, not java.io.File: production spools live on the
     // same store as the table (a local-FS check would skip the fold there)
-    val p = new org.apache.hadoop.fs.Path(spoolRoot)
+    val p = new Path(spoolRoot)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) false
     else {
@@ -351,6 +367,154 @@ object BucketedOps {
       fs.delete(p, true)
       true
     }
+  }
+
+  /** THE GENERATION SWAP — the one two-phase protocol behind
+    * [[compactManifest]] (`family` = "compact") and [[migrateManifest]]
+    * ("migrate"): rewrite a maintained table as ONE new generation,
+    * `restage(live table)` bucketed on the SAME (key, buckets), and swap it
+    * in for every older generation. Markers
+    * `_graft_<family>_<jobId>.{promote,commit}`, data prefix
+    * `graft-<family>_<jobId>_`, stage `_graft_<family>_stage_<jobId>/`.
+    *
+    * Protocol, all under the path's single-writer lease:
+    *   1. Another swap caught between its promote and commit markers →
+    *      refuse ([[assertNoOrphanCompaction]]); only this family's
+    *      same-jobId replay is exempt.
+    *   2. `_graft_<family>_<jobId>.commit` present → already done; no-op.
+    *   3. No promote marker → PHASE A: the live generation is untouched.
+    *      Stage `restage(table)` as a bucketed write (placement validated
+    *      against the catalog spec), then atomically create the promote
+    *      marker — the point of no return. A crash anywhere in phase A
+    *      leaves the table intact; replay restages from scratch.
+    *   4. Promote marker present → PHASE B (replay resumes HERE and never
+    *      re-reads the table, which may be torn): [[promoteAndRetire]]
+    *      renames the staged generation in (skipping files already there)
+    *      and deletes every data file NOT carrying this jobId's prefix (the
+    *      old generations: original `part-*`, `graft-append_*`, prior
+    *      `graft-compact_*`/`graft-migrate_*`); then drop the stage dir,
+    *      create the commit marker, refresh the table.
+    *
+    * `addsColumns` is the swap's one branch. False: the new generation's
+    * schema must equal the table's, and the promote marker is empty. True
+    * (ADD-COLUMN evolution): the schema must keep the existing columns in
+    * place and append at least one; the promote marker CARRIES the new
+    * schema's DDL, and phase B ALTERs the missing columns into the catalog
+    * entry (step "reregistered") before the commit.
+    *
+    * Crash visibility: a crash INSIDE phase B leaves old+new
+    * generations mixed in the root until the replay completes — for
+    * additive families a reader in that window would double-count, so
+    * the swap carries foldSpool's ordering contract: run it to
+    * completion (replay with the same jobId until it returns) before
+    * any reader or appender touches the table. CompactManifestSpec and
+    * MigrateManifestSpec kill every window and prove replay convergence
+    * + pre/post reader-resolution equality.
+    *
+    * Store classes the swap is PROVEN on: rename-atomic filesystems
+    * (HDFS, local/POSIX — where the default writer lease runs), and
+    * copy+delete-rename stores admitted behind a registered
+    * [[graft.streaming.WriterLease]] — SwapUnderFaultyRenameSpec drives
+    * phase B through a FileSystem whose rename refuses or dies between
+    * the copy and the delete, and pins that same-jobId replays converge
+    * in both halves of the torn rename (the dst-exists skip at the
+    * promote loop absorbs a materialized-but-undeleted copy). */
+  private def swapGeneration(s: SparkSession, table: String, key: String,
+      buckets: Int, jobId: String, family: String, addsColumns: Boolean,
+      restage: DataFrame => DataFrame, onStep: String => Unit,
+      onFilePromoted: Int => Unit, onFileRetired: Int => Unit): Unit = {
+    val (fs, loc) = bucketedRoot(s, table, key, buckets, jobId, s"${family}Manifest")
+    UpsertSink.withWriterLease(fs, loc) {
+      // a DIFFERENT swap's unfinished phase B means the root may be torn —
+      // phase A would resolve a double-counted table into the new
+      // generation; only THIS family's same-jobId replay may proceed
+      assertNoOrphanCompaction(fs, loc, table, exceptJobId = Some(s"$family:$jobId"))
+      val commit = new Path(loc, s"_graft_${family}_$jobId.commit")
+      val promote = new Path(loc, s"_graft_${family}_$jobId.promote")
+      val stageDir = new Path(loc, s"_graft_${family}_stage_$jobId")
+      if (!fs.exists(commit)) {
+        // a DDL payload lacking the end sentinel tore DURING the marker
+        // write itself — phase B only starts once the marker exists, so
+        // nothing has moved and phase A may safely restage; trusting a
+        // torn DDL instead would either skip the ALTER (a truncation that
+        // still parses) or wedge the table (one that doesn't) AFTER the
+        // old generation was retired
+        if (addsColumns && fs.exists(promote) &&
+            !readMarker(fs, promote).endsWith(MigrateDdlEnd))
+          fs.delete(promote, false)
+        if (!fs.exists(promote)) {
+          // PHASE A — live generation untouched; restage from scratch
+          fs.delete(stageDir, true)
+          s.catalog.refreshTable(table) // list the files as they are NOW
+          val live = s.table(table)
+          val out = restage(live)
+          val cur = live.schema.fields.map(f => (f.name, f.dataType)).toSeq
+          val outF = out.schema.fields.map(f => (f.name, f.dataType)).toSeq
+          if (addsColumns)
+            // ADD-COLUMN evolution only: existing columns keep their names,
+            // types, and order; new ones append. That makes the catalog
+            // step ONE idempotent ALTER (no DROP+CREATE, whose mid-crash
+            // loses the entry a replay needs to even find the location) —
+            // wider rewrites ingest under a new table name instead
+            require(outF.take(cur.length) == cur && outF.length > cur.length,
+              s"migrateManifest is ADD-COLUMN evolution: resolve must keep " +
+                s"$table's existing columns (${cur.map(_._1).mkString(",")}) " +
+                "in place and append new ones — for anything wider, rewrite " +
+                "into a fresh table")
+          else
+            require(outF == cur,
+              s"resolve changed the schema of $table — the rewritten generation " +
+                "must be indistinguishable from the appended one")
+          // stage tables `_cstage_` (compact) and `_mstage_` (migrate)
+          writeStage(out, key, buckets, stageDir, s"${table}_${family.head}stage_$jobId")
+          onStep("staged")
+          if (addsColumns) {
+            // the promote marker CARRIES the new schema's DDL: phase B never
+            // re-reads the table, and a replay that lost this JVM needs the
+            // schema to ALTER the catalog entry. Written to a sibling and
+            // RENAMED in (plus the end sentinel, belt-and-braces for stores
+            // whose rename is copy+delete) so the phase transition can never
+            // materialize a half-written payload as an apparent promote
+            val tmpMarker = new Path(loc, s"_graft_${family}_$jobId.promote.tmp")
+            fs.delete(tmpMarker, false)
+            val o = fs.create(tmpMarker, true)
+            try o.write((out.schema.toDDL + MigrateDdlEnd).getBytes("UTF-8"))
+            finally o.close()
+            if (!fs.rename(tmpMarker, promote))
+              throw new java.io.IOException(
+                s"promote marker rename $tmpMarker -> $promote failed; " +
+                  "replay with the same jobId recovers")
+          } else fs.create(promote, false).close() // point of no return
+          onStep("promoted")
+        }
+        // PHASE B — stage is the only truth; never re-read the table here
+        val newDdl =
+          if (addsColumns) Some(readMarker(fs, promote).stripSuffix(MigrateDdlEnd)) else None
+        promoteAndRetire(fs, loc, stageDir, s"graft-${family}_${jobId}_",
+          onStep, onFilePromoted, onFileRetired)
+        newDdl.foreach { ddl =>
+          // evolve the catalog entry ADDITIVELY — one ALTER, idempotent on
+          // replay (already-added columns are skipped), so no crash window
+          // ever leaves the table unregistered
+          val have = tableMeta(s, table).schema.fieldNames.toSet
+          val missing = StructType.fromDDL(ddl).fields.filterNot(f => have(f.name))
+          if (missing.nonEmpty)
+            s.sql(s"ALTER TABLE $table ADD COLUMNS (" +
+              // backquoted WITH embedded-backtick doubling: a new column named
+              // like a reserved word (or containing any non-identifier
+              // character, including ` itself) must not break the replayed
+              // ALTER — it runs AFTER the old generation was already retired,
+              // the worst window to fail in
+              missing.map(f =>
+                s"`${f.name.replace("`", "``")}` ${f.dataType.sql}").mkString(", ") + ")")
+          onStep("reregistered")
+        }
+        fs.delete(stageDir, true)
+        fs.create(commit, true).close()
+        onStep("committed")
+      }
+    }
+    s.catalog.refreshTable(table)
   }
 
   /** GENERATION COMPACTION for an append-maintained manifest table — the
@@ -369,7 +533,8 @@ object BucketedOps {
     * unchanged by construction — `resolve` must be idempotent and
     * absorb the union algebra (min∘min = min, sum-of-sums = sum,
     * distinct∘distinct = distinct), which also makes a re-run of the
-    * whole compaction converge. The reference's analogue is Debezium's
+    * whole compaction converge; the resolved schema must equal the
+    * table's. The reference's analogue is Debezium's
     * schema-history/offset stores staying O(current) under checkpointing
     * (`flink-connector-debezium-log/src/main/java/cn/tenmg/cdc/log/
     * debezium/DebeziumSourceFunction.java:307-366`), not O(all history).
@@ -383,31 +548,10 @@ object BucketedOps {
     * would be over-purged; q134's fixture computes exactly that set
     * difference.
     *
-    * Protocol, all under the path's single-writer lease:
-    *   1. `_graft_compact_<jobId>.commit` present → already done; no-op.
-    *   2. No `_graft_compact_<jobId>.promote` marker → PHASE A: the live
-    *      generation is untouched. Stage `resolve(anti-join(table))` as
-    *      a bucketed write under `_graft_compact_stage_<jobId>/` (same
-    *      key/buckets — validated against the catalog spec), then
-    *      atomically create the promote marker. A crash anywhere in
-    *      phase A leaves the table intact; replay restages from scratch.
-    *   3. Promote marker present → PHASE B (point of no return; replay
-    *      resumes HERE and never re-reads the table, which may be torn):
-    *      rename each stage file into the root as
-    *      `graft-compact_<jobId>_<name>` (skip if already there), delete
-    *      every data file NOT carrying this jobId's compact prefix (the
-    *      old generations: original `part-*`, `graft-append_*`, prior
-    *      `graft-compact_*`), drop the stage dir, create the commit
-    *      marker, refresh the table.
-    *
-    * Crash visibility: a crash INSIDE phase B leaves old+new
-    * generations mixed in the root until the replay completes — for
-    * additive families a reader in that window would double-count, so
-    * the operator carries foldSpool's ordering contract: run compaction
-    * to completion (replay with the same jobId until it returns) before
-    * any reader or appender touches the table. CompactManifestSpec
-    * kills every window and proves replay convergence + pre/post
-    * reader-resolution equality.
+    * Protocol and crash contract: [[swapGeneration]], family `compact`
+    * (markers `_graft_compact_<jobId>.{promote,commit}`, empty promote
+    * marker, data prefix `graft-compact_<jobId>_`). Run it to completion
+    * before any reader or appender touches the table.
     *
     * Replay-horizon interaction: compaction RENAMES every prior
     * generation away, so an append jobId replayed after a later
@@ -416,86 +560,22 @@ object BucketedOps {
     * [[vacuumAppendMarkers]] markers of jobIds that could still replay
     * across a compaction; the compaction is a replay barrier
     * (horizonMs must cover the time since the last compaction, not
-    * just the longest job retry window).
-    *
-    * Store classes the swap is PROVEN on: rename-atomic filesystems
-    * (HDFS, local/POSIX — where the default writer lease runs), and
-    * copy+delete-rename stores admitted behind a registered
-    * [[graft.streaming.WriterLease]] — SwapUnderFaultyRenameSpec drives
-    * phase B through a FileSystem whose rename refuses or dies between
-    * the copy and the delete, and pins that same-jobId replays converge
-    * in both halves of the torn rename (the dst-exists skip at the
-    * promote loop absorbs a materialized-but-undeleted copy). */
-  def compactManifest(s: org.apache.spark.sql.SparkSession, table: String,
+    * just the longest job retry window). */
+  def compactManifest(s: SparkSession, table: String,
       key: String, buckets: Int, jobId: String,
       resolve: DataFrame => DataFrame = identity,
       deleteSet: Option[DataFrame] = None,
       onStep: String => Unit = _ => (),
       onFilePromoted: Int => Unit = _ => (),
-      onFileRetired: Int => Unit = _ => ()): Unit = {
-    require(jobId.matches("[A-Za-z0-9.-]+"),
-      s"jobId must be [A-Za-z0-9.-]+ (used in file and marker names): $jobId")
-    val meta = s.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    meta.bucketSpec match {
-      case Some(spec) =>
-        require(spec.numBuckets == buckets && spec.bucketColumnNames == Seq(key),
-          s"bucket-spec mismatch on $table: catalog declares " +
-            s"(${spec.bucketColumnNames.mkString(",")}, ${spec.numBuckets} buckets), " +
-            s"caller declared ($key, $buckets) — the rewrite would mis-place rows")
-      case None =>
-        throw new IllegalArgumentException(
-          s"$table is not a bucketed table — compactManifest preserves bucket " +
-            "placement by file rename and requires a bucketed target")
-    }
-    val loc = new org.apache.hadoop.fs.Path(meta.location)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    graft.streaming.UpsertSink.withWriterLease(fs, loc) {
-      // a DIFFERENT swap's unfinished phase B means the root may be torn —
-      // phase A would resolve a double-counted table into the new
-      // generation; only THIS family's same-jobId replay may proceed
-      assertNoOrphanCompaction(fs, loc, table, exceptJobId = Some(s"compact:$jobId"))
-      val commit = new org.apache.hadoop.fs.Path(loc, s"_graft_compact_$jobId.commit")
-      val promote = new org.apache.hadoop.fs.Path(loc, s"_graft_compact_$jobId.promote")
-      val stageDir = new org.apache.hadoop.fs.Path(loc, s"_graft_compact_stage_$jobId")
-      if (!fs.exists(commit)) {
-        if (!fs.exists(promote)) {
-          // PHASE A — live generation untouched; restage from scratch
-          fs.delete(stageDir, true)
-          s.catalog.refreshTable(table) // list the files as they are NOW
-          val kept = deleteSet.fold(s.table(table)) { del =>
-            // a USING join moves the join columns to the front — re-select
-            // the table's own order so the staged generation's schema is
-            // indistinguishable from the appended one
-            s.table(table).join(del, del.columns.toSeq, "left_anti")
-              .select(s.table(table).columns.map(
-                org.apache.spark.sql.functions.col): _*)
-          }
-          val out = resolve(kept)
-          require(out.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-              s.table(table).schema.fields.map(f => (f.name, f.dataType)).toSeq,
-            s"resolve changed the schema of $table — the rewritten generation " +
-              "must be indistinguishable from the appended one")
-          val stageTbl = (table + "_cstage_" + jobId).replaceAll("[^A-Za-z0-9_]", "_")
-          s.sql(s"DROP TABLE IF EXISTS $stageTbl")
-          out.write.mode("overwrite").option("path", stageDir.toString)
-            .bucketBy(buckets, key).sortBy(key)
-            .format("parquet").saveAsTable(stageTbl)
-          s.sql(s"DROP TABLE IF EXISTS $stageTbl") // external: files stay
-          onStep("staged")
-          fs.create(promote, false).close() // point of no return
-          onStep("promoted")
-        }
-        // PHASE B — stage is the only truth; never re-read the table here
-        promoteAndRetire(fs, loc, stageDir, s"graft-compact_${jobId}_",
-          onStep, onFilePromoted, onFileRetired)
-        fs.delete(stageDir, true)
-        fs.create(commit, true).close()
-        onStep("committed")
-      }
-    }
-    s.catalog.refreshTable(table)
-  }
+      onFileRetired: Int => Unit = _ => ()): Unit =
+    swapGeneration(s, table, key, buckets, jobId, "compact", addsColumns = false,
+      live => resolve(deleteSet.fold(live) { del =>
+        // a USING join moves the join columns to the front — re-select
+        // the table's own order so the staged generation's schema is
+        // indistinguishable from the appended one
+        live.join(del, del.columns.toSeq, "left_anti")
+          .select(live.columns.map(org.apache.spark.sql.functions.col): _*)
+      }), onStep, onFilePromoted, onFileRetired)
 
   /** MANIFEST SCHEMA MIGRATION — the two-phase swap with a resolve that
     * MAY change the schema (round-14 verdict, what's-missing #4).
@@ -518,127 +598,24 @@ object BucketedOps {
     * DROP+CREATE re-registration would have a crash window that loses the
     * catalog entry, and with it the location a replay needs.
     *
-    * Protocol (markers `_graft_migrate_<jobId>.{promote,commit}`, data
-    * prefix `graft-migrate_<jobId>_`, stage `_graft_migrate_stage_`):
-    * phase A stages `resolve(table)` bucketed on the SAME (key, buckets)
-    * and writes the NEW SCHEMA'S DDL into the promote marker — phase B
-    * must never re-read the (possibly torn) table, and the ALTER needs
-    * the schema after a crash loses the in-memory plan. Phase B renames
-    * the staged generation in, retires every older generation
-    * (append/compact/migrate/base), ALTERs the missing columns in, then
-    * commits. A crash anywhere replays with the same jobId
+    * Protocol and crash contract: [[swapGeneration]], family `migrate`
+    * (markers `_graft_migrate_<jobId>.{promote,commit}`, the promote
+    * marker carrying the new schema's DDL, data prefix
+    * `graft-migrate_<jobId>_`): phase B retires every older generation
+    * (append/compact/migrate/base) and ALTERs the missing columns in
+    * before the commit. A crash anywhere replays with the same jobId
     * (MigrateManifestSpec kills every window); between promote and commit
     * the orphan guard ([[readMaintained]], [[idempotentAppend]],
     * [[compactManifest]]) refuses the table exactly as for an unfinished
     * compaction. */
-  def migrateManifest(s: org.apache.spark.sql.SparkSession, table: String,
+  def migrateManifest(s: SparkSession, table: String,
       key: String, buckets: Int, jobId: String,
       resolve: DataFrame => DataFrame,
       onStep: String => Unit = _ => (),
       onFilePromoted: Int => Unit = _ => (),
-      onFileRetired: Int => Unit = _ => ()): Unit = {
-    require(jobId.matches("[A-Za-z0-9.-]+"),
-      s"jobId must be [A-Za-z0-9.-]+ (used in file and marker names): $jobId")
-    val meta = s.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    meta.bucketSpec match {
-      case Some(spec) =>
-        require(spec.numBuckets == buckets && spec.bucketColumnNames == Seq(key),
-          s"bucket-spec mismatch on $table: catalog declares " +
-            s"(${spec.bucketColumnNames.mkString(",")}, ${spec.numBuckets} buckets), " +
-            s"caller declared ($key, $buckets) — the rewrite would mis-place rows")
-      case None =>
-        throw new IllegalArgumentException(
-          s"$table is not a bucketed table — migrateManifest preserves bucket " +
-            "placement and requires a bucketed target")
-    }
-    val loc = new org.apache.hadoop.fs.Path(meta.location)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    graft.streaming.UpsertSink.withWriterLease(fs, loc) {
-      assertNoOrphanCompaction(fs, loc, table, exceptJobId = Some(s"migrate:$jobId"))
-      val commit = new org.apache.hadoop.fs.Path(loc, s"_graft_migrate_$jobId.commit")
-      val promote = new org.apache.hadoop.fs.Path(loc, s"_graft_migrate_$jobId.promote")
-      val stageDir = new org.apache.hadoop.fs.Path(loc, s"_graft_migrate_stage_$jobId")
-      if (!fs.exists(commit)) {
-        // a promote whose payload lacks the end sentinel tore DURING the
-        // marker write itself — phase B only starts once the marker
-        // exists, so nothing has moved and phase A may safely restage;
-        // trusting a torn DDL instead would either skip the ALTER (a
-        // truncation that still parses) or wedge the table (one that
-        // doesn't) AFTER the old generation was retired
-        if (fs.exists(promote) && !readMarker(fs, promote).endsWith(MigrateDdlEnd))
-          fs.delete(promote, false)
-        if (!fs.exists(promote)) {
-          // PHASE A — live generation untouched; restage from scratch
-          fs.delete(stageDir, true)
-          s.catalog.refreshTable(table)
-          val out = resolve(s.table(table))
-          // ADD-COLUMN evolution only: existing columns keep their names,
-          // types, and order; new ones append. That makes the catalog
-          // step ONE idempotent ALTER (no DROP+CREATE, whose mid-crash
-          // loses the entry a replay needs to even find the location) —
-          // wider rewrites ingest under a new table name instead
-          val cur = s.table(table).schema.fields.map(f => (f.name, f.dataType)).toSeq
-          val outF = out.schema.fields.map(f => (f.name, f.dataType)).toSeq
-          require(outF.take(cur.length) == cur && outF.length > cur.length,
-            s"migrateManifest is ADD-COLUMN evolution: resolve must keep " +
-              s"$table's existing columns (${cur.map(_._1).mkString(",")}) " +
-              "in place and append new ones — for anything wider, rewrite " +
-              "into a fresh table")
-          val stageTbl = (table + "_mstage_" + jobId).replaceAll("[^A-Za-z0-9_]", "_")
-          s.sql(s"DROP TABLE IF EXISTS $stageTbl")
-          out.write.mode("overwrite").option("path", stageDir.toString)
-            .bucketBy(buckets, key).sortBy(key)
-            .format("parquet").saveAsTable(stageTbl)
-          s.sql(s"DROP TABLE IF EXISTS $stageTbl") // external: files stay
-          onStep("staged")
-          // the promote marker CARRIES the new schema's DDL: phase B never
-          // re-reads the table, and a replay that lost this JVM needs the
-          // schema to ALTER the catalog entry. Written to a sibling and
-          // RENAMED in (plus the end sentinel, belt-and-braces for stores
-          // whose rename is copy+delete) so the phase transition can never
-          // materialize a half-written payload as an apparent promote
-          val tmpMarker = new org.apache.hadoop.fs.Path(loc,
-            s"_graft_migrate_$jobId.promote.tmp")
-          fs.delete(tmpMarker, false)
-          val o = fs.create(tmpMarker, true)
-          try o.write((out.schema.toDDL + MigrateDdlEnd).getBytes("UTF-8"))
-          finally o.close()
-          if (!fs.rename(tmpMarker, promote))
-            throw new java.io.IOException(
-              s"promote marker rename $tmpMarker -> $promote failed; " +
-                "replay with the same jobId recovers")
-          onStep("promoted")
-        }
-        // PHASE B — stage is the only truth; never re-read the table here
-        val newDdl = readMarker(fs, promote).stripSuffix(MigrateDdlEnd)
-        promoteAndRetire(fs, loc, stageDir, s"graft-migrate_${jobId}_",
-          onStep, onFilePromoted, onFileRetired)
-        // evolve the catalog entry ADDITIVELY — one ALTER, idempotent on
-        // replay (already-added columns are skipped), so no crash window
-        // ever leaves the table unregistered
-        val newSchema = org.apache.spark.sql.types.StructType.fromDDL(newDdl)
-        val have = s.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(table))
-          .schema.fieldNames.toSet
-        val missing = newSchema.fields.filterNot(f => have(f.name))
-        if (missing.nonEmpty)
-          s.sql(s"ALTER TABLE $table ADD COLUMNS (" +
-            // backquoted WITH embedded-backtick doubling: a new column named
-            // like a reserved word (or containing any non-identifier
-            // character, including ` itself) must not break the replayed
-            // ALTER — it runs AFTER the old generation was already retired,
-            // the worst window to fail in
-            missing.map(f =>
-              s"`${f.name.replace("`", "``")}` ${f.dataType.sql}").mkString(", ") + ")")
-        onStep("reregistered")
-        fs.delete(stageDir, true)
-        fs.create(commit, true).close()
-        onStep("committed")
-      }
-    }
-    s.catalog.refreshTable(table)
-  }
+      onFileRetired: Int => Unit = _ => ()): Unit =
+    swapGeneration(s, table, key, buckets, jobId, "migrate", addsColumns = true,
+      resolve, onStep, onFilePromoted, onFileRetired)
 
   /** The number of APPEND GENERATIONS currently stored in a maintained
     * table's root — distinct `graft-append_<jobId>` prefixes among its
@@ -648,11 +625,8 @@ object BucketedOps {
     * verdict, what's-missing #3 — [[graft.streaming
     * .ClusterMaintenanceStream.closeDay]]'s `compactEveryGenerations`).
     * One root listing; the base ingest's `part-*` files count as zero. */
-  def appendGenerations(s: org.apache.spark.sql.SparkSession, table: String): Int = {
-    val loc = new org.apache.hadoop.fs.Path(
-      s.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
+  def appendGenerations(s: SparkSession, table: String): Int = {
+    val (fs, loc) = rootOf(s, tableMeta(s, table))
     fs.listStatus(loc).iterator
       .filter(st => st.isFile && st.getPath.getName.startsWith("graft-append_"))
       .map(_.getPath.getName.stripPrefix("graft-append_").takeWhile(_ != '_'))
@@ -666,12 +640,9 @@ object BucketedOps {
     * already renamed generations away (count below threshold), and
     * skipping the replay would strand the orphan the read guard then
     * refuses on. */
-  def hasUnfinishedCompaction(s: org.apache.spark.sql.SparkSession,
+  def hasUnfinishedCompaction(s: SparkSession,
       table: String, jobId: String): Boolean = {
-    val loc = new org.apache.hadoop.fs.Path(
-      s.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (fs, loc) = rootOf(s, tableMeta(s, table))
     // compact family only — this predicate's cure is compactManifest, and
     // a migrate orphan must NOT be "resumed" by the wrong operator
     orphanCompactions(fs, loc).contains(s"compact:$jobId")
@@ -688,7 +659,7 @@ object BucketedOps {
     * documented O(days) growth is bounded by the running system, not by
     * an operator the user must remember exists. Returns true iff a
     * compaction ran (or resumed). */
-  def compactIfDue(s: org.apache.spark.sql.SparkSession, table: String,
+  def compactIfDue(s: SparkSession, table: String,
       key: String, buckets: Int, jobId: String,
       resolve: DataFrame => DataFrame, every: Int): Boolean = {
     require(every >= 1, s"compact-every threshold must be >= 1, got $every")
@@ -707,16 +678,22 @@ object BucketedOps {
       // (ADVICE_r16 #2). The constant-jobId abuser sees false every day —
       // a signal, not a silent success; accumulated generations compact
       // under the next fresh (e.g. date-stamped) jobId.
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(new org.apache.hadoop.fs.Path(loc,
-          s"_graft_compact_$jobId.commit")))
+      val (fs, loc) = rootOf(s, tableMeta(s, table))
+      if (fs.exists(new Path(loc, s"_graft_compact_$jobId.commit")))
         return false
     }
     if (due) compactManifest(s, table, key, buckets, jobId, resolve)
     due
+  }
+
+  /** One swap family's promote and commit markers in a table root, each
+    * paired with its jobId, in listing order. */
+  private def swapMarkers(fs: FileSystem, loc: Path, family: String)
+      : (Seq[(String, FileStatus)], Seq[(String, FileStatus)]) = {
+    def byJob(suffix: String) =
+      fs.globStatus(new Path(loc, s"_graft_${family}_*$suffix")).toSeq.map(st =>
+        st.getPath.getName.stripPrefix(s"_graft_${family}_").stripSuffix(suffix) -> st)
+    (byJob(".promote"), byJob(".commit"))
   }
 
   /** FAMILY-QUALIFIED ids (`compact:<jobId>` / `migrate:<jobId>`) of swaps
@@ -728,18 +705,12 @@ object BucketedOps {
     * never be satisfied by the WRONG operator — compactManifest replaying
     * over a torn migrate root would resolve the double-count into a new
     * generation and launder it). */
-  private def orphanCompactions(fs: org.apache.hadoop.fs.FileSystem,
-      loc: org.apache.hadoop.fs.Path): Seq[String] = {
-    def jobs(glob: String, pre: String, suf: String): Set[String] =
-      fs.globStatus(new org.apache.hadoop.fs.Path(loc, glob))
-        .map(_.getPath.getName.stripPrefix(pre).stripSuffix(suf)).toSet
-    def orphansOf(kind: String): Seq[String] = {
-      val promoted = jobs(s"_graft_${kind}_*.promote", s"_graft_${kind}_", ".promote")
-      val committed = jobs(s"_graft_${kind}_*.commit", s"_graft_${kind}_", ".commit")
-      (promoted -- committed).toSeq.map(j => s"$kind:$j")
-    }
-    (orphansOf("compact") ++ orphansOf("migrate")).sorted
-  }
+  private def orphanCompactions(fs: FileSystem, loc: Path): Seq[String] =
+    SwapFamilies.flatMap { family =>
+      val (promotes, commits) = swapMarkers(fs, loc, family)
+      val committed = commits.map(_._1).toSet
+      promotes.map(_._1).filterNot(committed).map(j => s"$family:$j")
+    }.sorted
 
   /** ORPHAN-COMPACTION GUARD (round-14 verdict, what's-missing #1 /
     * next-round ask #2) — refuse to touch a maintained table whose root
@@ -762,8 +733,7 @@ object BucketedOps {
     * the same operator family may claim the exemption, so a compaction
     * can never "replay" a torn migration (or vice versa) and launder the
     * mixed root into a committed generation. */
-  def assertNoOrphanCompaction(fs: org.apache.hadoop.fs.FileSystem,
-      loc: org.apache.hadoop.fs.Path, table: String,
+  def assertNoOrphanCompaction(fs: FileSystem, loc: Path, table: String,
       exceptJobId: Option[String] = None): Unit = {
     val orphans = orphanCompactions(fs, loc).filterNot(exceptJobId.contains)
     if (orphans.nonEmpty)
@@ -792,7 +762,7 @@ object BucketedOps {
     * day's reads); a deployment that cannot promise it must take the
     * writer lease around read-then-persist sections, or re-run this check
     * after the action that materializes the result. */
-  def readMaintained(s: org.apache.spark.sql.SparkSession, table: String): DataFrame = {
+  def readMaintained(s: SparkSession, table: String): DataFrame = {
     assertNoOrphanCompaction(s, table, None)
     s.table(table)
   }
@@ -801,13 +771,10 @@ object BucketedOps {
     * location and filesystem from the catalog — the shape every
     * entry-point guard needs (closeDay, stream opens), so callers don't
     * each re-inline the catalog lookup. */
-  def assertNoOrphanCompaction(s: org.apache.spark.sql.SparkSession,
+  def assertNoOrphanCompaction(s: SparkSession,
       table: String, exceptJobId: Option[String]): Unit = {
-    val loc = new org.apache.hadoop.fs.Path(
-      s.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
-    assertNoOrphanCompaction(loc.getFileSystem(s.sparkContext.hadoopConfiguration),
-      loc, table, exceptJobId)
+    val (fs, loc) = rootOf(s, tableMeta(s, table))
+    assertNoOrphanCompaction(fs, loc, table, exceptJobId)
   }
 
   /** Retention GC for [[idempotentAppend]]'s bookkeeping — the markers
@@ -833,48 +800,33 @@ object BucketedOps {
     * rare post-horizon replay. Runs under the writer lease (a marker
     * must not vanish mid-append-check). Returns the number of entries
     * removed. */
-  def vacuumAppendMarkers(s: org.apache.spark.sql.SparkSession, table: String,
+  def vacuumAppendMarkers(s: SparkSession, table: String,
       horizonMs: Long, onEntryRemoved: Int => Unit = _ => ()): Int = {
-    val loc = new org.apache.hadoop.fs.Path(
-      s.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    graft.streaming.UpsertSink.withWriterLease(fs, loc) {
+    val (fs, loc) = rootOf(s, tableMeta(s, table))
+    UpsertSink.withWriterLease(fs, loc) {
       val cutoff = System.currentTimeMillis() - horizonMs
-      val markers = fs.globStatus(
-        new org.apache.hadoop.fs.Path(loc, "_graft_append_*.commit"))
-      val stages = fs.globStatus(
-        new org.apache.hadoop.fs.Path(loc, "_graft_append_stage_*"))
-      // [[compactManifest]] bookkeeping: its commit markers age out like
-      // append markers, but a PROMOTE marker without its commit pins an
-      // UNFINISHED swap — deleting it would make a later same-jobId
-      // replay restage from the torn root instead of resuming phase B,
-      // so promote markers (and their stage dirs) are only vacuumed once
-      // the matching commit exists. Phase-A stage debris (no promote
-      // marker) is safely re-derivable and ages out too.
-      def glob(p: String) =
-        fs.globStatus(new org.apache.hadoop.fs.Path(loc, p))
-      def cJob(name: String, pre: String, suf: String) =
-        name.stripPrefix(pre).stripSuffix(suf)
-      // the same promote/commit discipline holds for both swap families
-      // (compact and migrate): commits age out; a promote without its
-      // commit pins an unfinished swap and is never vacuumed
-      def swapFamily(kind: String): Array[org.apache.hadoop.fs.FileStatus] = {
-        val commits = glob(s"_graft_${kind}_*.commit")
-        val committed = commits.map(st =>
-          cJob(st.getPath.getName, s"_graft_${kind}_", ".commit")).toSet
-        val promotes = glob(s"_graft_${kind}_*.promote")
-          .filter(st => committed(cJob(st.getPath.getName, s"_graft_${kind}_", ".promote")))
-        val sDirs = glob(s"_graft_${kind}_stage_*").filter { st =>
-          val j = cJob(st.getPath.getName, s"_graft_${kind}_stage_", "")
-          committed(j) || !fs.exists(new org.apache.hadoop.fs.Path(loc,
-            s"_graft_${kind}_$j.promote"))
+      def glob(p: String) = fs.globStatus(new Path(loc, p))
+      // The generation swaps' bookkeeping, per family (compact and
+      // migrate): commit markers age out like append markers, but a
+      // PROMOTE marker without its commit pins an UNFINISHED swap —
+      // deleting it would make a later same-jobId replay restage from the
+      // torn root instead of resuming phase B, so promote markers (and
+      // their stage dirs) are only vacuumed once the matching commit
+      // exists. Phase-A stage debris (no promote marker) is safely
+      // re-derivable and ages out too.
+      def swapFamily(family: String): Seq[FileStatus] = {
+        val (promotes, commits) = swapMarkers(fs, loc, family)
+        val committed = commits.map(_._1).toSet
+        val promoted = promotes.map(_._1).toSet
+        val sDirs = glob(s"_graft_${family}_stage_*").filter { st =>
+          val j = st.getPath.getName.stripPrefix(s"_graft_${family}_stage_")
+          committed(j) || !promoted(j)
         }
-        commits ++ promotes ++ sDirs
+        commits.map(_._2) ++ promotes.collect { case (j, st) if committed(j) => st } ++ sDirs
       }
-      val tmpDebris = glob("_graft_*_*.promote.tmp") // phase-A write debris
-      val dead = (markers ++ stages ++ tmpDebris ++
-          swapFamily("compact") ++ swapFamily("migrate"))
+      val dead = (glob("_graft_append_*.commit") ++ glob("_graft_append_stage_*") ++
+          glob("_graft_*_*.promote.tmp") ++ // phase-A write debris
+          SwapFamilies.flatMap(swapFamily))
         .filter(_.getModificationTime < cutoff)
       // ORDER MATTERS: a crash mid-vacuum must never manufacture an
       // orphan (promote without commit) — the guard would then refuse the
@@ -908,7 +860,7 @@ object BucketedOps {
     * buckets, compaction rewrites each bucket INDEPENDENTLY (no shuffle,
     * per-task memory = one bucket's keys), and every consumer joins the
     * compacted state shuffle-free. */
-  def compactChangelog(s: org.apache.spark.sql.SparkSession, changelogTable: String,
+  def compactChangelog(s: SparkSession, changelogTable: String,
       key: String, payloadCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._
     s.table(changelogTable)
@@ -940,7 +892,7 @@ object BucketedOps {
     * filter are both bucket-local), per-task memory = one bucket's keys —
     * and the output is again a valid changelog, re-landable into the same
     * bucketed layout. */
-  def vacuumChangelog(s: org.apache.spark.sql.SparkSession, changelogTable: String,
+  def vacuumChangelog(s: SparkSession, changelogTable: String,
       key: String, payloadCols: Seq[String], horizonOffset: Long): DataFrame = {
     import org.apache.spark.sql.functions._
     val cl = s.table(changelogTable)

@@ -624,57 +624,8 @@ object DataQueries {
     // only ever DECREASE: the current label of any doc is min(cluster_id)
     // over its spooled rows, so the drained state must hash-match the
     // one-shot batch q115 — same oracle, two execution shapes.
-    "q123_stream_cluster_maintenance" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val (atbl, itbl) = ensureClusterState(s, dir)
-      // open the day through the PRODUCTION entry point (round-16 verdict
-      // ask #7): openDay = readMaintained on both stored tables, so the
-      // orphan-compaction guard runs at stream START under this gate, not
-      // only in StreamEntryGuardSpec. Static sides read once and persisted
-      // (the q108 lesson: an inline static side re-executes per micro-batch)
-      val (dayIdx, dayAssign) =
-        graft.streaming.ClusterMaintenanceStream.openDay(s, itbl, atbl)
-      val priorIdx = dayIdx.persist()
-      val priorAssign = dayAssign.persist()
-      priorIdx.count(); priorAssign.count()
-      val st = StreamFixtures.arm(q123Stage(s, dir))
-      val schema = s.read.parquet(st.in).schema
-      // the per-batch graphs are tiny — 32-partition shuffles would be
-      // pure task overhead across the star-contraction rounds; the
-      // override rides in the stream's own session (batch.sparkSession
-      // inside processBatch is a clone of it), never the shared one
-      val ss = StreamFixtures.streamSession(s, parts = 8)
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2").parquet(st.in)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q123_")
-      val spoolIdx = tmp.resolve("idx").toString
-      val spoolDelta = tmp.resolve("delta").toString
-      // materialize the drained delta to a SMALL result dir so the big
-      // per-invocation tree (spools + checkpoint + every micro-batch's
-      // parquet) can be deleted NOW — a settled battery re-runs this gate
-      // dozens of times and deleteOnExit would hoard it all JVM-long.
-      // The delete runs in a finally: an exception mid-stream must not
-      // leak the tree for the JVM's lifetime either (the snapshot below
-      // materializes to its OWN dir before tmp goes).
-      val out = try {
-        val q = stream.writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            graft.streaming.ClusterMaintenanceStream.processBatch(
-              batch, batchId, priorIdx, priorAssign, spoolIdx, spoolDelta)
-          }
-          .option("checkpointLocation", tmp.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        Fixtures.snapshot(s,
-          graft.streaming.ClusterMaintenanceStream.finalDelta(
-            s, priorAssign, spoolDelta, s.read.parquet(st.in)),
-          "q123_out")
-      } finally {
-        priorIdx.unpersist(); priorAssign.unpersist()
-        deleteRecursively(tmp)
-      }
-      out.orderBy("doc_id")
-    }),
+    "q123_stream_cluster_maintenance" -> ((s, dir) =>
+      streamClusterDay(s, dir, ensureClusterState(s, dir), q123Stage(s, dir), "q123")),
 
     // DAY-3 TF-IDF ON THE APPEND-MAINTAINED DF MANIFEST — day 2's job
     // appended its per-term df rows into the manifest buckets
@@ -774,39 +725,8 @@ object DataQueries {
     // walks over all three days vs days 1–2 (q119's generator — one
     // closed form, now THREE execution shapes: batch append q119,
     // grow-forever stream q123+q119's day-3, and this fold loop).
-    "q129_stream_fold_clusters" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val (atbl, itbl) = ensureStreamFoldedClusterState(s, dir)
-      val priorIdx = mt(s, itbl).persist()
-      val priorAssign = mt(s, atbl).persist()
-      priorIdx.count(); priorAssign.count()
-      val st = StreamFixtures.arm(q129Stage(s, dir))
-      val schema = s.read.parquet(st.in).schema
-      val ss = StreamFixtures.streamSession(s, parts = 8)
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2").parquet(st.in)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q129_")
-      val out = try {
-        val spoolIdx = tmp.resolve("idx").toString
-        val spoolDelta = tmp.resolve("delta").toString
-        val q = stream.writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            graft.streaming.ClusterMaintenanceStream.processBatch(
-              batch, batchId, priorIdx, priorAssign, spoolIdx, spoolDelta)
-          }
-          .option("checkpointLocation", tmp.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        Fixtures.snapshot(s,
-          graft.streaming.ClusterMaintenanceStream.finalDelta(
-            s, priorAssign, spoolDelta, s.read.parquet(st.in)),
-          "q129_out")
-      } finally {
-        priorIdx.unpersist(); priorAssign.unpersist()
-        deleteRecursively(tmp)
-      }
-      out.orderBy("doc_id")
-    }),
+    "q129_stream_fold_clusters" -> ((s, dir) =>
+      streamClusterDay(s, dir, ensureStreamFoldedClusterState(s, dir), q129Stage(s, dir), "q129")),
 
     // STREAM → FOLD → POLICY-TRIGGERED COMPACTION → NEXT-DAY STREAM
     // (round-14 verdict ask #3, the q129 × q133 composition): identical
@@ -817,39 +737,8 @@ object DataQueries {
     // proves the lifecycle's own cadence bounds the generation growth).
     // Day 3 streams against the policy-compacted tables and must land on
     // q119's closed form — the FIFTH execution shape on one oracle.
-    "q136_cadenced_maintenance" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val (atbl, itbl) = ensureCadencedClusterState(s, dir)
-      val priorIdx = mt(s, itbl).persist()
-      val priorAssign = mt(s, atbl).persist()
-      priorIdx.count(); priorAssign.count()
-      val st = StreamFixtures.arm(q129Stage(s, dir))
-      val schema = s.read.parquet(st.in).schema
-      val ss = StreamFixtures.streamSession(s, parts = 8)
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2").parquet(st.in)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q136_")
-      val out = try {
-        val spoolIdx = tmp.resolve("idx").toString
-        val spoolDelta = tmp.resolve("delta").toString
-        val q = stream.writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            graft.streaming.ClusterMaintenanceStream.processBatch(
-              batch, batchId, priorIdx, priorAssign, spoolIdx, spoolDelta)
-          }
-          .option("checkpointLocation", tmp.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        Fixtures.snapshot(s,
-          graft.streaming.ClusterMaintenanceStream.finalDelta(
-            s, priorAssign, spoolDelta, s.read.parquet(st.in)),
-          "q136_out")
-      } finally {
-        priorIdx.unpersist(); priorAssign.unpersist()
-        deleteRecursively(tmp)
-      }
-      out.orderBy("doc_id")
-    }),
+    "q136_cadenced_maintenance" -> ((s, dir) =>
+      streamClusterDay(s, dir, ensureCadencedClusterState(s, dir), q129Stage(s, dir), "q136")),
 
     // STREAM → FOLD → NEXT-DAY SCORING, df family: day 2's crawl streamed
     // (q127's machinery), but instead of q127's grow-forever spool the day
@@ -2270,11 +2159,7 @@ object DataQueries {
       val delta = Fixtures.snapshot(s,
         incrementalClusterAssignments(s, dir).select("doc_id", "cluster_id"),
         "q119_delta")
-      val (atbl, itbl) = ensureClusterState(s, dir)
-      val atbl2 = graft.operators.BucketedOps.ensureBucketed(
-        s.table(atbl), s"q119_assign|$dir", "doc_id", buckets = 8)
-      val itbl2 = graft.operators.BucketedOps.ensureBucketed(
-        s.table(itbl), s"q119_shingles|$dir", "h", buckets = 8)
+      val (atbl2, itbl2) = copyClusterState(s, dir, "q119")
       graft.operators.BucketedOps.idempotentAppend(
         delta, atbl2, "doc_id", buckets = 8, jobId = "day2")
       // day-2 shingles derive from the source parquet (no table reads) —
@@ -2357,17 +2242,22 @@ object DataQueries {
       (centTbl, idx2)
     }
 
-  /** Shared day-2 doc-stream drain for the fold fixtures: streams `st`'s
-    * staged files (maxFilesPerTrigger so the day is genuinely multi-batch)
-    * through `perBatch` with shuffle partitions pinned low (per-batch
-    * work is small — 32-partition shuffles would be pure task overhead),
-    * then runs `afterDrain` (the day close) before the spool tree is
-    * deleted. Scaffolding shape shared by q129/q130/q131's PAST-day
-    * builders. */
-  private def drainDay2Stream(s: SparkSession, st: StreamFixtures.Stage,
+  /** Shared doc-stream drain for the stream-maintained gates and their
+    * fold fixtures: streams `st`'s staged files (maxFilesPerTrigger so the
+    * day is genuinely multi-batch) through `perBatch` with shuffle
+    * partitions pinned low (per-batch work is small — 32-partition shuffles
+    * would be pure task overhead; the override rides in the stream's own
+    * session, which `batch.sparkSession` clones, never the shared one),
+    * then returns `afterDrain` (the day close, or a snapshot of the day's
+    * result) before the per-invocation tree (spools + checkpoint + every
+    * micro-batch's parquet) is deleted. The delete runs in a finally: a
+    * settled battery re-runs these gates dozens of times, and neither
+    * deleteOnExit nor an exception mid-stream may hoard the tree
+    * JVM-long. */
+  private def drainStream[T](s: SparkSession, st: StreamFixtures.Stage,
       filesPerTrigger: Int, tag: String)(
       perBatch: (DataFrame, Long, java.nio.file.Path) => Unit)(
-      afterDrain: java.nio.file.Path => Unit): Unit = {
+      afterDrain: java.nio.file.Path => T): T = {
     import org.apache.spark.sql.streaming.Trigger
     val schema = s.read.parquet(st.in).schema
     val ss = StreamFixtures.streamSession(s, parts = 8)
@@ -2386,27 +2276,57 @@ object DataQueries {
     } finally deleteRecursively(tmp)
   }
 
-  /** q129's stored state — [[ensureClusterState]]'s day-1 tables COPIED
-    * and then maintained by the STREAMED day-2 job + DAY CLOSE: day 2
-    * arrives as a multi-batch stream (q123's processBatch spooling per
-    * batch), and ClusterMaintenanceStream.closeDay folds both spools into
-    * the table copies via idempotentAppend and clears them. The folded
-    * tables are q129's day-3 prior state — the batch twin is
-    * [[ensureDay2ClusterState]] (same resolution, different write path),
-    * which is why the two days' gates share one oracle. */
+  /** Fresh copies of [[ensureClusterState]]'s day-1 (assignment, shingle)
+    * tables, bucketed like the originals, one pair per `tag` (`q119`,
+    * `q129`, …): each gate's fixture appends to or compacts only its own
+    * copies — a compaction of a shared copy would rewrite another gate's
+    * state, which the oracle cannot see because compaction leaves
+    * resolution unchanged. */
+  private def copyClusterState(s: SparkSession, dir: String, tag: String): (String, String) = {
+    val (atbl, itbl) = ensureClusterState(s, dir)
+    (graft.operators.BucketedOps.ensureBucketed(
+      s.table(atbl), s"${tag}_assign|$dir", "doc_id", buckets = 8),
+      graft.operators.BucketedOps.ensureBucketed(
+        s.table(itbl), s"${tag}_shingles|$dir", "h", buckets = 8))
+  }
+
+  /** q129's stored state: [[streamFoldedClusterState]], no compaction cadence. */
   private[graft] def ensureStreamFoldedClusterState(s: SparkSession, dir: String): (String, String) =
-    Fixtures.oncePerSession(s, s"q129_state|$dir") {
-      val (atbl, itbl) = ensureClusterState(s, dir)
-      val atbl2 = graft.operators.BucketedOps.ensureBucketed(
-        s.table(atbl), s"q129_assign|$dir", "doc_id", buckets = 8)
-      val itbl2 = graft.operators.BucketedOps.ensureBucketed(
-        s.table(itbl), s"q129_shingles|$dir", "h", buckets = 8)
+    streamFoldedClusterState(s, dir, "q129", compactEvery = None)
+
+  /** q136's stored state — [[ensureStreamFoldedClusterState]]'s lifecycle
+    * with the day close's COMPACTION CADENCE armed (round-14 verdict,
+    * what's-missing #3): `closeDay` runs with
+    * `compactEveryGenerations = 1` — the fold lands one append generation
+    * per table, the policy sees the threshold crossed and runs
+    * `compactManifest` on both (min per doc / distinct index rows) before
+    * the marker vacuum. Day 3 then reads tables whose every row survived
+    * fold → append → policy-triggered resolve+rewrite+swap. The
+    * choreography is what q136 adds over q129 (manual lifecycle) and q133
+    * (manual compaction): NOTHING here calls compactManifest by hand —
+    * the running system's own day close bounds the generation growth. */
+  private[graft] def ensureCadencedClusterState(s: SparkSession, dir: String): (String, String) =
+    streamFoldedClusterState(s, dir, "q136", compactEvery = Some(1))
+
+  /** [[ensureClusterState]]'s day-1 tables COPIED (per `tag`) and then
+    * maintained by the STREAMED day-2 job + DAY CLOSE: day 2 arrives as a
+    * multi-batch stream (q123's processBatch spooling per batch), and
+    * ClusterMaintenanceStream.closeDay folds both spools into the table
+    * copies via idempotentAppend and clears them, compacting them when
+    * `compactEvery` is set. The folded tables are the gate's day-3 prior
+    * state — the batch twin is [[ensureDay2ClusterState]] (same
+    * resolution, different write path), which is why the days' gates
+    * share one oracle. */
+  private def streamFoldedClusterState(s: SparkSession, dir: String, tag: String,
+      compactEvery: Option[Int]): (String, String) =
+    Fixtures.oncePerSession(s, s"${tag}_state|$dir") {
+      val (atbl2, itbl2) = copyClusterState(s, dir, tag)
       val priorIdx = s.table(itbl2).persist()
       val priorAssign = s.table(atbl2).persist()
       priorIdx.count(); priorAssign.count()
       try {
-        drainDay2Stream(s, StreamFixtures.arm(q123Stage(s, dir)),
-          filesPerTrigger = 4, tag = "q129d2") { (batch, batchId, tmp) =>
+        drainStream(s, StreamFixtures.arm(q123Stage(s, dir)),
+          filesPerTrigger = 4, tag = s"${tag}d2") { (batch, batchId, tmp) =>
           graft.streaming.ClusterMaintenanceStream.processBatch(
             batch, batchId, priorIdx, priorAssign,
             tmp.resolve("idx").toString, tmp.resolve("delta").toString)
@@ -2418,58 +2338,52 @@ object DataQueries {
           graft.streaming.ClusterMaintenanceStream.closeDay(s,
             tmp.resolve("idx").toString, tmp.resolve("delta").toString,
             itbl2, atbl2, idxBuckets = 8, assignBuckets = 8, jobId = "day2",
-            vacuumHorizonMs = Some(7L * 24 * 3600 * 1000))
-        }
-      } finally { priorIdx.unpersist(); priorAssign.unpersist(); () }
-      (atbl2, itbl2)
-    }
-
-  /** q136's stored state — [[ensureStreamFoldedClusterState]]'s lifecycle
-    * with the day close's COMPACTION CADENCE armed (round-14 verdict,
-    * what's-missing #3): fresh copies of the day-1 tables, day 2 streamed
-    * (q123's processBatch spooling per batch), then `closeDay` with
-    * `compactEveryGenerations = 1` — the fold lands one append generation
-    * per table, the policy sees the threshold crossed and runs
-    * `compactManifest` on both (min per doc / distinct index rows) before
-    * the marker vacuum. Day 3 then reads tables whose every row survived
-    * fold → append → policy-triggered resolve+rewrite+swap. The
-    * choreography is what q136 adds over q129 (manual lifecycle) and q133
-    * (manual compaction): NOTHING here calls compactManifest by hand —
-    * the running system's own day close bounds the generation growth. */
-  private[graft] def ensureCadencedClusterState(s: SparkSession, dir: String): (String, String) =
-    Fixtures.oncePerSession(s, s"q136_state|$dir") {
-      val (atbl, itbl) = ensureClusterState(s, dir)
-      val atbl2 = graft.operators.BucketedOps.ensureBucketed(
-        s.table(atbl), s"q136_assign|$dir", "doc_id", buckets = 8)
-      val itbl2 = graft.operators.BucketedOps.ensureBucketed(
-        s.table(itbl), s"q136_shingles|$dir", "h", buckets = 8)
-      val priorIdx = s.table(itbl2).persist()
-      val priorAssign = s.table(atbl2).persist()
-      priorIdx.count(); priorAssign.count()
-      try {
-        drainDay2Stream(s, StreamFixtures.arm(q123Stage(s, dir)),
-          filesPerTrigger = 4, tag = "q136d2") { (batch, batchId, tmp) =>
-          graft.streaming.ClusterMaintenanceStream.processBatch(
-            batch, batchId, priorIdx, priorAssign,
-            tmp.resolve("idx").toString, tmp.resolve("delta").toString)
-        } { tmp =>
-          graft.streaming.ClusterMaintenanceStream.closeDay(s,
-            tmp.resolve("idx").toString, tmp.resolve("delta").toString,
-            itbl2, atbl2, idxBuckets = 8, assignBuckets = 8, jobId = "day2",
             vacuumHorizonMs = Some(7L * 24 * 3600 * 1000),
-            compactEveryGenerations = Some(1))
+            compactEveryGenerations = compactEvery)
         }
       } finally { priorIdx.unpersist(); priorAssign.unpersist(); () }
-      // the policy must actually have compacted: one generation stored,
-      // zero appends outstanding (a silently-skipped compaction would
-      // still pass the oracle — resolution is unchanged by design — so
-      // the fixture asserts the swap happened)
-      Seq(atbl2, itbl2).foreach { tbl =>
+      // an armed policy must actually have compacted: one generation
+      // stored, zero appends outstanding (a silently-skipped compaction
+      // would still pass the oracle — resolution is unchanged by design —
+      // so the fixture asserts the swap happened)
+      if (compactEvery.isDefined) Seq(atbl2, itbl2).foreach { tbl =>
         require(graft.operators.BucketedOps.appendGenerations(s, tbl) == 0,
           s"cadence policy did not compact $tbl")
       }
       (atbl2, itbl2)
     }
+
+  /** One streamed cluster-maintenance day (q123's day 2; q129's and
+    * q136's day 3): stream `stage` through q123's processBatch against
+    * `state`, the stored (assignment, shingle) tables, and return the
+    * day's final assignment delta. */
+  private def streamClusterDay(s: SparkSession, dir: String, state: (String, String),
+      stage: StreamFixtures.Stage, tag: String): DataFrame = {
+    val (atbl, itbl) = state
+    // open the day through the PRODUCTION entry point (round-16 verdict
+    // ask #7): openDay = readMaintained on both stored tables, so the
+    // orphan-compaction guard runs at stream START under these gates, not
+    // only in StreamEntryGuardSpec. Static sides read once and persisted
+    // (the q108 lesson: an inline static side re-executes per micro-batch)
+    val (dayIdx, dayAssign) =
+      graft.streaming.ClusterMaintenanceStream.openDay(s, itbl, atbl)
+    val priorIdx = dayIdx.persist()
+    val priorAssign = dayAssign.persist()
+    priorIdx.count(); priorAssign.count()
+    val st = StreamFixtures.arm(stage)
+    // the drained delta materializes to a SMALL result dir of its own, so
+    // the stream's tree can go as soon as the drain returns
+    val out = try drainStream(s, st, filesPerTrigger = 2, tag) { (batch, batchId, tmp) =>
+      graft.streaming.ClusterMaintenanceStream.processBatch(batch, batchId,
+        priorIdx, priorAssign, tmp.resolve("idx").toString, tmp.resolve("delta").toString)
+    } { tmp =>
+      Fixtures.snapshot(s,
+        graft.streaming.ClusterMaintenanceStream.finalDelta(
+          s, priorAssign, tmp.resolve("delta").toString, s.read.parquet(st.in)),
+        s"${tag}_out")
+    } finally { priorIdx.unpersist(); priorAssign.unpersist(); () }
+    out.orderBy("doc_id")
+  }
 
   /** q130's stored state — [[ensureDfManifest]]'s (term, df) table COPIED
     * and maintained by the STREAMED day-2 job + DAY CLOSE: per-batch
@@ -2483,7 +2397,7 @@ object DataQueries {
       val tbl2 = graft.operators.BucketedOps.ensureBucketed(
         s.table(tbl), s"q130_df|$dir", "term", buckets = 8)
       val st = StreamFixtures.arm(q127Stage(s, dir))
-      drainDay2Stream(s, st, filesPerTrigger = 4, tag = "q130d2") {
+      drainStream(s, st, filesPerTrigger = 4, tag = "q130d2") {
         (batch, batchId, tmp) =>
           if (!batch.isEmpty)
             graft.operators.TfIdf.dfManifest(batch, "doc_id", "text")
@@ -2513,7 +2427,7 @@ object DataQueries {
         graft.operators.TextStats.bigramManifest(
           docs.filter(col("doc_id") % 3 =!= 2), "doc_id", "text"),
         s"q131_bg|$dir", "bg", buckets = 8)
-      drainDay2Stream(s, StreamFixtures.arm(q127Stage(s, dir)),
+      drainStream(s, StreamFixtures.arm(q127Stage(s, dir)),
         filesPerTrigger = 4, tag = "q131d2") { (batch, batchId, tmp) =>
         if (!batch.isEmpty)
           graft.operators.TextStats.bigramManifest(batch, "doc_id", "text")
@@ -2560,11 +2474,7 @@ object DataQueries {
         s.table(htbl0), s"q132_hashes|$dir", "h", buckets = 8)
       val btbl = graft.operators.BucketedOps.ensureBucketed(
         s.table(btbl0), s"q132_bands|$dir", "bhv", buckets = 8)
-      val (atbl0, itbl0) = ensureClusterState(s, dir)
-      val atbl = graft.operators.BucketedOps.ensureBucketed(
-        s.table(atbl0), s"q132_assign|$dir", "doc_id", buckets = 8)
-      val itbl = graft.operators.BucketedOps.ensureBucketed(
-        s.table(itbl0), s"q132_shingles|$dir", "h", buckets = 8)
+      val (atbl, itbl) = copyClusterState(s, dir, "q132")
       val stage = java.nio.file.Files.createTempDirectory("graft_q132_stage_")
       try {
         val d2 = day2CurationCrawl(s, dir)
@@ -2629,11 +2539,7 @@ object DataQueries {
       val delta = Fixtures.snapshot(s,
         incrementalClusterAssignments(s, dir).select("doc_id", "cluster_id"),
         "q133_delta")
-      val (atbl, itbl) = ensureClusterState(s, dir)
-      val atbl2 = graft.operators.BucketedOps.ensureBucketed(
-        s.table(atbl), s"q133_assign|$dir", "doc_id", buckets = 8)
-      val itbl2 = graft.operators.BucketedOps.ensureBucketed(
-        s.table(itbl), s"q133_shingles|$dir", "h", buckets = 8)
+      val (atbl2, itbl2) = copyClusterState(s, dir, "q133")
       def compactBoth(jobId: String): Unit = {
         graft.operators.BucketedOps.compactManifest(s, atbl2, "doc_id",
           buckets = 8, jobId = jobId,
@@ -2749,11 +2655,7 @@ object DataQueries {
     * cosmetic. */
   private[graft] def ensureDocPurgedClusterState(s: SparkSession, dir: String): (String, String) =
     Fixtures.oncePerSession(s, s"q137_state|$dir") {
-      val (atbl0, itbl0) = ensureClusterState(s, dir)
-      val atbl = graft.operators.BucketedOps.ensureBucketed(
-        s.table(atbl0), s"q137_assign|$dir", "doc_id", buckets = 8)
-      val itbl = graft.operators.BucketedOps.ensureBucketed(
-        s.table(itbl0), s"q137_shingles|$dir", "h", buckets = 8)
+      val (atbl, itbl) = copyClusterState(s, dir, "q137")
       val tomb = clusterTombstoneSet(s, dir)
       graft.operators.BucketedOps.compactManifest(s, atbl, "doc_id",
         buckets = 8, jobId = "tomb1",

@@ -35,12 +35,11 @@ trait WriterLease {
   * (op_offset, after-image-wins); deletes persist as TOMBSTONE rows
   * (filtered by [[readState]], purged by [[compact]]) so a delete keeps
   * winning against lower-offset events arriving in later batches. Only
-  * buckets that
-  * contain a touched key are read and rewritten — untouched bucket files
-  * are never opened, so per-batch I/O is O(touched state), not O(state).
-  * That is the difference between a demo sink and one whose 100 TB state
-  * survives a steady trickle of updates: a batch touching keys in 3 of
-  * 1024 buckets reads and rewrites ~0.3% of the snapshot.
+  * buckets that contain a touched key are read and rewritten, which helps
+  * only SKEWED batches: a batch touching keys in 3 of 1024 buckets reads
+  * and rewrites ~0.3% of the snapshot. With uniform keys every batch of
+  * more than a few keys touches every bucket (`cdcbench` `snapshot_load`:
+  * 32 of 32 per batch), so each merge reads and rewrites the whole state.
   *
   * The merge is a pure function of (previous bucket state ∪ batch), so
   * REPLAYING a batch after a failure re-derives the identical snapshot —
@@ -249,20 +248,7 @@ object UpsertSink {
       }
     }
 
-    // Hadoop FileSystem#rename reports failure by returning false; treating
-    // that as success and proceeding to the deletes would destroy the only
-    // complete copy of a bucket.
-    val old = new Path(target, "_old")
-    fs.mkdirs(old)
-    staged.toSeq.sorted.foreach { i =>
-      val liveDir = new Path(target, s"$BucketCol=$i")
-      val aside = new Path(old, s"$BucketCol=$i")
-      if (fs.exists(aside)) fs.delete(aside, true)
-      if (live(i)) renameOrDie(fs, liveDir, aside)
-      renameOrDie(fs, new Path(tmp, s"$BucketCol=$i"), liveDir)
-      fs.delete(aside, true)
-    }
-    fs.delete(tmp, true)
+    swapBuckets(fs, target, tmp, staged)
     }
     } finally { if (doPersist) batch0.unpersist(); () }
     }
@@ -317,23 +303,13 @@ object UpsertSink {
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     withWriterLease(fs, target) {
     recover(spark, path)
-    val bucketDirs = bucketIds(fs, target).toSeq.sorted.map(i => new Path(target, s"$BucketCol=$i"))
-    if (bucketDirs.nonEmpty) {
+    val live = bucketIds(fs, target)
+    if (live.nonEmpty) {
     val tmp = new Path(target, "_tmp")
     // partition discovery supplies __gb; live rows rewrite, tombstones drop
     spark.read.parquet(path).filter(col("op") =!= "d")
       .write.mode("overwrite").partitionBy(BucketCol).parquet(tmp.toString)
-    val old = new Path(target, "_old")
-    fs.mkdirs(old)
-    bucketDirs.foreach { live =>
-      val staged = new Path(tmp, live.getName)
-      val aside = new Path(old, live.getName)
-      if (fs.exists(aside)) fs.delete(aside, true)
-      renameOrDie(fs, live, aside)
-      if (fs.exists(staged)) renameOrDie(fs, staged, live)
-      fs.delete(aside, true)
-    }
-    fs.delete(tmp, true)
+    swapBuckets(fs, target, tmp, live)
     }
     }
   }
@@ -439,13 +415,14 @@ object UpsertSink {
     def withLease[T](fs: FileSystem, target: Path)(body: => T): T = {
     fs.mkdirs(target)
     val lock = new Path(target, "_graft_writer.lock")
+    def writeLock(overwrite: Boolean): Unit = {
+      val out = fs.create(lock, overwrite)
+      try out.write(java.util.UUID.randomUUID.toString.getBytes("UTF-8"))
+      finally out.close()
+    }
     def tryAcquire(): Boolean =
-      try {
-        val out = fs.create(lock, false)
-        try out.write(java.util.UUID.randomUUID.toString.getBytes("UTF-8"))
-        finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
+      try { writeLock(overwrite = false); true }
+      catch { case _: java.io.IOException => false }
     val acquired = tryAcquire() || {
       val status =
         try Some(fs.getFileStatus(lock))
@@ -481,11 +458,8 @@ object UpsertSink {
           // the lease looking stale mid-merge. A transient IOException must
           // not kill the refresher — retry at the next tick (the lease
           // stays fresh for a full TTL, so one missed beat is harmless).
-          try {
-            val out = fs.create(lock, true)
-            try out.write(java.util.UUID.randomUUID.toString.getBytes("UTF-8"))
-            finally out.close()
-          } catch { case _: java.io.IOException => () }
+          try writeLock(overwrite = true)
+          catch { case _: java.io.IOException => () }
         }
       } catch { case _: InterruptedException => () }
     }, s"graft-lease-refresh-$target")
@@ -521,6 +495,31 @@ object UpsertSink {
       if (!fs.exists(live)) renameOrDie(fs, st.getPath, live)
       else fs.delete(st.getPath, true) // swap completed; stale save-aside
     }
+  }
+
+  /** The per-bucket swap both writers commit through: for each bucket, drop
+    * a stale save-aside, move the live bucket aside to `_old/` if it
+    * exists, move the staged bucket in from `tmp` if it exists (a bucket
+    * [[compact]] left fully empty stages nothing and is removed), then drop
+    * the save-aside; finally clear `tmp`. A crash leaves each bucket either
+    * live or in `_old/`, which [[recover]] restores. Hadoop
+    * FileSystem#rename reports failure by returning false; treating that as
+    * success and proceeding to the deletes would destroy the only complete
+    * copy of a bucket, so every rename is [[renameOrDie]]. */
+  private def swapBuckets(fs: FileSystem, target: Path, tmp: Path, ids: Set[Int]): Unit = {
+    val old = new Path(target, "_old")
+    fs.mkdirs(old)
+    ids.toSeq.sorted.foreach { i =>
+      val name = s"$BucketCol=$i"
+      val liveDir = new Path(target, name)
+      val aside = new Path(old, name)
+      val staged = new Path(tmp, name)
+      if (fs.exists(aside)) fs.delete(aside, true)
+      if (fs.exists(liveDir)) renameOrDie(fs, liveDir, aside)
+      if (fs.exists(staged)) renameOrDie(fs, staged, liveDir)
+      fs.delete(aside, true)
+    }
+    fs.delete(tmp, true)
   }
 
   private def renameOrDie(fs: FileSystem, src: Path, dst: Path): Unit =
