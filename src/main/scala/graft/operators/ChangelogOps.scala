@@ -66,7 +66,7 @@ object ChangelogOps {
     *    sink that handles tombstones (`op === "d"`), or
     *  - skip the in-flight aggregation entirely and stream the raw
     *    changelog into [[graft.streaming.UpsertSink.upsertParquet]] +
-    *    `readState` — O(touched buckets) per batch, durable, idempotent
+    *    `readState` — O(batch) per merge, durable, idempotent
     *    on replay. That is the gated production path (q74/q78).
     */
   def materializeStreaming(changelog: DataFrame, pkCols: Seq[String]): DataFrame = {

@@ -121,8 +121,8 @@ object CdcQueries {
     }),
 
     // the SINK under the hash gate: the changelog streams through
-    // UpsertSink.upsertParquet (hash-bucketed parquet state, per-bucket
-    // crash-safe swaps) across several micro-batches; the on-disk state
+    // UpsertSink.upsertParquet (hash-bucketed parquet generations, one
+    // rename per commit) across several micro-batches; the on-disk state
     // table must hash-match the same closed-form oracle as q24. Sink
     // mechanics (bucketing, recovery, idempotent replay) are spec-tested
     // in UpsertSinkSpec; this pins its end-to-end merge arithmetic.
@@ -353,7 +353,7 @@ object CdcQueries {
     // the q78 sink machinery into the production shape: changelog →
     // signed retract aggregate → UPDATE mode → UpsertSink durable state.
     // Each micro-batch upserts only its CHANGED group rows (O(groups)
-    // emission, O(touched buckets) I/O — never a complete-mode rewrite);
+    // emission, O(batch) sink writes — never a complete-mode rewrite);
     // the final state table must hash-match the same closed-form oracle
     // as q25/q100. Complete-mode memory-sink q100 stays as the semantics
     // gate; THIS is what a 100 TB pipeline actually deploys.
@@ -373,7 +373,7 @@ object CdcQueries {
         // /3 spans (~4 batches), same rationale as q100: each group's
         // durable row is last-epoch-wins over a running total, so the
         // final state table is batch-count-invariant; fewer batches also
-        // mean fewer O(touched-bucket) sink merges for the same answer
+        // mean fewer sink merges for the same answer
         .option("scan.log.max-offsets-per-batch",
           math.max(1L, maxOff / 3).toString)
         .load()
@@ -411,7 +411,7 @@ object CdcQueries {
 
     // the source's STREAMING path under the gate: cdc-log micro-batches
     // (snapshot cohorts, then log batches) feed the PRODUCTION
-    // materialization shape — UpsertSink's hash-bucketed O(touched) merges
+    // materialization shape — UpsertSink's hash-bucketed O(batch) merges
     // — and the final state table must hash-match the same closed-form
     // oracle. Source → stream → durable state, end to end. (Round 6: was a
     // complete-output memory sink, which rewrites ALL state every

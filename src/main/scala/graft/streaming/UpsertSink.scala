@@ -1,9 +1,12 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import graft.operators.ChangelogOps
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.StructType
 
 /** SPI: an exclusive writer lease over a maintained table directory —
   * the seam that makes the lake's single-writer contract pluggable
@@ -27,59 +30,66 @@ trait WriterLease {
 /** Idempotent materialized-view sink for op-column changelog streams —
   * the missing half of "any Spark sink works": plain appends are fine for
   * the changelog itself, but consumers usually want the CURRENT STATE
-  * table, updated in place, surviving failures without duplicates.
+  * table, surviving failures without duplicates.
   *
-  * State is HASH-BUCKETED by primary key: the target directory holds
-  * `__gb=<i>` Hive-style partition subdirectories (i = murmur3(pk) mod B).
-  * Each micro-batch merges by primary key with last-writer-wins on
-  * (op_offset, after-image-wins); deletes persist as TOMBSTONE rows
-  * (filtered by [[readState]], purged by [[compact]]) so a delete keeps
-  * winning against lower-offset events arriving in later batches. Only
-  * buckets that contain a touched key are read and rewritten, which helps
-  * only SKEWED batches: a batch touching keys in 3 of 1024 buckets reads
-  * and rewrites ~0.3% of the snapshot. With uniform keys every batch of
-  * more than a few keys touches every bucket (`cdcbench` `snapshot_load`:
-  * 32 of 32 per batch), so each merge reads and rewrites the whole state.
+  * The state is an append-only sequence of GENERATIONS, directories
+  * `__gen=<n>` HASH-BUCKETED by primary key into `__gb=<i>` Hive-style
+  * subdirectories (i = murmur3(pk) mod B) of one file each. Each
+  * micro-batch commits one generation without reading the state (see
+  * [[mergeBatch]]). A FOLD is the only operation that rewrites state: it
+  * resolves the newest fold and every generation after it (the LIVE
+  * generations) into one generation marked `_graft_fold`, which
+  * supersedes every older one. [[readState]] resolves the live generations
+  * per key with the same last-wins function, so it is the ONLY reader: a
+  * plain `spark.read.parquet(path)` sees every generation, superseded ones
+  * and a key's older versions included.
   *
-  * The merge is a pure function of (previous bucket state ∪ batch), so
-  * REPLAYING a batch after a failure re-derives the identical snapshot —
-  * idempotence comes from the merge algebra, not from sink-side dedup
-  * bookkeeping. New bucket contents are written to a `_tmp` staging dir
-  * (one write job, `partitionBy` on the bucket id, buckets spread over
-  * parallel tasks, one file per bucket) and swapped in with two renames
-  * per touched bucket; a crash mid-swap leaves either the old or
-  * the new bucket (or its `_old/` save-aside), never a torn mix, and
-  * [[recover]] restores any bucket caught between its two renames.
+  * Idempotence comes from the last-wins algebra, not from sink-side dedup
+  * bookkeeping: a batch replayed after a failure commits rows that tie
+  * with or lose to what already won. A generation is staged in `_tmp` and
+  * committed by ONE directory rename, so a crash leaves it absent or
+  * whole; since readers skip superseded generations, retiring a fold's
+  * inputs is only garbage collection, finished by [[recover]] if a crash
+  * interrupts it. The key columns and the bucket count are part of the
+  * on-disk format (`_graft_key`, `_graft_buckets`), fixed by the first
+  * merge. Underscore-prefixed entries are invisible to Spark's listing.
   *
-  * Underscore-prefixed siblings (`_tmp/`, `_old/`, `_graft_buckets`) are
-  * invisible to Spark's file listing, so `spark.read.parquet(path)` on the
-  * target sees only committed bucket data (plus the `__gb` partition
-  * column — [[readState]] drops it).
-  *
-  * For petabyte state, swap the parquet rewrite for a MERGE INTO on a
+  * For petabyte state, swap the parquet generations for a MERGE INTO on a
   * table format with deletion vectors; the streaming contract here
-  * (foreachBatch + deterministic bucketed merge) stays identical.
+  * (foreachBatch + deterministic last-wins resolve) stays identical.
   *
   * ==Concurrency contract: SINGLE WRITER PER PATH==
   * [[mergeBatch]] and [[compact]] assume they are the only writer of the
   * target directory. Two concurrent writers (e.g. a compaction job racing
   * the streaming merge, or two streams pointed at one path) would
-  * interleave bucket swaps and `_tmp`/`_old` cleanup and tear the
-  * snapshot — each writer's [[recover]] deletes the OTHER's staging.
-  * The contract is enforced by an advisory writer LEASE
-  * (`_graft_writer.lock`, created atomically, held across each merge or
-  * compaction, released at the end): a second writer arriving while the
-  * lease is fresh fails fast with `ConcurrentModificationException`
-  * instead of corrupting state. A writer that crashed mid-merge leaves a
-  * stale lease; it self-heals after [[LeaseTtlMs]] (a merge holds the
-  * lease for seconds, so a fresh-looking lease really is a live writer).
-  * Run compaction from the stream's own foreachBatch
-  * (`compactEveryBatches`) — never as a side job against a live stream.
-  * Readers ([[readState]]) never take the lease: they see only committed
-  * bucket directories. */
+  * interleave generation commits and `_tmp` cleanup — each writer's
+  * [[recover]] deletes the OTHER's staging. The contract is enforced by an
+  * advisory writer LEASE (`_graft_writer.lock`, created atomically, held
+  * across each merge or compaction, released at the end): a second writer
+  * arriving while the lease is fresh fails fast with
+  * `ConcurrentModificationException` instead of corrupting state. A writer
+  * that crashed mid-merge leaves a stale lease; it self-heals after
+  * [[LeaseTtlMs]] (a merge holds the lease for seconds, so a fresh-looking
+  * lease really is a live writer). Run compaction from the stream's own
+  * foreachBatch (`compactEveryBatches`) — never as a side job against a
+  * live stream. Readers ([[readState]]) never take the lease: they see
+  * only committed generations. */
 object UpsertSink {
 
   private val BucketCol = "__gb"
+  private val GenCol = "__gen"
+  private val KeyFile = "_graft_key"
+  private val BucketsFile = "_graft_buckets"
+  private val FoldMarker = "_graft_fold"
+  private val GenDir = s"$GenCol=(\\d+)".r
+
+  /** Live generations a target holds before [[mergeBatch]] folds them.
+    * Measured on 4 cores, 24 merges of 4,000 uniform-key updates into
+    * 40,000 keys: summed merge time is flat from 8 up (14.5–17.7 s at 8,
+    * 17.2–21.3 s at 4), and the final readState grows with the count
+    * (0.50 s at 2, 0.75–0.85 s at 8, 1.55 s at 24 unfolded). */
+  private[graft] val FoldEvery = 8
+
   /** Default bucket count. Sized so a 100 GB state yields ~100 MB buckets;
     * for larger states pass a bigger `numBuckets` on first merge — the
     * count is persisted in `_graft_buckets` and reused thereafter (a
@@ -111,7 +121,7 @@ object UpsertSink {
   /** Wire an UPDATE-mode streaming AGGREGATE (not a changelog) to the same
     * durable state table — the production shape of a retract aggregate:
     * changelog → signed groupBy → durable state, with per-batch I/O
-    * O(touched groups). Update mode emits at most one row per CHANGED
+    * O(changed groups). Update mode emits at most one row per CHANGED
     * group per micro-batch, so sequencing by the batch epoch makes the
     * changelog merge algebra directly reusable: op columns are synthesized
     * (`op=u`, `op_offset=epoch`, `row_kind=+U`) and a later epoch's row
@@ -130,188 +140,150 @@ object UpsertSink {
           .withColumn("row_kind", lit("+U")), pkCols, path, numBuckets)
     }
 
-  /** Read the current-state table: tombstones filtered, sink-internal and
-    * changelog columns dropped. Runs [[recover]] first so a bucket caught
-    * between its two swap renames (rows only in `_old/`) is restored before
-    * the read — cheap no-op in the common case. */
+  /** Read the current-state table: the live generations resolved
+    * last-wins per key, tombstones filtered, sink-internal and changelog
+    * columns dropped. Never writes — superseded generations and an
+    * in-flight merge's `_tmp` staging are skipped, not cleaned. */
   def readState(spark: SparkSession, path: String): DataFrame = {
-    // restore buckets only — unlike full recover(), leave _tmp alone so a
-    // concurrent in-flight merge's staging write is never yanked from under it
-    restoreSaveAsides(spark, path)
-    spark.read.parquet(path).filter(col("op") =!= "d")
-      .drop("op", "op_offset", "row_kind", BucketCol)
+    val target = new Path(path)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val key = formatFile(fs, target, KeyFile,
+      throw new IllegalArgumentException(s"$target holds no UpsertSink state"))
+    lastWins(readGenerations(spark, target, live(fs, target)), key.split("\n").toSeq)
+      .filter(col("op") =!= "d").drop("op", "op_offset", "row_kind")
   }
 
-  /** One merge step: previous snapshot ∪ batch → last-wins state. Exposed
-    * for tests and for batch backfills (same algebra, no stream).
+  /** One merge step: the batch, resolved last-writer-wins per key on
+    * (op_offset, after-image-wins), is committed as the target's next
+    * generation. Exposed for tests and for batch backfills.
     *
-    * State rows keep their winning event's (op, op_offset, row_kind) —
-    * including DELETES as tombstone rows. Tombstones are what make the
-    * merge correct when events for a key arrive across batches out of
-    * offset order (a delete at offset 9 in batch N must defeat a create at
-    * offset 5 arriving in batch N+1): without them the delete's victory is
-    * forgotten the moment the row leaves the state file. [[readState]]
+    * Rows keep their winning event's (op, op_offset, row_kind) — DELETES
+    * as tombstone rows, so a delete at offset 9 in batch N still defeats a
+    * create at offset 5 arriving in batch N+1 after a fold. [[readState]]
     * filters them; [[compact]] purges them once the caller knows no
     * lower-offset stragglers remain.
     *
-    * Jobs per merge: into an EMPTY target, one (the write) — there is no
-    * previous state to read, so no touched-bucket probe runs. Into
-    * existing state, a one-job probe finds the touched buckets, then the
-    * write re-reads only those buckets' files. The write shuffles
-    * `prev ∪ batch` once, by bucket, to one task per group of buckets
-    * (width min(touched, cores, shuffle partitions)), so the buckets are
-    * merged and written in parallel and each merge writes one file per
-    * touched bucket. */
-  def mergeBatch(batch0: DataFrame, pkCols: Seq[String], path: String,
+    * Two jobs — the shuffle by bucket and the write — into an empty target
+    * and into existing state alike. Once the target holds `FoldEvery` live
+    * generations, the merge folds them with its batch (tombstones kept),
+    * reading them with the batch's schema, so no schema-inference job runs
+    * and the count stays two. The shuffle sends each bucket whole to one of
+    * min(buckets, cores, shuffle partitions) tasks, which writes its one
+    * file. A batch with no rows commits nothing. */
+  def mergeBatch(batch: DataFrame, pkCols: Seq[String], path: String,
       numBuckets: Int = DefaultBuckets): Unit = {
-    val spark = batch0.sparkSession
+    val spark = batch.sparkSession
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
     withWriterLease(fs, target) {
-    // A previous merge may have died mid-swap (bucket gone, _old/ holding
-    // its last complete copy). Restore BEFORE reading prev state, or the
-    // merge below would silently drop that bucket's rows.
-    recover(spark, path)
-
-    val buckets = bucketCount(fs, target, numBuckets)
-    val bucketOf = pmod(hash(pkCols.map(col): _*), lit(buckets)).cast("int")
-    val live = bucketIds(fs, target)
-    // With state present, two actions consume the batch (the probe and the
-    // write). Inside foreachBatch each action RE-EXECUTES the whole
-    // micro-batch plan — source decode plus any upstream stateful
-    // aggregate ran twice per batch (measured: q106's addBatch dropped
-    // ~25% with the barrier). But the barrier is CONDITIONAL: for a plain
-    // source-decode upstream the persist's materialization costs more
-    // than the re-execution it saves (r17 driver run: q78 −13%, q141
-    // −12% under an unconditional persist, while q106 — whose upstream
-    // carries a stateful aggregate re-reading the state store — gained
-    // 26%). Persist only when the plan warrants it, for the merge's
-    // duration only; an empty target runs the write alone, so needs none.
-    val doPersist = live.nonEmpty && shouldPersistBatch(batch0)
-    val batch = if (doPersist) batch0.persist() else batch0
-    try {
-    // Which buckets does this batch touch? Only asked when there is state
-    // to re-read: into an empty target every staged bucket is new.
-    val probed = if (live.isEmpty) None else Some(touchedBuckets(batch, bucketOf, buckets))
-    if (!probed.exists(_.isEmpty)) {
-
-    // previous state re-enters the merge carrying its winning events'
-    // offsets, so replay is idempotent and stragglers lose to what already
-    // won. Reading bucket leaf dirs directly skips partition discovery, so
-    // no __gb column rides along; only touched buckets are ever opened.
-    val reread = probed.getOrElse(Set.empty).filter(live).toSeq.sorted
-    val input =
-      if (reread.isEmpty) batch
-      else spark.read.parquet(reread.map(i => new Path(target, s"$BucketCol=$i").toString): _*)
-        .unionByName(batch)
-
-    // One exchange, by bucket, to an explicit width AQE leaves alone (the
-    // same cap as Par.widen): each bucket lands whole in one task, which
-    // merges it and writes its one file under _tmp/__gb=<i>. __gb is a
-    // function of the key, so partitioning the window by (__gb, key) keeps
-    // the key groups, and its sort (__gb first) is the order the
-    // partitioned write needs. Spark's hash deals the bucket ids unevenly
-    // (32 over 4 tasks: 5/10/7/10); an even round-robin deal measured no
-    // end-to-end gain on snapshot_load, so the plain hash stays. Last
-    // event per key wins — (op_offset, after-image-beats-before-image),
-    // tombstones retained.
-    val width = math.min(probed.fold(buckets)(_.size),
-      math.min(spark.sparkContext.defaultParallelism,
-        spark.conf.get("spark.sql.shuffle.partitions", "200").toInt))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy((col(BucketCol) +: pkCols.map(col)): _*)
-      .orderBy(graft.operators.ChangelogOps.EventOrder.desc)
-    val merged = input
-      .withColumn(BucketCol, bucketOf)
-      .repartition(width, col(BucketCol))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    val tmp = new Path(target, "_tmp")
-    merged.write.mode("overwrite").partitionBy(BucketCol).parquet(tmp.toString)
-
-    // Tombstones are kept, so every key the write saw stages a row and the
-    // staged set is exactly the set of buckets the write touched. A staged
-    // bucket outside the probed set means the probe and the write saw
-    // different rows (a nondeterministic plan re-executed without a
-    // barrier): its live rows were never re-read, and swapping it in would
-    // lose them. Fail before the first rename, state untouched.
-    val staged = bucketIds(fs, tmp)
-    probed.foreach { p =>
-      val unread = staged -- p
-      if (unread.nonEmpty) {
-        fs.delete(tmp, true)
-        throw new IllegalStateException(
-          s"UpsertSink merge into $target staged buckets ${unread.toSeq.sorted.mkString(",")} " +
-            "that the touched-bucket probe did not see: the batch re-executed to different " +
-            "rows (nondeterministic plan). Aborted before the swap; state is unchanged. " +
-            "Mark the UDF asNondeterministic(), or persist the batch.")
-      }
-    }
-
-    swapBuckets(fs, target, tmp, staged)
-    }
-    } finally { if (doPersist) batch0.unpersist(); () }
+      recover(spark, path)
+      val buckets = formatFile(fs, target, BucketsFile, numBuckets.toString).toInt
+      val key = formatFile(fs, target, KeyFile, pkCols.mkString("\n"))
+      require(key == pkCols.mkString("\n"),
+        s"$target is keyed by (${key.replace('\n', ',')}), not (${pkCols.mkString(",")})")
+      val gens = live(fs, target)
+      val fold = gens.size >= FoldEvery
+      val input =
+        if (!fold) batch
+        else readGenerations(spark, target, gens,
+          Some(StructType(batch.schema.map(_.copy(nullable = true))))).unionByName(batch)
+      commit(fs, target, bucketed(input, pkCols, buckets), fold)
     }
   }
 
-  private val BucketDir = s"$BucketCol=(\\d+)".r
-
-  /** Bucket ids of the `__gb=<i>` directories directly under `dir`. */
-  private def bucketIds(fs: FileSystem, dir: Path): Set[Int] =
-    if (!fs.exists(dir)) Set.empty
-    else fs.listStatus(dir).iterator.filter(_.isDirectory).map(_.getPath.getName)
-      .collect { case BucketDir(i) => i.toInt }.toSet
-
-  /** The buckets `batch` touches, in ONE map-only job: each partition sets
-    * its rows' bucket ids in a bitset, the driver ORs the bitsets. Bounded
-    * driver collect: one `buckets`-bit set per partition. */
-  private def touchedBuckets(batch: DataFrame, bucketOf: Column, buckets: Int): Set[Int] = {
-    import batch.sparkSession.implicits._
-    val seen = new java.util.BitSet(buckets)
-    batch.select(bucketOf).as[Int].mapPartitions { ids =>
-      val bits = new java.util.BitSet(buckets)
-      ids.foreach(i => bits.set(i))
-      Iterator.single(bits.toLongArray)
-    }.collect().foreach(words => seen.or(java.util.BitSet.valueOf(words)))
-    seen.stream().toArray.toSet
-  }
-
-  /** Whether a micro-batch plan is worth a persist barrier across the
-    * sink's two actions: barrier iff the upstream contains an
-    * aggregation / join / window / dedup / arbitrary-state operator —
-    * those re-execute a shuffle (and, under foreachBatch, a state-store
-    * read) per action, which always costs more than one cache
-    * materialization; a narrow source-decode plan re-executes cheaper
-    * than it caches — or any NONDETERMINISTIC expression, whose second
-    * execution may produce different rows than the probe saw. */
-  private[graft] def shouldPersistBatch(batch: DataFrame): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    batch.queryExecution.analyzed.exists {
-      case _: Aggregate | _: Join | _: Window | _: Deduplicate => true
-      case _: FlatMapGroupsWithState                           => true
-      case p => p.expressions.exists(!_.deterministic)
-    }
-  }
-
-  /** Purge tombstone rows from every bucket — run when the caller knows no
-    * event with a lower offset than any tombstone can still arrive (e.g.
-    * the stream is caught up, or the upstream log is offset-ordered per
-    * key, which a real binlog is). Same per-bucket crash-safe swap as the
-    * merge; a bucket left fully empty is removed. */
+  /** Purge tombstone rows — run when the caller knows no event with a
+    * lower offset than any tombstone can still arrive (e.g. the stream is
+    * caught up, or the upstream log is offset-ordered per key, which a
+    * real binlog is). The same fold [[mergeBatch]] runs, with the
+    * tombstones dropped after the resolve. */
   def compact(spark: SparkSession, path: String): Unit = {
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     withWriterLease(fs, target) {
-    recover(spark, path)
-    val live = bucketIds(fs, target)
-    if (live.nonEmpty) {
+      recover(spark, path)
+      val gens = live(fs, target)
+      if (gens.nonEmpty) {
+        def noState: Nothing = throw new IllegalStateException(s"$target lost its format files")
+        val key = formatFile(fs, target, KeyFile, noState).split("\n").toSeq
+        val buckets = formatFile(fs, target, BucketsFile, noState).toInt
+        commit(fs, target, bucketed(readGenerations(spark, target, gens), key, buckets)
+          .filter(col("op") =!= "d"), fold = true)
+      }
+    }
+  }
+
+  /** The one resolve: the last event per key wins, by
+    * [[graft.operators.ChangelogOps.EventOrder]] (op_offset,
+    * after-image-beats-before-image); tombstones are kept. */
+  private def lastWins(rows: DataFrame, key: Seq[String]): DataFrame = {
+    val w = Window.partitionBy(key.map(col): _*).orderBy(ChangelogOps.EventOrder.desc)
+    rows.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+  }
+
+  /** `rows` resolved per key and laid out for the generation write. One
+    * exchange, by bucket, to an explicit width AQE leaves alone (the same
+    * cap as Par.widen): each bucket lands whole in one task, which resolves
+    * it and writes its one file. `__gb` is a function of the key, so
+    * resolving by (`__gb`, key) keeps the key groups, and its sort (`__gb`
+    * first) is the order the partitioned write needs. Spark's hash deals
+    * the bucket ids unevenly (32 over 4 tasks: 5/10/7/10); an even
+    * round-robin deal measured no end-to-end gain on `snapshot_load`. */
+  private def bucketed(rows: DataFrame, key: Seq[String], buckets: Int): DataFrame = {
+    val spark = rows.sparkSession
+    val width = math.min(buckets, math.min(spark.sparkContext.defaultParallelism,
+      spark.conf.get("spark.sql.shuffle.partitions", "200").toInt))
+    lastWins(rows
+      .withColumn(BucketCol, pmod(hash(key.map(col): _*), lit(buckets)).cast("int"))
+      .repartition(width, col(BucketCol)), BucketCol +: key)
+  }
+
+  /** Commits `rows` as the target's next generation: staged in `_tmp`,
+    * moved into place by one directory rename. A fold's generation carries
+    * the marker that supersedes every older one, which are then retired; a
+    * merge that staged no bucket commits nothing. Hadoop FileSystem#rename
+    * reports failure by returning false, so the commit is [[renameOrDie]]. */
+  private def commit(fs: FileSystem, target: Path, rows: DataFrame, fold: Boolean): Unit = {
     val tmp = new Path(target, "_tmp")
-    // partition discovery supplies __gb; live rows rewrite, tombstones drop
-    spark.read.parquet(path).filter(col("op") =!= "d")
-      .write.mode("overwrite").partitionBy(BucketCol).parquet(tmp.toString)
-    swapBuckets(fs, target, tmp, live)
+    rows.write.mode("overwrite").partitionBy(BucketCol).parquet(tmp.toString)
+    if (fold) fs.create(new Path(tmp, FoldMarker), true).close()
+    if (!fold && !fs.listStatus(tmp).exists(_.isDirectory)) fs.delete(tmp, true)
+    else {
+      val next = generations(fs, target).lastOption.fold(1L)(_ + 1)
+      renameOrDie(fs, tmp, genPath(target, next))
+      if (fold) retire(fs, target)
     }
-    }
+  }
+
+  private def genPath(target: Path, gen: Long): Path = new Path(target, s"$GenCol=$gen")
+
+  /** The rows of generations `gens`, without the directory columns. Given
+    * a `schema`, Spark runs no schema-inference job. */
+  private def readGenerations(spark: SparkSession, target: Path, gens: Seq[Long],
+      schema: Option[StructType] = None): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).option("basePath", target.toString)
+      .parquet(gens.map(genPath(target, _).toString): _*).drop(GenCol, BucketCol)
+
+  /** Numbers of the committed generations, oldest first. */
+  private def generations(fs: FileSystem, target: Path): IndexedSeq[Long] =
+    if (!fs.exists(target)) IndexedSeq.empty
+    else fs.listStatus(target).toIndexedSeq.filter(_.isDirectory).map(_.getPath.getName)
+      .collect { case GenDir(n) => n.toLong }.sorted
+
+  /** The committed generations split at the newest fold: (superseded, live). */
+  private def splitAtFold(fs: FileSystem, target: Path): (IndexedSeq[Long], IndexedSeq[Long]) = {
+    val gens = generations(fs, target)
+    gens.splitAt(math.max(0,
+      gens.lastIndexWhere(g => fs.exists(new Path(genPath(target, g), FoldMarker)))))
+  }
+
+  /** The generations a reader resolves: the newest fold and every one after it. */
+  private def live(fs: FileSystem, target: Path): IndexedSeq[Long] = splitAtFold(fs, target)._2
+
+  /** Deletes `_tmp` staging and every superseded generation. */
+  private def retire(fs: FileSystem, target: Path): Unit = {
+    fs.delete(new Path(target, "_tmp"), true)
+    splitAtFold(fs, target)._1.foreach(g => fs.delete(genPath(target, g), true))
   }
 
   /** How long a writer lease stays authoritative after its holder stops
@@ -446,7 +418,7 @@ object UpsertSink {
         s"$target is being written by another UpsertSink writer " +
           "(_graft_writer.lock is fresh). The sink's on-disk contract is " +
           "SINGLE WRITER PER PATH: a compaction racing a streaming merge " +
-          "would interleave bucket swaps and tear the snapshot. Run " +
+          "would interleave generation commits and tear the state. Run " +
           "compact() from the stream's own foreachBatch " +
           "(compactEveryBatches), or wait for the lease to expire.")
     val refresher = new Thread(() => {
@@ -476,71 +448,35 @@ object UpsertSink {
     }
   }
 
-  /** Crash recovery: restore any bucket a previous merge left mid-swap
-    * (live dir gone, `_old/` copy present) and clear staging. Call before
-    * starting the query (cheap no-op in the common case). */
+  /** Crash recovery: deletes the `_tmp` staging and every generation a
+    * fold superseded that a crash left behind. Every writer runs it under
+    * its lease; call it before starting the query (cheap no-op in the
+    * common case). */
   def recover(spark: SparkSession, path: String): Unit = {
-    restoreSaveAsides(spark, path)
     val target = new Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(target, "_tmp"), true)
-  }
-
-  private def restoreSaveAsides(spark: SparkSession, path: String): Unit = {
-    val target = new Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new Path(target, "_old")
-    if (fs.exists(old)) fs.listStatus(old).foreach { st =>
-      val live = new Path(target, st.getPath.getName)
-      if (!fs.exists(live)) renameOrDie(fs, st.getPath, live)
-      else fs.delete(st.getPath, true) // swap completed; stale save-aside
-    }
-  }
-
-  /** The per-bucket swap both writers commit through: for each bucket, drop
-    * a stale save-aside, move the live bucket aside to `_old/` if it
-    * exists, move the staged bucket in from `tmp` if it exists (a bucket
-    * [[compact]] left fully empty stages nothing and is removed), then drop
-    * the save-aside; finally clear `tmp`. A crash leaves each bucket either
-    * live or in `_old/`, which [[recover]] restores. Hadoop
-    * FileSystem#rename reports failure by returning false; treating that as
-    * success and proceeding to the deletes would destroy the only complete
-    * copy of a bucket, so every rename is [[renameOrDie]]. */
-  private def swapBuckets(fs: FileSystem, target: Path, tmp: Path, ids: Set[Int]): Unit = {
-    val old = new Path(target, "_old")
-    fs.mkdirs(old)
-    ids.toSeq.sorted.foreach { i =>
-      val name = s"$BucketCol=$i"
-      val liveDir = new Path(target, name)
-      val aside = new Path(old, name)
-      val staged = new Path(tmp, name)
-      if (fs.exists(aside)) fs.delete(aside, true)
-      if (fs.exists(liveDir)) renameOrDie(fs, liveDir, aside)
-      if (fs.exists(staged)) renameOrDie(fs, staged, liveDir)
-      fs.delete(aside, true)
-    }
-    fs.delete(tmp, true)
+    retire(target.getFileSystem(spark.sparkContext.hadoopConfiguration), target)
   }
 
   private def renameOrDie(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst))
       throw new java.io.IOException(s"rename $src -> $dst failed; " +
-        "aborting (snapshot left intact for recover())")
+        "aborting (state left intact for recover())")
 
-  /** The bucket count is part of the on-disk format: read it back if the
-    * state exists, persist it on first merge. */
-  private def bucketCount(fs: FileSystem, target: Path, requested: Int): Int = {
-    require(requested > 0, s"numBuckets must be positive, got $requested")
-    val meta = new Path(target, "_graft_buckets")
-    if (fs.exists(meta)) {
-      val in = fs.open(meta)
-      try scala.io.Source.fromInputStream(in).mkString.trim.toInt
-      finally in.close()
+  /** A format file of the target (`_graft_key`, `_graft_buckets`), read
+    * back if it exists, else written with `init` — so the first merge
+    * fixes the key and the bucket count, and a later merge's differing
+    * `numBuckets` cannot hash keys into the wrong buckets. */
+  private def formatFile(fs: FileSystem, target: Path, name: String, init: => String): String = {
+    val file = new Path(target, name)
+    if (fs.exists(file)) {
+      val in = fs.open(file)
+      try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
     } else {
+      val value = init
       fs.mkdirs(target)
-      val out = fs.create(meta, true)
-      try out.write(requested.toString.getBytes("UTF-8")) finally out.close()
-      requested
+      val out = fs.create(file, true)
+      try out.write(value.getBytes("UTF-8")) finally out.close()
+      value
     }
   }
 }

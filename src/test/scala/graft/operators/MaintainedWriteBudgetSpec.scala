@@ -95,18 +95,29 @@ class MaintainedWriteBudgetSpec extends SparkSpec {
   private def batchOf(keys: Seq[Long], offset: Long, op: String = "c") =
     keys.map(k => (k, k.toDouble, op, offset + k, "+I")).toDF(cols: _*)
 
-  test("UpsertSink.mergeBatch: one write into an empty target; probe, re-read and write into state") {
+  // A merge commits its batch as a new generation without reading the
+  // state: the shuffle by bucket and the write, into an empty target and
+  // into state alike. The merge that folds reads the live generations with
+  // the batch's schema, so it runs no schema-inference job and stays at
+  // two. Compact has no batch to take the schema from, so it infers it (one
+  // job), then resolves the generations per key (shuffle and write).
+  test("UpsertSink.mergeBatch: a shuffle and a write, into an empty target, into state and when it folds") {
     val out = java.nio.file.Files.createTempDirectory("graft_budget_sink_").resolve("s").toString
     budget(2)(UpsertSink.mergeBatch(batchOf(1L to 40L, 0L), Seq("k"), out, 8))
-    budget(4)(UpsertSink.mergeBatch(batchOf(30L to 50L, 100L), Seq("k"), out, 8))
-    assert(UpsertSink.readState(spark, out).count() === 50L)
+    budget(2)(UpsertSink.mergeBatch(batchOf(30L to 50L, 100L), Seq("k"), out, 8))
+    (3 to UpsertSink.FoldEvery).foreach(i =>
+      UpsertSink.mergeBatch(batchOf(Seq(100L + i), 100L * i), Seq("k"), out, 8))
+    budget(2)(UpsertSink.mergeBatch(batchOf(45L to 60L, 10000L), Seq("k"), out, 8))
+    val gens = new java.io.File(out).list().filter(_.startsWith("__gen="))
+    assert(gens.toSeq === Seq(s"__gen=${UpsertSink.FoldEvery + 1}"), "the last merge must have folded")
+    assert(UpsertSink.readState(spark, out).count() === 60L + UpsertSink.FoldEvery - 2)
   }
 
   test("UpsertSink.compact: the state's schema read plus one rewrite") {
     val out = java.nio.file.Files.createTempDirectory("graft_budget_sinkc_").resolve("s").toString
     UpsertSink.mergeBatch(batchOf(1L to 40L, 0L), Seq("k"), out, 8)
     UpsertSink.mergeBatch(batchOf(1L to 10L, 100L, op = "d"), Seq("k"), out, 8)
-    budget(2)(UpsertSink.compact(spark, out))
+    budget(3)(UpsertSink.compact(spark, out))
     assert(spark.read.parquet(out).count() === 30L, "tombstones must be purged")
   }
 

@@ -140,47 +140,58 @@ class UpsertSinkSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSeq === Seq(1L, 3L))
   }
 
-  test("recover restores a bucket caught between its two swap renames") {
+  test("a fold killed after its commit rename: readState is unchanged, and the next merge retires the inputs") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_upsert3_")
     val out = tmp.resolve("state").toString
     UpsertSink.mergeBatch(
-      Seq(row(7L, 7.0, "c", 1, "+I")).toDF(cols: _*), Seq("k"), out)
-    // simulate a crash between the two renames: the key's live bucket dir
-    // moved aside to _old/ but the staged replacement never landed
+      Seq(row(1L, 1.0, "c", 1, "+I"), row(5L, 5.0, "c", 2, "+I")).toDF(cols: _*), Seq("k"), out)
+    UpsertSink.mergeBatch(Seq(row(5L, 5.0, "d", 3, "+I")).toDF(cols: _*), Seq("k"), out)
     val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bucket = fs.listStatus(new Path(out))
-      .map(_.getPath).filter(_.getName.startsWith("__gb=")).head
-    fs.mkdirs(new Path(out, "_old"))
-    assert(fs.rename(bucket, new Path(new Path(out, "_old"), bucket.getName)))
-    UpsertSink.recover(spark, out)
-    assert(UpsertSink.readState(spark, out).count() == 1)
+    def gens(): Seq[String] =
+      fs.listStatus(new Path(out)).map(_.getPath.getName).filter(_.startsWith("__gen=")).sorted.toSeq
+    def live() = UpsertSink.readState(spark, out).orderBy("k")
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val before = live()
+    // the fold (here compact's) commits gen=3 and retires gen=1 and gen=2;
+    // putting copies of its inputs back is exactly what a fold killed
+    // between its commit rename and the retirement leaves on disk
+    val inputs = gens()
+    val aside = new Path(tmp.resolve("aside").toString)
+    inputs.foreach(g => org.apache.hadoop.fs.FileUtil.copy(fs, new Path(out, g),
+      fs, new Path(aside, g), false, spark.sparkContext.hadoopConfiguration))
+    UpsertSink.compact(spark, out)
+    inputs.foreach(g => assert(fs.rename(new Path(aside, g), new Path(out, g))))
+    assert(gens() === Seq("__gen=1", "__gen=2", "__gen=3"))
+    // the superseded inputs are on disk (their tombstone too), not in the state
+    assert(spark.read.parquet(out).filter($"op" === "d").count() === 1L)
+    assert(live() === before && before === Seq((1L, 1.0)))
+    UpsertSink.mergeBatch(Seq(row(2L, 2.0, "c", 4, "+I")).toDF(cols: _*), Seq("k"), out)
+    assert(gens() === Seq("__gen=3", "__gen=4"))
+    assert(live() === Seq((1L, 1.0), (2L, 2.0)))
   }
 
-  test("a merge leaves untouched buckets byte-identical (O(touched) I/O)") {
+  test("a merge rewrites no existing file") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_upsert4_")
     val out = tmp.resolve("state").toString
-    // spread keys across many buckets, then touch exactly one key
     val b1 = (1L to 200L).map(k => row(k, k.toDouble, "c", k, "+I")).toDF(cols: _*)
     UpsertSink.mergeBatch(b1, Seq("k"), out)
     val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def snapshot(): Map[String, (Long, Long)] =
-      fs.listStatus(new Path(out)).filter(_.getPath.getName.startsWith("__gb="))
-        .flatMap(d => fs.listStatus(d.getPath)).filter(_.isFile)
+    def snapshot(): Map[String, (Long, Long)] = {
+      val it = fs.listFiles(new Path(out), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
         .map(f => f.getPath.toString -> (f.getLen, f.getModificationTime)).toMap
+    }
     val before = snapshot()
-    val touchedBucket = spark.range(1).select(
-      pmod(hash(lit(42L)), lit(UpsertSink.DefaultBuckets))).head().getInt(0)
     UpsertSink.mergeBatch(
       Seq(row(42L, 99.0, "u", 1000, "+U")).toDF(cols: _*), Seq("k"), out)
     val after = snapshot()
-    val untouchedBefore = before.filter(!_._1.contains(s"__gb=$touchedBucket/"))
-    val untouchedAfter = after.filter(!_._1.contains(s"__gb=$touchedBucket/"))
-    assert(untouchedBefore.nonEmpty, "fixture must span several buckets")
-    // identical file paths, lengths, AND modification times: the files were
-    // never rewritten, not merely rewritten equal
-    assert(untouchedAfter == untouchedBefore)
-    assert(before.keys.exists(_.contains(s"__gb=$touchedBucket/")))
-    assert(after != before, "the touched bucket must have been rewritten")
+    // identical file paths, lengths AND modification times: no file was
+    // rewritten, not merely rewritten equal; the batch went to a new
+    // generation, one file for the one bucket it touched
+    assert(before.toSet.subsetOf(after.toSet))
+    val added = after.keySet -- before.keySet
+    assert(added.nonEmpty && added.forall(_.contains("/__gen=2/")), added)
+    assert(added.count(_.endsWith(".parquet")) === 1, added)
     val s = UpsertSink.readState(spark, out)
     assert(s.count() == 200)
     assert(s.filter($"k" === 42L).head().getDouble(1) == 99.0)
@@ -218,28 +229,6 @@ class UpsertSinkSpec extends SparkSpec {
     assert(UpsertSink.readState(spark, out).count() == 2)
   }
 
-  test("conditional batch barrier: persist only when the plan warrants it") {
-    // plain source-decode shape (q78/q141/q144/q145's upstream): a narrow
-    // scan re-executes cheaper than it caches → no barrier
-    val narrow = Seq(row(1L, 1.0, "c", 1, "+I")).toDF(cols: _*)
-      .filter(col("op_offset") >= 0L).select(cols.map(col): _*)
-    assert(!UpsertSink.shouldPersistBatch(narrow))
-
-    // aggregate upstream (q106's retract-agg shape): re-execution repeats
-    // a shuffle (and under foreachBatch a state-store read) → barrier
-    val agg = Seq(row(1L, 1.0, "c", 1, "+I")).toDF(cols: _*)
-      .groupBy("k").agg(sum("v").as("v"))
-    assert(UpsertSink.shouldPersistBatch(agg))
-
-    // join upstream → barrier
-    val joined = narrow.join(agg.select(col("k").as("k2")), col("k") === col("k2"))
-    assert(UpsertSink.shouldPersistBatch(joined))
-
-    // a nondeterministic expression may re-execute to different rows →
-    // barrier, however narrow the plan
-    assert(UpsertSink.shouldPersistBatch(narrow.withColumn("v", rand())))
-  }
-
   /** `n` changelog rows whose key a NONDETERMINISTIC expression draws. */
   private def randomKeyed(n: Int, key: org.apache.spark.sql.Column) =
     spark.range(0, n, 1, 4).select(key.as("k"), lit(1.0).as("v"), lit("c").as("op"),
@@ -249,7 +238,7 @@ class UpsertSinkSpec extends SparkSpec {
   private val freshKey = udf(() => java.util.concurrent.ThreadLocalRandom.current().nextLong())
     .asNondeterministic()
 
-  /** State of 200 keys over 64 buckets, so a merge has live buckets to re-read. */
+  /** State of 200 keys over 64 buckets, so the merge lands on existing state. */
   private def seeded(prefix: String): String = {
     val out = java.nio.file.Files.createTempDirectory(prefix).resolve("state").toString
     UpsertSink.mergeBatch((1L to 200L).map(k => row(k, k.toDouble, "c", k, "+I")).toDF(cols: _*),
@@ -259,8 +248,8 @@ class UpsertSinkSpec extends SparkSpec {
 
   test("nondeterministic batch keys: a merge into existing state loses no row") {
     // rand()/uuid() seed at analysis; a nondeterministic UDF does not —
-    // each execution draws new keys, so without the barrier the probe and
-    // the write would see different rows
+    // each execution draws new keys, so a merge that consumed the batch
+    // with more than one action could see different rows in each
     Seq(
       "rand" -> (rand() * 1e15).cast("long"),
       "uuid" -> xxhash64(expr("uuid()")),
@@ -268,30 +257,10 @@ class UpsertSinkSpec extends SparkSpec {
     ).foreach { case (name, key) =>
       val out = seeded(s"graft_upsert_nd_${name}_")
       val batch = randomKeyed(40, key)
-      assert(UpsertSink.shouldPersistBatch(batch), name)
       UpsertSink.mergeBatch(batch, Seq("k"), out, numBuckets = 64)
       val state = UpsertSink.readState(spark, out)
       assert(state.count() === 240L, s"$name: rows lost or duplicated")
       assert(state.filter(!$"k".between(1L, 200L)).count() === 40L, name)
     }
-  }
-
-  test("nondeterministic batch with the barrier forced off fails loudly; state is untouched") {
-    val out = seeded("graft_upsert_nd_never_")
-    val before = UpsertSink.readState(spark, out).orderBy("k").collect().toSeq
-    // the same random key, NOT declared asNondeterministic(): Spark takes
-    // the UDF for deterministic, so shouldPersistBatch places no barrier
-    val undeclaredKey = udf(() => java.util.concurrent.ThreadLocalRandom.current().nextLong())
-    val batch = randomKeyed(5, undeclaredKey())
-    assert(!UpsertSink.shouldPersistBatch(batch))
-    val ex = intercept[IllegalStateException] {
-      // 5 fresh keys over 64 buckets: the write's buckets fall outside
-      // the probe's with near certainty (all inside: ~(5/64)^5)
-      UpsertSink.mergeBatch(batch, Seq("k"), out, numBuckets = 64)
-    }
-    assert(ex.getMessage.contains("probe did not see"))
-    assert(UpsertSink.readState(spark, out).orderBy("k").collect().toSeq === before)
-    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new Path(out, "_tmp")) && !fs.exists(new Path(out, "_graft_writer.lock")))
   }
 }
