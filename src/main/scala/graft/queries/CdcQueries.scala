@@ -88,9 +88,6 @@ object CdcQueries {
     // snapshot IS the result table; update mode + an upserting sink is the
     // production path (StreamingMaterializeSpec covers it).
     "q43_streaming_materialize" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q43_")
-      Fixtures.deleteTreeOnExit(tmp)
       // staged ONCE per (JVM, dir) like every other file-stream gate
       // (q52/q54/q61/q88-q90): deriving + writing the changelog input is
       // ingest scaffolding, pre-materialized untimed by Bench — q43 was
@@ -110,13 +107,9 @@ object CdcQueries {
       // per-batch planning + state checkpointing
       val stream = ss.readStream.schema(changelog(s, dir).schema)
         .parquet(st.in)
-      val qname = "q43_mat_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = ChangelogOps.materializeStreaming(stream, Seq("k"))
-        .writeStream.outputMode("complete").format("memory").queryName(qname)
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      ss.table(qname).filter(col("op") =!= "d")
+      StreamFixtures.drainToMemory(ChangelogOps.materializeStreaming(stream, Seq("k")),
+          "q43_mat", mode = "complete")
+        .filter(col("op") =!= "d")
         .select("k", "price", "st").orderBy("k")
     }),
 
@@ -127,22 +120,13 @@ object CdcQueries {
     // mechanics (bucketing, recovery, idempotent replay) are spec-tested
     // in UpsertSinkSpec; this pins its end-to-end merge arithmetic.
     "q78_upsert_sink_state" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val tmp = java.nio.file.Files.createTempDirectory("graft_q78_")
       Fixtures.deleteTreeOnExit(tmp)
       val in = tmp.resolve("in").toString
-      val out = tmp.resolve("state").toString
       val cl = changelog(s, dir)
       cl.repartition(4).write.mode("overwrite").parquet(in)
-      val stream = s.readStream.schema(cl.schema)
-        .option("maxFilesPerTrigger", "2").parquet(in)
-      val q = graft.streaming.UpsertSink
-        .upsertParquet(stream, Seq("k"), out, numBuckets = 16)
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.streaming.UpsertSink.readState(s, out)
-        .select("k", "price", "st").orderBy("k")
+      upsertState(s, s.readStream.schema(cl.schema)
+        .option("maxFilesPerTrigger", "2").parquet(in), "q78", minBatches = 2)
     }),
 
     // --- q92: the reference's canonical ENRICHMENT story, end to end under
@@ -155,22 +139,21 @@ object CdcQueries {
     // offset-span micro-batches; probes for every 11th key land 500 µs
     // before that key's next change, so each asks for a DIFFERENT version
     // than the one arriving just after it — the answer pins version
-    // boundaries, not just final state. Two sentinel no-op updates at
-    // far-future offsets push the watermark past every probe, and the batch
-    // after the first one emits them (the q89 wave pattern, on the SOURCE
-    // side via the log itself). Oracle: closed-form argmax over the same
-    // version set. ---
+    // boundaries, not just final state. One sentinel no-op update at a
+    // far-future offset pushes the watermark past every probe, and the
+    // no-data batch AvailableNow runs after that advance emits them (the
+    // q89 sentinel pattern, on the SOURCE side via the log itself).
+    // Oracle: closed-form argmax over the same version set. ---
     "q92_cdc_temporal_enrich" -> ((s, dir) => {
       val root = writeTemporalProviderTable(s, dir)
       val st = StreamFixtures.arm(q92Stage(s, dir))
       val ss = StreamFixtures.streamSession(s)
-      // probe side uncapped: the whole staged probe set (waves included)
-      // lands in batch 1 — probes just wait in the operator state until the
-      // source-side versions arrive, and the GLOBAL watermark stays
-      // governed by the dimension log's sentinel schedule (min over
-      // sources), so the flush choreography is unchanged while the
-      // micro-batch count drops from ~18 (probe-file-bound) to the
-      // dimension's ~4 offset spans.
+      // probe side uncapped: the whole staged probe set (its sentinel
+      // included) lands in batch 1 — probes just wait in the operator state
+      // until the source-side versions arrive, and the GLOBAL watermark
+      // stays governed by the dimension log's sentinel (min over sources),
+      // so the micro-batch count is the dimension's offset spans plus the
+      // closing no-data batch.
       val probes = ss.readStream.schema(q92Probes(s, dir).schema)
         .parquet(st.in)
       val dimRaw = ss.readStream.format("cdc-log").option("path", root)
@@ -196,7 +179,7 @@ object CdcQueries {
         horizonMs = q92HorizonMs, lateness = s"${q92LatenessMs / 1000} seconds",
         eCols = Seq("p_key", "probe_id"), payload = Seq("price"),
         tieCols = Seq("ver_off"))
-      StreamFixtures.drainAppend(joined, "q92_tj")
+      StreamFixtures.drainToMemory(joined, "q92_tj", minBatches = 2)
         .where(col("p_key") >= 0) // drop the probe-side watermark sentinels
         .select(col("probe_id"), col("p_key").as("k"),
           unix_micros(col("pts")).as("pts_us"),
@@ -263,7 +246,7 @@ object CdcQueries {
           col("op_offset").as("offset"), (col("op") === "d").as("isDelete"))
         .as[graft.streaming.Scd2Event]
       val closed = graft.streaming.StreamingOps.scd2ClosedIntervals(ev)
-      StreamFixtures.drainAppend(closed.toDF(), "q99_scd2")
+      StreamFixtures.drainToMemory(closed.toDF(), "q99_scd2", minBatches = 2)
         .select("k", "price", "st", "valid_from", "valid_to")
         .orderBy("k", "valid_from")
     }),
@@ -317,7 +300,6 @@ object CdcQueries {
     // DECIMAL(38,6) are order-free exact, so update/delete pairs cancel
     // bit-exactly and the final snapshot equals q25's closed form.
     "q100_stream_retract_agg" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val root = writeTemporalProviderTable(s, dir, sentinels = false)
       val maxOff = q92MaxOff(s, dir)
       val ss = StreamFixtures.streamSession(s)
@@ -339,14 +321,8 @@ object CdcQueries {
         .groupBy("st")
         .agg(sum(col("sp")).cast("double").as("total"),
           sum(col("sn")).as("n"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q100_ckpt_")
-      Fixtures.deleteTreeOnExit(tmp)
-      val qname = "q100_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = agg.writeStream.outputMode("complete").format("memory").queryName(qname)
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      raw.sparkSession.table(qname).orderBy("st")
+      StreamFixtures.drainToMemory(agg, "q100", mode = "complete", minBatches = 2)
+        .orderBy("st")
     }),
 
     // THE DURABLE RETRACT-AGGREGATE PATH — q100's semantics composed with
@@ -358,7 +334,6 @@ object CdcQueries {
     // as q25/q100. Complete-mode memory-sink q100 stays as the semantics
     // gate; THIS is what a 100 TB pipeline actually deploys.
     "q106_retract_agg_durable" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       // deliberately NOT sharded (scan.log.catchup.shards): measured A/B at
       // sf0.1 (isolated reps=3 min) read 8.37 s serial vs 8.41 s sharded —
       // q106's cost is the sink merges and per-batch choreography, not
@@ -385,14 +360,11 @@ object CdcQueries {
         .groupBy("st")
         .agg(sum(col("sp")).cast("double").as("total"),
           sum(col("sn")).as("n"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q106_ckpt_")
+      val tmp = java.nio.file.Files.createTempDirectory("graft_q106_")
       Fixtures.deleteTreeOnExit(tmp)
       val state = tmp.resolve("state").toString
-      val q = graft.streaming.UpsertSink.upsertAggregate(agg, Seq("st"), state,
-          numBuckets = 4)
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      StreamFixtures.drain(graft.streaming.UpsertSink.upsertAggregate(agg, Seq("st"), state,
+        numBuckets = 4), "q106", minBatches = 2)
       graft.streaming.UpsertSink.readState(s, state).orderBy("st")
     }),
 
@@ -419,10 +391,7 @@ object CdcQueries {
     // upsert sink path scales linearly, see SCALE_PROBE_sf1.md. The
     // complete-mode materialization operator itself stays gated via q43.)
     "q74_source_stream_state" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val root = writeFileProviderTable(s, dir)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q74_ckpt_")
-      Fixtures.deleteTreeOnExit(tmp)
       val stream = s.readStream.format("cdc-log").option("path", root)
         .option("metadata.columns", "op_offset,row_kind")
         .option("scan.incremental.snapshot.chunk.size", "12000")
@@ -431,14 +400,7 @@ object CdcQueries {
         // CohortStateMachinePropertySpec)
         .option("scan.snapshot.max-chunks-per-batch", "8")
         .load()
-      val state = tmp.resolve("state").toString
-      val q = graft.streaming.UpsertSink
-        .upsertParquet(stream, Seq("k"), state, numBuckets = 16)
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.streaming.UpsertSink.readState(s, state)
-        .select("k", "price", "st").orderBy("k")
+      upsertState(s, stream, "q74", minBatches = 2)
     }),
 
     // KEY-RANGE-SHARDED LOG CATCH-UP under the hash gate (round-15 verdict
@@ -454,10 +416,7 @@ object CdcQueries {
     // is spec-pinned in LogCatchupShardSpec; this gates the end-to-end
     // arithmetic.
     "q141_sharded_log_catchup" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val root = writeTemporalProviderTable(s, dir, sentinels = false)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q141_ckpt_")
-      Fixtures.deleteTreeOnExit(tmp)
       val stream = s.readStream.format("cdc-log").option("path", root)
         .option("scan.startup.mode", "earliest")
         .option("metadata.columns", "op_offset,row_kind")
@@ -466,14 +425,7 @@ object CdcQueries {
         // 3·maxKey offsets; sf0.001's ~4.5k window must still split 8 ways)
         .option("scan.log.catchup.min-offsets-per-shard", "256")
         .load() // no per-batch offset cap: the whole log IS the catch-up
-      val state = tmp.resolve("state").toString
-      val q = graft.streaming.UpsertSink
-        .upsertParquet(stream, Seq("k"), state, numBuckets = 16)
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.streaming.UpsertSink.readState(s, state)
-        .select("k", "price", "st").orderBy("k")
+      upsertState(s, stream, "q141")
     }),
 
     // SKEWED catch-up under the hash gate (round-17: event-weighted shard
@@ -487,24 +439,14 @@ object CdcQueries {
     // disjoint-cover equivalence under skew, end-to-end through the
     // stream + upsert sink.
     "q144_skewed_catchup_shards" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val root = writeSkewedProviderTable(s, dir)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q144_ckpt_")
-      Fixtures.deleteTreeOnExit(tmp)
       val stream = s.readStream.format("cdc-log").option("path", root)
         .option("scan.startup.mode", "earliest")
         .option("metadata.columns", "op_offset,row_kind")
         .option("scan.log.catchup.shards", "8")
         .option("scan.log.catchup.min-offsets-per-shard", "256")
         .load()
-      val state = tmp.resolve("state").toString
-      val q = graft.streaming.UpsertSink
-        .upsertParquet(stream, Seq("k"), state, numBuckets = 16)
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.streaming.UpsertSink.readState(s, state)
-        .select("k", "price", "st").orderBy("k")
+      upsertState(s, stream, "q144")
     }),
 
     // SHARDED CATCH-UP ON THE LIVE-DATABASE WIRE FORMAT (round-17): the
@@ -518,10 +460,7 @@ object CdcQueries {
     // must hash-match the closed form. The r16 gap this closes: the spool
     // provider had no key index and stayed serial forever.
     "q145_spool_catchup_shards" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val root = writeDebeziumSpoolTable(s, dir)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q145_ckpt_")
-      Fixtures.deleteTreeOnExit(tmp)
       val stream = s.readStream.format("cdc-log").option("path", root)
         .option("path.format", "debezium-json")
         .option("scan.startup.mode", "earliest")
@@ -529,16 +468,24 @@ object CdcQueries {
         .option("scan.log.catchup.shards", "8")
         .option("scan.log.catchup.min-offsets-per-shard", "256")
         .load()
-      val state = tmp.resolve("state").toString
-      val q = graft.streaming.UpsertSink
-        .upsertParquet(stream, Seq("k"), state, numBuckets = 16)
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.streaming.UpsertSink.readState(s, state)
-        .select("k", "price", "st").orderBy("k")
+      upsertState(s, stream, "q145")
     })
   )
+
+  /** The sink gates' shared tail (q74/q78/q141/q144/q145): drains
+    * `stream` through `UpsertSink.upsertParquet` (keyed on k, 16 buckets)
+    * into a state directory that lives until JVM exit — the returned frame
+    * reads it lazily — and returns the state's (k, price, st) by k. */
+  private def upsertState(s: SparkSession, stream: DataFrame, tag: String,
+      minBatches: Int = 1): DataFrame = {
+    val tmp = java.nio.file.Files.createTempDirectory(s"graft_${tag}_")
+    Fixtures.deleteTreeOnExit(tmp)
+    val state = tmp.resolve("state").toString
+    StreamFixtures.drain(graft.streaming.UpsertSink
+      .upsertParquet(stream, Seq("k"), state, numBuckets = 16), tag, minBatches)
+    graft.streaming.UpsertSink.readState(s, state)
+      .select("k", "price", "st").orderBy("k")
+  }
 
   /** Writes the derived orders changelog (same formula as q23) as a
     * file-provider table: snapshot.jsonl = original rows, log.jsonl =
@@ -590,12 +537,10 @@ object CdcQueries {
   /** q92 knobs. The staleness horizon is deliberately tight (probes sit
     * 500 µs after their version) — q89 covers long-horizon semantics; what
     * q92 gates is the source-fed enrichment loop. `q92WaveSpan` — the
-    * offset gap between the two watermark-sentinel log records AND the
-    * `scan.log.max-offsets-per-batch` span — exceeds lateness + horizon
-    * with a 2 min margin, so the first wave's watermark advance passes
-    * every probe (the q89 waveGap rule). Sentinels exactly one span apart
-    * can never share a span-capped micro-batch, so each wave is its own
-    * watermark advance. */
+    * offset gap between the last business event and the watermark-sentinel
+    * log record AND the `scan.log.max-offsets-per-batch` span — exceeds
+    * lateness + horizon with a 2 min margin, so the sentinel's watermark
+    * advance passes every probe (the q89 rule). */
   /** Event-time base shift: offset 0 (key 0's insert) must not sit AT the
     * epoch — Spark's initial watermark is 0, and a version at exactly the
     * watermark is dropped as late before the join ever sees it. */
@@ -618,15 +563,15 @@ object CdcQueries {
     * same derivation as q23's relational changelog, here as
     * provider events the SOURCE replays in `earliest` mode, so every event
     * flows as a change row with its real offset (nothing folds into a
-    * snapshot image). Two no-op sentinel updates on the max key at
-    * far-future offsets (maxOff + span, + 2·span) exist only to push the
-    * dimension-side event-time watermark after the real log drains.
+    * snapshot image). One no-op sentinel update on the max key at the
+    * far-future offset maxOff + span exists only to push the dimension-side
+    * event-time watermark after the real log drains.
     * Distributed build, same O(1)-driver concat as
     * [[writeFileProviderTable]]. Once per (JVM, sf dir). */
   private val temporalFixtureCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
   /** `sentinels = false` writes the same business log WITHOUT the
-    * far-future watermark waves — for consumers with no event-time state
-    * (q99's SCD2 run), where the waves would stretch the offset span and
+    * far-future watermark sentinel — for consumers with no event-time state
+    * (q99's SCD2 run), where the sentinel would stretch the offset span and
     * turn offset-capped micro-batching into hundreds of empty batches.
     * Both variants write the base rows to snapshot.jsonl — NOT as data
     * (the earliest-mode replays these gates run never read the snapshot)
@@ -675,11 +620,8 @@ object CdcQueries {
         val (maxK, mp0, mst) = rows.orderBy(col("k").desc).head()
         val mpCur = if (maxK % 5 == 2) mp0 * 1.1 else mp0
         val maxOff = maxK * 3 + 3
-        val span = q92WaveSpan(maxOff)
-        val sent = (1 to 2).map { i =>
-          s"""{"offset":${maxOff + i * span},"op":"u","tsMs":300,"before":${js(maxK, mpCur, mst)},"after":${js(maxK, mpCur, mst)}}"""
-        }.mkString("", "\n", "\n")
-        Files.writeString(d.resolve("log.jsonl"), sent,
+        Files.writeString(d.resolve("log.jsonl"),
+          s"""{"offset":${maxOff + q92WaveSpan(maxOff)},"op":"u","tsMs":300,"before":${js(maxK, mpCur, mst)},"after":${js(maxK, mpCur, mst)}}\n""",
           java.nio.file.StandardOpenOption.APPEND)
       }
       root
@@ -816,25 +758,20 @@ object CdcQueries {
   }
 
   /** Staged probe file stream (the q89 layout: ts-ordered part files in
-    * mtime arrival order, then the two sentinel waves). The probe stream
-    * is read uncapped, so the whole stage lands in batch 1; the dimension
-    * log's span cap paces the watermark. Probe sentinels carry
-    * p_key = -1 (filtered from output) at the SAME instants as the
-    * dimension-side sentinel offsets — the global watermark is the min
-    * over sources, so both sides must advance. */
+    * mtime arrival order, then one sentinel file). The probe stream is read
+    * uncapped, so the whole stage lands in batch 1; the dimension log's
+    * span cap paces the watermark. The probe sentinel carries p_key = -1
+    * (filtered from output) at the SAME instant as the dimension-side
+    * sentinel offset — the global watermark is the min over sources, so
+    * both sides must advance. */
   private def q92Stage(s: SparkSession, dir: String): StreamFixtures.Stage =
     StreamFixtures.ensure("q92", dir) { in =>
       val probes = q92Probes(s, dir)
       probes.orderBy("pts").write.mode("overwrite").parquet(in)
-      val maxPtsUs = probes.agg(max(unix_micros(col("pts")))).head().getLong(0)
       val maxOffMs = q92MaxOff(s, dir)
-      val span = q92WaveSpan(maxOffMs)
-      def sentinelAt(us: Long) =
-        s.range(1).select(lit(-1L).as("p_key"), lit(-us).as("probe_id"),
-          timestamp_micros(lit(us)).as("pts"))
-      StreamFixtures.stageWithWaves(in, sentinelAt, padUs = maxPtsUs,
-        waveUs = Seq((maxOffMs + q92BaseMs + span) * 1000,
-          (maxOffMs + q92BaseMs + 2 * span) * 1000))
+      val us = (maxOffMs + q92BaseMs + q92WaveSpan(maxOffMs)) * 1000
+      StreamFixtures.stageWithSentinel(in, s.range(1).select(lit(-1L).as("p_key"),
+        lit(-us).as("probe_id"), timestamp_micros(lit(us)).as("pts")))
     }
 
   /** q43's staged stream input (ingest scaffolding, once per JVM+dir):
@@ -881,11 +818,7 @@ object CdcQueries {
       out.flush()
     } finally out.close()
     // best-effort cleanup of the staging dir (temp space either way)
-    val walk = java.nio.file.Files.walk(partsDir)
-    val toDelete =
-      try walk.sorted(java.util.Comparator.reverseOrder()).iterator().asScala.toSeq
-      finally walk.close()
-    toDelete.foreach(p => java.nio.file.Files.deleteIfExists(p))
+    Fixtures.deleteTree(partsDir)
   }
 
   private val D = "DECIMAL(38,6)"

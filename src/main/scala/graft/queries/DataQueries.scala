@@ -112,10 +112,7 @@ object DataQueries {
     // AvailableNow run whose admission decisions hash-match the
     // closed-form min-per-bucket oracle.
     "q83_streaming_lsh_dedup" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       import s.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q83_")
-      Fixtures.deleteTreeOnExit(tmp)
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       // staged id-ordered part files, mtime arrival order (q61 harness
       // pattern), cached per JVM like the other stream stages; only the
@@ -137,13 +134,8 @@ object DataQueries {
         .option("maxFilesPerTrigger", "4").parquet(st.in)
       val bandStream = Dedup.md5BandsPerRow(stream, "doc_id", "text")
         .as[graft.streaming.BandRow]
-      val qname = "q83_lsh_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = graft.streaming.StreamingOps.lshBucketClaims(bandStream)
-        .toDF().writeStream.outputMode("append").format("memory").queryName(qname)
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val claims = ss.table(qname) // (band, bhv, first_doc)
+      val claims = StreamFixtures.drainToMemory( // (band, bhv, first_doc)
+        graft.streaming.StreamingOps.lshBucketClaims(bandStream).toDF(), "q83_lsh")
       val bands = Dedup.md5BandsPerRow(docs, "doc_id", "text")
       val perdoc = bands.join(claims, Seq("band", "bhv"))
         .groupBy("doc_id").agg(count(lit(1)).as("n_bands"),
@@ -212,39 +204,37 @@ object DataQueries {
     // static side per batch), results append to a parquet spool, and the
     // drained union must hash-match q109 — one oracle, two shapes.
     "q111_stream_semantic_screen" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val (centTbl, idxTbl) = ensureAnnIndex(s, dir)
+      val tmp = java.nio.file.Files.createTempDirectory("graft_q111_")
+      Fixtures.deleteTreeOnExit(tmp)
+      val resDir = tmp.resolve("res").toString
       val cents = s.table(centTbl).persist()
       // the corpus side PREPARED (quantized + norms) once — per-batch
       // re-derivation would be O(|prior|) work per micro-batch
       val idx = Similarity.prepareScreenIndex(mt(s, idxTbl), "vec_id", "embedding")
         .persist()
-      cents.count(); idx.count()
-      val st = StreamFixtures.arm(q111Stage(s, dir))
-      val schema = s.read.parquet(st.in).schema
-      // the stream-scoped session pins 4 shuffle partitions for the
-      // per-batch screens (batch.sparkSession is a clone of this one)
-      val ss = StreamFixtures.streamSession(s)
-      // 4 files/trigger → 2 micro-batches: per-batch screening is
-      // complete (verdicts need only the static index — no cross-batch
-      // state), so the appended union is batch-count-invariant; still
-      // multi-batch, at half the planning + screen invocations
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4").parquet(st.in)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q111_")
-      Fixtures.deleteTreeOnExit(tmp)
-      val resDir = tmp.resolve("res").toString
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
+      // released on every exit: a stream that throws must not leave the
+      // static sides cached
+      try {
+        cents.count(); idx.count()
+        val st = StreamFixtures.arm(q111Stage(s, dir))
+        val schema = s.read.parquet(st.in).schema
+        // the stream-scoped session pins 4 shuffle partitions for the
+        // per-batch screens (batch.sparkSession is a clone of this one)
+        val ss = StreamFixtures.streamSession(s)
+        // 4 files/trigger → 2 micro-batches: per-batch screening is
+        // complete (verdicts need only the static index — no cross-batch
+        // state), so the appended union is batch-count-invariant; still
+        // multi-batch, at half the planning + screen invocations
+        val stream = ss.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "4").parquet(st.in)
+        StreamFixtures.drain(stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
           if (!batch.isEmpty)
             Similarity.semanticScreenVsPriorPrepared(cents, idx, batch,
               "vec_id", "embedding", minSim = 0.9, nprobe = 2)
               .write.mode("append").parquet(resDir)
-        }
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      cents.unpersist(); idx.unpersist()
+        }, "q111")
+      } finally { cents.unpersist(); idx.unpersist() }
       s.read.parquet(resDir).orderBy("vec_id")
     }),
 
@@ -461,7 +451,6 @@ object DataQueries {
     // screen — same oracle SQL, different execution shape, which is the
     // point.
     "q108_stream_static_screen" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val yesterday = docs.filter(col("doc_id") % 3 === 0)
       // CACHE the static side: a stream-static join re-executes the static
@@ -484,14 +473,7 @@ object DataQueries {
         .join(broadcast(manifest.withColumn("__hit", lit(1L))),
           Seq("band", "bhv"), "left")
         .select(col("doc_id"), coalesce(col("__hit"), lit(0L)).as("hit"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q108_")
-      Fixtures.deleteTreeOnExit(tmp)
-      val qname = "q108_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = joined.writeStream.outputMode("append").format("memory").queryName(qname)
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val per = ss.table(qname).groupBy("doc_id")
+      val per = StreamFixtures.drainToMemory(joined, "q108").groupBy("doc_id")
         .agg(count(lit(1)).as("n_bands"), sum("hit").as("n_hit"))
       s.read.parquet(st.in).select("doc_id")
         .join(per, Seq("doc_id"), "left")
@@ -657,37 +639,16 @@ object DataQueries {
     // execution shapes, so the streaming append provably lands the
     // identical manifest.
     "q127_stream_tfidf_maintenance" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val (tbl, n1) = ensureDfManifest(s, dir)
       val st = StreamFixtures.arm(q127Stage(s, dir))
-      val schema = s.read.parquet(st.in).schema
-      // per-batch deltas are small aggregates — 32-partition shuffles
-      // would be pure task overhead; the override rides in the stream's
-      // own session, never the shared one
-      val ss = StreamFixtures.streamSession(s, parts = 8)
       // 4 files/trigger → 2 micro-batches: each batch spools ITS OWN
       // (term, df) delta and df composes by addition over disjoint doc
       // sets, so the summed manifest is batch-count-invariant; still
-      // multi-batch, at half the planning/spool rounds
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4").parquet(st.in)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q127_")
-      val spool = tmp.resolve("df").toString
-      // snapshot-then-delete inside try/finally: an exception mid-stream
-      // must not leak the spool/checkpoint tree JVM-long (the same rule
-      // as q123's cleanup)
-      val out = try {
-        val q = stream.writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            if (!batch.isEmpty)
-              graft.operators.TfIdf.dfManifest(batch, "doc_id", "text")
-                .write.mode("overwrite").parquet(s"$spool/batch=$batchId")
-          }
-          .option("checkpointLocation", tmp.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+      // multi-batch, at half the planning/spool rounds. The result is
+      // snapshotted before drainStream deletes the spool.
+      drainStream(s, st, filesPerTrigger = 4, tag = "q127")(spoolDfDelta) { tmp =>
         val dfm = mt(s, tbl).select("term", "df")
-          .unionByName(s.read.parquet(spool).select("term", "df"))
+          .unionByName(s.read.parquet(tmp.resolve("df").toString).select("term", "df"))
           .groupBy("term").agg(sum("df").as("df"))
         val n2 = s.read.parquet(st.in).select("doc_id").distinct().count()
         Fixtures.snapshot(s,
@@ -696,8 +657,7 @@ object DataQueries {
             dfm, priorN = n1 + n2, k = 5)
             .withColumnRenamed("id", "doc_id"),
           "q127_out")
-      } finally deleteRecursively(tmp)
-      out.orderBy("doc_id", "rank")
+      }.orderBy("doc_id", "rank")
     }),
 
     // SUFFIX-ARRAY-FAITHFUL SUBSTRING DEDUP — q125's named gap closed
@@ -2070,21 +2030,6 @@ object DataQueries {
       ce, "today_id", "prior_id", s.table(atbl))
   }
 
-  /** Recursive local-temp-tree delete for per-invocation scaffolding the
-    * streaming gates create (spools, checkpoints) — test/bench plumbing,
-    * not a production path, hence java.nio is fine here. */
-  private def deleteRecursively(root: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(root)) {
-      val all = java.nio.file.Files.walk(root)
-      try all.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().asScala.foreach(p =>
-          try java.nio.file.Files.deleteIfExists(p)
-          catch { case _: java.io.IOException => () })
-      finally all.close()
-    }
-  }
-
   /** Day 2's crawl for the CURATION family (q105, and q132's composed
     * day-2 job — one constructor so the gates share the oracle's dcsrc
     * CTE verbatim): fresh docs (doc_id % 3 = 2) + exact re-crawls of
@@ -2244,37 +2189,41 @@ object DataQueries {
 
   /** Shared doc-stream drain for the stream-maintained gates and their
     * fold fixtures: streams `st`'s staged files (maxFilesPerTrigger so the
-    * day is genuinely multi-batch) through `perBatch` with shuffle
-    * partitions pinned low (per-batch work is small — 32-partition shuffles
-    * would be pure task overhead; the override rides in the stream's own
-    * session, which `batch.sparkSession` clones, never the shared one),
-    * then returns `afterDrain` (the day close, or a snapshot of the day's
-    * result) before the per-invocation tree (spools + checkpoint + every
-    * micro-batch's parquet) is deleted. The delete runs in a finally: a
-    * settled battery re-runs these gates dozens of times, and neither
-    * deleteOnExit nor an exception mid-stream may hoard the tree
-    * JVM-long. */
+    * day is genuinely multi-batch) through `perBatch` via
+    * [[StreamFixtures.drain]], with shuffle partitions pinned low
+    * (per-batch work is small — 32-partition shuffles would be pure task
+    * overhead; the override rides in the stream's own session, which
+    * `batch.sparkSession` clones, never the shared one), then returns
+    * `afterDrain` (the day close, or a snapshot of the day's result) before
+    * the per-invocation spool tree `perBatch` writes under is deleted. The
+    * delete runs in a finally: a settled battery re-runs these gates dozens
+    * of times, and neither deleteOnExit nor an exception mid-stream may
+    * hoard the tree JVM-long. */
   private def drainStream[T](s: SparkSession, st: StreamFixtures.Stage,
       filesPerTrigger: Int, tag: String)(
       perBatch: (DataFrame, Long, java.nio.file.Path) => Unit)(
       afterDrain: java.nio.file.Path => T): T = {
-    import org.apache.spark.sql.streaming.Trigger
     val schema = s.read.parquet(st.in).schema
     val ss = StreamFixtures.streamSession(s, parts = 8)
     val stream = ss.readStream.schema(schema)
       .option("maxFilesPerTrigger", filesPerTrigger.toString).parquet(st.in)
     val tmp = java.nio.file.Files.createTempDirectory(s"graft_${tag}_")
     try {
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          perBatch(batch, batchId, tmp)
-        }
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      StreamFixtures.drain(stream.writeStream.foreachBatch {
+        (batch: DataFrame, batchId: Long) => perBatch(batch, batchId, tmp)
+      }, tag)
       afterDrain(tmp)
-    } finally deleteRecursively(tmp)
+    } finally Fixtures.deleteTree(tmp)
   }
+
+  /** q127's and q130's per-batch step: the batch's own (term, df) delta,
+    * spooled under `df/batch=<id>` — a replayed batch overwrites its own
+    * partition with identical rows. */
+  private def spoolDfDelta(batch: DataFrame, batchId: Long, tmp: java.nio.file.Path): Unit =
+    if (!batch.isEmpty)
+      graft.operators.TfIdf.dfManifest(batch, "doc_id", "text")
+        .write.mode("overwrite")
+        .parquet(tmp.resolve("df").resolve(s"batch=$batchId").toString)
 
   /** Fresh copies of [[ensureClusterState]]'s day-1 (assignment, shingle)
     * tables, bucketed like the originals, one pair per `tag` (`q119`,
@@ -2397,13 +2346,7 @@ object DataQueries {
       val tbl2 = graft.operators.BucketedOps.ensureBucketed(
         s.table(tbl), s"q130_df|$dir", "term", buckets = 8)
       val st = StreamFixtures.arm(q127Stage(s, dir))
-      drainStream(s, st, filesPerTrigger = 4, tag = "q130d2") {
-        (batch, batchId, tmp) =>
-          if (!batch.isEmpty)
-            graft.operators.TfIdf.dfManifest(batch, "doc_id", "text")
-              .write.mode("overwrite")
-              .parquet(tmp.resolve("df").resolve(s"batch=$batchId").toString)
-      } { tmp =>
+      drainStream(s, st, filesPerTrigger = 4, tag = "q130d2")(spoolDfDelta) { tmp =>
         graft.operators.BucketedOps.foldSpool(s, tmp.resolve("df").toString,
           tbl2, "term", buckets = 8, jobId = "day2",
           resolve = _.groupBy("term").agg(sum("df").as("df")))
@@ -2517,7 +2460,7 @@ object DataQueries {
         graft.operators.BucketedOps.idempotentAppend(
           shingles, itbl, "h", buckets = 8, jobId = "day2")
         (htbl, btbl, atbl, itbl, p3)
-      } finally deleteRecursively(stage)
+      } finally Fixtures.deleteTree(stage)
     }
 
   /** q133's stored state — [[ensureClusterState]]'s day-1 tables COPIED

@@ -58,26 +58,31 @@ private[graft] object Fixtures {
     s.read.parquet(p)
   }
 
+  /** Deletes `root` and everything under it, if it exists. A path that
+    * cannot be deleted is skipped: cleanup of temp scaffolding must never
+    * mask the caller's own result or exception. */
+  def deleteTree(root: java.nio.file.Path): Unit = {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    if (Files.exists(root)) {
+      val all = Files.walk(root)
+      try all.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .iterator().asScala.foreach(p =>
+          try Files.deleteIfExists(p) catch { case _: java.io.IOException => () })
+      finally all.close()
+    }
+  }
+
   /** deleteOnExit for a TREE: `File.deleteOnExit` removes only EMPTY
-    * directories, so a fixture dir that later grows parquet state or a
-    * checkpoint never actually deletes — each battery run leaked those
-    * trees in /tmp (ADVICE_r16 #4). One JVM-wide shutdown hook deletes
-    * every registered root recursively; registration (not eager deletion)
-    * is required because query fixtures return LAZY frames over the tree.
-    * Failures are swallowed — cleanup must never mask a real exit. */
+    * directories, so a fixture dir that later grows parquet state never
+    * actually deletes — each battery run leaked those trees in /tmp
+    * (ADVICE_r16 #4). One JVM-wide shutdown hook runs [[deleteTree]] on
+    * every registered root; registration (not eager deletion) is required
+    * because query fixtures return LAZY frames over the tree. */
   private val exitTrees = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
   private lazy val exitHookInstalled: Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      exitTrees.forEach { root =>
-        try {
-          import java.nio.file.Files
-          import scala.jdk.CollectionConverters._
-          if (Files.exists(root)) {
-            val all = Files.walk(root).iterator().asScala.toSeq
-            all.sortBy(-_.getNameCount).foreach(p => Files.deleteIfExists(p))
-          }
-        } catch { case _: Throwable => () }
-      }
+      exitTrees.forEach(root => try deleteTree(root) catch { case _: Throwable => () })
     }, "graft-fixture-tree-cleanup"))
   def deleteTreeOnExit(p: java.nio.file.Path): Unit = {
     exitHookInstalled

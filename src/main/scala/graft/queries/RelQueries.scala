@@ -951,9 +951,6 @@ object RelQueries {
     }
 
   private def q52(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q52_ckpt_")
-    Fixtures.deleteTreeOnExit(tmp)
     val st = StreamFixtures.arm(q52Stage(s, dir))
     // bounded run, tiny state → few state partitions, scoped to the
     // stream's own session (see the streamSession note)
@@ -965,12 +962,7 @@ object RelQueries {
     val stream = ss.readStream.schema(q52Events(s, dir).schema)
       .parquet(st.in)
     val agg = graft.streaming.StreamingOps.windowedCounts(stream, "ets", "10 seconds", "1 hour")
-    val qname = "q52_win_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = agg.writeStream.outputMode("complete").format("memory").queryName(qname)
-      .option("checkpointLocation", tmp.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    ss.table(qname)
+    StreamFixtures.drainToMemory(agg, "q52_win", mode = "complete")
       .select(unix_micros(col("window.start")).as("hour_start_us"),
         col("event_type"), col("n"), col("total_value"))
       .orderBy("hour_start_us", "event_type")
@@ -999,23 +991,14 @@ object RelQueries {
       val e = q54Events(s, dir)
       e.orderBy("ts").write.mode("overwrite").parquet(in) // range-partitioned by ts
       val maxUs = e.agg(max(unix_micros(col("ts")))).head().getLong(0)
-      val sentinel = e.select(col("user_id")).distinct()
+      StreamFixtures.stageWithSentinel(in, e.select(col("user_id")).distinct()
         .select(col("user_id"),
           timestamp_micros(lit(maxUs + (q54GapMs + 60000L) * 1000L)).as("ts"),
-          lit("__sentinel").as("event_type"), lit(0.0).as("value"))
-      val mainParts = StreamFixtures.parts(in)
-      sentinel.coalesce(1).write.mode("append").parquet(in)
-      val sentParts = StreamFixtures.parts(in).filterNot(mainParts.contains)
-      mainParts.zipWithIndex.map { case (f, i) => (Seq(f), i * 1000L) } :+
-        ((sentParts, 3600 * 1000L))
+          lit("__sentinel").as("event_type"), lit(0.0).as("value")))
     }
 
   private def q54(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import s.implicits._
-    val gapMs = q54GapMs
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q54_ckpt_")
-    Fixtures.deleteTreeOnExit(tmp)
     val st = StreamFixtures.arm(q54Stage(s, dir))
     val ss = StreamFixtures.streamSession(s)
     // no maxFilesPerTrigger: one catch-up batch. sessionize sorts each
@@ -1027,13 +1010,8 @@ object RelQueries {
     // open in state and are never emitted, exactly as before.
     val stream = ss.readStream.schema(q54Events(s, dir).schema)
       .parquet(st.in)
-    val qname = "q54_sess_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = graft.streaming.StreamingOps.sessionize(stream.as[graft.streaming.Event], gapMs)
-      .writeStream.outputMode("append").format("memory").queryName(qname)
-      .option("checkpointLocation", tmp.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    ss.table(qname)
+    StreamFixtures.drainToMemory(graft.streaming.StreamingOps
+        .sessionize(stream.as[graft.streaming.Event], q54GapMs).toDF(), "q54_sess")
       .select(col("user_id"), col("start_ts").as("start_ms"), col("end_ts").as("end_ms"),
         col("n_events"), col("total_value"))
       .orderBy("user_id", "start_ms")
@@ -1062,21 +1040,13 @@ object RelQueries {
     }
 
   private def q61(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q61_ckpt_")
-    Fixtures.deleteTreeOnExit(tmp)
     val st = StreamFixtures.arm(q61Stage(s, dir))
     val ss = StreamFixtures.streamSession(s)
     val stream = ss.readStream.schema(q61Events(s, dir).schema)
       .option("maxFilesPerTrigger", "1").parquet(st.in)
     val dedup = graft.streaming.StreamingOps.firstPerKey(
       stream, "ets", Seq("user_id", "event_type"), lateness = "1 hour")
-    val qname = "q61_dedup_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = dedup.writeStream.outputMode("append").format("memory").queryName(qname)
-      .option("checkpointLocation", tmp.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    ss.table(qname)
+    StreamFixtures.drainToMemory(dedup, "q61_dedup")
       .select(col("user_id"), col("event_type"), unix_micros(col("ets")).as("ts_us"),
         col("event_id"), col("value"))
       .orderBy("user_id", "event_type")
@@ -1124,7 +1094,7 @@ object RelQueries {
       side("click", "c").drop("c_value"), "cts",
       side("purchase", "p"), "pts",
       "c_user", "p_user", windowMs = 1800000L, lateness = "2 hours")
-    StreamFixtures.drainAppend(joined, "q88_ssj")
+    StreamFixtures.drainToMemory(joined, "q88_ssj")
       .select(col("c_user").as("user_id"), col("c_id").as("click_id"),
         col("p_id").as("purchase_id"), unix_micros(col("cts")).as("click_ts_us"),
         unix_micros(col("pts")).as("purchase_ts_us"), col("p_value").as("purchase_value"))
@@ -1139,18 +1109,16 @@ object RelQueries {
   //     flatMapGroupsWithState over the tagged union of both streams,
   //     keyed by user (StreamingOpsSpec pins semantics, exactly-once and
   //     the single state operator). A click is emitted once the global
-  //     watermark (the min over the two streams) passes it: a far-future
+  //     watermark (the min over the two streams) passes it: one far-future
   //     sentinel click+purchase (user -1, filtered from output) pushes the
-  //     watermark past every real click, and the batch after it emits
-  //     them — the q54 end-of-stream pattern. Oracle: static
-  //     argmax-per-click join.
+  //     watermark past every real click, and the no-data batch AvailableNow
+  //     runs after that advance emits them — the q54 end-of-stream pattern.
+  //     Oracle: static argmax-per-click join.
   //
   //     q90 is the OUTER form (Flink's temporal LEFT join): clicks with no
   //     purchase in the horizon are kept with NULL version columns, emitted
   //     by the same watermark pass. Both run the one operator and share one
-  //     staged layout; its second sentinel wave (filtered from output, it
-  //     only pushes the watermark forward) is the batch that runs after
-  //     the first wave's advance. ---
+  //     staged layout. ---
   private def q89(s: SparkSession, dir: String): DataFrame = temporalQ(s, dir, outer = false)
   private def q90(s: SparkSession, dir: String): DataFrame = temporalQ(s, dir, outer = true)
 
@@ -1167,39 +1135,26 @@ object RelQueries {
       val e = temporalEvents(s, dir)
       e.orderBy("ets").write.mode("overwrite").parquet(in) // range-partitioned by ts
       val maxUs = e.agg(max(unix_micros(col("ets")))).head().getLong(0)
-      val waveGapUs = (temporalLatenessSec * 1000L + temporalHorizonMs + 120000L) * 1000L
-      val sentUs = maxUs + waveGapUs
-      val sentUs2 = sentUs + waveGapUs
-      def sentinelAt(us: Long) =
+      // past lateness + horizon with a 2 min margin: the sentinel's
+      // watermark advance passes every real click
+      val sentUs = maxUs + (temporalLatenessSec * 1000L + temporalHorizonMs + 120000L) * 1000L
+      def sentinel(tpe: String) =
         s.range(1).select(lit(-1L).as("user_id"), col("id").as("event_id"),
-          timestamp_micros(lit(us)).as("ets"), lit("click").as("event_type"),
+          timestamp_micros(lit(sentUs)).as("ets"), lit(tpe).as("event_type"),
           lit(0.0).as("value"))
-          .unionAll(s.range(1).select(lit(-1L).as("user_id"), col("id").as("event_id"),
-            timestamp_micros(lit(us)).as("ets"), lit("purchase").as("event_type"),
-            lit(0.0).as("value")))
-      // the shared stageWithWaves layout, one file per wave: wave 1's
-      // watermark advance passes every real click, and wave 2 (the last
-      // file, alone in its batch) runs the batch that emits them
-      StreamFixtures.stageWithWaves(in, sentinelAt, padUs = maxUs,
-        waveUs = Seq(sentUs, sentUs2))
+      StreamFixtures.stageWithSentinel(in, sentinel("click").unionAll(sentinel("purchase")))
     }
 
   private def temporalQ(s: SparkSession, dir: String, outer: Boolean): DataFrame = {
     val st = StreamFixtures.arm(temporalStage(s, dir))
     val ss = StreamFixtures.streamSession(s)
-    // TWO micro-batches instead of ~18: all real data + the pad + wave 1
-    // in batch 1, wave 2 alone in the last batch. The final answer only
-    // needs (a) every real row processed no later than wave 1 and (b) a
-    // batch AFTER wave 1 so its watermark advance takes effect — batch
-    // boundaries between real files bought nothing but per-batch planning
-    // + state-store checkpoints (the r17 profile's 0.5 s/batch).
-    // maxFilesPerTrigger = (total − 1) admits everything except wave 2
-    // into batch 1, which holds only while wave 2 is the one last file.
-    val totalFiles = st.groups.map(_._1.size).sum
-    assert(totalFiles >= 2 && st.groups.last._1.size == 1,
-      s"temporal stage layout: $totalFiles files, last group ${st.groups.last._1.size}")
+    // uncapped: every real row and the sentinel land in one batch, whose
+    // watermark advance the closing no-data batch turns into the emission
+    // — two micro-batches in all. Batch boundaries between real files buy
+    // nothing but per-batch planning + state-store checkpoints (the r17
+    // profile's 0.5 s/batch).
     def side(tpe: String, pre: String) = ss.readStream.schema(temporalEvents(s, dir).schema)
-      .option("maxFilesPerTrigger", (totalFiles - 1).toString).parquet(st.in)
+      .parquet(st.in)
       .filter(col("event_type") === tpe)
       .select(col("user_id").as(s"${pre}_user"), col("event_id").as(s"${pre}_id"),
         col("ets").as(s"${pre}ts"), col("value").as(s"${pre}_value"))
@@ -1210,7 +1165,7 @@ object RelQueries {
       lateness = s"$temporalLatenessSec seconds",
       eCols = Seq("c_user", "c_id"), payload = Seq("p_value"), tieCols = Seq("p_id"),
       joinType = if (outer) "leftOuter" else "inner")
-    StreamFixtures.drainAppend(joined, "q89_tj")
+    StreamFixtures.drainToMemory(joined, "q89_tj")
       .where(col("c_user") >= 0) // drop the sentinel pair
       .select(col("c_user").as("user_id"), col("c_id").as("click_id"),
         unix_micros(col("cts")).as("click_ts_us"), col("p_id").as("version_id"),

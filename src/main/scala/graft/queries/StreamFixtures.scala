@@ -1,13 +1,18 @@
 package graft.queries
 
-/** Per-JVM cache of staged stream-input directories for the streaming gate
-  * queries (q52/q54/q61/q88/q89/q90).
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+
+/** The streaming gates' scaffolding: the one drain every gate runs
+  * ([[drain]]), and a per-JVM cache of staged stream-input directories
+  * (q43/q52/q54/q61/q83/q88/q89/q90/q92/q108/q111/q123/q127).
   *
   * Staging a file stream means sorting the source table, writing it as
-  * part files, and appending sentinel waves — ingest-side test scaffolding,
-  * not query cost (in production the stream's input already exists; the
-  * engine cost is the stateful processing). The same rule the bench already
-  * applies to the CDC fixture and q87's bucketed layout. The staged layout
+  * part files, and, for the event-time gates, appending a sentinel file —
+  * ingest-side test scaffolding, not query cost (in production the stream's
+  * input already exists; the engine cost is the stateful processing). The
+  * same rule the bench already applies to the CDC fixture and q87's
+  * bucketed layout. The staged layout
   * for a given (kind, source dir) is deterministic, so it is built ONCE per
   * JVM and each run only re-arms arrival order: fresh mtimes from "now", in
   * the staged group order, so the file source (which admits files by mtime)
@@ -90,51 +95,59 @@ private[graft] object StreamFixtures {
     new java.io.File(in).listFiles().filter(_.getName.endsWith(".parquet"))
       .sortBy(_.getName).toSeq
 
-  /** The shared sentinel-wave stage layout (q89/q90/q92): main part files
-    * arrive one per second; a pad file keeps the pre-wave file count odd;
-    * then each wave lands as its own single file, 1800 s of mtime apart.
-    * Callers pace the waves by their trigger caps: q89/q90 admit all but
-    * one file per trigger (totalFiles − 1), so the last wave alone opens
-    * the batch that runs after the first wave's watermark advance; q92's
-    * probes are uncapped and its dimension log's span cap paces the
-    * watermark. `sentinel(us)` builds the watermark-pushing rows for
-    * instant `us` (filtered from query output by the caller's
-    * sentinel-key convention). */
-  def stageWithWaves(in: String, sentinel: Long => org.apache.spark.sql.DataFrame,
-      padUs: Long, waveUs: Seq[Long]): Seq[(Seq[java.io.File], Long)] = {
+  /** The shared event-time stage layout (q54/q89/q90/q92): the main part
+    * files arrive one per second, then `sentinel` lands as one file
+    * 1800 s of mtime later. The sentinel rows sit far enough past every
+    * real row that the watermark advance they cause releases all of them
+    * (callers filter the sentinels from output by their sentinel-key
+    * convention). The streams are read uncapped, so the whole stage is one
+    * batch; the no-data batch that AvailableNow runs after a watermark
+    * advance does the emission ([[drain]]). */
+  def stageWithSentinel(in: String, sentinel: DataFrame): Seq[(Seq[java.io.File], Long)] = {
     val mainParts = parts(in)
-    if (mainParts.length % 2 == 0)
-      sentinel(padUs).coalesce(1).write.mode("append").parquet(in)
-    val padParts = parts(in).filterNot(mainParts.contains)
-    var seen = mainParts ++ padParts
-    val waveParts = waveUs.map { us =>
-      sentinel(us).coalesce(1).write.mode("append").parquet(in)
-      val p = parts(in).filterNot(seen.contains)
-      seen = seen ++ p
-      p
-    }
-    mainParts.zipWithIndex.map { case (f, i) => (Seq(f), i * 1000L) } ++
-      ((padParts +: waveParts).zipWithIndex.map { case (p, i) =>
-        (p, (1800L + 1800L * i) * 1000L)
-      })
+    sentinel.coalesce(1).write.mode("append").parquet(in)
+    mainParts.zipWithIndex.map { case (f, i) => (Seq(f), i * 1000L) } :+
+      ((parts(in).filterNot(mainParts.contains), 1800L * 1000L))
   }
 
-  /** The shared gate-query drain (q88/q89/q90/q92/q99): append-mode
-    * memory sink under Trigger.AvailableNow. CONTRACT: build `df` from
-    * [[streamSession]] — the low shuffle-partition count a bounded
-    * catch-up wants rides in the stream's own session, never the shared
-    * one, and the memory sink registers its table in that session (read
-    * back here via `df.sparkSession`). Returns the drained sink table. */
-  def drainAppend(df: org.apache.spark.sql.DataFrame,
-      prefix: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory(prefix + "_ckpt_")
-    Fixtures.deleteTreeOnExit(tmp)
+  /** The one streaming drain: runs `w` — a memory sink, a `foreachBatch`,
+    * or an `UpsertSink` writer — under `Trigger.AvailableNow` against a
+    * fresh checkpoint, waits for it, and deletes the checkpoint in a
+    * finally. It owns only that checkpoint: output that a returned lazy
+    * frame still reads (UpsertSink state, spools) stays with the caller.
+    *
+    * AvailableNow stops only when no batch is left to construct, and with
+    * `spark.sql.streaming.noDataMicroBatches.enabled` (the default) a batch
+    * that advances the watermark is followed by a no-data batch, so an
+    * event-time operator has emitted everything the last data batch
+    * released when the drain returns (TemporalCompactionSpec pins it).
+    *
+    * `minBatches` is the micro-batch count a multi-batch gate promises; a
+    * run that committed fewer fails with an error naming `prefix`. */
+  def drain(w: DataStreamWriter[_], prefix: String, minBatches: Int = 1): Unit = {
+    val ckpt = java.nio.file.Files.createTempDirectory(s"graft_${prefix}_ckpt_")
+    try {
+      w.option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      // batch ids are 0-based and the checkpoint is fresh: one commit file
+      // per finished batch, the newest id the last
+      val ran = Option(ckpt.resolve("commits").toFile.list()).toSeq.flatten
+        .flatMap(_.toLongOption).maxOption.fold(0L)(_ + 1)
+      if (ran < minBatches) throw new IllegalStateException(
+        s"$prefix ran $ran micro-batch(es); the gate promises at least $minBatches")
+    } finally Fixtures.deleteTree(ckpt)
+  }
+
+  /** [[drain]] into a memory sink in `mode` (append or complete); returns
+    * the drained sink table. CONTRACT: build `df` from [[streamSession]] —
+    * the low shuffle-partition count a bounded catch-up wants rides in the
+    * stream's own session, never the shared one, and the memory sink
+    * registers its table in that session (read back here via
+    * `df.sparkSession`). */
+  def drainToMemory(df: DataFrame, prefix: String, mode: String = "append",
+      minBatches: Int = 1): DataFrame = {
     val qname = prefix + "_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = df.writeStream.outputMode("append").format("memory").queryName(qname)
-      .option("checkpointLocation", tmp.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    drain(df.writeStream.outputMode(mode).format("memory").queryName(qname), prefix, minBatches)
     df.sparkSession.table(qname)
   }
 }

@@ -142,14 +142,18 @@ object UpsertSink {
 
   /** Read the current-state table: the live generations resolved
     * last-wins per key, tombstones filtered, sink-internal and changelog
-    * columns dropped. Never writes — superseded generations and an
-    * in-flight merge's `_tmp` staging are skipped, not cleaned. */
+    * columns dropped. A single live generation is read as it is: every
+    * commit resolves through [[bucketed]], so it already holds one row per
+    * key. Never writes — superseded generations and an in-flight merge's
+    * `_tmp` staging are skipped, not cleaned. */
   def readState(spark: SparkSession, path: String): DataFrame = {
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val key = formatFile(fs, target, KeyFile,
       throw new IllegalArgumentException(s"$target holds no UpsertSink state"))
-    lastWins(readGenerations(spark, target, live(fs, target)), key.split("\n").toSeq)
+    val gens = live(fs, target)
+    val rows = readGenerations(spark, target, gens)
+    (if (gens.size == 1) rows else lastWins(rows, key.split("\n").toSeq))
       .filter(col("op") =!= "d").drop("op", "op_offset", "row_kind")
   }
 

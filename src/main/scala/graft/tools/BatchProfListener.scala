@@ -36,12 +36,8 @@ object BatchProfListener {
   val stateRows = new AtomicLong
   /** Per micro-batch: each state operator's name and total state rows. */
   val stateOps = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  def report(name: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val parts = sums.asScala.toSeq.sortBy(-_._2.get)
-      .map { case (k, v) => f"$k=${v.get / 1000.0}%.2fs" }.mkString(" ")
-    println(f"  STREAM $name batches=${batches.get} $parts " +
-      f"stateOpMs=${stateMs.get / 1000.0}%.2fs stateRows=${stateRows.get}")
+  /** Clears the sums, e.g. after a warm-up run. */
+  def reset(): Unit = {
     sums.clear(); batches.set(0); stateMs.set(0); stateRows.set(0); stateOps.clear()
   }
 }

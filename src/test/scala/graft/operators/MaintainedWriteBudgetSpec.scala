@@ -113,6 +113,17 @@ class MaintainedWriteBudgetSpec extends SparkSpec {
     assert(UpsertSink.readState(spark, out).count() === 60L + UpsertSink.FoldEvery - 2)
   }
 
+  // A commit resolves its rows per key, so a target with one live
+  // generation is read as it is; a second live generation adds the
+  // resolve's shuffle.
+  test("UpsertSink.readState: one live generation is read as it is, two pay the resolve") {
+    val out = java.nio.file.Files.createTempDirectory("graft_budget_sinkr_").resolve("s").toString
+    UpsertSink.mergeBatch(batchOf(1L to 40L, 0L), Seq("k"), out, 8)
+    budget(3)(assert(UpsertSink.readState(spark, out).count() === 40L))
+    UpsertSink.mergeBatch(batchOf(30L to 50L, 100L), Seq("k"), out, 8)
+    budget(4)(assert(UpsertSink.readState(spark, out).count() === 50L))
+  }
+
   test("UpsertSink.compact: the state's schema read plus one rewrite") {
     val out = java.nio.file.Files.createTempDirectory("graft_budget_sinkc_").resolve("s").toString
     UpsertSink.mergeBatch(batchOf(1L to 40L, 0L), Seq("k"), out, 8)

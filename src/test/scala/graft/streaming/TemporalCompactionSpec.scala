@@ -18,6 +18,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     between an event and the next version.
   *   - INVARIANCE: the answer does not depend on how the input is cut
   *     into micro-batches, nor on a stop and a restart from the checkpoint.
+  *   - ONE SENTINEL: under `Trigger.AvailableNow`, a file stream whose last
+  *     file holds the only watermark sentinel is emitted in full by the
+  *     no-data batch Spark runs after the sentinel's watermark advance —
+  *     the layout the q89/q90/q92 gates stage.
   */
 class TemporalCompactionSpec extends SparkSpec {
   import java.sql.Timestamp
@@ -116,26 +120,28 @@ class TemporalCompactionSpec extends SparkSpec {
       (107L, Some(40L), Some(4.0))))
   }
 
+  // The multi-batch fixture (times in ms): keys 1-3 update every 5 s (key 3
+  // every 45 s, so some of its events fall outside the 20 s horizon); key 4
+  // has no versions. Boundary cases: ver 117 ties ver 114 at 70.5 s (the
+  // higher id wins), e5 sits exactly 20 s after ver 300 (inclusive) and e7
+  // 1 ms past it, e6 sits exactly at ver 208.
+  private def at(ms: Long) = new Timestamp(ms)
+  private val horizon = 20000L
+  private val versions = (for (k <- 1L to 3L; i <- 0L until 30L if k != 3 || i % 9 == 0)
+      yield (k, k * 100 + i, i * 5000L + k * 500L, (k * 100 + i) / 10.0)) ++
+    Seq((1L, 117L, 70500L, 99.0))
+  private val events = (0L until 45L).map(j => (j % 4 + 1, 200L + j, j * 3300L + 250L)) ++
+    Seq((3L, 5L, 21500L), (2L, 6L, 41000L), (3L, 7L, 21501L))
+  /** The batch answer: per event, the greatest version in [t − horizon, t]. */
+  private def expected(outer: Boolean): Seq[Out] = events.flatMap { case (k, id, t) =>
+    val in = versions.filter(v => v._1 == k && v._3 <= t && v._3 >= t - horizon)
+    if (in.isEmpty) { if (outer) Some((id, None, None)) else None }
+    else { val v = in.maxBy(v => (v._3, v._2)); Some((id, Some(v._2), Some(v._4))) }
+  }.sortBy(_._1)
+
   test("batching invariance and checkpoint survival: one batch = k batches = k batches across a restart") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    def at(ms: Long) = new Timestamp(ms)
-    // keys 1-3 update every 5 s (key 3 every 45 s, so some of its events
-    // fall outside the 20 s horizon); key 4 has no versions. Boundary
-    // cases: ver 117 ties ver 114 at 70.5 s (the higher id wins), e5 sits
-    // exactly 20 s after ver 300 (inclusive) and e7 1 ms past it, e6 sits
-    // exactly at ver 208.
-    val horizon = 20000L
-    val versions = (for (k <- 1L to 3L; i <- 0L until 30L if k != 3 || i % 9 == 0)
-        yield (k, k * 100 + i, i * 5000L + k * 500L, (k * 100 + i) / 10.0)) ++
-      Seq((1L, 117L, 70500L, 99.0))
-    val events = (0L until 45L).map(j => (j % 4 + 1, 200L + j, j * 3300L + 250L)) ++
-      Seq((3L, 5L, 21500L), (2L, 6L, 41000L), (3L, 7L, 21501L))
-    def expected(outer: Boolean): Seq[Out] = events.flatMap { case (k, id, t) =>
-      val in = versions.filter(v => v._1 == k && v._3 <= t && v._3 >= t - horizon)
-      if (in.isEmpty) { if (outer) Some((id, None, None)) else None }
-      else { val v = in.maxBy(v => (v._3, v._2)); Some((id, Some(v._2), Some(v._4))) }
-    }.sortBy(_._1)
     // the input cut into time-ordered chunks: nothing is ever late
     val cuts = Seq(0L, 50000L, 100000L, Long.MaxValue)
     def chunk(i: Int) = (events.filter(e => e._3 >= cuts(i) && e._3 < cuts(i + 1)),
@@ -195,5 +201,35 @@ class TemporalCompactionSpec extends SparkSpec {
       assert(restarted === want, s"outer=$outer, restarted")
       assert(nMany >= cut.size + 2 && nRestarted >= cut.size + 2, s"batches: $nMany, $nRestarted")
     }
+  }
+
+  test("one sentinel file under AvailableNow: the closing no-data batch emits every event") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_tj_availnow_")
+    val in = dir.resolve("in").toString
+    val cols = Seq("k", "id", "t", "kind", "value")
+    (events.map(e => (e._1, e._2, at(e._3), "e", 0.0)) ++
+      versions.map(v => (v._1, v._2, at(v._3), "v", v._4)))
+      .toDF(cols: _*).coalesce(1).write.parquet(in)
+    // the last file: the only sentinel, an event and a version far past
+    // lateness + horizon
+    Seq((9L, 900L, at(1000000L), "e", 0.0), (9L, 90L, at(1000000L), "v", 0.0))
+      .toDF(cols: _*).coalesce(1).write.mode("append").parquet(in)
+    val src = spark.readStream.schema(spark.read.parquet(in).schema).parquet(in)
+    def side(kind: String) = src.filter(col("kind") === kind)
+    val joined = StreamingOps.temporalJoin(
+      side("e").select(col("k").as("e_key"), col("id").as("event_id"), col("t").as("ets")), "ets",
+      side("v").select(col("k").as("v_key"), col("id").as("ver_id"), col("t").as("vts"),
+        col("value")), "vts",
+      "e_key", "v_key", horizon, lateness = "10 seconds",
+      eCols = Seq("e_key", "event_id"), payload = Seq("value"), tieCols = Seq("ver_id"))
+    val q = joined.writeStream.format("memory").queryName("tjc_availnow")
+      .outputMode("append").option("checkpointLocation", dir.resolve("ckpt").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    try q.awaitTermination() finally q.stop()
+    assert(outRows(spark.table("tjc_availnow")) === expected(outer = false))
+    assert(q.lastProgress.numInputRows === 0L,
+      "the emission must come from the no-data batch after the sentinel's watermark advance")
+    assert(q.recentProgress.length === 2, "one data batch, then the no-data batch")
   }
 }
