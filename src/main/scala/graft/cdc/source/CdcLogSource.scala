@@ -1062,9 +1062,13 @@ final class CdcMicroBatchStream(opts: CdcOptions, physical: StructType,
         val hold = availableNowCap < 0 && minRowsOpt.exists(m =>
           available < m.minRows() &&
             System.currentTimeMillis() - lastTriggerMs < m.maxTriggerDelayMs())
-        if (hold) CdcOffset(snapshotDone = true, s.logPos, Map.empty, s.finished, s.known)
+        // a held or unmoved log position runs no batch: the offset stays
+        // the start, finished lists included, so their prune lands with
+        // the next batch that reads the log
+        if (hold || available == 0)
+          CdcOffset(snapshotDone = true, s.logPos, Map.empty, s.finished, s.known)
         else {
-          if (available > 0) lastTriggerMs = System.currentTimeMillis()
+          lastTriggerMs = System.currentTimeMillis()
           val perBatch = math.min(opts.maxOffsetsPerBatch,
             maxRowsOpt.map(_.maxRows()).getOrElse(Long.MaxValue))
           val cap =

@@ -360,9 +360,10 @@ object BucketedOps {
     else {
       val hasBatches = fs.listStatus(p)
         .exists(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
+      // read with the table's schema: no schema-inference job
       if (hasBatches)
-        idempotentAppend(resolve(s.read.parquet(spoolRoot)), table, key,
-          buckets, jobId, onFilePromoted)
+        idempotentAppend(resolve(s.read.schema(s.table(table).schema).parquet(spoolRoot)),
+          table, key, buckets, jobId, onFilePromoted)
       onFolded()
       fs.delete(p, true)
       true

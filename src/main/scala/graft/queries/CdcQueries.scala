@@ -120,13 +120,14 @@ object CdcQueries {
     // mechanics (bucketing, recovery, idempotent replay) are spec-tested
     // in UpsertSinkSpec; this pins its end-to-end merge arithmetic.
     "q78_upsert_sink_state" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q78_")
-      Fixtures.deleteTreeOnExit(tmp)
-      val in = tmp.resolve("in").toString
-      val cl = changelog(s, dir)
-      cl.repartition(4).write.mode("overwrite").parquet(in)
-      upsertState(s, s.readStream.schema(cl.schema)
-        .option("maxFilesPerTrigger", "2").parquet(in), "q78", minBatches = 2)
+      // the changelog copy is read only by the drain: deleted once it returns
+      val in = java.nio.file.Files.createTempDirectory("graft_q78_in_")
+      try {
+        val cl = changelog(s, dir)
+        cl.repartition(4).write.mode("overwrite").parquet(in.toString)
+        upsertState(s, s.readStream.schema(cl.schema)
+          .option("maxFilesPerTrigger", "2").parquet(in.toString), "q78", minBatches = 2)
+      } finally Fixtures.deleteTree(in)
     }),
 
     // --- q92: the reference's canonical ENRICHMENT story, end to end under
@@ -391,13 +392,15 @@ object CdcQueries {
     // upsert sink path scales linearly, see SCALE_PROBE_sf1.md. The
     // complete-mode materialization operator itself stays gated via q43.)
     "q74_source_stream_state" -> ((s, dir) => {
-      val root = writeFileProviderTable(s, dir)
+      val (root, rows) = fileProviderTable(s, dir)
+      // at most 12,000 rows a chunk and at least 12 chunks, so the 8-chunk
+      // cohorts make at least two snapshot batches at every SF: a REAL
+      // multi-batch run (deeper cohort schedules are property-tested in
+      // CohortStateMachinePropertySpec)
+      val chunk = math.min(12000L, math.max(1L, rows / 12))
       val stream = s.readStream.format("cdc-log").option("path", root)
         .option("metadata.columns", "op_offset,row_kind")
-        .option("scan.incremental.snapshot.chunk.size", "12000")
-        // multiple snapshot cohorts + log batches: a REAL multi-batch run
-        // (deeper cohort schedules are property-tested in
-        // CohortStateMachinePropertySpec)
+        .option("scan.incremental.snapshot.chunk.size", chunk.toString)
         .option("scan.snapshot.max-chunks-per-batch", "8")
         .load()
       upsertState(s, stream, "q74", minBatches = 2)
@@ -500,8 +503,12 @@ object CdcQueries {
     * does). Event order: offsets are k·3+1 / k·3+2, monotone in k with the
     * update before the delete per key, so key order IS offset order.
     * Runs ONCE per (JVM, sf dir); q73 and q74 share the written table. */
-  private val fixtureCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val fixtureCache = new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
   private[graft] def writeFileProviderTable(s: SparkSession, dir: String): String =
+    fileProviderTable(s, dir)._1
+
+  /** [[writeFileProviderTable]]'s root and its snapshot's row count. */
+  private def fileProviderTable(s: SparkSession, dir: String): (String, Long) =
     fixtureCache.computeIfAbsent(dir, _ => {
       import java.nio.file.{Files, Paths}
       import s.implicits._
@@ -531,7 +538,7 @@ object CdcQueries {
       })
       concatText(snapLines, Paths.get(root, "_snap_parts"), d.resolve("snapshot.jsonl"))
       concatText(logLines, Paths.get(root, "_log_parts"), d.resolve("log.jsonl"))
-      root
+      (root, rows.count())
     })
 
   /** q92 knobs. The staleness horizon is deliberately tight (probes sit

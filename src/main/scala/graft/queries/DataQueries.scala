@@ -459,21 +459,26 @@ object DataQueries {
       // ~0.3s/batch here; at 100 TB the static side is a persisted table —
       // q105's bucketed manifests — or an explicitly cached frame, never a
       // derivation left inline)
-      val manifest = Dedup.bandManifest(yesterday, "doc_id", "text").persist()
-      manifest.count()
       val st = StreamFixtures.arm(q108Stage(s, dir))
-      val ss = StreamFixtures.streamSession(s)
-      // 4 files/trigger → 2 micro-batches: the stream-static join is
-      // stateless (each row's verdict depends only on the static
-      // manifest), so the drained union is batch-count-invariant; still
-      // multi-batch, at half the planning rounds
-      val stream = ss.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "4").parquet(st.in)
-      val joined = Dedup.md5BandsPerRow(stream, "doc_id", "text")
-        .join(broadcast(manifest.withColumn("__hit", lit(1L))),
-          Seq("band", "bhv"), "left")
-        .select(col("doc_id"), coalesce(col("__hit"), lit(0L)).as("hit"))
-      val per = StreamFixtures.drainToMemory(joined, "q108").groupBy("doc_id")
+      val manifest = Dedup.bandManifest(yesterday, "doc_id", "text").persist()
+      // released on every exit: the returned frame reads only the drained
+      // memory table, never the manifest
+      val drained = try {
+        manifest.count()
+        val ss = StreamFixtures.streamSession(s)
+        // 4 files/trigger → 2 micro-batches: the stream-static join is
+        // stateless (each row's verdict depends only on the static
+        // manifest), so the drained union is batch-count-invariant; still
+        // multi-batch, at half the planning rounds
+        val stream = ss.readStream.schema(docs.schema)
+          .option("maxFilesPerTrigger", "4").parquet(st.in)
+        val joined = Dedup.md5BandsPerRow(stream, "doc_id", "text")
+          .join(broadcast(manifest.withColumn("__hit", lit(1L))),
+            Seq("band", "bhv"), "left")
+          .select(col("doc_id"), coalesce(col("__hit"), lit(0L)).as("hit"))
+        StreamFixtures.drainToMemory(joined, "q108")
+      } finally manifest.unpersist()
+      val per = drained.groupBy("doc_id")
         .agg(count(lit(1)).as("n_bands"), sum("hit").as("n_hit"))
       s.read.parquet(st.in).select("doc_id")
         .join(per, Seq("doc_id"), "left")

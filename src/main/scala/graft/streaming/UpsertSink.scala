@@ -1,12 +1,16 @@
 package graft.streaming
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import graft.operators.ChangelogOps
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** SPI: an exclusive writer lease over a maintained table directory —
   * the seam that makes the lake's single-writer contract pluggable
@@ -33,10 +37,13 @@ trait WriterLease {
   * table, surviving failures without duplicates.
   *
   * The state is an append-only sequence of GENERATIONS, directories
-  * `__gen=<n>` HASH-BUCKETED by primary key into `__gb=<i>` Hive-style
-  * subdirectories (i = murmur3(pk) mod B) of one file each. Each
-  * micro-batch commits one generation without reading the state (see
-  * [[mergeBatch]]). A FOLD is the only operation that rewrites state: it
+  * `__gen=<n>` of plain parquet part files, one per write task that
+  * received rows. The write is laid out by a hash bucket of the primary
+  * key (i = murmur3(pk) mod B): each bucket goes whole to one task, so a
+  * key's rows of one generation sit in one file, but the bucket is not a
+  * directory. Generations of the earlier `__gen=<n>/__gb=<i>/` layout are
+  * read and folded like any other. Each micro-batch commits one
+  * generation without reading the state (see [[mergeBatch]]). A FOLD is the only operation that rewrites state: it
   * resolves the newest fold and every generation after it (the LIVE
   * generations) into one generation marked `_graft_fold`, which
   * supersedes every older one. [[readState]] resolves the live generations
@@ -52,7 +59,8 @@ trait WriterLease {
   * inputs is only garbage collection, finished by [[recover]] if a crash
   * interrupts it. The key columns and the bucket count are part of the
   * on-disk format (`_graft_key`, `_graft_buckets`), fixed by the first
-  * merge. Underscore-prefixed entries are invisible to Spark's listing.
+  * merge: the bucket count is the hash domain and caps the write width.
+  * Underscore-prefixed entries are invisible to Spark's listing.
   *
   * For petabyte state, swap the parquet generations for a MERGE INTO on a
   * table format with deletion vectors; the streaming contract here
@@ -141,10 +149,11 @@ object UpsertSink {
     }
 
   /** Read the current-state table: the live generations resolved
-    * last-wins per key, tombstones filtered, sink-internal and changelog
-    * columns dropped. A single live generation is read as it is: every
-    * commit resolves through [[bucketed]], so it already holds one row per
-    * key. Never writes — superseded generations and an in-flight merge's
+    * last-wins per key, tombstones filtered, changelog columns dropped,
+    * with the schema stored in a part file's footer (no inference job). A
+    * single live generation is read as it is: every commit resolves
+    * through [[bucketed]], so it already holds one row per key. Never
+    * writes — superseded generations and an in-flight merge's
     * `_tmp` staging are skipped, not cleaned. */
   def readState(spark: SparkSession, path: String): DataFrame = {
     val target = new Path(path)
@@ -152,7 +161,7 @@ object UpsertSink {
     val key = formatFile(fs, target, KeyFile,
       throw new IllegalArgumentException(s"$target holds no UpsertSink state"))
     val gens = live(fs, target)
-    val rows = readGenerations(spark, target, gens)
+    val rows = readGenerations(spark, target, gens, storedSchema(fs, target, gens))
     (if (gens.size == 1) rows else lastWins(rows, key.split("\n").toSeq))
       .filter(col("op") =!= "d").drop("op", "op_offset", "row_kind")
   }
@@ -172,8 +181,8 @@ object UpsertSink {
     * generations, the merge folds them with its batch (tombstones kept),
     * reading them with the batch's schema, so no schema-inference job runs
     * and the count stays two. The shuffle sends each bucket whole to one of
-    * min(buckets, cores, shuffle partitions) tasks, which writes its one
-    * file. A batch with no rows commits nothing. */
+    * min(buckets, cores, shuffle partitions) tasks, and each task that
+    * received rows writes one file. A batch with no rows commits nothing. */
   def mergeBatch(batch: DataFrame, pkCols: Seq[String], path: String,
       numBuckets: Int = DefaultBuckets): Unit = {
     val spark = batch.sparkSession
@@ -191,7 +200,7 @@ object UpsertSink {
       val input =
         if (!fold) batch
         else readGenerations(spark, target, gens,
-          Some(StructType(batch.schema.map(_.copy(nullable = true))))).unionByName(batch)
+          StructType(batch.schema.map(_.copy(nullable = true)))).unionByName(batch)
       commit(fs, target, bucketed(input, pkCols, buckets), fold)
     }
   }
@@ -200,7 +209,8 @@ object UpsertSink {
     * lower offset than any tombstone can still arrive (e.g. the stream is
     * caught up, or the upstream log is offset-ordered per key, which a
     * real binlog is). The same fold [[mergeBatch]] runs, with the
-    * tombstones dropped after the resolve. */
+    * tombstones dropped after the resolve; the generations are read with
+    * the schema stored in a part file's footer. */
   def compact(spark: SparkSession, path: String): Unit = {
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -211,8 +221,8 @@ object UpsertSink {
         def noState: Nothing = throw new IllegalStateException(s"$target lost its format files")
         val key = formatFile(fs, target, KeyFile, noState).split("\n").toSeq
         val buckets = formatFile(fs, target, BucketsFile, noState).toInt
-        commit(fs, target, bucketed(readGenerations(spark, target, gens), key, buckets)
-          .filter(col("op") =!= "d"), fold = true)
+        val rows = readGenerations(spark, target, gens, storedSchema(fs, target, gens))
+        commit(fs, target, bucketed(rows, key, buckets).filter(col("op") =!= "d"), fold = true)
       }
     }
   }
@@ -228,31 +238,41 @@ object UpsertSink {
   /** `rows` resolved per key and laid out for the generation write. One
     * exchange, by bucket, to an explicit width AQE leaves alone (the same
     * cap as Par.widen): each bucket lands whole in one task, which resolves
-    * it and writes its one file. `__gb` is a function of the key, so
-    * resolving by (`__gb`, key) keeps the key groups, and its sort (`__gb`
-    * first) is the order the partitioned write needs. Spark's hash deals
-    * the bucket ids unevenly (32 over 4 tasks: 5/10/7/10); an even
-    * round-robin deal measured no end-to-end gain on `snapshot_load`. */
+    * it and writes it into that task's one file. `__gb` is a function of
+    * the key, so resolving by (`__gb`, key) keeps the key groups; the
+    * bucket column is dropped before the write, which is not partitioned.
+    * Spark's hash deals the bucket ids unevenly (32 over 4 tasks:
+    * 5/10/7/10); an even round-robin deal measured no end-to-end gain on
+    * `snapshot_load`. */
   private def bucketed(rows: DataFrame, key: Seq[String], buckets: Int): DataFrame = {
     val spark = rows.sparkSession
     val width = math.min(buckets, math.min(spark.sparkContext.defaultParallelism,
       spark.conf.get("spark.sql.shuffle.partitions", "200").toInt))
     lastWins(rows
       .withColumn(BucketCol, pmod(hash(key.map(col): _*), lit(buckets)).cast("int"))
-      .repartition(width, col(BucketCol)), BucketCol +: key)
+      .repartition(width, col(BucketCol)), BucketCol +: key).drop(BucketCol)
   }
 
   /** Commits `rows` as the target's next generation: staged in `_tmp`,
-    * moved into place by one directory rename. A fold's generation carries
-    * the marker that supersedes every older one, which are then retired; a
-    * merge that staged no bucket commits nothing. Hadoop FileSystem#rename
-    * reports failure by returning false, so the commit is [[renameOrDie]]. */
+    * moved into place by one directory rename. Spark opens write task 0's
+    * file even when the task gets no rows; that file is deleted, so a
+    * merge that staged no row commits nothing, unless it is a fold's only
+    * file: an empty fold keeps it, so the state it leaves still has a
+    * schema to read. A fold's generation carries the marker that
+    * supersedes every older one, which are then retired. Hadoop
+    * FileSystem#rename reports failure by returning false, so the commit
+    * is [[renameOrDie]]. */
   private def commit(fs: FileSystem, target: Path, rows: DataFrame, fold: Boolean): Unit = {
     val tmp = new Path(target, "_tmp")
-    rows.write.mode("overwrite").partitionBy(BucketCol).parquet(tmp.toString)
-    if (fold) fs.create(new Path(tmp, FoldMarker), true).close()
-    if (!fold && !fs.listStatus(tmp).exists(_.isDirectory)) fs.delete(tmp, true)
+    rows.write.mode("overwrite").parquet(tmp.toString)
+    val parts = fs.listStatus(tmp).map(_.getPath).filter(p => isPart(p.getName))
+    val empty = parts.find(p => p.getName.startsWith("part-00000-") &&
+      footer(fs.getConf, p)._1 == 0L)
+    val staged = parts.length - empty.size
+    if (!fold && staged == 0) fs.delete(tmp, true)
     else {
+      if (staged > 0) empty.foreach(fs.delete(_, false))
+      if (fold) fs.create(new Path(tmp, FoldMarker), true).close()
       val next = generations(fs, target).lastOption.fold(1L)(_ + 1)
       renameOrDie(fs, tmp, genPath(target, next))
       if (fold) retire(fs, target)
@@ -261,12 +281,36 @@ object UpsertSink {
 
   private def genPath(target: Path, gen: Long): Path = new Path(target, s"$GenCol=$gen")
 
-  /** The rows of generations `gens`, without the directory columns. Given
-    * a `schema`, Spark runs no schema-inference job. */
+  /** The rows of generations `gens`, read with `schema`, so Spark runs no
+    * schema-inference job. The recursive listing reads the files of both
+    * layouts, `__gen=<n>/part-*` and `__gen=<n>/__gb=<i>/part-*`, and
+    * infers no directory column. */
   private def readGenerations(spark: SparkSession, target: Path, gens: Seq[Long],
-      schema: Option[StructType] = None): DataFrame =
-    schema.fold(spark.read)(spark.read.schema).option("basePath", target.toString)
-      .parquet(gens.map(genPath(target, _).toString): _*).drop(GenCol, BucketCol)
+      schema: StructType): DataFrame =
+    spark.read.schema(schema).option("recursiveFileLookup", "true")
+      .parquet(gens.map(genPath(target, _).toString): _*)
+
+  private def isPart(name: String): Boolean = name.startsWith("part-") && name.endsWith(".parquet")
+
+  /** A part file's row count and the row schema Spark stored in its
+    * footer: one driver-side read, no job. */
+  private def footer(conf: Configuration, file: Path): (Long, StructType) = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try (r.getRecordCount, DataType.fromJson(
+      r.getFooter.getFileMetaData.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .asInstanceOf[StructType])
+    finally r.close()
+  }
+
+  /** The row schema of the generations `gens`, from the footer of a part
+    * file of the newest one that holds one. */
+  private def storedSchema(fs: FileSystem, target: Path, gens: Seq[Long]): StructType =
+    gens.reverseIterator.flatMap { g =>
+      val files = fs.listFiles(genPath(target, g), true)
+      Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+        .filter(p => isPart(p.getName))
+    }.nextOption().map(footer(fs.getConf, _)._2)
+      .getOrElse(throw new IllegalStateException(s"$target holds no part file to take a schema from"))
 
   /** Numbers of the committed generations, oldest first. */
   private def generations(fs: FileSystem, target: Path): IndexedSeq[Long] =

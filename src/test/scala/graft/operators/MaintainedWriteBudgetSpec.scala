@@ -54,7 +54,8 @@ class MaintainedWriteBudgetSpec extends SparkSpec {
 
   // Job counts on this session: a bucketed write of a shuffled frame is two
   // jobs (the adaptive shuffle's map stage, then the write); reading parquet
-  // through `spark.read` adds one schema-inference job.
+  // through `spark.read` without a schema would add one schema-inference
+  // job, which no writer here pays.
   test("idempotentAppend: a fresh day runs one write; its replay runs none") {
     val tbl = BucketedOps.ensureBucketed(
       Seq(("a", 10L), ("b", 20L)).toDF("term", "df"),
@@ -82,13 +83,15 @@ class MaintainedWriteBudgetSpec extends SparkSpec {
     assert(spark.table(tbl).schema.fieldNames.toSeq === Seq("term", "df", "first_seen_day"))
   }
 
-  test("foldSpool: the spool's schema read plus one append write") {
+  test("foldSpool: one append write, the spool read with the table's schema") {
     val tbl = manifest("fold")
     val spool = java.nio.file.Files.createTempDirectory("graft_budget_spool_").toString
     Seq(("a", 2L)).toDF("term", "df").write.parquet(s"$spool/batch=0")
     Seq(("e", 5L)).toDF("term", "df").write.parquet(s"$spool/batch=1")
-    budget(3)(assert(BucketedOps.foldSpool(spark, spool, tbl, "term", buckets = 4,
+    budget(2)(assert(BucketedOps.foldSpool(spark, spool, tbl, "term", buckets = 4,
       jobId = "fold1", resolve = sumDf)))
+    assert(spark.table(tbl).groupBy("term").agg(sum("df")).as[(String, Long)].collect().toMap ===
+      Map("a" -> 13L, "b" -> 20L, "c" -> 3L, "d" -> 4L, "e" -> 5L))
   }
 
   private val cols = Seq("k", "v", "op", "op_offset", "row_kind")
@@ -99,8 +102,9 @@ class MaintainedWriteBudgetSpec extends SparkSpec {
   // state: the shuffle by bucket and the write, into an empty target and
   // into state alike. The merge that folds reads the live generations with
   // the batch's schema, so it runs no schema-inference job and stays at
-  // two. Compact has no batch to take the schema from, so it infers it (one
-  // job), then resolves the generations per key (shuffle and write).
+  // two. Compact has no batch to take the schema from; it reads the one a
+  // part file's footer stores (no job), then resolves the generations per
+  // key (shuffle and write).
   test("UpsertSink.mergeBatch: a shuffle and a write, into an empty target, into state and when it folds") {
     val out = java.nio.file.Files.createTempDirectory("graft_budget_sink_").resolve("s").toString
     budget(2)(UpsertSink.mergeBatch(batchOf(1L to 40L, 0L), Seq("k"), out, 8))
@@ -115,20 +119,21 @@ class MaintainedWriteBudgetSpec extends SparkSpec {
 
   // A commit resolves its rows per key, so a target with one live
   // generation is read as it is; a second live generation adds the
-  // resolve's shuffle.
+  // resolve's shuffle. The schema comes from a footer, so the count's own
+  // jobs are all there is.
   test("UpsertSink.readState: one live generation is read as it is, two pay the resolve") {
     val out = java.nio.file.Files.createTempDirectory("graft_budget_sinkr_").resolve("s").toString
     UpsertSink.mergeBatch(batchOf(1L to 40L, 0L), Seq("k"), out, 8)
-    budget(3)(assert(UpsertSink.readState(spark, out).count() === 40L))
+    budget(2)(assert(UpsertSink.readState(spark, out).count() === 40L))
     UpsertSink.mergeBatch(batchOf(30L to 50L, 100L), Seq("k"), out, 8)
-    budget(4)(assert(UpsertSink.readState(spark, out).count() === 50L))
+    budget(3)(assert(UpsertSink.readState(spark, out).count() === 50L))
   }
 
-  test("UpsertSink.compact: the state's schema read plus one rewrite") {
+  test("UpsertSink.compact: one rewrite, the schema from a footer") {
     val out = java.nio.file.Files.createTempDirectory("graft_budget_sinkc_").resolve("s").toString
     UpsertSink.mergeBatch(batchOf(1L to 40L, 0L), Seq("k"), out, 8)
     UpsertSink.mergeBatch(batchOf(1L to 10L, 100L, op = "d"), Seq("k"), out, 8)
-    budget(3)(UpsertSink.compact(spark, out))
+    budget(2)(UpsertSink.compact(spark, out))
     assert(spark.read.parquet(out).count() === 30L, "tombstones must be purged")
   }
 

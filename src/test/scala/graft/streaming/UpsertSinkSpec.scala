@@ -115,6 +115,12 @@ class UpsertSinkSpec extends SparkSpec {
     val after = UpsertSink.readState(spark, out).orderBy("k")
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(after == live, "compaction only removes tombstones")
+    // compacting away every key leaves a state that still reads, as empty
+    UpsertSink.mergeBatch(
+      Seq(row(1L, 1.0, "d", 20, "+I"), row(2L, 2.0, "d", 21, "+I")).toDF(cols: _*),
+      Seq("k"), out)
+    UpsertSink.compact(spark, out)
+    assert(UpsertSink.readState(spark, out).count() == 0)
   }
 
   test("compactEveryBatches: tombstones purged periodically during a stream") {
@@ -187,7 +193,8 @@ class UpsertSinkSpec extends SparkSpec {
     val after = snapshot()
     // identical file paths, lengths AND modification times: no file was
     // rewritten, not merely rewritten equal; the batch went to a new
-    // generation, one file for the one bucket it touched
+    // generation, one file from the one write task that got its row (the
+    // zero-row file Spark opens for write task 0 is not kept)
     assert(before.toSet.subsetOf(after.toSet))
     val added = after.keySet -- before.keySet
     assert(added.nonEmpty && added.forall(_.contains("/__gen=2/")), added)
