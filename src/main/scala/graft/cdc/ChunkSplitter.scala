@@ -39,67 +39,24 @@ object ChunkSplitter {
   def isEvenlyDistributed(factor: Double, cfg: Config): Boolean =
     factor >= cfg.distributionFactorLower && factor <= cfg.distributionFactorUpper
 
-  /** Even case: arithmetic stepping by dynamicChunkSize = factor × chunkSize
-    * (min 1) — zero extra queries (reference ChunkSplitter.java:155,171-194). */
-  def splitEvenly(tableId: TableId, min: Long, max: Long, dynamicChunkSize: Long): Seq[SnapshotSplit] = {
-    require(dynamicChunkSize >= 1)
-    val out = ArrayBuffer.empty[SnapshotSplit]
-    var start = min
-    var id = 0
-    var chunkStart: Option[ChunkKey.Key] = None // first chunk unbounded below
-    while (start <= max) {
-      val end = start + dynamicChunkSize
-      val chunkEnd = if (end > max) None else Some(ChunkKey.of(end)) // last chunk unbounded above
-      out += SnapshotSplit(tableId, id, chunkStart, chunkEnd)
-      chunkStart = Some(ChunkKey.of(end))
-      start = end
-      id += 1
-    }
-    if (out.isEmpty) out += SnapshotSplit(tableId, 0, None, None)
-    out.toSeq
-  }
-
-  /** Uneven case: each chunk end comes from a boundary probe
-    * (reference ChunkSplitter.java:197-245). Key-type-agnostic: the only
-    * operations are boundary probes and comparisons, so string / binary /
-    * composite keys chunk identically to numeric ones. */
-  def splitUnevenly(tableId: TableId, min: ChunkKey.Key, max: ChunkKey.Key, chunkSize: Int,
-      nextChunkEnd: NextChunkEnd): Seq[SnapshotSplit] = {
-    val out = ArrayBuffer.empty[SnapshotSplit]
-    var id = 0
-    var chunkStart: Option[ChunkKey.Key] = None
-    var from = min
-    var done = false
-    while (!done) {
-      nextChunkEnd(from, chunkSize).filter(ChunkKey.compare(_, max) < 0) match {
-        case Some(end) if chunkStart.contains(end) =>
-          // boundary did not advance (heavy duplicate keys): ask the store
-          // for the boundary strictly past `end` (nextChunkEnd contract:
-          // from is inclusive; callers pass a successor probe). For the
-          // numeric fast path we can step; otherwise re-probe one key on.
-          from = ChunkKey.asLong(end) match {
-            case Some(l) => ChunkKey.of(l + 1)
-            case None    => nextChunkEnd(end, 2).getOrElse(max)
-          }
-        case Some(end) =>
-          out += SnapshotSplit(tableId, id, chunkStart, Some(end))
-          chunkStart = Some(end); from = end; id += 1
-        case None =>
-          out += SnapshotSplit(tableId, id, chunkStart, None)
-          done = true
-      }
-    }
-    out.toSeq
-  }
-
-  /** Incremental WINDOW planning for cursor-based streaming offsets: up to
-    * `maxChunks` chunks of the remaining keyspace starting at `cursor`
-    * (None = start of table), optionally clamped so the window ends exactly
-    * at `clampEnd` (replaying a cohort whose outer range a persisted offset
-    * already fixed). Returns (chunks, nextCursor); nextCursor None = table
-    * fully planned (last chunk unbounded above, or clamped).
+  /** The one chunk planner (reference ChunkSplitter.generateSplits:76-118
+    * + splitTableIntoChunks:144-161): up to `maxChunks` chunks of the
+    * keyspace from `cursor` (None = start of table), optionally clamped so
+    * the window ends exactly at `clampEnd` (replaying a cohort whose outer
+    * range a persisted offset already fixed). With the defaults it is the
+    * full plan: first chunk unbounded below, last unbounded above. Returns
+    * (chunks, nextCursor); nextCursor None = table fully planned (last
+    * chunk unbounded above, or clamped).
     *
-    * Why this exists: persisting EVERY pending chunk range in the offset is
+    * A single-column numeric key takes the probe-free arithmetic path when
+    * evenly distributed: steps of dynamicChunkSize = factor × chunkSize
+    * (min 1), no further queries (reference :155,171-194). Every other key
+    * shape (string / binary / composite), and a numeric key outside the
+    * factor bounds, is chunked by boundary probes (reference :197-245) —
+    * the same behavior as the reference's isEvenlySplitColumn gate. A table
+    * of zero rows is one unbounded chunk.
+    *
+    * Why windows: persisting EVERY pending chunk range in the offset is
     * O(table/chunkSize) JSON per micro-batch — at 100 TB that is a
     * checkpoint-killer. A cursor is O(1); each admission plans only its
     * cohort. Under concurrent mutation the interior boundaries of a window
@@ -109,7 +66,7 @@ object ChunkSplitter {
     * persisted cohort range reads the same union of rows. */
   def planWindow(tableId: TableId, min: ChunkKey.Key, max: ChunkKey.Key,
       approxRowCount: Long, cfg: Config, nextChunkEnd: NextChunkEnd,
-      cursor: Option[ChunkKey.Key], maxChunks: Int,
+      cursor: Option[ChunkKey.Key] = None, maxChunks: Int = Int.MaxValue,
       clampEnd: Option[Option[ChunkKey.Key]] = None)
       : (Seq[SnapshotSplit], Option[ChunkKey.Key]) = {
     require(maxChunks >= 1, s"maxChunks must be >= 1, got $maxChunks")
@@ -153,8 +110,10 @@ object ChunkSplitter {
           nextChunkEnd(from, cfg.chunkSize)
             .filter(k => ChunkKey.compare(k, max) < 0 && !pastClamp(k)) match {
             case Some(end) if chunkStart.contains(end) =>
-              // boundary did not advance (heavy duplicate keys) — same
-              // successor step as splitUnevenly
+              // boundary did not advance (heavy duplicate keys): ask for
+              // the boundary strictly past `end` (nextChunkEnd's `from` is
+              // inclusive) — step a numeric key, re-probe one key on for
+              // any other shape
               from = ChunkKey.asLong(end) match {
                 case Some(l) => ChunkKey.of(l + 1)
                 case None    => nextChunkEnd(end, 2).getOrElse(max)
@@ -170,24 +129,4 @@ object ChunkSplitter {
         throw new IllegalStateException("unreachable")
     }
   }
-
-  /** Full planning flow (reference ChunkSplitter.generateSplits:76-118 +
-    * splitTableIntoChunks:144-161): single-column numeric keys may take the
-    * probe-free arithmetic path when evenly distributed; every other key
-    * shape (string / binary / composite) is chunked by boundary queries —
-    * the same behavior as the reference's isEvenlySplitColumn gate. */
-  def plan(tableId: TableId, min: ChunkKey.Key, max: ChunkKey.Key, approxRowCount: Long,
-      cfg: Config = Config(), nextChunkEnd: NextChunkEnd): Seq[SnapshotSplit] =
-    (ChunkKey.asLong(min), ChunkKey.asLong(max)) match {
-      case (Some(mn), Some(mx)) =>
-        val factor = distributionFactor(mn, mx, approxRowCount)
-        if (isEvenlyDistributed(factor, cfg)) {
-          val dynamic = math.max(math.round(factor * cfg.chunkSize), 1L)
-          splitEvenly(tableId, mn, mx, dynamic)
-        } else {
-          splitUnevenly(tableId, min, max, cfg.chunkSize, nextChunkEnd)
-        }
-      case _ =>
-        splitUnevenly(tableId, min, max, cfg.chunkSize, nextChunkEnd)
-    }
 }

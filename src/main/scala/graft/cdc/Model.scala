@@ -140,22 +140,29 @@ object ChunkKey {
   implicit val ordering: Ordering[Key] = (a: Key, b: Key) => compare(a, b)
 }
 
-/** A snapshot chunk split: primary-key range [start, end).
-  * None bound = unbounded (reference MySqlSnapshotSplit,
-  * mysql/source/split/MySqlSnapshotSplit.java). */
-final case class SnapshotSplit(
-    tableId: TableId,
-    splitId: Int,
-    start: Option[ChunkKey.Key],
-    end: Option[ChunkKey.Key]) {
-  /** Reference RecordUtils.splitKeyRangeContains (used by the binlog emit
-    * filter at mysql/debezium/reader/BinlogSplitReader.java:212-214). */
+/** A primary-key range [start, end); a None bound is unbounded. The one
+  * containment predicate: reference RecordUtils.splitKeyRangeContains, used
+  * by chunk reads, catch-up shards and the binlog emit filter at
+  * mysql/debezium/reader/BinlogSplitReader.java:212-214. */
+sealed trait KeyRange {
+  def start: Option[ChunkKey.Key]
+  def end: Option[ChunkKey.Key]
   def contains(key: ChunkKey.Key): Boolean =
     start.forall(ChunkKey.compare(key, _) >= 0) && end.forall(ChunkKey.compare(key, _) < 0)
   def contains(key: Long): Boolean = contains(ChunkKey.of(key))
 }
 
-/** A finished chunk: its range plus the high watermark (log offset) the
-  * chunk was consistent at. The log-phase emit filter needs the full list
-  * (reference FinishedSnapshotSplitInfo, base/source/meta/split/). */
-final case class FinishedSplitInfo(split: SnapshotSplit, highWatermark: Long)
+/** A snapshot chunk split (reference MySqlSnapshotSplit,
+  * mysql/source/split/MySqlSnapshotSplit.java). */
+final case class SnapshotSplit(
+    tableId: TableId,
+    splitId: Int,
+    start: Option[ChunkKey.Key],
+    end: Option[ChunkKey.Key]) extends KeyRange
+
+/** A finished chunk range plus the high watermark (log offset) it was
+  * consistent at: what the streaming offset carries per cohort and what the
+  * log-phase emit filter reads (reference FinishedSnapshotSplitInfo,
+  * base/source/meta/split/). */
+final case class FinishedChunk(start: Option[ChunkKey.Key], end: Option[ChunkKey.Key], hw: Long)
+  extends KeyRange

@@ -63,13 +63,13 @@ object Normalizer {
     *    offset is strictly after that chunk's high watermark (events at or
     *    before the HW were already folded into the chunk by [[normalize]]).
     */
-  final class EmitFilter(finished: Seq[FinishedSplitInfo]) extends Serializable {
+  final class EmitFilter(finished: Seq[FinishedChunk]) extends Serializable {
     private val maxHw: Long =
-      if (finished.isEmpty) Long.MinValue else finished.map(_.highWatermark).max
+      if (finished.isEmpty) Long.MinValue else finished.map(_.hw).max
 
     def shouldEmit(key: ChunkKey.Key, offset: Long): Boolean =
       if (offset > maxHw) true // pure log phase for every chunk
-      else finished.exists(f => f.split.contains(key) && offset > f.highWatermark)
+      else finished.exists(f => f.contains(key) && offset > f.hw)
 
     def shouldEmit(key: Long, offset: Long): Boolean =
       shouldEmit(ChunkKey.of(key), offset)

@@ -126,8 +126,8 @@ final class JdbcChangeLogProvider(
       rs.next()
       // MAX over the next `chunkSize` keys; when fewer remain the result is
       // the table max, which the planner's (< max) filter turns into the
-      // final unbounded chunk — same termination as the reference's
-      // splitUnevenlySizedChunks.
+      // final unbounded chunk — same termination as the reference's uneven
+      // split (ChunkSplitter.java:197-245).
       Option(rs.getObject(1)).map(v => ChunkKey.of(v))
     } finally c.close()
   }

@@ -81,16 +81,13 @@ final case class CdcOptions(
       * MySqlSourceOptions.java:187-210). */
     distributionFactorUpper: Double = 1000.0,
     distributionFactorLower: Double = 0.05,
-    /** `jdbc.properties.*` / `debezium.*` passthrough (reference
-      * JdbcUrlUtils/DebeziumOptions): accepted and carried (stripped of the
-      * prefix) for `provider.class` implementations to consume; the
-      * built-in offline providers dial no databases and ignore them. */
-    passthrough: Map[String, String] = Map.empty,
     /** Tables the `provider=debezium-embedded` alias declares for capture
       * (parsed from `capture.tables`); empty for every other kind. */
     captureTables: Seq[TableMeta] = Seq.empty,
-    /** The `debezium.*` subset of the passthrough, unmixed with
-      * `jdbc.properties.*` — the embedded alias's engine properties. */
+    /** `debezium.*` options stripped of the prefix (reference
+      * DebeziumOptions) — the embedded alias's engine properties.
+      * `jdbc.properties.*` is accepted and ignored like any unknown key:
+      * no provider here takes a JDBC URL from the options. */
     debeziumProps: Map[String, String] = Map.empty,
     /** CATCH-UP SHARDING — max key-range shards one table's log slice may
       * split into per micro-batch (1 = off, the reference-parity single
@@ -175,22 +172,17 @@ object CdcOptions {
   private val RejectedConnectionKeys = Seq(
     "hostname", "port", "username", "password", "server-id")
 
-  /** Reference tuning keys with no offline analogue — ACCEPTED as no-ops
-    * so a ported reference DDL runs unchanged. Rationales:
-    * connect.timeout / connect.max-retries / connection.pool.size — the
-    * built-in providers hold no connection pool (files / embedded JDBC);
-    * heartbeat.interval — micro-batch heartbeats are free (empty batches
-    * advance offsets, F6/W8); scan.snapshot.fetch.size — providers stream
-    * with their own fetch sizing (JdbcSql uses the store's streaming mode);
-    * scan.startup.specific-offset.file — provider offsets are one
-    * total-ordered long, use scan.startup.specific-offset(.pos);
-    * scan.incremental.close-idle-reader.enabled — Spark tasks end with
-    * their partition, there is no long-lived idle reader to close. */
-  private val AcceptedNoOpKeys = Seq(
-    "connect.timeout", "connect.max-retries", "connection.pool.size",
-    "heartbeat.interval", "scan.snapshot.fetch.size",
-    "scan.startup.specific-offset.file",
-    "scan.incremental.close-idle-reader.enabled")
+  // Unknown keys are accepted, so reference tuning keys with no offline
+  // analogue run as no-ops and a ported reference DDL runs unchanged:
+  // connect.timeout / connect.max-retries / connection.pool.size — the
+  // built-in providers hold no connection pool (files / embedded JDBC);
+  // heartbeat.interval — micro-batch heartbeats are free (empty batches
+  // advance offsets, F6/W8); scan.snapshot.fetch.size — providers stream
+  // with their own fetch sizing (JdbcSql uses the store's streaming mode);
+  // scan.startup.specific-offset.file — provider offsets are one
+  // total-ordered long, use scan.startup.specific-offset(.pos);
+  // scan.incremental.close-idle-reader.enabled — Spark tasks end with
+  // their partition, there is no long-lived idle reader to close.
 
   def from(o: CaseInsensitiveStringMap): CdcOptions = {
     RejectedConnectionKeys.foreach { k =>
@@ -241,12 +233,6 @@ object CdcOptions {
     try java.time.ZoneId.of(tz)
     catch { case e: Exception => throw new IllegalArgumentException(
       s"invalid server-time-zone '$tz': ${e.getMessage}") }
-    val passthrough = o.asCaseSensitiveMap().asScala.collect {
-      case (k, v) if k.startsWith("jdbc.properties.") =>
-        k.stripPrefix("jdbc.properties.") -> v
-      case (k, v) if k.startsWith("debezium.") =>
-        k.stripPrefix("debezium.") -> v
-    }.toMap
     val debeziumProps = o.asCaseSensitiveMap().asScala.collect {
       case (k, v) if k.startsWith("debezium.") => k.stripPrefix("debezium.") -> v
     }.toMap
@@ -296,7 +282,7 @@ object CdcOptions {
       o.getBoolean("scan.newly-added-table.enabled", true),
       o.getDouble("split-key.even-distribution.factor.upper-bound", 1000.0),
       o.getDouble("split-key.even-distribution.factor.lower-bound", 0.05),
-      passthrough, capture, debeziumProps,
+      capture, debeziumProps,
       {
         val sh = o.getInt("scan.log.catchup.shards", 1)
         require(sh >= 1, s"scan.log.catchup.shards must be >= 1, got $sh")
@@ -330,10 +316,6 @@ object CdcOptions {
 // ---------------------------------------------------------------------------
 // Offsets
 // ---------------------------------------------------------------------------
-
-/** A finished chunk as carried in the offset: range + the high watermark
-  * its cohort was consistent at. */
-final case class FinishedChunk(start: Option[Key], end: Option[Key], hw: Long)
 
 /** Streaming offset: snapshot-phase flag + global log position + per-table
   * SNAPSHOT CURSORS + finished COHORT ranges with their high watermarks +
@@ -750,9 +732,7 @@ final class LogReader(p: LogPartition, produced: StructType)
     val filtered =
       if (p.finished.isEmpty) seeked
       else {
-        val emit = new Normalizer.EmitFilter(p.finished.zipWithIndex.map { case (f, i) =>
-          FinishedSplitInfo(SnapshotSplit(p.table, i, f.start, f.end), f.hw)
-        })
+        val emit = new Normalizer.EmitFilter(p.finished)
         seeked.filter(r => emit.shouldEmit(keyOf(r), r.offset))
       }
     filtered.flatMap { r =>
@@ -797,40 +777,44 @@ final class CdcScan(opts: CdcOptions, physical: StructType, produced: StructType
 }
 
 /** Batch scan = parallel chunked snapshot at the current log position
-  * (op='r' rows) — the snapshot phase as a standalone bounded read. */
+  * (op='r' rows) — the snapshot phase as a standalone bounded read: one
+  * unbounded window per table. Partitions carry the DECLARED scan schema
+  * `physical` (not a table's own current schema) because the produced
+  * schema derives from it; extras-mode readers re-resolve each table's
+  * current layout themselves. */
 final class CdcBatch(opts: CdcOptions, physical: StructType, produced: StructType,
     matched: Seq[TableMeta]) extends Batch {
   override def planInputPartitions(): Array[InputPartition] = {
     val provider = opts.resolveProvider()
     val upTo = provider.currentOffset
-    CdcPlanner.chunkPartitions(opts, provider, matched, upTo, physical).toArray
+    matched.flatMap { tm =>
+      CdcPlanner.planSplits(opts, provider, tm).map(sp =>
+        ChunkPartition(opts, tm.id, physical, tm.primaryKey, sp.start, sp.end, upTo))
+    }.toArray
   }
   override def createReaderFactory(): PartitionReaderFactory = CdcReaderFactory(produced)
 }
 
+/** Driver-side chunk planning (reference enumerator + ChunkSplitter role):
+  * the one place the planner meets the provider's probes. The batch read,
+  * cohort admission and cohort replay all plan through [[planWindow]]. */
 object CdcPlanner {
-  /** Driver-side chunk planning across matched tables (reference
-    * enumerator + ChunkSplitter role). */
-  /** `physical` is the DECLARED scan schema — partitions always carry it
-    * (not the table's own current schema) because the produced schema
-    * derives from it; extras-mode readers re-resolve each table's current
-    * layout themselves. */
-  def chunkPartitions(opts: CdcOptions, provider: ChangeLogProvider,
-      matched: Seq[TableMeta], upTo: Long, physical: StructType): Seq[InputPartition] =
-    matched.flatMap { tm =>
-      planSplits(opts, provider, tm).map(sp =>
-        ChunkPartition(opts, tm.id, physical, tm.primaryKey, sp.start, sp.end, upTo))
-    }
-
-  def planSplits(opts: CdcOptions, provider: ChangeLogProvider, tm: TableMeta): Seq[SnapshotSplit] = {
-    val (mn, mx, cnt) = provider.keyBounds(tm.id)
-    if (cnt == 0) Seq(SnapshotSplit(tm.id, 0, None, None))
-    else ChunkSplitter.plan(tm.id, mn, mx, cnt,
+  /** [[ChunkSplitter.planWindow]] over `table`'s key bounds and boundary
+    * probe, with the chunking options of `opts`. */
+  def planWindow(opts: CdcOptions, provider: ChangeLogProvider, table: TableId,
+      cursor: Option[Key] = None, maxChunks: Int = Int.MaxValue,
+      clampEnd: Option[Option[Key]] = None): (Seq[SnapshotSplit], Option[Key]) = {
+    val (mn, mx, cnt) = provider.keyBounds(table)
+    ChunkSplitter.planWindow(table, mn, mx, cnt,
       ChunkSplitter.Config(chunkSize = opts.chunkSize,
         distributionFactorUpper = opts.distributionFactorUpper,
         distributionFactorLower = opts.distributionFactorLower),
-      (from, sz) => provider.nextChunkEnd(tm.id, from, sz))
+      (from, sz) => provider.nextChunkEnd(table, from, sz), cursor, maxChunks, clampEnd)
   }
+
+  /** The full plan of one table. */
+  def planSplits(opts: CdcOptions, provider: ChangeLogProvider, tm: TableMeta): Seq[SnapshotSplit] =
+    planWindow(opts, provider, tm.id)._1
 }
 
 /** The driver-side assigner state machine (reference enumerator +
@@ -893,13 +877,9 @@ final class CdcMicroBatchStream(opts: CdcOptions, physical: StructType,
     // several reports may name one chunk (a retried task that saw a later
     // base): the max raise wins, and re-applying it is idempotent
     val reports = hwDir.map(d => ObservedHwStore.readAndPrune(d,
-      // driver-side: the session's conf when one exists; direct offset-API
-      // harnesses (no session on this thread) read the local fs with a
-      // fresh Configuration
-      org.apache.spark.sql.SparkSession.getActiveSession
-        .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-        .map(_.sparkContext.hadoopConfiguration)
-        .getOrElse(new org.apache.hadoop.conf.Configuration()),
+      // direct offset-API harnesses (no session on this thread) read the
+      // local fs with a fresh Configuration
+      sessionHadoopConf().getOrElse(new org.apache.hadoop.conf.Configuration()),
       s.logPos)).getOrElse(Seq.empty)
     if (reports.isEmpty || s.finished.isEmpty) s
     else {
@@ -925,11 +905,15 @@ final class CdcMicroBatchStream(opts: CdcOptions, physical: StructType,
     }
   }
 
-  private def planCfg = ChunkSplitter.Config(chunkSize = opts.chunkSize,
-    distributionFactorUpper = opts.distributionFactorUpper,
-    distributionFactorLower = opts.distributionFactorLower)
-  private def boundaryProbe(tid: TableId): ChunkSplitter.NextChunkEnd =
-    (from, sz) => provider.nextChunkEnd(tid, from, sz)
+  /** The hadoop conf both ends of the [[ObservedHwStore]] sidecar resolve
+    * its FileSystem with — the driver reading it, the executors writing it
+    * — so they see the same one: the session's, spark.hadoop.* and SQL-conf
+    * settings included. None for direct offset-API harnesses without a
+    * session. */
+  private def sessionHadoopConf(): Option[org.apache.hadoop.conf.Configuration] =
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+      .map(_.sessionState.newHadoopConf())
 
   /** Trigger.AvailableNow: the bounded catch-up run processes everything
     * up to the log position observed at query start, then stops — the
@@ -1017,10 +1001,8 @@ final class CdcMicroBatchStream(opts: CdcOptions, physical: StructType,
       s.cursors.toSeq.sortBy(_._1).foreach { case (tid, cursor) =>
         if (budget <= 0) newCursors(tid) = cursor
         else {
-          val tidObj = TableId.parse(tid)
-          val (mn, mx, cnt) = provider.keyBounds(tidObj)
-          val (chunks, next) = ChunkSplitter.planWindow(tidObj, mn, mx, cnt,
-            planCfg, boundaryProbe(tidObj), cursor, budget)
+          val (chunks, next) =
+            CdcPlanner.planWindow(opts, provider, TableId.parse(tid), cursor, budget)
           budget -= chunks.size
           newlyFinished(tid) = FinishedChunk(cursor, next, cur)
           next.foreach(k => newCursors(tid) = Some(k))
@@ -1111,9 +1093,7 @@ final class CdcMicroBatchStream(opts: CdcOptions, physical: StructType,
             val hw = e.finished.getOrElse(tid, Seq.empty)
               .find(f => f.start == cursor && f.end == endBound)
               .map(_.hw).getOrElse(s.logPos)
-            val (mn, mx, cnt) = provider.keyBounds(tm.id)
-            val (cohort, _) = ChunkSplitter.planWindow(tm.id, mn, mx, cnt,
-              planCfg, boundaryProbe(tm.id), cursor, Int.MaxValue,
+            val (cohort, _) = CdcPlanner.planWindow(opts, provider, tm.id, cursor,
               clampEnd = Some(endBound))
             cohort.map(c =>
               ChunkPartition(opts, tm.id, physical, tm.primaryKey, c.start, c.end, hw))
@@ -1190,10 +1170,7 @@ final class CdcMicroBatchStream(opts: CdcOptions, physical: StructType,
       // spark.hadoop.* (object-store credentials etc.) to the executors;
       // direct offset-API harnesses (no session) fall back to executor-side
       // Configuration resolution in ChunkReader
-      org.apache.spark.sql.SparkSession.getActiveSession
-        .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-        .map(s => new org.apache.spark.util.SerializableConfiguration(
-          s.sessionState.newHadoopConf())))
+      sessionHadoopConf().map(new org.apache.spark.util.SerializableConfiguration(_)))
   override def deserializeOffset(json: String): Offset = CdcOffset.parse(json)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

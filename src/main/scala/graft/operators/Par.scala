@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Scan-parallelism repair for CPU-heavy per-row operators (optimization
   * guide §2.5, "input skew: one huge unsplittable file").
@@ -20,15 +20,19 @@ import org.apache.spark.sql.{Column, DataFrame}
 object Par {
   private val BytesPerPartition = 8192L
 
+  /** The widest an explicit repartition should go: the session's cores,
+    * capped at its shuffle width. Respects the session's own partitioning
+    * policy — a stream-scoped session pins shuffle.partitions low (4-8)
+    * because its per-batch frames are small, and going past that would
+    * undo the tuning and multiply task overhead. */
+  def maxWidth(spark: SparkSession): Int =
+    math.min(spark.sparkContext.defaultParallelism,
+      spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
+
   def widen(df: DataFrame, keys: Column*): DataFrame = {
     if (df.isStreaming) return df
-    // Respect the session's own partitioning policy: a stream-scoped
-    // session pins shuffle.partitions low (4-8) because its per-batch
-    // frames are small — widening past that would undo the tuning and
-    // multiply task overhead. Cap at the session's shuffle width.
     val spark = df.sparkSession
-    val cap = math.min(spark.sparkContext.defaultParallelism,
-      spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
+    val cap = maxWidth(spark)
     // Volume-derived target under the cap (r17 verdict #5): a flat
     // core-count target over-parallelizes tiny inputs — the 8-core run
     // beat the 32-core run on the maintenance family because 32-way task

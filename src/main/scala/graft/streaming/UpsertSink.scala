@@ -4,7 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import graft.operators.ChangelogOps
+import graft.operators.{ChangelogOps, Par}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.expressions.Window
@@ -237,17 +237,15 @@ object UpsertSink {
 
   /** `rows` resolved per key and laid out for the generation write. One
     * exchange, by bucket, to an explicit width AQE leaves alone (the same
-    * cap as Par.widen): each bucket lands whole in one task, which resolves
-    * it and writes it into that task's one file. `__gb` is a function of
+    * cap as Par.widen, [[Par.maxWidth]]): each bucket lands whole in one
+    * task, which resolves it and writes it into that task's one file. `__gb` is a function of
     * the key, so resolving by (`__gb`, key) keeps the key groups; the
     * bucket column is dropped before the write, which is not partitioned.
     * Spark's hash deals the bucket ids unevenly (32 over 4 tasks:
     * 5/10/7/10); an even round-robin deal measured no end-to-end gain on
     * `snapshot_load`. */
   private def bucketed(rows: DataFrame, key: Seq[String], buckets: Int): DataFrame = {
-    val spark = rows.sparkSession
-    val width = math.min(buckets, math.min(spark.sparkContext.defaultParallelism,
-      spark.conf.get("spark.sql.shuffle.partitions", "200").toInt))
+    val width = math.min(buckets, Par.maxWidth(rows.sparkSession))
     lastWins(rows
       .withColumn(BucketCol, pmod(hash(key.map(col): _*), lit(buckets)).cast("int"))
       .repartition(width, col(BucketCol)), BucketCol +: key).drop(BucketCol)
@@ -264,7 +262,10 @@ object UpsertSink {
     * is [[renameOrDie]]. */
   private def commit(fs: FileSystem, target: Path, rows: DataFrame, fold: Boolean): Unit = {
     val tmp = new Path(target, "_tmp")
-    rows.write.mode("overwrite").parquet(tmp.toString)
+    // no _SUCCESS marker (and its .crc): nothing reads it
+    rows.write.mode("overwrite")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .parquet(tmp.toString)
     val parts = fs.listStatus(tmp).map(_.getPath).filter(p => isPart(p.getName))
     val empty = parts.find(p => p.getName.startsWith("part-00000-") &&
       footer(fs.getConf, p)._1 == 0L)

@@ -222,7 +222,7 @@ class CdcSourceSpec extends SparkSpec {
       "split-key.even-distribution.factor.upper-bound" -> "500.0",
       "split-key.even-distribution.factor.lower-bound" -> "0.1",
       "chunk-meta.group.size" -> "77", // aliases max-chunks-per-batch
-      "jdbc.properties.useSSL" -> "false", // prefix passthrough
+      "jdbc.properties.useSSL" -> "false", // accepted, ignored
       "debezium.snapshot.mode" -> "never")
     assert(m.chunkSize === 1024)
     assert(m.startupSpecificOffset === 42L)
@@ -230,7 +230,7 @@ class CdcSourceSpec extends SparkSpec {
     assert(!m.newlyAddedTables)
     assert(m.distributionFactorUpper === 500.0 && m.distributionFactorLower === 0.1)
     assert(m.maxChunksPerBatch === 77)
-    assert(m.passthrough === Map("useSSL" -> "false", "snapshot.mode" -> "never"))
+    assert(m.debeziumProps === Map("snapshot.mode" -> "never"))
 
     // ACCEPTED no-ops (documented rationale in CdcOptions): tuning keys
     // with no offline analogue — a ported reference DDL runs unchanged

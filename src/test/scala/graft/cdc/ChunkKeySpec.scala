@@ -45,7 +45,7 @@ class ChunkKeySpec extends AnyFunSuite {
       val c = keys.filter(ChunkKey.compare(_, from) >= 0).take(n)
       if (c.size < n) None else Some(c.last)
     }
-    val splits = ChunkSplitter.plan(t, keys.head, keys.last, keys.size,
+    val (splits, _) = ChunkSplitter.planWindow(t, keys.head, keys.last, keys.size,
       ChunkSplitter.Config(chunkSize = 3), next)
     assert(splits.size > 1, "string PK must still chunk in parallel")
     assert(splits.head.start.isEmpty && splits.last.end.isEmpty)
@@ -59,7 +59,7 @@ class ChunkKeySpec extends AnyFunSuite {
       val c = sorted.filter(ChunkKey.compare(_, from) >= 0).take(n)
       if (c.size < n) None else Some(c.last)
     }
-    val splits = ChunkSplitter.plan(t, sorted.head, sorted.last, sorted.size,
+    val (splits, _) = ChunkSplitter.planWindow(t, sorted.head, sorted.last, sorted.size,
       ChunkSplitter.Config(chunkSize = 4), next)
     assert(splits.size > 1)
     sorted.foreach(k => assert(splits.count(_.contains(k)) === 1, s"key $k"))
@@ -74,8 +74,8 @@ class ChunkKeySpec extends AnyFunSuite {
         "db.c" -> Some(ChunkKey.of("x", 3L)),
         "db.0" -> None),
       finished = Map(
-        "db.s" -> Seq(graft.cdc.source.FinishedChunk(None, Some(ChunkKey.of("m")), 5L)),
-        "db.n" -> Seq(graft.cdc.source.FinishedChunk(Some(ChunkKey.of(10L)), None, 6L))),
+        "db.s" -> Seq(FinishedChunk(None, Some(ChunkKey.of("m")), 5L)),
+        "db.n" -> Seq(FinishedChunk(Some(ChunkKey.of(10L)), None, 6L))),
       known = Seq("db.s", "db.b", "db.c", "db.n"))
     val back = graft.cdc.source.CdcOffset.parse(o.json())
     assert(back === o)

@@ -23,6 +23,28 @@ class ChunkSplitterPropertySpec extends AnyFunSuite {
     jitter <- Gen.listOfN(n, Gen.choose(0L, step - 1))
   } yield jitter.zipWithIndex.map { case (j, i) => base + i * step + j }.toVector.distinct
 
+  private type Range = (Option[ChunkKey.Key], Option[ChunkKey.Key])
+
+  /** The full plan computed straight from the sorted key list, sharing no
+    * code with the planner. Keys dense enough for the factor bounds step
+    * arithmetically from the min by round(factor × chunkSize); otherwise a
+    * boundary is every `chunkSize`-th key counting the previous end (which
+    * opens the next chunk, so each later chunk adds chunkSize - 1 keys, and
+    * chunkSize 1 steps one key). Boundaries stop before the max. */
+  private def expectedPlan(sorted: Vector[Long], cfg: ChunkSplitter.Config): Vector[Range] = {
+    val (mn, mx, n) = (sorted.head, sorted.last, sorted.size)
+    val factor = (mx - mn + 1).toDouble / n
+    val bounds: Vector[Long] =
+      if (factor >= cfg.distributionFactorLower && factor <= cfg.distributionFactorUpper) {
+        val step = math.max(math.round(factor * cfg.chunkSize), 1L)
+        Iterator.iterate(mn + step)(_ + step).takeWhile(_ <= mx).toVector
+      } else
+        Iterator.iterate(cfg.chunkSize - 1)(_ + math.max(cfg.chunkSize - 1, 1))
+          .takeWhile(_ < n - 1).map(sorted).toVector
+    val keys = bounds.map(b => Option(ChunkKey.of(b)))
+    (None +: keys).zip(keys :+ None)
+  }
+
   test("windowed planning: concatenated windows == full plan (stable store)") {
     check(Prop.forAll(keysGen, Gen.choose(1, 50), Gen.choose(1, 7)) {
       (keys, chunkSize, window) =>
@@ -32,12 +54,11 @@ class ChunkSplitterPropertySpec extends AnyFunSuite {
           val c = sorted.filter(k => ChunkKey.compare(ChunkKey.of(k), from) >= 0).take(n)
           if (c.size < n) None else Some(ChunkKey.of(c.last))
         }
-        val full = ChunkSplitter.plan(t, ChunkKey.of(sorted.head), ChunkKey.of(sorted.last),
-          sorted.size, cfg, next).map(s => (s.start, s.end))
+        val full = expectedPlan(sorted, cfg)
         // drive windows like the offset state machine: cursor → cursor
         var cursor: Option[ChunkKey.Key] = None
         var done = false
-        val acc = Vector.newBuilder[(Option[ChunkKey.Key], Option[ChunkKey.Key])]
+        val acc = Vector.newBuilder[Range]
         var guard = 0
         while (!done && guard < 2000) {
           val (chunks, nxt) = ChunkSplitter.planWindow(t, ChunkKey.of(sorted.head),
@@ -53,7 +74,7 @@ class ChunkSplitterPropertySpec extends AnyFunSuite {
           cursor = nxt
           guard += 1
         }
-        acc.result() == full.toVector && guard < 2000
+        acc.result() == full && guard < 2000
     })
   }
 
@@ -65,8 +86,8 @@ class ChunkSplitterPropertySpec extends AnyFunSuite {
         val c = sorted.filter(k => ChunkKey.compare(ChunkKey.of(k), from) >= 0).take(n)
         if (c.size < n) None else Some(ChunkKey.of(c.last))
       }
-      val splits = ChunkSplitter.plan(t, ChunkKey.of(sorted.head), ChunkKey.of(sorted.last),
-        sorted.size, cfg, next)
+      val (splits, _) = ChunkSplitter.planWindow(t, ChunkKey.of(sorted.head),
+        ChunkKey.of(sorted.last), sorted.size, cfg, next)
       val coverage = sorted.forall(k => splits.count(_.contains(k)) == 1)
       val unboundedEnds = splits.head.start.isEmpty && splits.last.end.isEmpty
       // chunks are contiguous: each end equals the next start
@@ -110,8 +131,8 @@ class ChunkSplitterPropertySpec extends AnyFunSuite {
           case _ => None
         }
       }
-      val splits = ChunkSplitter.plan(t, ChunkKey.of(0L), ChunkKey.of(60L), 21, ChunkSplitter.Config(chunkSize),
-        (_, _) => None)
+      val (splits, _) = ChunkSplitter.planWindow(t, ChunkKey.of(0L), ChunkKey.of(60L), 21,
+        ChunkSplitter.Config(chunkSize), (_, _) => None)
       val merged = splits.flatMap { sp =>
         Normalizer.normalize(
           base.iterator.filter(r => sp.contains(key(r))),

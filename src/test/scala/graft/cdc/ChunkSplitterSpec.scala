@@ -15,7 +15,7 @@ class ChunkSplitterSpec extends AnyFunSuite {
 
   test("dense keys → even chunks, first/last unbounded") {
     // factor = 1.0 within [0.05, 1000] → even stepping by chunkSize
-    val splits = ChunkSplitter.plan(t, ChunkKey.of(0L), ChunkKey.of(99L), 100, cfg,
+    val (splits, _) = ChunkSplitter.planWindow(t, ChunkKey.of(0L), ChunkKey.of(99L), 100, cfg,
       (_, _) => fail("even path must not probe boundaries"))
     assert(splits.size === 10)
     assert(splits.head.start === None)
@@ -27,7 +27,7 @@ class ChunkSplitterSpec extends AnyFunSuite {
   }
 
   test("every key belongs to exactly one chunk") {
-    val splits = ChunkSplitter.plan(t, ChunkKey.of(0L), ChunkKey.of(99L), 100, cfg, (_, _) => None)
+    val (splits, _) = ChunkSplitter.planWindow(t, ChunkKey.of(0L), ChunkKey.of(99L), 100, cfg, (_, _) => None)
     for (k <- -5L to 105L) {
       assert(splits.count(_.contains(k)) === 1, s"key $k")
     }
@@ -40,8 +40,8 @@ class ChunkSplitterSpec extends AnyFunSuite {
       val c = keys.filter(k => ChunkKey.compare(ChunkKey.of(k), from) >= 0).take(n)
       if (c.size < n) None else Some(ChunkKey.of(c.last))
     }
-    val splits = ChunkSplitter.plan(t, ChunkKey.of(keys.min), ChunkKey.of(keys.max), keys.size,
-      ChunkSplitter.Config(chunkSize = 3), next)
+    val (splits, _) = ChunkSplitter.planWindow(t, ChunkKey.of(keys.min), ChunkKey.of(keys.max),
+      keys.size, ChunkSplitter.Config(chunkSize = 3), next)
     assert(splits.head.start === None)
     assert(splits.last.end === None)
     keys.foreach(k => assert(splits.count(_.contains(k)) === 1))
@@ -52,14 +52,15 @@ class ChunkSplitterSpec extends AnyFunSuite {
 
   test("dynamic chunk size scales with factor (reference :155)") {
     // factor 5.0 → dynamic chunk = 50 over range 0..499 with 100 rows
-    val splits = ChunkSplitter.plan(t, ChunkKey.of(0L), ChunkKey.of(499L), 100, cfg, (_, _) => None)
+    val (splits, _) = ChunkSplitter.planWindow(t, ChunkKey.of(0L), ChunkKey.of(499L), 100, cfg, (_, _) => None)
     assert(splits.size === 10)
     assert(splits(1).start === Some(ChunkKey.of(50L)))
   }
 
   test("single-row and empty tables degrade to one unbounded chunk") {
-    assert(ChunkSplitter.splitEvenly(t, 5, 5, 1).size === 1)
-    val s = ChunkSplitter.plan(t, ChunkKey.of(0L), ChunkKey.of(-1L), 0, cfg, (_, _) => None)
-    assert(s === Seq(SnapshotSplit(t, 0, None, None)))
+    assert(ChunkSplitter.planWindow(t, ChunkKey.of(5L), ChunkKey.of(5L), 1, cfg,
+      (_, _) => None)._1.size === 1)
+    val s = ChunkSplitter.planWindow(t, ChunkKey.of(0L), ChunkKey.of(-1L), 0, cfg, (_, _) => None)
+    assert(s === (Seq(SnapshotSplit(t, 0, None, None)), None))
   }
 }

@@ -41,8 +41,8 @@ class NormalizerSpec extends AnyFunSuite {
   // EmitFilter mirrors BinlogSplitReader.shouldEmit (:194-240)
   test("emit filter: per-chunk high watermarks gate replayed events") {
     val f = new Normalizer.EmitFilter(Seq(
-      FinishedSplitInfo(SnapshotSplit(t, 0, None, Some(ChunkKey.of(100L))), highWatermark = 50),
-      FinishedSplitInfo(SnapshotSplit(t, 1, Some(ChunkKey.of(100L)), None), highWatermark = 70)))
+      FinishedChunk(None, Some(ChunkKey.of(100L)), hw = 50),
+      FinishedChunk(Some(ChunkKey.of(100L)), None, hw = 70)))
     // key in chunk 0: emitted only past offset 50
     assert(!f.shouldEmit(key = 5, offset = 50))
     assert(f.shouldEmit(key = 5, offset = 51))

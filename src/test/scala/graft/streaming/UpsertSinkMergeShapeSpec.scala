@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * written in parallel by min(buckets, cores) write tasks, each task that
   * received rows writes one file into a new generation, each bucket lands
   * whole in one file and no file is empty; the merge runs the same jobs
-  * whether or not the target already holds state; and a generation of the
-  * earlier `__gen=<n>/__gb=<i>/` layout reads and folds like a new one. */
+  * whether or not the target already holds state; a generation holds only
+  * its part files (and a fold's marker); and a generation of the earlier
+  * `__gen=<n>/__gb=<i>/` layout reads and folds like a new one. */
 class UpsertSinkMergeShapeSpec extends SparkSpec {
   import spark.implicits._
 
@@ -87,6 +88,28 @@ class UpsertSinkMergeShapeSpec extends SparkSpec {
     assert(empty === warm && empty.size === 2, s"empty target: $empty; existing state: $warm")
     // the earlier offsets of 50..100 lose to the state's later ones
     assert(UpsertSink.readState(spark, existing).count() === 150L)
+  }
+
+  test("a committed generation lists only its part files, plus the fold marker on a fold") {
+    val out = java.nio.file.Files.createTempDirectory("graft_shape_files_").resolve("state").toString
+    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def merge(i: Int): Unit = UpsertSink.mergeBatch(
+      batchOf((i * 10L) to (i * 10L + 15L), 1000L * i), Seq("k"), out, Buckets)
+    /** The generation's files as readers list them, after checking that
+      * no commit marker (nor its checksum) sits beside them on disk. */
+    def files(gen: Int): Seq[String] = {
+      val dir = s"$out/__gen=$gen"
+      assert(!new java.io.File(dir).list().exists(_.contains("_SUCCESS")),
+        s"generation $gen holds a _SUCCESS marker")
+      fs.listStatus(new Path(dir)).map(_.getPath.getName).toSeq
+    }
+    merge(1)
+    val first = files(1)
+    assert(first.nonEmpty && first.forall(_.startsWith("part-")), first)
+    (2 to UpsertSink.FoldEvery + 1).foreach(merge)
+    val folded = files(UpsertSink.FoldEvery + 1)
+    assert(folded.count(_ == "_graft_fold") === 1, folded)
+    assert(folded.filterNot(_ == "_graft_fold").forall(_.startsWith("part-")), folded)
   }
 
   test("a generation in the __gb= subdirectory layout reads and folds like the one-file-per-task layout") {
